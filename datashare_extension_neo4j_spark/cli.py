@@ -83,23 +83,16 @@ def cmd_import_mentions(args) -> int:
 
 
 def cmd_export_csv(args) -> int:
-    from .sinks.tables import _read_table
     from .sinks.neo4j_csv import (
         export_graph_csvs,
         export_graph_csvs_distributed,
     )
+    from .sinks.tables import TABLE_KEYS, load_store
 
     spark = _spark(args.master)
-    rd = args.run_dir
-    kw = dict(
-        docs=_read_table(spark, f"{rd}/docs"),
-        doc_roots=_read_table(spark, f"{rd}/doc_roots"),
-        entities=_read_table(spark, f"{rd}/entities"),
-        appears_in=_read_table(spark, f"{rd}/appears_in"),
-        emails=_read_table(spark, f"{rd}/emails"),
-        export_dir=args.export_dir,
-        db=args.db,
-    )
+    g = load_store(spark, args.run_dir)
+    kw = {name: getattr(g, name) for name in TABLE_KEYS}
+    kw.update(export_dir=args.export_dir, db=args.db)
     if args.distributed:
         md = export_graph_csvs_distributed(**kw)
     else:
@@ -110,23 +103,12 @@ def cmd_export_csv(args) -> int:
 
 def cmd_dump(args) -> int:
     from .graph import to_property_graph
-    from .pipeline import GraphBuild
     from .plans.dsl import compile_dump_query, GraphTables
     from .plans.dump import dump_cypher, dump_graphml
+    from .sinks.tables import load_store
 
     spark = _spark(args.master)
-    rd = args.run_dir
-    from .sinks.tables import _read_table
-
-    g = GraphBuild(
-        docs=_read_table(spark, f"{rd}/docs"),
-        doc_roots=_read_table(spark, f"{rd}/doc_roots"),
-        mentions=spark.read.parquet(f"{rd}/mentions"),
-        entities=_read_table(spark, f"{rd}/entities"),
-        appears_in=_read_table(spark, f"{rd}/appears_in"),
-        emails=_read_table(spark, f"{rd}/emails"),
-    )
-    tables: GraphTables = to_property_graph(g)
+    tables: GraphTables = to_property_graph(load_store(spark, args.run_dir))
     query = json.loads(args.query) if args.query else None
     nodes, edges = compile_dump_query(tables, query, default_limit=args.limit)
     with open(args.output, "w") as f:
@@ -139,22 +121,12 @@ def cmd_dump(args) -> int:
 
 
 def cmd_stats(args) -> int:
-    from .pipeline import GraphBuild
+    from .sinks.tables import load_store
     from .stats import write_statistics
 
     spark = _spark(args.master)
-    rd = args.run_dir
-    from .sinks.tables import _read_table
-
-    g = GraphBuild(
-        docs=_read_table(spark, f"{rd}/docs"),
-        doc_roots=_read_table(spark, f"{rd}/doc_roots"),
-        mentions=spark.read.parquet(f"{rd}/mentions"),
-        entities=_read_table(spark, f"{rd}/entities"),
-        appears_in=_read_table(spark, f"{rd}/appears_in"),
-        emails=_read_table(spark, f"{rd}/emails"),
-    )
-    stats = write_statistics(spark, g, f"{rd}/stats")
+    g = load_store(spark, args.run_dir)
+    stats = write_statistics(spark, g, f"{args.run_dir}/stats")
     print(json.dumps(stats))
     return 0
 

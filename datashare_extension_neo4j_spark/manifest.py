@@ -132,90 +132,52 @@ def run_pipeline(
 ) -> dict:
     """Resumable end-to-end run: pages parquet → parsed → graph tables.
 
-    Every stage is a manifest-guarded parquet materialization; a
-    restart after a crash re-runs only incomplete/stale stages.
+    The materializing runner over ``pipeline.STAGES``: every stage is
+    a manifest-guarded parquet write whose inputs are its upstream
+    stages' outputs, so a restart after a crash re-runs only
+    incomplete/stale stages (and builds no frame for a skipped one).
     Returns {table: path}.
 
     ``buckets=N`` writes each graph table hash-partitioned on its merge
     key so later incremental imports rewrite only touched partitions
     (sinks/tables.py module docstring)."""
-    from .operators.documents import doc_nodes, has_parent_edges
-    from .operators.edges import appears_in_edges, email_edges
-    from .operators.entities import entity_nodes
-    from .operators.extract import parse_pages
-    from .operators.ner import DEFAULT_GAZETTEER, annotated_mentions
-    from .sinks.tables import TABLE_KEYS, write_bucketed_table
+    from .pipeline import PARSE_LAYOUT, STAGES, BuildOptions
+    from .sinks.tables import TABLE_KEYS, _read_table, write_bucketed_table
 
     # captured BEFORE Manifest creates the dir: a pre-existing manifest
     # means prior-run tables may be present (migration ladder must run
     # for real against them — see apply_migrations call below)
     fresh_run_dir = not (Path(run_dir) / "manifest.json").exists()
     m = Manifest(run_dir)
-    out = lambda name: str(Path(run_dir) / name)  # noqa: E731
+    o = BuildOptions(project=project, use_rule_ner=use_rule_ner, include_text=False)
+    paths = {"pages": pages_path}
 
-    def write(df: DataFrame, table: str | None = None):
-        if buckets and table in TABLE_KEYS:
-            return lambda path: write_bucketed_table(df, path, table, buckets)
-        return lambda path: df.write.mode("overwrite").parquet(path)
+    def load(name: str) -> DataFrame:
+        if name == "pages":
+            return spark.read.parquet(pages_path)
+        return _read_table(spark, paths[name])
 
-    pages = spark.read.parquet(pages_path)
-    parsed_path = m.run_stage(
-        "parse",
-        [pages_path],
-        out("parsed"),
-        write(
-            parse_pages(
-                pages,
-                include_text=False,
-                ner_gazetteer=DEFAULT_GAZETTEER if use_rule_ner else None,
-            )
-        ),
-        force=force,
-    )
-    parsed = spark.read.parquet(parsed_path)
-    docs = doc_nodes(parsed, project=project)
-    docs_path = m.run_stage(
-        "docs", [parsed_path], out("docs"), write(docs, "docs"),
-        force=force, config={"buckets": buckets},
-    )
-    docs = spark.read.parquet(docs_path)
-    m.run_stage(
-        "doc_roots",
-        [docs_path],
-        out("doc_roots"),
-        write(has_parent_edges(docs), "doc_roots"),
-        force=force,
-        config={"buckets": buckets},
-    )
-    mentions = annotated_mentions(parsed)
-    mentions_path = m.run_stage(
-        "mentions", [parsed_path], out("mentions"), write(mentions), force=force
-    )
-    mentions = spark.read.parquet(mentions_path)
-    m.run_stage(
-        "entities",
-        [mentions_path],
-        out("entities"),
-        write(entity_nodes(mentions), "entities"),
-        force=force,
-        config={"buckets": buckets},
-    )
-    m.run_stage(
-        "appears_in",
-        [mentions_path],
-        out("appears_in"),
-        write(appears_in_edges(mentions), "appears_in"),
-        force=force,
-        config={"buckets": buckets},
-    )
-    m.run_stage(
-        "emails",
-        [mentions_path],
-        out("emails"),
-        write(email_edges(mentions), "emails"),
-        force=force,
-        config={"buckets": buckets},
-    )
+    for st in STAGES:
+        table = st.name in TABLE_KEYS
+        config = {"buckets": buckets} if table else None
+        if st.name == "parse":
+            config = {"layout": PARSE_LAYOUT}
+
+        def materialize(path: str, st=st, table=table) -> None:
+            df = st.fn(o, *(load(i) for i in st.inputs))
+            if buckets and table:
+                write_bucketed_table(df, path, st.name, buckets)
+            else:
+                df.write.mode("overwrite").parquet(path)
+
+        paths[st.name] = m.run_stage(
+            st.name,
+            [paths[i] for i in st.inputs],
+            str(Path(run_dir) / ("parsed" if st.name == "parse" else st.name)),
+            materialize,
+            force=force,
+            config=config,
+        )
     # constraint/index manifest + migration ladder (reference runs its
     # migrations at startup). assume_current is ONLY valid for a run
     # dir this call created from scratch — an EXISTING dir may hold
@@ -224,15 +186,4 @@ def run_pipeline(
     from .migrations import apply_migrations
 
     apply_migrations(spark, run_dir, assume_current=fresh_run_dir)
-    return {
-        name: out(name)
-        for name in (
-            "parsed",
-            "docs",
-            "doc_roots",
-            "mentions",
-            "entities",
-            "appears_in",
-            "emails",
-        )
-    }
+    return {Path(p).name: p for name, p in paths.items() if name != "pages"}

@@ -22,8 +22,9 @@ A parquet store has no live constraint engine, so the analog is:
     ``ConstraintViolation`` instead of silently landing;
   * ``MIGRATIONS`` — the versioned, idempotent data migrations that
     still mean something over parquet (mentionCount backfill,
-    self-parent deletion), recorded in the same json so reruns skip
-    (the reference's IF NOT EXISTS semantics).
+    self-parent deletion, dropping the parse carriers from docs),
+    recorded in the same json so reruns skip (the reference's IF NOT
+    EXISTS semantics).
 """
 
 from __future__ import annotations
@@ -125,11 +126,28 @@ def migration_delete_self_parent(spark: SparkSession, run_dir: str) -> None:
     )
 
 
+def migration_drop_doc_carriers(spark: SparkSession, run_dir: str) -> None:
+    """Drop the parse stage's per-document carrier columns
+    (pipeline.CARRIERS) from a docs table written before the docs
+    stage stopped storing them; increments left them null on every
+    row they merged. Layout-preserving."""
+    from .pipeline import CARRIERS
+    from .sinks.tables import rewrite_table
+
+    path = f"{run_dir}/docs"
+    if not Path(path).exists():
+        return
+    if not set(CARRIERS) & set(spark.read.parquet(path).columns):
+        return
+    rewrite_table(spark, path, "docs", lambda df: df.drop(*CARRIERS))
+
+
 # ordered ladder; names mirror the reference's migration versions
 MIGRATIONS: list[tuple[str, Callable | None]] = [
     ("v_0_2_0_constraints_and_indexes", None),  # manifest-only: CONSTRAINTS
     ("v_0_6_0_mention_count_backfill", migration_mention_count_backfill),
     ("v_0_9_0_delete_self_parent", migration_delete_self_parent),
+    ("v_1_0_0_drop_doc_carriers", migration_drop_doc_carriers),
 ]
 
 

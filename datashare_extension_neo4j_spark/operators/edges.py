@@ -116,12 +116,6 @@ def email_edges(mentions: DataFrame) -> DataFrame:
     )
 
 
-def _split_arr(c: F.Column) -> F.Column:
-    return F.when(
-        c.isNotNull() & (c != ""), F.split(c, "\\|")
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def appears_in_from_parsed(parsed: DataFrame) -> DataFrame:
     """Shuffle-free APPEARS_IN emission from the per-doc pre-aggregated
     ann_edges carrier (extract.aggregate_doc_edges): the aggregation
@@ -137,11 +131,9 @@ def appears_in_from_parsed(parsed: DataFrame) -> DataFrame:
         entity_id(F.col("e.mentionNorm"), F.col("e.category")).alias("startId"),
         F.col("documentId").alias("endId"),
         F.col("e.type").alias("type"),
-        _split_arr(F.col("e.mentionIds")).alias("mentionIds"),
-        _split_arr(F.col("e.mentionExtractors")).alias("mentionExtractors"),
-        F.transform(
-            _split_arr(F.col("e.offsets")), lambda x: x.cast("long")
-        ).alias("offsets"),
+        F.col("e.mentionIds").alias("mentionIds"),
+        F.col("e.mentionExtractors").alias("mentionExtractors"),
+        F.col("e.offsets").alias("offsets"),
         F.col("e.extractorLanguage").alias("extractorLanguage"),
         F.col("e.mentionCount").alias("mentionCount"),
     )
@@ -160,7 +152,7 @@ def email_edges_from_parsed(parsed: DataFrame) -> DataFrame:
         entity_id(F.col("e.mentionNorm"), F.col("e.category")).alias("startId"),
         F.col("documentId").alias("endId"),
         F.col("e.type").alias("type"),
-        _split_arr(F.col("e.fields")).alias("fields"),
+        F.col("e.fields").alias("fields"),
     )
 
 

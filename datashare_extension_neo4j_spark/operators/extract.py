@@ -106,19 +106,19 @@ _MENTION_STRUCT = T.StructType(
 # aggregation key (mentionNorm, category, documentId) never crosses
 # documents (reference imports.py:751-798), so the whole reduction
 # completes inside the parse pass — zero shuffle for edge emission.
-# Array fields are '|'-joined sorted-deduped strings, matching the CSV
-# serialization rules (to_neo4j.py:266-294).
+# Array fields are sorted (and, except ids, deduped) arrays in the
+# stored edge shape, so values holding '|' or '' survive intact.
 _EDGE_STRUCT = T.StructType(
     [
         T.StructField("category", T.StringType()),
         T.StructField("mentionNorm", T.StringType()),
         T.StructField("type", T.StringType()),
-        T.StructField("mentionIds", T.StringType()),
-        T.StructField("mentionExtractors", T.StringType()),
+        T.StructField("mentionIds", T.ArrayType(T.StringType())),
+        T.StructField("mentionExtractors", T.ArrayType(T.StringType())),
         T.StructField("extractorLanguage", T.StringType()),
-        T.StructField("offsets", T.StringType()),
+        T.StructField("offsets", T.ArrayType(T.LongType())),
         T.StructField("mentionCount", T.IntegerType()),
-        T.StructField("fields", T.StringType()),
+        T.StructField("fields", T.ArrayType(T.StringType())),
     ]
 )
 
@@ -139,14 +139,14 @@ def aggregate_doc_edges(mentions: list[dict]) -> list[dict]:
             {"ids": [], "extractors": set(), "offsets": set(), "lang": None},
         )
         a["ids"].append(m["id"])
-        if m.get("extractor"):
+        if m.get("extractor") is not None:
             a["extractors"].add(m["extractor"])
         a["offsets"].update(offs)
         # min over languages: deterministic under ANY mention order,
         # matching the groupBy paths (F.min) — 'first seen' depends on
         # partition/markup order and broke the byte-identical invariant
         ml = m.get("extractorLanguage")
-        if ml and (a["lang"] is None or ml < a["lang"]):
+        if ml is not None and (a["lang"] is None or ml < a["lang"]):
             a["lang"] = ml
         hdr = m.get("emailHeaderField")
         if hdr in _SENT_HEADERS:
@@ -165,10 +165,10 @@ def aggregate_doc_edges(mentions: list[dict]) -> list[dict]:
                 "category": cat,
                 "mentionNorm": norm,
                 "type": "APPEARS_IN",
-                "mentionIds": "|".join(sorted(a["ids"])),
-                "mentionExtractors": "|".join(sorted(a["extractors"])),
+                "mentionIds": sorted(a["ids"]),
+                "mentionExtractors": sorted(a["extractors"]),
                 "extractorLanguage": a["lang"],
-                "offsets": "|".join(str(o) for o in sorted(a["offsets"])),
+                "offsets": sorted(a["offsets"]),
                 "mentionCount": len(a["ids"]),
                 "fields": None,
             }
@@ -184,7 +184,7 @@ def aggregate_doc_edges(mentions: list[dict]) -> list[dict]:
                 "extractorLanguage": None,
                 "offsets": None,
                 "mentionCount": None,
-                "fields": "|".join(sorted(e["fields"])),
+                "fields": sorted(e["fields"]),
             }
         )
     return out
@@ -219,6 +219,21 @@ PARSED_SCHEMA = T.StructType(
 )
 
 
+def _int_tokens(raw: str) -> list[int]:
+    """The ';'-separated tokens of a data-offsets attribute that are
+    64-bit integers; anything else in hostile markup is not an offset
+    and is dropped, so no later cast or int() can fail the job."""
+    out = []
+    for tok in raw.split(";"):
+        try:
+            v = int(tok)
+        except ValueError:
+            continue
+        if -(2**63) <= v < 2**63:
+            out.append(v)
+    return out
+
+
 def _parse_one(url, warc_ts, html, text, lang) -> dict:
     p = _Extractor()
     raw = html.decode("utf-8", errors="replace") if html is not None else ""
@@ -238,7 +253,7 @@ def _parse_one(url, warc_ts, html, text, lang) -> dict:
             # violate MENTION_SCHEMA's non-null fields)
             continue
         offs = "|".join(
-            o for o in sp.get("data-offsets", "").split(";") if o != ""
+            str(o) for o in _int_tokens(sp.get("data-offsets", ""))
         )
         md = json.loads(sp["data-metadata"]) if "data-metadata" in sp else None
         mentions.append(

@@ -1,178 +1,154 @@
 """End-to-end KG construction pipeline (SURVEY.md §3.1/§3.2 reshaped
-Spark-first).
+Spark-first): the graph's derivation, defined once.
 
-  pages ──parse(mapInPandas)──▶ parsed ──┬─▶ doc nodes ─▶ HAS_PARENT
-                                         ├─▶ annotated mentions ┐
-                                         └─▶ rule-based NER ────┤
-                                                                ▼
-                     entities (dedup) + APPEARS_IN / SENT / RECEIVED
+  pages ─▶ parse ──┬─▶ docs ─▶ doc_roots (HAS_PARENT)
+                   ├─▶ mentions
+                   ├─▶ appears_in
+                   ├─▶ emails
+                   └─▶ entities (dedup)
+
+``parse`` is the widen guard plus one mapInPandas pass: text
+extraction, inline annotations, fused rule NER, and the per-document
+APPEARS_IN / SENT / RECEIVED aggregation (the key (mentionNorm,
+category, documentId) never crosses documents, so it completes inside
+the pass). Every later stage is a projection of its inputs; the only
+shuffle left is the entities dedup.
+
+``STAGES`` lists (name, inputs, function); the runner, not the
+builder, decides what is materialized:
+
+  * ``build_graph`` returns lazy frames, with the parse optionally
+    checkpointed to parquet (increments, bench, kg_full_pipeline);
+  * ``manifest.run_pipeline`` makes every stage a manifest-guarded
+    parquet write (``cli build``);
+  * ``streaming.ingest`` runs the parse, docs and appears_in stage
+    functions per micro-batch.
 
 The reference's 5-phase async dance (sliced ES scans → bounded queues
 → single-writer MERGE, core/imports.py:147-316,582-737) collapses into
-one declarative DAG: slicing = input partitions, backpressure = Spark
-pipelining, the streaming sort-agg = hash aggregation with spill.
-
-The parsed frame is the only thing worth caching (three consumers);
-mention union is by name; the doc-id semi-join (J1, reference
-imports.py:829-871) keeps mentions whose host document exists — at web
-scale this is a shuffle-free broadcast when the doc-id side is small,
-else AQE picks the strategy.
+this DAG: slicing = input partitions, backpressure = Spark pipelining.
+The groupBy operators (edges.appears_in_edges / email_edges,
+entities.entity_nodes) stay the reference semantics for mention
+streams that arrive without their documents —
+``sinks.tables.incremental_import_mentions``, which applies the
+doc-id semi-join (J1, reference imports.py:829-871) — and the tests
+hold this DAG equal to them.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import hashlib
+from collections.abc import Callable
+from dataclasses import dataclass, fields
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .operators.documents import doc_nodes, has_parent_edges
-from .operators.edges import appears_in_edges, email_edges
+from .operators.edges import appears_in_from_parsed, email_edges_from_parsed
 from .operators.entities import entity_nodes
-from .operators.extract import parse_pages
-from .operators.ner import annotated_mentions, rule_based_mentions
+from .operators.extract import PARSED_SCHEMA, parse_pages
+from .operators.ner import DEFAULT_GAZETTEER, annotated_mentions
+from .sources.pages import widen
 
 
 @dataclass
 class GraphBuild:
     docs: DataFrame
     doc_roots: DataFrame
-    mentions: DataFrame
     entities: DataFrame
     appears_in: DataFrame
     emails: DataFrame
-    parsed: DataFrame | None = None
-    counters: dict = field(default_factory=dict)
+    mentions: DataFrame | None = None
 
-    def unpersist(self) -> None:
-        if self.parsed is not None:
-            try:
-                self.parsed.unpersist()
-            except Exception:
-                pass
+
+class BuildOptions(NamedTuple):
+    project: str = "test_project"
+    use_rule_ner: bool = False
+    include_text: bool = True
+    emit_mentions: bool = True
+
+
+# per-document carrier columns of the parse: inputs of the mention and
+# edge stages, never part of the docs table
+CARRIERS = ("ann_mentions", "ann_edges")
+
+# digest of the parse output's schema: a stored parse written under
+# another carrier layout is stale even for identical pages, so it is
+# re-run instead of feeding old carriers to today's stage functions
+PARSE_LAYOUT = hashlib.sha1(PARSED_SCHEMA.json().encode()).hexdigest()[:12]
+
+
+def parse_stage(o: BuildOptions, pages: DataFrame) -> DataFrame:
+    return parse_pages(
+        widen(pages),
+        include_text=o.include_text,
+        ner_gazetteer=DEFAULT_GAZETTEER if o.use_rule_ner else None,
+        emit_mentions=o.emit_mentions,
+    )
+
+
+def docs_stage(o: BuildOptions, parsed: DataFrame) -> DataFrame:
+    return doc_nodes(parsed, project=o.project).drop(*CARRIERS)
+
+
+def mentions_stage(o: BuildOptions, parsed: DataFrame) -> DataFrame:
+    if "ann_mentions" in parsed.columns:
+        return annotated_mentions(parsed)
+    # emit_mentions=False: the raw mention stream is not carried
+    from .schemas import MENTION_SCHEMA
+
+    return parsed.sparkSession.createDataFrame([], MENTION_SCHEMA)
+
+
+def entities_stage(o: BuildOptions, parsed: DataFrame) -> DataFrame:
+    # one explode of the edge carrier covers APPEARS_IN and SENT /
+    # RECEIVED keys alike
+    e = parsed.select(F.explode("ann_edges").alias("e"))
+    return entity_nodes(e.select("e.mentionNorm", "e.category"))
+
+
+class Stage(NamedTuple):
+    name: str
+    inputs: tuple[str, ...]
+    fn: Callable[..., DataFrame]  # fn(options, *input frames)
+
+
+# topologically ordered; "pages" is the one external input
+STAGES: tuple[Stage, ...] = (
+    Stage("parse", ("pages",), parse_stage),
+    Stage("docs", ("parse",), docs_stage),
+    Stage("doc_roots", ("docs",), lambda o, docs: has_parent_edges(docs)),
+    Stage("mentions", ("parse",), mentions_stage),
+    Stage("appears_in", ("parse",), lambda o, p: appears_in_from_parsed(p)),
+    Stage("emails", ("parse",), lambda o, p: email_edges_from_parsed(p)),
+    Stage("entities", ("parse",), entities_stage),
+)
 
 
 def build_graph(
     pages: DataFrame,
     project: str = "test_project",
     use_rule_ner: bool = False,
-    salted: bool = False,
-    semi_join_docs: bool = True,
-    cache: bool = True,
-    fuse_ner: bool = False,
     include_text: bool = True,
     emit_mentions: bool = True,
     checkpoint_dir: str | None = None,
 ) -> GraphBuild:
-    # scale-adaptive parse parallelism (r6): a small pages input (one
-    # parquet file → one scan split) would serialize the Python parse
-    # kernel on a single core; widen ONLY when the scan is narrower
-    # than the cluster. At real scale the input already carries >=
-    # defaultParallelism splits and this is a no-op — no constant
-    # tuned to either mode. Round-robin repartition is retry-safe
-    # (sortBeforeRepartition) and the pipeline's output is
-    # partitioning-independent (per-doc aggregation keys). The probe
-    # reads input file sizes (early-exit once past the threshold,
-    # ~ms) rather than converting the plan to an RDD (~0.25 s of
-    # driver wall); non-file sources fall back to the exact
-    # plan-derived partition count.
-    spark = pages.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    threshold = target * 4 * 1024 * 1024  # openCostInBytes floor
-    narrow = None
-    try:
-        files = pages.inputFiles()
-        if files:
-            jvm = spark._jvm
-            conf = spark._jsc.hadoopConfiguration()
-            total = 0
-            for f in files:
-                p = jvm.org.apache.hadoop.fs.Path(f)
-                total += p.getFileSystem(conf).getFileStatus(p).getLen()
-                if total >= threshold:
-                    break
-            narrow = total < threshold
-    except Exception:
-        narrow = None
-    if narrow is None:
-        narrow = pages.rdd.getNumPartitions() < target
-    if narrow:
-        pages = pages.repartition(target)
-    if fuse_ner:
-        # scale path: NER fused into the parse pass (one scan over the
-        # html) and the wide text column dropped from the exchange
-        from .operators.ner import DEFAULT_GAZETTEER
+    """Lazy runner over ``STAGES``.
 
-        parsed = parse_pages(
-            pages,
-            include_text=include_text,
-            ner_gazetteer=DEFAULT_GAZETTEER if use_rule_ner else None,
-            emit_mentions=emit_mentions,
-        )
-        use_rule_ner = False
-        # fused mentions are born from their own document row — the
-        # J1 semi-join is a tautology here; it matters only for the
-        # incremental case (mentions vs previously-imported docs)
-        semi_join_docs = False
-    else:
-        parsed = parse_pages(pages)
-    if checkpoint_dir is not None:
-        # stage checkpoint: the parse output lands in columnar parquet
-        # and every consumer does a pruned scan. Scale-correct (no JVM
-        # object cache, resumable — the manifest pins this path) and
-        # GC-friendly: in-memory caching of nested rows is allocation-
-        # bound and anti-scales past ~8 threads (measured).
-        spark = pages.sparkSession
-        path = f"{checkpoint_dir}/parsed"
-        parsed.write.mode("overwrite").parquet(path)
-        parsed = spark.read.parquet(path)
-        cache = False
-    if cache:
-        # one persist of the (expensive) Python parse output; docs and
-        # both mention streams are cheap projections over it
-        parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-    docs = doc_nodes(parsed, project=project)
-    roots = has_parent_edges(docs)
-    if "ann_mentions" in parsed.columns:
-        mentions = annotated_mentions(parsed)
-    else:
-        # emit_mentions=False: raw mention stream not materialized
-        from .schemas import MENTION_SCHEMA
-
-        mentions = parsed.sparkSession.createDataFrame([], MENTION_SCHEMA)
-    if use_rule_ner:
-        rb = rule_based_mentions(docs, id_col="id", text_col="text", lang_col="lang")
-        mentions = mentions.unionByName(rb)
-    if semi_join_docs:
-        # J1: restrict mentions to existing documents (left semi).
-        doc_ids = docs.select(F.col("id").alias("documentId"))
-        mentions = mentions.join(doc_ids, "documentId", "left_semi")
-    if fuse_ner and "ann_edges" in parsed.columns:
-        # edges were pre-aggregated per doc inside the parse pass
-        # (key never crosses documents) — pure projections, no shuffle
-        from .operators.edges import (
-            appears_in_from_parsed,
-            email_edges_from_parsed,
-        )
-
-        appears = appears_in_from_parsed(parsed)
-        emails = email_edges_from_parsed(parsed)
-        ents = entity_nodes(
-            appears.select("mentionNorm", "category").unionByName(
-                emails.select("mentionNorm", "category")
-            )
-        )
-    else:
-        ents = entity_nodes(mentions)
-        appears = appears_in_edges(mentions, salted=salted)
-        emails = email_edges(mentions)
-    return GraphBuild(
-        docs=docs,
-        doc_roots=roots,
-        mentions=mentions,
-        entities=ents,
-        appears_in=appears,
-        emails=emails,
-        parsed=parsed if cache else None,
-    )
+    With ``checkpoint_dir`` the parse output lands in columnar parquet
+    and every consumer does a pruned scan instead of re-running the
+    Python parse: scale-correct (no JVM object cache) and GC-friendly
+    — in-memory caching of nested rows is allocation-bound and
+    anti-scales past ~8 threads (measured)."""
+    o = BuildOptions(project, use_rule_ner, include_text, emit_mentions)
+    frames = {"pages": pages}
+    for st in STAGES:
+        df = st.fn(o, *(frames[i] for i in st.inputs))
+        if st.name == "parse" and checkpoint_dir is not None:
+            path = f"{checkpoint_dir}/parsed"
+            df.write.mode("overwrite").parquet(path)
+            df = pages.sparkSession.read.parquet(path)
+        frames[st.name] = df
+    return GraphBuild(**{f.name: frames[f.name] for f in fields(GraphBuild)})

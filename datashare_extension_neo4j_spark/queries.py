@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from .constants import NE_NODE, NEO4J_ARRAY_SPLIT_CHAR
 from .functions.hashing import entity_id
+from .sources.pages import widen as _widen
 
 ROOT_STRIDE = 5
 
@@ -59,52 +60,6 @@ def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/customer.parquet")
-
-
-# planning-metadata memo only (never query results): per-process cache
-# of "is this input narrower than the cluster" decisions, so repeated
-# constructions don't re-ask the filesystem
-_WIDEN_CACHE: dict = {}
-
-
-def _widen(df: DataFrame, path: str | None = None) -> DataFrame:
-    """Scale-adaptive parallelism guard (guide §2.5, input skew): a
-    small input (one parquet file → one scan split) serializes every
-    downstream map stage on a single core, which matters for the
-    hash-heavy kernels (8-seed MinHash md5, SimHash bit votes). Widen
-    with a round-robin repartition ONLY when the scan is narrower than
-    the cluster; at real scale the scan already carries >=
-    defaultParallelism splits and this is a structural no-op — nothing
-    is tuned to either mode. Round-robin is retry-safe
-    (sortBeforeRepartition) and every consumer's result is
-    partitioning-independent.
-
-    With ``path`` the decision reads the input's byte size from the
-    (Hadoop) filesystem — ~10 ms, memoized per process — instead of
-    converting the plan to an RDD (~0.2 s of driver wall per query
-    construction). The split math mirrors Spark's: with
-    openCostInBytes = 4 MB the scan cannot reach ``n`` splits when the
-    input is under n × 4 MB, and reaches it comfortably above; the
-    band between is a no-widen (the scan is already within ~32× of
-    the cluster width). Without ``path`` (derived inputs) the exact
-    plan-derived partition count is used."""
-    spark = df.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    if path is not None:
-        key = (path, n)
-        if key not in _WIDEN_CACHE:
-            try:
-                jvm = spark._jvm
-                p = jvm.org.apache.hadoop.fs.Path(path)
-                fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-                size = fs.getContentSummary(p).getLength()
-                _WIDEN_CACHE[key] = size < n * 4 * 1024 * 1024
-            except Exception:
-                _WIDEN_CACHE[key] = df.rdd.getNumPartitions() < n
-        return df.repartition(n) if _WIDEN_CACHE[key] else df
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
 
 
 def _doc_id() -> F.Column:
@@ -540,17 +495,15 @@ def kg_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .fixtures import pages_from_documents
     from .pipeline import build_graph
 
-    # the fused scale path: NER inside the parse pass, per-doc edge
-    # pre-aggregation → ONE mapInPandas node and zero edge shuffle
-    # (output proven equal to the unfused path in
-    # tests/test_fused_equivalence.py; hash-verified by the oracle)
+    # NER inside the parse pass, per-doc edge pre-aggregation → ONE
+    # mapInPandas node and zero edge shuffle (output proven equal to
+    # the groupBy operators in tests/test_fused_equivalence.py;
+    # hash-verified by the oracle)
     g = build_graph(
         pages_from_documents(spark, sf_dir),
         use_rule_ner=True,
-        fuse_ner=True,
         include_text=False,
         emit_mentions=False,
-        cache=False,
     )
     return joined_arrays(g.appears_in)
 

@@ -94,15 +94,18 @@ def write_bucketed_table(
     """Write one graph table hash-partitioned on its merge key, with
     the ``_n_buckets`` sidecar pinning N for later merges (empty
     buckets leave no partition dir, so N can't be inferred from the
-    listing). An EMPTY frame is written plain instead: a partitioned
-    write of zero rows produces no files at all (schema unreadable),
-    so empty tables stay in the plain layout until data arrives."""
+    listing). The write is clustered on the bucket (one task, so one
+    file, per bucket): the file count does not depend on how many
+    partitions the producing plan happens to have. An EMPTY frame is
+    written plain instead: a partitioned write of zero rows produces
+    no files at all (schema unreadable), so empty tables stay in the
+    plain layout until data arrives."""
     if df.isEmpty():
         df.write.mode("overwrite").parquet(path)
         return
-    bucketize(df, TABLE_KEYS[name], buckets).write.mode(
-        "overwrite"
-    ).partitionBy(BUCKET_COL).parquet(path)
+    bucketize(df, TABLE_KEYS[name], buckets).repartition(
+        buckets, BUCKET_COL
+    ).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
     (Path(path) / "_n_buckets").write_text(str(buckets))
 
 
@@ -176,16 +179,8 @@ def rewrite_table(spark: SparkSession, path: str, name: str, transform) -> None:
         staged.unpersist()
 
 
-def _write(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def materialize_graph(
-    g: GraphBuild, out_dir: str, parallel: bool = True,
-    buckets: int | None = None,
+    g: GraphBuild, out_dir: str, buckets: int | None = None
 ) -> dict[str, str]:
     """Write the five graph tables; returns name → path.
 
@@ -197,35 +192,29 @@ def materialize_graph(
     later increments rewrite only touched partitions (module
     docstring); N should be sized so one bucket ≈ one comfortable
     task (e.g. 1024-8192 at 100 TB)."""
-    frames = {
-        "docs": g.docs,
-        "doc_roots": g.doc_roots,
-        "entities": g.entities,
-        "appears_in": g.appears_in,
-        "emails": g.emails,
-    }
-    paths = {name: f"{out_dir}/{name}" for name in frames}
+    from concurrent.futures import ThreadPoolExecutor
 
-    def write_one(name: str, df: DataFrame) -> None:
+    paths = {name: f"{out_dir}/{name}" for name in TABLE_KEYS}
+
+    def write_one(name: str) -> None:
+        df = getattr(g, name)
         if buckets:
             write_bucketed_table(df, paths[name], name, buckets)
         else:
-            _write(df, paths[name])
+            df.write.mode("overwrite").parquet(paths[name])
 
-    if parallel:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(frames)) as ex:
-            futs = [
-                ex.submit(write_one, name, df)
-                for name, df in frames.items()
-            ]
-            for f in futs:
-                f.result()
-    else:
-        for name, df in frames.items():
-            write_one(name, df)
+    with ThreadPoolExecutor(max_workers=len(paths)) as ex:
+        for f in [ex.submit(write_one, name) for name in paths]:
+            f.result()
     return paths
+
+
+def load_store(spark: SparkSession, run_dir: str) -> GraphBuild:
+    """The five stored graph tables of a run dir (bucket column
+    dropped), as the GraphBuild a sink or dump consumes."""
+    return GraphBuild(
+        **{name: _read_table(spark, f"{run_dir}/{name}") for name in TABLE_KEYS}
+    )
 
 
 def combine_docs(old: DataFrame, new: DataFrame) -> DataFrame:
@@ -377,8 +366,8 @@ def incremental_import(
     # (never read by table scans) and safe to delete by prefix.
     ckpt = f"{run_dir}/_increment_ckpt_{uuid.uuid4().hex}"
     g = build_graph(
-        pages, project=project, use_rule_ner=True, fuse_ner=True,
-        include_text=False, cache=False, checkpoint_dir=ckpt,
+        pages, project=project, use_rule_ner=True, include_text=False,
+        checkpoint_dir=ckpt,
     )
     try:
         return _incremental_merge(spark, g, run_dir)
@@ -400,12 +389,11 @@ def _created_count(
 
 def _incremental_merge(spark: SparkSession, g, run_dir: str) -> dict:
     docs_path = f"{run_dir}/docs"
-    new_docs = g.docs.drop("ann_mentions", "ann_edges")
     doc_counters = {
-        "imported": new_docs.count(),
-        "nodes_created": _created_count(spark, docs_path, new_docs, "docs"),
+        "imported": g.docs.count(),
+        "nodes_created": _created_count(spark, docs_path, g.docs, "docs"),
     }
-    merge_table(spark, docs_path, new_docs, "docs")
+    merge_table(spark, docs_path, g.docs, "docs")
 
     roots_path = f"{run_dir}/doc_roots"
     roots_created = _created_count(

@@ -3,11 +3,12 @@
 The reference is incremental-batch, not streaming (SURVEY.md §2.10) —
 its incrementality is re-running imports with MERGE upserts. The
 streaming ingest here is the Spark-native generalization: new page
-files land in the input directory, each micro-batch runs the same
-parse/NER/edge derivation, and ``foreachBatch`` applies the
-MERGE-with-array-union semantics (reference named_entities.py:84-97 =
-sinks/tables.merge_appears_in) against the graph tables — so batch
-re-import and continuous ingest share one code path.
+files land in the input directory, each micro-batch runs the batch
+pipeline's own parse, docs and appears_in stages (pipeline.STAGES), and
+``foreachBatch`` applies the MERGE-with-array-union semantics
+(reference named_entities.py:84-97 = sinks/tables.merge_appears_in)
+against the graph tables — so batch re-import and continuous ingest
+share one code path.
 
 ``trigger(availableNow=True)`` drains what exists and stops — used by
 tests and backfills; drop it for continuous operation.
@@ -19,10 +20,9 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.documents import doc_nodes
-from ..operators.edges import appears_in_edges
-from ..operators.extract import PARSED_SCHEMA, parse_pages
-from ..operators.ner import DEFAULT_GAZETTEER, annotated_mentions
+from ..operators.edges import appears_in_from_parsed
+from ..operators.extract import PARSED_SCHEMA
+from ..pipeline import BuildOptions, docs_stage, parse_stage
 from ..schemas import PAGES_SCHEMA
 from ..sinks.tables import merge_table
 
@@ -47,21 +47,18 @@ def start_graph_ingest(
     appears_path = f"{out_dir}/appears_in"
 
     pages = stream_pages(spark, input_path)
+    o = BuildOptions(use_rule_ner=True, include_text=False)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        parsed = parse_pages(
-            batch_df, include_text=False, ner_gazetteer=DEFAULT_GAZETTEER
-        )
         # small per-batch frames: one persist avoids a double parse
-        parsed = parsed.persist()
+        parsed = parse_stage(o, batch_df).persist()
         try:
-            docs = doc_nodes(parsed)
-            docs.drop("ann_mentions", "metadata").write.mode("append").parquet(
+            docs_stage(o, parsed).drop("metadata").write.mode("append").parquet(
                 docs_path
             )
-            appears = appears_in_edges(annotated_mentions(parsed))
+            appears = appears_in_from_parsed(parsed)
             if Path(appears_path).exists():
                 # layout-aware MERGE: bucketed tables rewrite only the
                 # partitions this micro-batch touches

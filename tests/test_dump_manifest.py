@@ -11,7 +11,7 @@ import pytest
 from datashare_extension_neo4j_spark.fixtures import reference_pages
 from datashare_extension_neo4j_spark.graph import to_property_graph
 from datashare_extension_neo4j_spark.manifest import Manifest, run_pipeline
-from datashare_extension_neo4j_spark.pipeline import build_graph
+from datashare_extension_neo4j_spark.pipeline import PARSE_LAYOUT, build_graph
 from datashare_extension_neo4j_spark.plans.dump import dump_cypher, dump_graphml
 from datashare_extension_neo4j_spark.plans.dsl import GraphTables
 from datashare_extension_neo4j_spark.stats import (
@@ -73,7 +73,7 @@ def test_cypher_dump(small_graph):
 
 
 def test_property_graph_and_stats(spark, tmp_path):
-    g = build_graph(reference_pages(spark, n_docs=10), cache=False)
+    g = build_graph(reference_pages(spark, n_docs=10))
     pg = to_property_graph(g)
     labels = {tuple(r["labels"]) for r in pg.nodes.collect()}
     assert ("Document",) in labels
@@ -133,7 +133,7 @@ def test_manifest_resume(spark, tmp_path):
 def test_merge_appears_in(spark, tmp_path):
     from datashare_extension_neo4j_spark.sinks.tables import merge_appears_in
 
-    g = build_graph(reference_pages(spark, n_docs=6), cache=False)
+    g = build_graph(reference_pages(spark, n_docs=6))
     path = str(tmp_path / "appears")
     g.appears_in.write.parquet(path)
     before = {
@@ -179,4 +179,4 @@ def test_manifest_stale_input_reruns(spark, tmp_path):
     run_pipeline(spark, pages_path, run_dir)
     assert spark.read.parquet(f"{run_dir}/docs").count() == 9
     m = Manifest(run_dir)
-    assert m.is_complete("parse", [pages_path])
+    assert m.is_complete("parse", [pages_path], {"layout": PARSE_LAYOUT})

@@ -27,7 +27,7 @@ N = 20
 def export_dir(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("export")
     pages = reference_pages(spark, n_docs=N, n_noise=4)
-    g = build_graph(pages, project="test_project", cache=False)
+    g = build_graph(pages, project="test_project")
     export_graph_csvs(
         docs=g.docs.where("id like 'doc-%'"),
         doc_roots=g.doc_roots,
@@ -129,7 +129,7 @@ def test_email_docs_csv_full_golden(export_dir):
 def test_dsl_over_real_graph(spark):
     """Integration: pipeline → property graph → DSL dump → nodes/edges."""
     pages = reference_pages(spark, n_docs=10)
-    g = build_graph(pages, cache=False)
+    g = build_graph(pages)
     tables = to_property_graph(g)
     dump = {
         "queries": [

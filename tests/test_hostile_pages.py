@@ -38,7 +38,7 @@ HOSTILE_ROWS = [
 @pytest.fixture(scope="module")
 def hostile_graph(spark):
     pages = spark.createDataFrame(HOSTILE_ROWS, PAGES_SCHEMA)
-    g = build_graph(pages, use_rule_ner=True, cache=False)
+    g = build_graph(pages, use_rule_ner=True)
     yield g
 
 
@@ -83,11 +83,11 @@ def test_extraction_is_deterministic(spark):
     pages8 = spark.createDataFrame(HOSTILE_ROWS, PAGES_SCHEMA).repartition(8)
     t1 = {
         r["id"]: r["text"]
-        for r in build_graph(pages1, cache=False).docs.collect()
+        for r in build_graph(pages1).docs.collect()
     }
     t8 = {
         r["id"]: r["text"]
-        for r in build_graph(pages8, cache=False).docs.collect()
+        for r in build_graph(pages8).docs.collect()
     }
     assert t1 == t8
 
@@ -117,9 +117,7 @@ def test_null_warc_ts_extraction_date(spark):
     string 'NaT' (pd.NaT is not None and NaT.isoformat() == 'NaT')."""
     rows = [("https://no-ts.test/x", None,
              b"<html><body><p>hi</p></body></html>", None, "en")]
-    g = build_graph(
-        spark.createDataFrame(rows, PAGES_SCHEMA), cache=False
-    )
+    g = build_graph(spark.createDataFrame(rows, PAGES_SCHEMA))
     assert g.docs.collect()[0]["extractionDate"] is None
 
 
@@ -134,9 +132,25 @@ def test_span_without_norm_is_dropped(spark):
         b"</body></html>"
     )
     rows = [("https://partial-span.test/x", None, html, None, "en")]
-    g = build_graph(spark.createDataFrame(rows, PAGES_SCHEMA), cache=False)
+    g = build_graph(spark.createDataFrame(rows, PAGES_SCHEMA))
     norms = [r["mentionNorm"] for r in g.mentions.collect()]
     assert norms == ["alice"]
+
+
+def test_non_integer_offsets_do_not_crash(spark):
+    """A non-integer data-offsets token is not an offset: it is dropped
+    instead of failing the whole parse job, and the integer one
+    survives into both the mention stream and the edge."""
+    html = (
+        b'<html><body><p>x</p>'
+        b'<span class="ne" data-id="m1" data-norm="alice"'
+        b' data-category="PERSON" data-offsets="12;abc"></span>'
+        b"</body></html>"
+    )
+    rows = [("https://bad-offsets.test/x", None, html, None, "en")]
+    g = build_graph(spark.createDataFrame(rows, PAGES_SCHEMA))
+    assert [r["offsets"] for r in g.mentions.collect()] == [[12]]
+    assert [r["offsets"] for r in g.appears_in.collect()] == [[12]]
 
 
 def test_cypher_dump_escapes_hostile_ids(spark, tmp_path):

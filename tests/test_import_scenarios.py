@@ -20,7 +20,7 @@ from datashare_extension_neo4j_spark.pipeline import build_graph
 def corpus(spark):
     # 20 docs + 5 noise pages, 20 mentions, 2 emails — the reference corpus
     pages = reference_pages(spark, n_docs=20, n_noise=5)
-    g = build_graph(pages, cache=False, semi_join_docs=False)
+    g = build_graph(pages)
     return g
 
 

@@ -144,9 +144,9 @@ def test_bucketed_merge_rewrites_only_touched_partitions(spark, tmp_path):
     )
 
     pages = reference_pages(spark, n_docs=12)
-    g = build_graph(pages, use_rule_ner=True, cache=False)
+    g = build_graph(pages, use_rule_ner=True)
     out = str(tmp_path / "bucketed")
-    materialize_graph(g, out, parallel=False, buckets=8)
+    materialize_graph(g, out, buckets=8)
     apath = f"{out}/appears_in"
 
     def file_states(path):
@@ -240,9 +240,9 @@ def test_bucketed_merge_empty_increment_is_noop(spark, tmp_path):
     )
 
     pages = reference_pages(spark, n_docs=6)
-    g = build_graph(pages, use_rule_ner=True, cache=False)
+    g = build_graph(pages, use_rule_ner=True)
     out = str(tmp_path / "b")
-    materialize_graph(g, out, parallel=False, buckets=4)
+    materialize_graph(g, out, buckets=4)
     apath = f"{out}/appears_in"
     before = spark.read.parquet(apath).count()
     empty = spark.read.parquet(apath).drop(BUCKET_COL).limit(0)

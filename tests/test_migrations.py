@@ -16,6 +16,7 @@ from datashare_extension_neo4j_spark.migrations import (
     apply_migrations,
     verify_constraints,
 )
+from datashare_extension_neo4j_spark.sinks.tables import rewrite_table
 
 
 def _fresh_run(spark, tmp_path, n_docs=6):
@@ -36,7 +37,7 @@ def test_pipeline_writes_constraints_manifest(spark, tmp_path):
     ]
     assert "index_ne_mention_norm" in state["constraints"]["entities"]["indexes"]
     # whole ladder recorded (fresh store is at head); rerun applies none
-    assert len(state["applied"]) == 3
+    assert len(state["applied"]) == 4
     assert apply_migrations(spark, run_dir) == []
     verify_constraints(spark, run_dir)  # fresh tables are all unique
 
@@ -72,6 +73,36 @@ def test_data_migrations_repair_corrupt_store(spark, tmp_path):
     assert roots.where("src = dst").count() == 0
     a = spark.read.parquet(appears_path)
     assert a.where(F.col("mentionCount") != F.size("mentionIds")).count() == 0
+
+
+def test_drop_doc_carriers_keeps_bucketing(spark, tmp_path):
+    """A docs table from a build that still stored the parse carriers
+    loses them, and stays bucketed."""
+    pages = reference_pages(spark, n_docs=6)
+    pages_path = str(tmp_path / "pages")
+    pages.write.parquet(pages_path)
+    run_dir = str(tmp_path / "run")
+    run_pipeline(spark, pages_path, run_dir, buckets=4)
+    docs_path = f"{run_dir}/docs"
+    n_docs = spark.read.parquet(docs_path).count()
+    # the store an older build wrote: carrier columns on every doc row
+    rewrite_table(
+        spark,
+        docs_path,
+        "docs",
+        lambda df: df.withColumn(
+            "ann_mentions", F.array(F.lit("m"))
+        ).withColumn("ann_edges", F.array(F.lit("e"))),
+    )
+    (Path(run_dir) / "constraints.json").unlink()
+
+    assert "v_1_0_0_drop_doc_carriers" in apply_migrations(spark, run_dir)
+    docs = spark.read.parquet(docs_path)
+    assert "ann_mentions" not in docs.columns
+    assert "ann_edges" not in docs.columns
+    assert docs.count() == n_docs
+    assert (Path(docs_path) / "_n_buckets").read_text() == "4"
+    assert any(p.name.startswith("_bucket=") for p in Path(docs_path).iterdir())
 
 
 def test_merge_rejects_duplicate_doc_ids(spark, tmp_path):

@@ -20,9 +20,7 @@ N_DOCS = 20
 @pytest.fixture(scope="module")
 def graph(spark):
     pages = reference_pages(spark, n_docs=N_DOCS, n_noise=5)
-    g = build_graph(pages, project="test_project")
-    yield g
-    g.unpersist()
+    return build_graph(pages, project="test_project")
 
 
 def test_doc_nodes(graph):
@@ -53,7 +51,7 @@ def test_extracted_text_byte_identical(graph, spark):
     # the per-row invariant: re-running extraction yields identical bytes
     t1 = {r["id"]: r["text"] for r in graph.docs.select("id", "text").collect()}
     pages = reference_pages(spark, n_docs=N_DOCS, n_noise=5)
-    g2 = build_graph(pages, cache=False)
+    g2 = build_graph(pages)
     t2 = {r["id"]: r["text"] for r in g2.docs.select("id", "text").collect()}
     assert t1 == t2
     assert all(isinstance(v, str) and v for v in t1.values())

@@ -51,7 +51,7 @@ def emitted_triples(g) -> set[tuple[str, str, str]]:
 def test_triple_precision_recall(spark):
     gold = golden_triples()
     pages = reference_pages(spark, n_docs=N, n_noise=5)
-    g = build_graph(pages, cache=False)  # parity mode: no rule NER
+    g = build_graph(pages)  # parity mode: no rule NER
     got = emitted_triples(g)
     tp = len(gold & got)
     precision = tp / len(got)
@@ -65,7 +65,7 @@ def test_triple_precision_recall(spark):
 def test_triple_pr_fused_path(spark):
     gold = golden_triples()
     pages = reference_pages(spark, n_docs=N, n_noise=5)
-    g = build_graph(pages, fuse_ner=True, include_text=False, cache=False)
+    g = build_graph(pages, include_text=False)
     got = emitted_triples(g)
     tp = len(gold & got)
     assert tp / len(got) >= 0.95

@@ -56,8 +56,8 @@ pages = spark.read.parquet("{pages}")
 shutil.rmtree("/tmp/_scaling_ck", ignore_errors=True)
 shutil.rmtree("/tmp/_scaling_out", ignore_errors=True)
 t0 = time.perf_counter()
-g = build_graph(pages, use_rule_ner=True, fuse_ner=True,
-                include_text=False, emit_mentions=False,
+g = build_graph(pages, use_rule_ner=True, include_text=False,
+                emit_mentions=False,
                 checkpoint_dir="/tmp/_scaling_ck")
 materialize_graph(g, "/tmp/_scaling_out")
 elapsed = time.perf_counter() - t0
