@@ -581,8 +581,10 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--force", action="store_true")
     b.add_argument(
         "--buckets", type=int, default=None,
-        help="hash-partition graph tables on their merge key so "
-        "incremental imports rewrite only touched partitions",
+        help="number of hash buckets per graph table (tables are "
+        "always bucketed on their merge key, so incremental imports "
+        "rewrite only touched buckets); default: the session's "
+        "spark.sql.shuffle.partitions",
     )
     b.set_defaults(fn=cmd_build)
 

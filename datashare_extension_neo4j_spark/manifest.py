@@ -138,11 +138,14 @@ def run_pipeline(
     incomplete/stale stages (and builds no frame for a skipped one).
     Returns {table: path}.
 
-    ``buckets=N`` writes each graph table hash-partitioned on its merge
-    key so later incremental imports rewrite only touched partitions
-    (sinks/tables.py module docstring)."""
+    The five graph tables are written hash-partitioned on their merge
+    key into ``buckets`` buckets (the session's shuffle partition count
+    when None) so later incremental imports rewrite only touched
+    partitions (sinks/tables.py module docstring); the other stage
+    outputs are plain parquet. The manifest records the requested
+    ``buckets``; the tables' sidecars hold the N merges use."""
     from .pipeline import PARSE_LAYOUT, STAGES, BuildOptions
-    from .sinks.tables import TABLE_KEYS, _read_table, write_bucketed_table
+    from .sinks.tables import TABLE_KEYS, read_table, write_bucketed_table
 
     # captured BEFORE Manifest creates the dir: a pre-existing manifest
     # means prior-run tables may be present (migration ladder must run
@@ -155,7 +158,7 @@ def run_pipeline(
     def load(name: str) -> DataFrame:
         if name == "pages":
             return spark.read.parquet(pages_path)
-        return _read_table(spark, paths[name])
+        return read_table(spark, paths[name])
 
     for st in STAGES:
         table = st.name in TABLE_KEYS
@@ -165,7 +168,7 @@ def run_pipeline(
 
         def materialize(path: str, st=st, table=table) -> None:
             df = st.fn(o, *(load(i) for i in st.inputs))
-            if buckets and table:
+            if table:
                 write_bucketed_table(df, path, st.name, buckets)
             else:
                 df.write.mode("overwrite").parquet(path)

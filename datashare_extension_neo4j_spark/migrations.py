@@ -22,9 +22,9 @@ A parquet store has no live constraint engine, so the analog is:
     ``ConstraintViolation`` instead of silently landing;
   * ``MIGRATIONS`` — the versioned, idempotent data migrations that
     still mean something over parquet (mentionCount backfill,
-    self-parent deletion, dropping the parse carriers from docs),
-    recorded in the same json so reruns skip (the reference's IF NOT
-    EXISTS semantics).
+    self-parent deletion, dropping the parse carriers from docs,
+    bucketing tables an older build wrote plain), recorded in the same
+    json so reruns skip (the reference's IF NOT EXISTS semantics).
 """
 
 from __future__ import annotations
@@ -142,12 +142,25 @@ def migration_drop_doc_carriers(spark: SparkSession, run_dir: str) -> None:
     rewrite_table(spark, path, "docs", lambda df: df.drop(*CARRIERS))
 
 
+def migration_bucket_plain_tables(spark: SparkSession, run_dir: str) -> None:
+    """Hash-bucket every graph table an older build wrote plain (no
+    bucket-count sidecar): the store has one layout, and merges refuse
+    a plain table until this has run."""
+    from .sinks.tables import TABLE_KEYS, is_bucketed, rewrite_table
+
+    for name in TABLE_KEYS:
+        path = f"{run_dir}/{name}"
+        if Path(path).exists() and not is_bucketed(path):
+            rewrite_table(spark, path, name, lambda df: df)
+
+
 # ordered ladder; names mirror the reference's migration versions
 MIGRATIONS: list[tuple[str, Callable | None]] = [
     ("v_0_2_0_constraints_and_indexes", None),  # manifest-only: CONSTRAINTS
     ("v_0_6_0_mention_count_backfill", migration_mention_count_backfill),
     ("v_0_9_0_delete_self_parent", migration_delete_self_parent),
     ("v_1_0_0_drop_doc_carriers", migration_drop_doc_carriers),
+    ("v_1_1_0_bucket_plain_tables", migration_bucket_plain_tables),
 ]
 
 

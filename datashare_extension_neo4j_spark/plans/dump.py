@@ -28,23 +28,13 @@ _GRAPHML_OPEN = (
 )
 
 
-def _node_prop_keys(nodes: DataFrame) -> list[str]:
+def _prop_keys(elements: DataFrame) -> list[str]:
+    """Sorted distinct keys of the ``props`` maps (a null map explodes
+    to no rows)."""
     from pyspark.sql import functions as F
 
     rows = (
-        nodes.select(F.explode(F.map_keys("props")).alias("k"))
-        .distinct()
-        .collect()
-    )
-    return sorted(r["k"] for r in rows)
-
-
-def _edge_prop_keys(edges: DataFrame) -> list[str]:
-    from pyspark.sql import functions as F
-
-    rows = (
-        edges.where(F.col("props").isNotNull())
-        .select(F.explode(F.map_keys("props")).alias("k"))
+        elements.select(F.explode(F.map_keys("props")).alias("k"))
         .distinct()
         .collect()
     )
@@ -55,12 +45,12 @@ def dump_graphml(nodes: DataFrame, edges: DataFrame, out: TextIO) -> int:
     """Write GraphML; returns element count."""
     n = 0
     out.write(_GRAPHML_OPEN)
-    for k in _node_prop_keys(nodes):
+    for k in _prop_keys(nodes):
         # keys derive from page metadata (attacker-controlled) — quote
         out.write(f'<key id={quoteattr(k)} for="node" attr.name={quoteattr(k)}/>\n')
     out.write('<key id="TYPE" for="node" attr.name="TYPE"/>\n')
     out.write('<key id="labels" for="node" attr.name="labels"/>\n')
-    for k in _edge_prop_keys(edges):
+    for k in _prop_keys(edges):
         out.write(f'<key id={quoteattr(k)} for="edge" attr.name={quoteattr(k)}/>\n')
     out.write('<key id="label" for="edge" attr.name="label"/>\n')
     out.write('<key id="TYPE" for="edge" attr.name="TYPE"/>\n')

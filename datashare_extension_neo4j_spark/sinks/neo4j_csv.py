@@ -108,6 +108,52 @@ def email_docs_csv_lines(email_edges: DataFrame) -> DataFrame:
     return email_edges.select(neo4j_csv_line(cols).alias("line"))
 
 
+def _csv_specs(docs, doc_roots, entities, appears_in, emails) -> list:
+    """(file name, header, body lines) for the five export files."""
+    return [
+        ("docs", DOCS_HEADER, doc_nodes_csv_lines(docs)),
+        ("doc-roots", DOC_ROOTS_HEADER, doc_roots_csv_lines(doc_roots)),
+        ("entities", ENTITIES_HEADER, entities_csv_lines(entities)),
+        ("entity-docs", ENTITY_DOCS_HEADER, entity_docs_csv_lines(appears_in)),
+        ("email-docs", EMAIL_DOCS_HEADER, email_docs_csv_lines(emails)),
+    ]
+
+
+def _metadata(
+    db: str, paths: dict[str, list[str]], counts: dict[str, int]
+) -> dict:
+    """metadata.json (the reference's Neo4jCSVs shape): node and
+    relationship entries listing each file's header, body parts and
+    record count."""
+    nodes = [("docs", [DOC_NODE]), ("entities", [NE_NODE])]
+    rels = [
+        ("doc-roots", [DOC_ROOT_TYPE]),
+        ("entity-docs", [NE_APPEARS_IN_DOC]),
+        ("email-docs", []),
+    ]
+    return {
+        "db": db,
+        "nodes": [
+            {
+                "labels": labels,
+                "headerPath": f"{name}-header.csv",
+                "nodePaths": paths[name],
+                "nNodes": counts[name],
+            }
+            for name, labels in nodes
+        ],
+        "relationships": [
+            {
+                "types": types,
+                "headerPath": f"{name}-header.csv",
+                "relationshipPaths": paths[name],
+                "nRelationships": counts[name],
+            }
+            for name, types in rels
+        ],
+    }
+
+
 def write_csv_distributed(lines: DataFrame, path: str) -> None:
     """Scale path: one text part per partition, no driver bottleneck."""
     lines.write.mode("overwrite").text(path)
@@ -139,54 +185,13 @@ def export_graph_csvs(
     """Write the full reference-compatible export package."""
     d = Path(export_dir)
     d.mkdir(parents=True, exist_ok=True)
-    specs = [
-        ("docs", DOCS_HEADER, doc_nodes_csv_lines(docs)),
-        ("doc-roots", DOC_ROOTS_HEADER, doc_roots_csv_lines(doc_roots)),
-        ("entities", ENTITIES_HEADER, entities_csv_lines(entities)),
-        ("entity-docs", ENTITY_DOCS_HEADER, entity_docs_csv_lines(appears_in)),
-        ("email-docs", EMAIL_DOCS_HEADER, email_docs_csv_lines(emails)),
-    ]
     counts = {}
-    for name, header, lines in specs:
+    for name, header, lines in _csv_specs(
+        docs, doc_roots, entities, appears_in, emails
+    ):
         (d / f"{name}-header.csv").write_text(neo4j_header_line(header))
         counts[name] = _write_single(lines, d / f"{name}.csv", sort=sort)
-    metadata = {
-        "db": db,
-        "nodes": [
-            {
-                "labels": [DOC_NODE],
-                "headerPath": "docs-header.csv",
-                "nodePaths": ["docs.csv"],
-                "nNodes": counts["docs"],
-            },
-            {
-                "labels": [NE_NODE],
-                "headerPath": "entities-header.csv",
-                "nodePaths": ["entities.csv"],
-                "nNodes": counts["entities"],
-            },
-        ],
-        "relationships": [
-            {
-                "types": [DOC_ROOT_TYPE],
-                "headerPath": "doc-roots-header.csv",
-                "relationshipPaths": ["doc-roots.csv"],
-                "nRelationships": counts["doc-roots"],
-            },
-            {
-                "types": [NE_APPEARS_IN_DOC],
-                "headerPath": "entity-docs-header.csv",
-                "relationshipPaths": ["entity-docs.csv"],
-                "nRelationships": counts["entity-docs"],
-            },
-            {
-                "types": [],
-                "headerPath": "email-docs-header.csv",
-                "relationshipPaths": ["email-docs.csv"],
-                "nRelationships": counts["email-docs"],
-            },
-        ],
-    }
+    metadata = _metadata(db, {name: [f"{name}.csv"] for name in counts}, counts)
     (d / "metadata.json").write_text(json.dumps(metadata, indent=2))
     _write_bulk_import_script(d)
     if as_tar:
@@ -225,16 +230,11 @@ def export_graph_csvs_distributed(
     spans two physical lines, so read.text would overcount."""
     d = Path(export_dir)
     d.mkdir(parents=True, exist_ok=True)
-    specs = [
-        ("docs", DOCS_HEADER, doc_nodes_csv_lines(docs)),
-        ("doc-roots", DOC_ROOTS_HEADER, doc_roots_csv_lines(doc_roots)),
-        ("entities", ENTITIES_HEADER, entities_csv_lines(entities)),
-        ("entity-docs", ENTITY_DOCS_HEADER, entity_docs_csv_lines(appears_in)),
-        ("email-docs", EMAIL_DOCS_HEADER, email_docs_csv_lines(emails)),
-    ]
     parts: dict[str, list[str]] = {}
     counts: dict[str, int] = {}
-    for name, header, lines in specs:
+    for name, header, lines in _csv_specs(
+        docs, doc_roots, entities, appears_in, emails
+    ):
         (d / f"{name}-header.csv").write_text(neo4j_header_line(header))
         part_dir = d / name
         lines = lines.persist()
@@ -248,43 +248,7 @@ def export_graph_csvs_distributed(
             for p in part_dir.iterdir()
             if p.name.startswith("part-")
         )
-    metadata = {
-        "db": db,
-        "nodes": [
-            {
-                "labels": [DOC_NODE],
-                "headerPath": "docs-header.csv",
-                "nodePaths": parts["docs"],
-                "nNodes": counts["docs"],
-            },
-            {
-                "labels": [NE_NODE],
-                "headerPath": "entities-header.csv",
-                "nodePaths": parts["entities"],
-                "nNodes": counts["entities"],
-            },
-        ],
-        "relationships": [
-            {
-                "types": [DOC_ROOT_TYPE],
-                "headerPath": "doc-roots-header.csv",
-                "relationshipPaths": parts["doc-roots"],
-                "nRelationships": counts["doc-roots"],
-            },
-            {
-                "types": [NE_APPEARS_IN_DOC],
-                "headerPath": "entity-docs-header.csv",
-                "relationshipPaths": parts["entity-docs"],
-                "nRelationships": counts["entity-docs"],
-            },
-            {
-                "types": [],
-                "headerPath": "email-docs-header.csv",
-                "relationshipPaths": parts["email-docs"],
-                "nRelationships": counts["email-docs"],
-            },
-        ],
-    }
+    metadata = _metadata(db, parts, counts)
     (d / "metadata.json").write_text(json.dumps(metadata, indent=2))
     _write_bulk_import_script(d)
     return metadata

@@ -1,23 +1,22 @@
-"""Graph table sinks (S8 re-expressed): nodes/edges as partitioned
+"""Graph table sinks (S8 re-expressed): nodes/edges as hash-bucketed
 columnar tables + incremental MERGE semantics.
 
 The reference's incremental import is Cypher ``UNWIND … MERGE`` with
 ON-MATCH array-union (neo4j-app/neo4j_app/core/neo4j/documents.py:42-80,
 named_entities.py:36-48). Our sink would be Iceberg ``MERGE INTO`` when
-a catalog is configured; this sandbox ships no Iceberg runtime jar (and
-no network to vendor one), so two fallbacks exist:
+a catalog is configured; without an Iceberg runtime the store has ONE
+layout on vanilla parquet: every table is hash-partitioned on its merge
+key (``_bucket = pmod(xxhash64(key), N)``), with N pinned by an
+``_n_buckets`` sidecar (the session's ``spark.sql.shuffle.partitions``
+unless the writer is given another N). A merge reads ONLY the
+partitions the increment touches (partition-pruned scan) and rewrites
+ONLY those via dynamic partition overwrite. Incremental cost is
+O(touched buckets) — the same asymptotic shape as Iceberg's MERGE INTO
+file rewrite, expressed with vanilla parquet.
 
-  * plain layout: read-old ∪ new → re-aggregate → full overwrite —
-    O(table) per increment, fine for small stores;
-  * bucketed layout (``materialize_graph(..., buckets=N)``): each table
-    is hash-partitioned on its merge key (``_bucket =
-    pmod(xxhash64(key), N)``); a merge reads ONLY the partitions the
-    increment touches (partition-pruned scan) and rewrites ONLY those
-    via dynamic partition overwrite. Incremental cost is O(touched
-    buckets) — the same asymptotic shape as Iceberg's MERGE INTO file
-    rewrite, expressed with vanilla parquet.
-
-``incremental_import`` auto-detects the layout per table.
+Older builds could write tables plain (no sidecar). Migration
+``v_1_1_0_bucket_plain_tables`` buckets them; until it has run, a merge
+into such a table raises.
 """
 
 from __future__ import annotations
@@ -30,6 +29,7 @@ from pyspark.sql import functions as F
 from ..pipeline import GraphBuild
 
 BUCKET_COL = "_bucket"
+_SIDECAR = "_n_buckets"
 
 # merge key per graph table (also the bucketing key)
 TABLE_KEYS: dict[str, list[str]] = {
@@ -47,66 +47,58 @@ def bucketize(df: DataFrame, key_cols: list[str], n: int) -> DataFrame:
     )
 
 
-def _read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read dropping the physical bucket column if present."""
-    df = spark.read.parquet(path)
-    return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """A stored table without its physical bucket column."""
+    return spark.read.parquet(path).drop(BUCKET_COL)
 
 
-def _touched_buckets(
-    updates: DataFrame, key_cols: list[str], n_buckets: int
-) -> list[int]:
-    """Distinct bucket ids the updates' merge keys hash into."""
-    return [
-        r[0]
-        for r in bucketize(updates, key_cols, n_buckets)
-        .select(BUCKET_COL)
-        .distinct()
-        .collect()
-    ]
+def is_bucketed(path: str) -> bool:
+    return (Path(path) / _SIDECAR).exists()
 
 
-def _read_for_keys(
-    spark: SparkSession, path: str, keys: DataFrame, name: str
-) -> DataFrame:
-    """Stored rows that could share a merge key with ``keys``: on the
-    bucketed layout only the touched partitions are scanned (every row
-    whose key appears in ``keys`` hashes into a touched bucket, so
-    joins/anti-joins against this frame equal those against the full
-    table) — keeps incremental COUNTERS O(increment), not O(table).
-    Plain layout falls back to the full read."""
-    sidecar = Path(path) / "_n_buckets"
-    if not sidecar.exists():
-        return _read_table(spark, path)
-    touched = _touched_buckets(
-        keys, TABLE_KEYS[name], int(sidecar.read_text())
+def stored_buckets(path: str) -> int:
+    """The bucket count N a table was written with (its sidecar)."""
+    if not is_bucketed(path):
+        raise FileNotFoundError(
+            f"{path} is not a bucketed table (no {_SIDECAR} sidecar); a "
+            "plain table written by an older build is converted by "
+            "`migrate --run-dir <run dir>`"
+        )
+    return int((Path(path) / _SIDECAR).read_text())
+
+
+def write_buckets(
+    df: DataFrame,
+    path: str,
+    key_cols: list[str],
+    buckets: int | None,
+    mode: str,
+) -> None:
+    """Write ``df`` hash-partitioned on ``key_cols`` into ``buckets``
+    buckets (the session's shuffle partition count when None), with
+    the sidecar pinning N for later merges (empty buckets leave no
+    partition dir, so N can't be inferred from the listing). The write
+    is clustered on the bucket (one task, so one file, per bucket): the
+    file count does not depend on how many partitions the producing
+    plan happens to have. A partitioned write of zero rows leaves no
+    file to carry the schema, so an empty table gets a schema-only
+    file in bucket 0."""
+    n = buckets or int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    return (
-        spark.read.parquet(path)
-        .where(F.col(BUCKET_COL).isin(touched or [-1]))
-        .drop(BUCKET_COL)
-    )
+    bucketize(df, key_cols, n).repartition(n, BUCKET_COL).write.mode(
+        mode
+    ).partitionBy(BUCKET_COL).parquet(path)
+    if not any(Path(path).glob(f"{BUCKET_COL}=*")):
+        df.limit(0).write.mode("overwrite").parquet(f"{path}/{BUCKET_COL}=0")
+    (Path(path) / _SIDECAR).write_text(str(n))
 
 
 def write_bucketed_table(
-    df: DataFrame, path: str, name: str, buckets: int
+    df: DataFrame, path: str, name: str, buckets: int | None = None
 ) -> None:
-    """Write one graph table hash-partitioned on its merge key, with
-    the ``_n_buckets`` sidecar pinning N for later merges (empty
-    buckets leave no partition dir, so N can't be inferred from the
-    listing). The write is clustered on the bucket (one task, so one
-    file, per bucket): the file count does not depend on how many
-    partitions the producing plan happens to have. An EMPTY frame is
-    written plain instead: a partitioned write of zero rows produces
-    no files at all (schema unreadable), so empty tables stay in the
-    plain layout until data arrives."""
-    if df.isEmpty():
-        df.write.mode("overwrite").parquet(path)
-        return
-    bucketize(df, TABLE_KEYS[name], buckets).repartition(
-        buckets, BUCKET_COL
-    ).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-    (Path(path) / "_n_buckets").write_text(str(buckets))
+    """Write graph table ``name`` bucketed on its merge key."""
+    write_buckets(df, path, TABLE_KEYS[name], buckets, "overwrite")
 
 
 def merge_bucketed(
@@ -160,21 +152,16 @@ def merge_bucketed(
 
 
 def rewrite_table(spark: SparkSession, path: str, name: str, transform) -> None:
-    """Layout-preserving full-table rewrite: apply ``transform(df)`` and
-    write back keeping the bucketed partitioning (and ``_n_buckets``
-    sidecar) when present — data migrations must not silently flatten a
-    bucketed store back to the O(table)-per-merge plain layout."""
-    sidecar = Path(path) / "_n_buckets"
-    out = transform(_read_table(spark, path))
+    """Full-table rewrite for the data migrations: apply
+    ``transform(df)`` and write back bucketed with the stored N. A
+    plain table of an older build (no sidecar) comes back bucketed
+    with the session default N, so a migration that reaches it before
+    ``v_1_1_0_bucket_plain_tables`` converts it on the way."""
+    n = stored_buckets(path) if is_bucketed(path) else None
     # materialize before overwriting the files the plan lazily reads
-    staged = out.localCheckpoint()
+    staged = transform(read_table(spark, path)).localCheckpoint()
     try:
-        if sidecar.exists():
-            write_bucketed_table(
-                staged, path, name, int(sidecar.read_text())
-            )
-        else:
-            staged.write.mode("overwrite").parquet(path)
+        write_bucketed_table(staged, path, name, n)
     finally:
         staged.unpersist()
 
@@ -188,23 +175,18 @@ def materialize_graph(
     input — submitting them concurrently lets the scheduler interleave
     their stages (wall ≈ max instead of sum of fixed job costs).
 
-    ``buckets=N`` hash-partitions every table on its merge key so
-    later increments rewrite only touched partitions (module
-    docstring); N should be sized so one bucket ≈ one comfortable
-    task (e.g. 1024-8192 at 100 TB)."""
+    Every table is hash-partitioned on its merge key (module
+    docstring) into ``buckets`` buckets; N should be sized so one
+    bucket ≈ one comfortable task (e.g. 1024-8192 at 100 TB)."""
     from concurrent.futures import ThreadPoolExecutor
 
     paths = {name: f"{out_dir}/{name}" for name in TABLE_KEYS}
-
-    def write_one(name: str) -> None:
-        df = getattr(g, name)
-        if buckets:
-            write_bucketed_table(df, paths[name], name, buckets)
-        else:
-            df.write.mode("overwrite").parquet(paths[name])
-
     with ThreadPoolExecutor(max_workers=len(paths)) as ex:
-        for f in [ex.submit(write_one, name) for name in paths]:
+        futures = [
+            ex.submit(write_bucketed_table, getattr(g, name), path, name, buckets)
+            for name, path in paths.items()
+        ]
+        for f in futures:
             f.result()
     return paths
 
@@ -213,7 +195,7 @@ def load_store(spark: SparkSession, run_dir: str) -> GraphBuild:
     """The five stored graph tables of a run dir (bucket column
     dropped), as the GraphBuild a sink or dump consumes."""
     return GraphBuild(
-        **{name: _read_table(spark, f"{run_dir}/{name}") for name in TABLE_KEYS}
+        **{name: read_table(spark, f"{run_dir}/{name}") for name in TABLE_KEYS}
     )
 
 
@@ -286,10 +268,13 @@ _ENFORCE_UNIQUE_UPDATES = {"docs"}
 
 def merge_table(
     spark: SparkSession, path: str, updates: DataFrame, name: str
-) -> None:
-    """MERGE ``updates`` into the stored table, auto-detecting layout:
-    bucketed → partition-scoped rewrite of touched buckets only;
-    plain → full read-combine-overwrite.
+) -> int:
+    """MERGE ``updates`` into the stored table ``name``: a
+    partition-scoped rewrite of the buckets the increment touches.
+    Returns the number of update keys the merge CREATES (ON MATCH
+    updates in place, so only keys absent from the store add rows),
+    counted against the stored slice the merge reads, before it is
+    overwritten — O(increment), never a full-table scan.
 
     Enforces the table's uniqueness constraint (migrations.CONSTRAINTS,
     the reference's constraint_document_unique_id analog) on the
@@ -299,40 +284,28 @@ def merge_table(
         from ..migrations import CONSTRAINTS, assert_unique
 
         assert_unique(updates, CONSTRAINTS[name]["unique"], name)
-    sidecar = Path(path) / "_n_buckets"
-    if sidecar.exists():
-        n = int(sidecar.read_text())
-        merge_bucketed(
-            spark, path, updates, TABLE_KEYS[name], COMBINE[name], n
+    keys = TABLE_KEYS[name]
+    created = 0
+
+    def combine(old: DataFrame, new: DataFrame) -> DataFrame:
+        nonlocal created
+        created = (
+            new.select(*keys).join(old.select(*keys), keys, "left_anti").count()
         )
-    else:
-        merged = COMBINE[name](_read_table(spark, path), updates)
-        overwrite_parquet(spark, merged, path)
+        return COMBINE[name](old, new)
+
+    merge_bucketed(spark, path, updates, keys, combine, stored_buckets(path))
+    return created
 
 
-def merge_docs(
-    spark: SparkSession, existing_path: str, updates: DataFrame
-) -> tuple[DataFrame, dict]:
-    """Incremental document upsert. Returns (merged, counters) with
-    the reference's ImportSummary shape (imports.py:130-135):
-    imported / nodes_created."""
-    old = _read_table(spark, existing_path)
-    imported = updates.count()
-    created = updates.join(old, "id", "left_anti").count()
-    return combine_docs(old, updates), {
-        "imported": imported, "nodes_created": created,
+def _merge_into(
+    spark: SparkSession, run_dir: str, tables: dict[str, DataFrame]
+) -> dict[str, int]:
+    """MERGE each named increment into its table; created keys per table."""
+    return {
+        name: merge_table(spark, f"{run_dir}/{name}", df, name)
+        for name, df in tables.items()
     }
-
-
-def overwrite_parquet(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Safe read-modify-write for parquet (write tmp, swap). Iceberg
-    MERGE INTO replaces this when a catalog is configured."""
-    import shutil
-
-    tmp = f"{path}__tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def incremental_import(
@@ -347,7 +320,7 @@ def incremental_import(
     array-union-merged, entities deduped. Returns counters.
 
     The Python parse runs ONCE per increment: the parse output is
-    stage-checkpointed to parquet (``checkpoint_dir``), so the 6-8
+    stage-checkpointed to parquet (``checkpoint_dir``), so the
     downstream actions (per-table counters + merges) all do pruned
     columnar scans of the checkpoint instead of re-executing the
     mapInPandas parse — the reference gets its counters free from the
@@ -370,56 +343,19 @@ def incremental_import(
         checkpoint_dir=ckpt,
     )
     try:
-        return _incremental_merge(spark, g, run_dir)
+        imported = g.docs.count()
+        created = _merge_into(
+            spark, run_dir, {name: getattr(g, name) for name in TABLE_KEYS}
+        )
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def _created_count(
-    spark: SparkSession, path: str, updates: DataFrame, name: str
-) -> int:
-    """Update keys not yet stored = rows/edges the merge will CREATE
-    (ON MATCH paths update in place, so only new keys add rows).
-    Anti-join against the partition-pruned slice — O(increment) on the
-    bucketed layout, never a full-table scan."""
-    keys = TABLE_KEYS[name]
-    old = _read_for_keys(spark, path, updates, name).select(*keys)
-    return updates.select(*keys).join(old, keys, "left_anti").count()
-
-
-def _incremental_merge(spark: SparkSession, g, run_dir: str) -> dict:
-    docs_path = f"{run_dir}/docs"
-    doc_counters = {
-        "imported": g.docs.count(),
-        "nodes_created": _created_count(spark, docs_path, g.docs, "docs"),
-    }
-    merge_table(spark, docs_path, g.docs, "docs")
-
-    roots_path = f"{run_dir}/doc_roots"
-    roots_created = _created_count(
-        spark, roots_path, g.doc_roots, "doc_roots"
-    )
-    merge_table(spark, roots_path, g.doc_roots, "doc_roots")
-
-    appears_path = f"{run_dir}/appears_in"
-    appears_created = _created_count(
-        spark, appears_path, g.appears_in, "appears_in"
-    )
-    merge_table(spark, appears_path, g.appears_in, "appears_in")
-
-    emails_path = f"{run_dir}/emails"
-    emails_created = _created_count(spark, emails_path, g.emails, "emails")
-    merge_table(spark, emails_path, g.emails, "emails")
-
-    ents_path = f"{run_dir}/entities"
-    ents_created = _created_count(spark, ents_path, g.entities, "entities")
-    merge_table(spark, ents_path, g.entities, "entities")
     return {
-        **doc_counters,
-        "relationships_created": roots_created
-        + appears_created
-        + emails_created,
-        "entities_created": ents_created,
+        "imported": imported,
+        "nodes_created": created["docs"],
+        "relationships_created": created["doc_roots"]
+        + created["appears_in"]
+        + created["emails"],
+        "entities_created": created["entities"],
     }
 
 
@@ -440,40 +376,24 @@ def incremental_import_mentions(
     from ..operators.entities import entity_nodes
 
     total = mentions.count()
-    doc_ids = (
-        spark.read.parquet(f"{run_dir}/docs")
-        .select(F.col("id").alias("documentId"))
+    doc_ids = read_table(spark, f"{run_dir}/docs").select(
+        F.col("id").alias("documentId")
     )
     m = mentions.join(doc_ids, "documentId", "left_semi")
     imported = m.count()
-
-    appears_path = f"{run_dir}/appears_in"
-    new_appears = appears_in_edges(m)
-    appears_created = _created_count(
-        spark, appears_path, new_appears, "appears_in"
+    created = _merge_into(
+        spark,
+        run_dir,
+        {
+            "appears_in": appears_in_edges(m),
+            "emails": email_edges(m),
+            "entities": entity_nodes(m),
+        },
     )
-    merge_table(spark, appears_path, new_appears, "appears_in")
-
-    emails_path = f"{run_dir}/emails"
-    new_emails = email_edges(m)
-    emails_created = _created_count(spark, emails_path, new_emails, "emails")
-    merge_table(spark, emails_path, new_emails, "emails")
-
-    ents_path = f"{run_dir}/entities"
-    new_ents = entity_nodes(m)
-    ents_created = _created_count(spark, ents_path, new_ents, "entities")
-    merge_table(spark, ents_path, new_ents, "entities")
     return {
         "imported": imported,
         "skipped_orphans": total - imported,
         "nodes_created": 0,
-        "relationships_created": appears_created + emails_created,
-        "entities_created": ents_created,
+        "relationships_created": created["appears_in"] + created["emails"],
+        "entities_created": created["entities"],
     }
-
-
-def merge_appears_in(
-    spark: SparkSession, existing_path: str, updates: DataFrame
-) -> DataFrame:
-    """Path wrapper over combine_appears_in (read old, return merged)."""
-    return combine_appears_in(_read_table(spark, existing_path), updates)

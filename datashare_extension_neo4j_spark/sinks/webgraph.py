@@ -27,13 +27,11 @@ read/compaction is one groupBy over the ledger — which holds
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.weblinks import host_graph
-from .tables import bucketize, merge_bucketed, BUCKET_COL
+from .tables import merge_bucketed, read_table, stored_buckets, write_buckets
 
 LEDGER_KEYS = ["srcHost", "dstHost", "batchId"]
 DEFAULT_BUCKETS = 8
@@ -64,11 +62,13 @@ def init_webgraph_store(
     """Create the ledger from an initial link batch (bucketed on the
     ledger key so later merges rewrite only touched partitions).
     Returns the number of ledger rows written."""
-    part = bucketize(host_graph_batch(links, batch_id), LEDGER_KEYS, n_buckets)
-    part.write.mode("errorifexists").partitionBy(BUCKET_COL).parquet(
-        store_path
+    write_buckets(
+        host_graph_batch(links, batch_id),
+        store_path,
+        LEDGER_KEYS,
+        n_buckets,
+        "errorifexists",
     )
-    (Path(store_path) / "_n_buckets").write_text(str(n_buckets))
     return spark.read.parquet(store_path).count()
 
 
@@ -82,10 +82,14 @@ def merge_webgraph_batch(
     (partition-scoped rewrite of touched buckets only; idempotent —
     re-running the same batch converges to the same store). Returns
     counters: partial rows merged + buckets rewritten."""
-    n_buckets = int((Path(store_path) / "_n_buckets").read_text())
     part = host_graph_batch(links, batch_id)
     touched = merge_bucketed(
-        spark, store_path, part, LEDGER_KEYS, _replace_batch, n_buckets
+        spark,
+        store_path,
+        part,
+        LEDGER_KEYS,
+        _replace_batch,
+        stored_buckets(store_path),
     )
     return {
         "batch_id": batch_id,
@@ -99,10 +103,7 @@ def read_host_graph(spark: SparkSession, store_path: str) -> DataFrame:
     identical to ``host_graph`` over the union of all batches' links,
     PROVIDED batches partition the page stream (each page's links land
     in exactly one batch, so per-batch nPages partials are additive)."""
-    led = spark.read.parquet(store_path)
-    if BUCKET_COL in led.columns:
-        led = led.drop(BUCKET_COL)
-    return led.groupBy("srcHost", "dstHost").agg(
+    return read_table(spark, store_path).groupBy("srcHost", "dstHost").agg(
         F.sum("nLinks").cast("long").alias("nLinks"),
         F.sum("nPages").cast("long").alias("nPages"),
     )

@@ -5,10 +5,11 @@ its incrementality is re-running imports with MERGE upserts. The
 streaming ingest here is the Spark-native generalization: new page
 files land in the input directory, each micro-batch runs the batch
 pipeline's own parse, docs and appears_in stages (pipeline.STAGES), and
-``foreachBatch`` applies the MERGE-with-array-union semantics
-(reference named_entities.py:84-97 = sinks/tables.merge_appears_in)
-against the graph tables — so batch re-import and continuous ingest
-share one code path.
+``foreachBatch`` MERGEs them into the graph tables with
+``sinks.tables.merge_table`` (docs newest-wins by id; APPEARS_IN
+array-union, reference named_entities.py:84-97) — so batch re-import
+and continuous ingest share one code path, and a micro-batch Spark
+replays after a crash (written, offset not yet committed) lands once.
 
 ``trigger(availableNow=True)`` drains what exists and stops — used by
 tests and backfills; drop it for continuous operation.
@@ -24,7 +25,7 @@ from ..operators.edges import appears_in_from_parsed
 from ..operators.extract import PARSED_SCHEMA
 from ..pipeline import BuildOptions, docs_stage, parse_stage
 from ..schemas import PAGES_SCHEMA
-from ..sinks.tables import merge_table
+from ..sinks.tables import merge_table, write_bucketed_table
 
 
 def stream_pages(spark: SparkSession, input_path: str) -> DataFrame:
@@ -42,10 +43,8 @@ def start_graph_ingest(
     checkpoint_dir: str,
     available_now: bool = True,
 ):
-    """Streaming pages → docs table (append) + APPEARS_IN merge."""
-    docs_path = f"{out_dir}/docs"
-    appears_path = f"{out_dir}/appears_in"
-
+    """Streaming pages → docs + APPEARS_IN tables, MERGEd per
+    micro-batch (the first batch creates them)."""
     pages = stream_pages(spark, input_path)
     o = BuildOptions(use_rule_ner=True, include_text=False)
 
@@ -55,16 +54,16 @@ def start_graph_ingest(
         # small per-batch frames: one persist avoids a double parse
         parsed = parse_stage(o, batch_df).persist()
         try:
-            docs_stage(o, parsed).drop("metadata").write.mode("append").parquet(
-                docs_path
-            )
-            appears = appears_in_from_parsed(parsed)
-            if Path(appears_path).exists():
-                # layout-aware MERGE: bucketed tables rewrite only the
-                # partitions this micro-batch touches
-                merge_table(spark, appears_path, appears, "appears_in")
-            else:
-                appears.write.mode("overwrite").parquet(appears_path)
+            for name, df in (
+                ("docs", docs_stage(o, parsed).drop("metadata")),
+                ("appears_in", appears_in_from_parsed(parsed)),
+            ):
+                path = f"{out_dir}/{name}"
+                if Path(path).exists():
+                    # rewrites only the buckets this micro-batch touches
+                    merge_table(spark, path, df, name)
+                else:
+                    write_bucketed_table(df, path, name)
         finally:
             parsed.unpersist()
 

@@ -115,23 +115,23 @@ def test_manifest_resume(spark, tmp_path):
     import os
 
     mtime_before = os.path.getmtime(
-        next(iter((tmp_path / "run" / "docs").glob("*.parquet")))
+        next(iter((tmp_path / "run" / "docs").rglob("*.parquet")))
     )
     run_pipeline(spark, pages_path, run_dir)
     mtime_after = os.path.getmtime(
-        next(iter((tmp_path / "run" / "docs").glob("*.parquet")))
+        next(iter((tmp_path / "run" / "docs").rglob("*.parquet")))
     )
     assert mtime_before == mtime_after  # not rewritten
     # force: rewritten
     run_pipeline(spark, pages_path, run_dir, force=True)
     mtime_forced = os.path.getmtime(
-        next(iter((tmp_path / "run" / "docs").glob("*.parquet")))
+        next(iter((tmp_path / "run" / "docs").rglob("*.parquet")))
     )
     assert mtime_forced > mtime_after
 
 
 def test_merge_appears_in(spark, tmp_path):
-    from datashare_extension_neo4j_spark.sinks.tables import merge_appears_in
+    from datashare_extension_neo4j_spark.sinks.tables import combine_appears_in
 
     g = build_graph(reference_pages(spark, n_docs=6))
     path = str(tmp_path / "appears")
@@ -141,7 +141,7 @@ def test_merge_appears_in(spark, tmp_path):
         for r in spark.read.parquet(path).collect()
     }
     # re-merge the same edges: idempotent (set semantics)
-    merged = merge_appears_in(spark, path, g.appears_in)
+    merged = combine_appears_in(spark.read.parquet(path), g.appears_in)
     after = {
         (r["startId"], r["endId"]): r["mentionIds"] for r in merged.collect()
     }
@@ -152,7 +152,7 @@ def test_merge_appears_in(spark, tmp_path):
     updated = g.appears_in.withColumn(
         "mentionIds", F.array(F.lit("zzz-new-mention"))
     )
-    merged2 = merge_appears_in(spark, path, updated)
+    merged2 = combine_appears_in(spark.read.parquet(path), updated)
     row = merged2.where(F.col("mentionCount") >= 2).collect()[0]
     assert "zzz-new-mention" in row["mentionIds"]
     assert row["mentionIds"] == sorted(row["mentionIds"])

@@ -122,6 +122,35 @@ def test_streaming_ingest(spark, tmp_path):
     assert len(counts2) > len(counts1)
 
 
+def test_streaming_ingest_replayed_batch_lands_once(spark, tmp_path):
+    """Spark replays a micro-batch whose output was written but whose
+    commit was not (a crash in between): the replay must MERGE, not
+    append the batch's docs a second time."""
+    from datashare_extension_neo4j_spark.fixtures import reference_pages_pandas
+    from datashare_extension_neo4j_spark.migrations import verify_constraints
+    from datashare_extension_neo4j_spark.schemas import PAGES_SCHEMA
+    from datashare_extension_neo4j_spark.streaming.ingest import start_graph_ingest
+
+    inp = str(tmp_path / "in")
+    spark.createDataFrame(
+        reference_pages_pandas(n_docs=6), PAGES_SCHEMA
+    ).write.parquet(inp)
+    out = str(tmp_path / "out")
+    ck = tmp_path / "ck"
+    start_graph_ingest(spark, inp, out, str(ck)).awaitTermination(120)
+    # forget the last commit: on restart Spark re-runs that batch
+    last = max(
+        (p for p in (ck / "commits").iterdir() if p.name.isdigit()),
+        key=lambda p: int(p.name),
+    )
+    last.unlink()
+    (last.parent / f".{last.name}.crc").unlink(missing_ok=True)
+    start_graph_ingest(spark, inp, out, str(ck)).awaitTermination(120)
+    docs = spark.read.parquet(f"{out}/docs")
+    assert docs.count() == docs.select("id").distinct().count() == 6
+    verify_constraints(spark, out)
+
+
 def test_ann_plan_size_bounded_at_production_dims(spark):
     """Planes/centroids are broadcast DATA, not plan literals: at
     dim=512 with 16 bits × 8 tables (LSH) and n_lists=256 (IVF) the

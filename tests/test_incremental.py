@@ -4,6 +4,7 @@ shaped like ImportSummary (imports.py:130-135)."""
 
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from datashare_extension_neo4j_spark.fixtures import reference_pages
@@ -132,7 +133,7 @@ def test_bucketed_merge_rewrites_only_touched_partitions(spark, tmp_path):
     """With buckets=N, a merge reads and rewrites ONLY the partitions
     the increment touches (the Iceberg-MERGE cost shape on vanilla
     parquet): untouched bucket files are bit-for-bit untouched on disk,
-    and the merged content equals the plain full-merge result."""
+    and the merged content is the correct ON MATCH update."""
     import os
 
     from datashare_extension_neo4j_spark.pipeline import build_graph
@@ -184,7 +185,7 @@ def test_bucketed_merge_rewrites_only_touched_partitions(spark, tmp_path):
                 changed_dirs.add(int(part[0].split("=")[1]))
     assert changed_dirs == expected_buckets  # only the touched bucket
     # the bucket-count sidecar must survive dynamic overwrite, or the
-    # NEXT merge would silently fall back to the full-rewrite path
+    # NEXT merge would refuse the table
     assert (Path(apath) / "_n_buckets").read_text() == "8"
     # and the content is the correct merge
     merged = spark.read.parquet(apath)
@@ -198,9 +199,8 @@ def test_bucketed_merge_rewrites_only_touched_partitions(spark, tmp_path):
 
 
 def test_bucketed_pipeline_end_to_end(spark, tmp_path):
-    """run_pipeline(buckets=N) → incremental_import auto-detects the
-    bucketed layout per table and produces the same counters/content
-    as the plain layout."""
+    """run_pipeline(buckets=N) → incremental_import merges into the
+    N-bucket tables and keeps their layout."""
     pages_all = reference_pages(spark, n_docs=10)
     first = pages_all.where(
         F.regexp_extract("url", r"example-(\d+)", 1).cast("int") < 6
@@ -258,8 +258,9 @@ def test_rebuild_with_different_buckets_invalidates_stages(spark, tmp_path):
     pages_path = str(tmp_path / "pages")
     pages.write.parquet(pages_path)
     run_dir = str(tmp_path / "run")
-    run_pipeline(spark, pages_path, run_dir)  # plain layout
-    assert not (Path(run_dir) / "docs" / "_n_buckets").exists()
+    run_pipeline(spark, pages_path, run_dir)  # default bucket count
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    assert (Path(run_dir) / "docs" / "_n_buckets").read_text() == default
     run_pipeline(spark, pages_path, run_dir, buckets=4)
     assert (Path(run_dir) / "docs" / "_n_buckets").read_text() == "4"
     assert spark.read.parquet(f"{run_dir}/docs").count() == 6
@@ -288,3 +289,116 @@ def test_incremental_import_parses_once(spark, tmp_path):
     c = incremental_import(spark, tapped, run_dir)
     assert c["imported"] == 10
     assert acc.value == 10
+
+
+def _write_plain(spark, df, path, scratch):
+    """Store ``df`` at ``path`` the way older builds did: plain parquet,
+    no bucket column, no sidecar (staged through ``scratch`` because
+    ``df`` may read the files being replaced)."""
+    df.write.mode("overwrite").parquet(scratch)
+    spark.read.parquet(scratch).write.mode("overwrite").parquet(path)
+
+
+def test_migrate_buckets_plain_tables(spark, tmp_path, capsys):
+    """A store whose tables an older build wrote plain: `migrate`
+    buckets every table (sidecar written, same rows), and an increment
+    then merges into it."""
+    import json
+
+    from datashare_extension_neo4j_spark.cli import main
+    from datashare_extension_neo4j_spark.migrations import MIGRATIONS
+    from datashare_extension_neo4j_spark.sinks.tables import (
+        TABLE_KEYS,
+        read_table,
+    )
+
+    pages_all = reference_pages(spark, n_docs=10)
+    first = pages_all.where(
+        F.regexp_extract("url", r"example-(\d+)", 1).cast("int") < 6
+    )
+    pages_path = str(tmp_path / "pages")
+    first.write.parquet(pages_path)
+    run_dir = str(tmp_path / "run")
+    run_pipeline(spark, pages_path, run_dir)
+    rows = {}
+    for name in TABLE_KEYS:
+        path = f"{run_dir}/{name}"
+        rows[name] = sorted(map(str, read_table(spark, path).collect()))
+        _write_plain(
+            spark, read_table(spark, path), path, str(tmp_path / f"s_{name}")
+        )
+        assert not (Path(path) / "_n_buckets").exists()
+    # the ladder record of a store at the previous head
+    state_path = Path(run_dir) / "constraints.json"
+    state = json.loads(state_path.read_text())
+    state["applied"] = [n for n, _ in MIGRATIONS[:-1]]
+    state_path.write_text(json.dumps(state))
+
+    assert main(["migrate", "--run-dir", run_dir]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out == {"applied": ["v_1_1_0_bucket_plain_tables"]}
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    for name in TABLE_KEYS:
+        path = f"{run_dir}/{name}"
+        assert (Path(path) / "_n_buckets").read_text() == default
+        assert sorted(map(str, read_table(spark, path).collect())) == rows[name]
+
+    c = incremental_import(spark, pages_all, run_dir)
+    assert c["imported"] == 10
+    assert c["nodes_created"] == 4
+    assert spark.read.parquet(f"{run_dir}/docs").count() == 10
+
+
+def test_merge_into_plain_table_names_migrate(spark, tmp_path):
+    """A merge refuses a table without the bucket-count sidecar and
+    points at `migrate`, instead of taking a second merge path."""
+    from datashare_extension_neo4j_spark.sinks.tables import (
+        merge_table,
+        read_table,
+    )
+
+    pages = reference_pages(spark, n_docs=4)
+    pages_path = str(tmp_path / "pages")
+    pages.write.parquet(pages_path)
+    run_dir = str(tmp_path / "run")
+    run_pipeline(spark, pages_path, run_dir)
+    path = f"{run_dir}/docs"
+    stored = read_table(spark, path)
+    docs = spark.createDataFrame(stored.collect(), stored.schema)
+    _write_plain(spark, docs, path, str(tmp_path / "s"))
+    with pytest.raises(FileNotFoundError, match="migrate"):
+        merge_table(spark, path, docs, "docs")
+    assert spark.read.parquet(path).count() == 4  # untouched
+
+
+def test_empty_table_is_bucketed_and_takes_merges(spark, tmp_path):
+    """A build without any email header writes an EMPTY emails table:
+    it is still bucketed (sidecar + a readable schema), and a later
+    merge lands rows in it."""
+    from datashare_extension_neo4j_spark.pipeline import build_graph
+    from datashare_extension_neo4j_spark.sinks.tables import (
+        materialize_graph,
+        merge_table,
+        read_table,
+    )
+
+    pages = reference_pages(spark, n_docs=12)
+    no_email = pages.where(
+        F.regexp_extract("url", r"example-(\d+)", 1).cast("int") < 11
+    )
+    out = str(tmp_path / "store")
+    materialize_graph(build_graph(no_email, use_rule_ner=True), out)
+    epath = f"{out}/emails"
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    assert (Path(epath) / "_n_buckets").read_text() == default
+    stored = read_table(spark, epath)
+    assert stored.count() == 0
+    want = build_graph(pages, use_rule_ner=True).emails
+    assert stored.columns == want.columns
+
+    assert merge_table(spark, epath, want, "emails") == 2
+    got = {r["type"]: r["fields"] for r in read_table(spark, epath).collect()}
+    assert got == {
+        "SENT": ["tika_metadata_message_from"],
+        "RECEIVED": ["tika_metadata_message_to"],
+    }

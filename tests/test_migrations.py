@@ -37,7 +37,7 @@ def test_pipeline_writes_constraints_manifest(spark, tmp_path):
     ]
     assert "index_ne_mention_norm" in state["constraints"]["entities"]["indexes"]
     # whole ladder recorded (fresh store is at head); rerun applies none
-    assert len(state["applied"]) == 4
+    assert len(state["applied"]) == 5
     assert apply_migrations(spark, run_dir) == []
     verify_constraints(spark, run_dir)  # fresh tables are all unique
 
@@ -48,7 +48,7 @@ def test_data_migrations_repair_corrupt_store(spark, tmp_path):
     run_dir = _fresh_run(spark, tmp_path)
     # corrupt the store the way a pre-migration reference store was:
     roots_path = f"{run_dir}/doc_roots"
-    bad_roots = spark.read.parquet(roots_path).unionByName(
+    bad_roots = spark.read.parquet(roots_path).drop("_bucket").unionByName(
         spark.createDataFrame([("doc-0", "doc-0")], "src string, dst string")
     )
     bad_roots.write.mode("overwrite").parquet(str(tmp_path / "r2"))
@@ -108,7 +108,7 @@ def test_drop_doc_carriers_keeps_bucketing(spark, tmp_path):
 def test_merge_rejects_duplicate_doc_ids(spark, tmp_path):
     """An increment carrying the same document id twice would corrupt
     the unique-id constraint (combine_docs is newest-wins vs OLD rows
-    only) — merge_table must raise, bucketed or plain."""
+    only) — merge_table must raise."""
     from datashare_extension_neo4j_spark.sinks.tables import merge_table
 
     run_dir = _fresh_run(spark, tmp_path)
@@ -179,7 +179,7 @@ def test_rerun_on_existing_dir_executes_pending_migrations(spark, tmp_path):
     run_dir = _fresh_run(spark, tmp_path, n_docs=6)
     # corrupt: inject a self-parent edge and wipe the applied record
     roots_path = f"{run_dir}/doc_roots"
-    bad = spark.read.parquet(roots_path).unionByName(
+    bad = spark.read.parquet(roots_path).drop("_bucket").unionByName(
         spark.createDataFrame([("doc-0", "doc-0")], "src string, dst string")
     )
     bad.write.mode("overwrite").parquet(str(tmp_path / "r2"))
