@@ -568,6 +568,13 @@ def cmd_weblinks_increment(args) -> int:
     return 0
 
 
+def _non_negative_int(text: str) -> int:
+    n = int(text)
+    if n < 0:
+        raise argparse.ArgumentTypeError(f"must be >= 0, got {n}")
+    return n
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="datashare_extension_neo4j_spark")
     p.add_argument("--master", default=None)
@@ -612,7 +619,11 @@ def main(argv: list[str] | None = None) -> int:
     d.add_argument("--output", required=True)
     d.add_argument("--format", choices=["graphml", "cypher-shell"], default="graphml")
     d.add_argument("--query", default=None, help="DSL JSON string")
-    d.add_argument("--limit", type=int, default=10_000)
+    d.add_argument(
+        "--limit", type=_non_negative_int, default=10_000,
+        help="most documents to dump (with their attached entities); "
+        "also caps the doc-id set collected on the driver",
+    )
     d.set_defaults(fn=cmd_dump)
 
     mg = sub.add_parser("migrate")

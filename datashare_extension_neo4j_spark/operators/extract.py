@@ -360,18 +360,3 @@ def parse_pages(
 
     return pages.mapInPandas(run, schema)
 
-
-def with_extracted_text(pages: DataFrame) -> DataFrame:
-    """Minimal variant: fill the text column only (byte-identical rule).
-
-    Keeps the page schema; used by the invariant tests and by callers
-    that don't need document parsing.
-    """
-
-    @F.pandas_udf("string")
-    def _extract(html: pd.Series) -> pd.Series:
-        return html.map(extract_text)
-
-    return pages.withColumn(
-        "text", F.coalesce(F.col("text"), _extract(F.col("html")))
-    )

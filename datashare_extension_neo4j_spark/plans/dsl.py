@@ -22,6 +22,10 @@ DataFrame plan over the nodes/edges tables:
 Catalyst owns everything downstream: the label/property filters push
 into the nodes scan, join order is cost-based, the final limit is a
 CollectLimit.
+
+compile_dump_query runs one job, bounded by ``limit``: it collects the
+query's distinct doc ids to the driver and semi-joins the subgraph
+against them as a local frame.
 """
 
 from __future__ import annotations
@@ -318,7 +322,9 @@ def compile_dump_query(
     exactly one user query (or the default doc query ordered by path),
     auto-extended with the optional match
     (doc)-[rel:APPEARS_IN|SENT|RECEIVED]-(ne:NamedEntity); returns the
-    de-duplicated (nodes, edges) DataFrames of the subgraph."""
+    de-duplicated (nodes, edges) DataFrames of the subgraph. Runs one
+    job, for the ≤ ``limit`` doc ids; the frames it returns are lazy
+    semi-joins against them and never re-run the query."""
     queries = (dump or {}).get("queries") or []
     if len(queries) > 1:
         # reference message, Objects.java DumpQuery.asValidated
@@ -349,6 +355,11 @@ def compile_dump_query(
     doc_ids = docs.select(
         F.col(f"{doc_var}.node_id").alias("node_id")
     ).distinct()
+    # materialized once (≤ limit rows), so both sides below semi-join a
+    # local relation instead of each re-running the compiled join
+    doc_ids = docs.sparkSession.createDataFrame(
+        doc_ids.collect(), doc_ids.schema
+    )
     rels = g.edges.where(F.col("type").isin(*DUMP_EDGE_TYPES))
     # undirected attachment: either endpoint is a dumped doc. Two
     # hash-joinable equi semi-joins unioned — an OR join condition

@@ -7,13 +7,18 @@ observed property (+ node ``labels``, edge ``label``/``TYPE``), nodes
 carrying ``labels`` data, edges carrying source/target/label; cypher
 dump as :begin/CREATE/:commit batches.
 
-Serialization streams partitions through ``toLocalIterator`` — memory
-on the driver is one partition, not the graph. (A dump is a human-
-sized export, capped by the 10k default limit — not a bulk path.)
+Each side is evaluated once, streamed through ``toLocalIterator``.
+The GraphML header declares every property key, known only after the
+last element, so the element lines are spooled to a temporary file (in
+memory up to ``_SPOOL_MAX`` characters, on disk past it) while the key
+sets gather, then copied after the header. (A dump is a human-sized
+export, capped by the 10k default limit — not a bulk path.)
 """
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 from typing import Iterable, TextIO
 from xml.sax.saxutils import escape, quoteattr
 
@@ -26,57 +31,50 @@ _GRAPHML_OPEN = (
     ' xsi:schemaLocation="http://graphml.graphdrawing.org/xmlns'
     ' http://graphml.graphdrawing.org/xmlns/1.0/graphml.xsd">\n'
 )
+_SPOOL_MAX = 16 << 20  # body characters kept in memory before spilling
 
 
-def _prop_keys(elements: DataFrame) -> list[str]:
-    """Sorted distinct keys of the ``props`` maps (a null map explodes
-    to no rows)."""
-    from pyspark.sql import functions as F
-
-    rows = (
-        elements.select(F.explode(F.map_keys("props")).alias("k"))
-        .distinct()
-        .collect()
+def _graphml_data(props: dict | None, keys: set[str]) -> str:
+    """An element's <data> elements; adds every key of ``props`` to
+    ``keys``, null-valued ones included."""
+    keys.update(props or ())
+    return "".join(
+        f"<data key={quoteattr(k)}>{escape(str(v))}</data>"
+        for k, v in sorted((props or {}).items())
+        if v is not None
     )
-    return sorted(r["k"] for r in rows)
 
 
 def dump_graphml(nodes: DataFrame, edges: DataFrame, out: TextIO) -> int:
     """Write GraphML; returns element count."""
+    keys: dict[str, set[str]] = {"node": set(), "edge": set()}
     n = 0
-    out.write(_GRAPHML_OPEN)
-    for k in _prop_keys(nodes):
-        # keys derive from page metadata (attacker-controlled) — quote
-        out.write(f'<key id={quoteattr(k)} for="node" attr.name={quoteattr(k)}/>\n')
-    out.write('<key id="TYPE" for="node" attr.name="TYPE"/>\n')
-    out.write('<key id="labels" for="node" attr.name="labels"/>\n')
-    for k in _prop_keys(edges):
-        out.write(f'<key id={quoteattr(k)} for="edge" attr.name={quoteattr(k)}/>\n')
-    out.write('<key id="label" for="edge" attr.name="label"/>\n')
-    out.write('<key id="TYPE" for="edge" attr.name="TYPE"/>\n')
-    out.write('<graph id="G" edgedefault="directed">\n')
-    for row in nodes.toLocalIterator():
-        labels = ":" + ":".join(row["labels"])
-        out.write(f'<node id={quoteattr(str(row["node_id"]))} labels={quoteattr(labels)}>')
-        out.write(f'<data key="labels">{escape(labels)}</data>')
-        for k, v in sorted((row["props"] or {}).items()):
-            if v is not None:
-                out.write(f'<data key={quoteattr(k)}>{escape(str(v))}</data>')
-        out.write("</node>\n")
-        n += 1
-    i = 0
-    for row in edges.toLocalIterator():
-        out.write(
-            f'<edge id="e{i}" source={quoteattr(str(row["src"]))}'
-            f' target={quoteattr(str(row["dst"]))} label={quoteattr(row["type"])}>'
-        )
-        out.write(f'<data key="label">{escape(row["type"])}</data>')
-        for k, v in sorted((row["props"] or {}).items()):
-            if v is not None:
-                out.write(f'<data key={quoteattr(k)}>{escape(str(v))}</data>')
-        out.write("</edge>\n")
-        n += 1
-        i += 1
+    with tempfile.SpooledTemporaryFile(_SPOOL_MAX, "w+", encoding="utf-8") as body:
+        for row in nodes.toLocalIterator():
+            labels = ":" + ":".join(row["labels"])
+            body.write(
+                f'<node id={quoteattr(str(row["node_id"]))} labels={quoteattr(labels)}>'
+                f'<data key="labels">{escape(labels)}</data>'
+                f'{_graphml_data(row["props"], keys["node"])}</node>\n'
+            )
+            n += 1
+        for i, row in enumerate(edges.toLocalIterator()):
+            body.write(
+                f'<edge id="e{i}" source={quoteattr(str(row["src"]))}'
+                f' target={quoteattr(str(row["dst"]))} label={quoteattr(row["type"])}>'
+                f'<data key="label">{escape(row["type"])}</data>'
+                f'{_graphml_data(row["props"], keys["edge"])}</edge>\n'
+            )
+            n += 1
+        out.write(_GRAPHML_OPEN)
+        fixed = {"node": ["TYPE", "labels"], "edge": ["label", "TYPE"]}
+        for kind in ("node", "edge"):
+            # keys derive from page metadata (attacker-controlled) — quote
+            for k in sorted(keys[kind]) + fixed[kind]:
+                out.write(f'<key id={quoteattr(k)} for="{kind}" attr.name={quoteattr(k)}/>\n')
+        out.write('<graph id="G" edgedefault="directed">\n')
+        body.seek(0)
+        shutil.copyfileobj(body, out)
     out.write("</graph>\n</graphml>\n")
     return n
 

@@ -53,20 +53,3 @@ MENTION_SCHEMA = T.StructType(
         T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
     ]
 )
-
-# materialized graph — property tables (SURVEY.md §1.4)
-NODES_SCHEMA = T.StructType(
-    [
-        T.StructField("node_id", T.StringType(), False),
-        T.StructField("labels", T.ArrayType(T.StringType()), False),
-        T.StructField("props", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-EDGES_SCHEMA = T.StructType(
-    [
-        T.StructField("src", T.StringType(), False),
-        T.StructField("dst", T.StringType(), False),
-        T.StructField("type", T.StringType(), False),
-        T.StructField("props", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)

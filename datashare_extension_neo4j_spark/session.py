@@ -12,6 +12,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """SPARK_DRIVER_MEMORY, else half of physical RAM within [1g, 48g]
+    (48g where it is unknown). In local mode the driver heap is also
+    every executor's heap."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "48g"
+    return f"{min(48 << 10, max(1 << 10, kb >> 11))}m"
+
+
 def get_spark(
     app_name: str = "datashare_extension_neo4j_spark",
     master: str | None = None,
@@ -41,7 +55,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # collect_set/collect_list aggs: sort-based beats object-hash at

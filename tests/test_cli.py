@@ -4,6 +4,8 @@ session via getOrCreate."""
 
 import json
 
+import pytest
+
 from datashare_extension_neo4j_spark.cli import main
 from datashare_extension_neo4j_spark.fixtures import reference_pages
 
@@ -67,6 +69,16 @@ def test_cli_full_cycle(spark, tmp_path, capsys):
                  "--kb-store"]) == 0
     lj2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert lj2["rows"] == lj["rows"] and lj2["fuzzy"] == 0
+
+
+def test_cli_dump_rejects_negative_limit(tmp_path, capsys):
+    """--limit bounds the doc ids the dump collects on the driver; a
+    negative value is a usage error, not a Spark analysis error."""
+    with pytest.raises(SystemExit) as e:
+        main(["dump", "--run-dir", str(tmp_path / "run"),
+              "--output", str(tmp_path / "d.graphml"), "--limit", "-1"])
+    assert e.value.code == 2
+    assert "--limit" in capsys.readouterr().err
 
 
 def test_cli_migrate_and_verify(spark, tmp_path, capsys):

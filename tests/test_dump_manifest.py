@@ -8,12 +8,13 @@ import xml.etree.ElementTree as ET
 
 import pytest
 
+from datashare_extension_neo4j_spark.cli import main
 from datashare_extension_neo4j_spark.fixtures import reference_pages
 from datashare_extension_neo4j_spark.graph import to_property_graph
 from datashare_extension_neo4j_spark.manifest import Manifest, run_pipeline
 from datashare_extension_neo4j_spark.pipeline import PARSE_LAYOUT, build_graph
 from datashare_extension_neo4j_spark.plans.dump import dump_cypher, dump_graphml
-from datashare_extension_neo4j_spark.plans.dsl import GraphTables
+from datashare_extension_neo4j_spark.plans.dsl import GraphTables, compile_dump_query
 from datashare_extension_neo4j_spark.stats import (
     compute_statistics,
     read_statistics,
@@ -21,6 +22,8 @@ from datashare_extension_neo4j_spark.stats import (
 )
 
 NS = {"": "http://graphml.graphdrawing.org/xmlns"}
+NODES_DDL = "node_id string, labels array<string>, props map<string,string>"
+EDGES_DDL = "src string, dst string, type string, props map<string,string>"
 
 
 @pytest.fixture(scope="module")
@@ -30,11 +33,11 @@ def small_graph(spark):
             ("doc-id", ["Document"], {"id": "doc-id"}),
             ("ne-id", ["NamedEntity", "Person"], {"mentionNorm": "Keanu Reeves"}),
         ],
-        "node_id string, labels array<string>, props map<string,string>",
+        NODES_DDL,
     )
     edges = spark.createDataFrame(
         [("ne-id", "doc-id", "APPEARS_IN", None)],
-        "src string, dst string, type string, props map<string,string>",
+        EDGES_DDL,
     )
     return GraphTables(nodes=nodes, edges=edges)
 
@@ -56,6 +59,136 @@ def test_graphml_structure(small_graph):
     assert len(edges) == 1
     names = root.findall("graph//data[@key='mentionNorm']", namespaces=NS)
     assert names[0].text == "Keanu Reeves"
+
+
+def test_graphml_evaluates_each_side_once(small_graph, last_sql_execution):
+    """One SQL execution per side: the key declarations come from the
+    same pass that writes the elements, not a second evaluation."""
+    nodes, edges = compile_dump_query(small_graph, None)
+    buf = io.StringIO()
+    before = last_sql_execution()
+    assert dump_graphml(nodes, edges, buf) == 3
+    assert last_sql_execution() - before == 2
+
+
+def _graphml_keys(root) -> set[tuple[str, str]]:
+    return {(k.get("id"), k.get("for")) for k in root.findall("key", namespaces=NS)}
+
+
+FIXED_KEYS = {("TYPE", "node"), ("labels", "node"), ("label", "edge"), ("TYPE", "edge")}
+
+
+def test_graphml_dump_of_no_document(small_graph):
+    """A query matching no document gives an empty local id frame and
+    a well-formed GraphML with only the fixed keys."""
+    q = {"matches": [{"path": {"nodes": [
+        {"name": "doc", "labels": ["Document"], "properties": {"id": "nope"}}
+    ]}}]}
+    nodes, edges = compile_dump_query(small_graph, {"queries": [q]})
+    buf = io.StringIO()
+    assert dump_graphml(nodes, edges, buf) == 0
+    root = ET.fromstring(buf.getvalue())
+    assert _graphml_keys(root) == FIXED_KEYS
+    assert root.findall("graph/*", namespaces=NS) == []
+
+
+def test_graphml_keys_of_null_props(spark):
+    """A null-valued key is declared but writes no <data>; a null
+    props map declares nothing."""
+    nodes = spark.createDataFrame(
+        [("a", ["Document"], {"id": "a", "gone": None}), ("b", ["Document"], None)],
+        NODES_DDL,
+    )
+    edges = spark.createDataFrame(
+        [("a", "b", "HAS_PARENT", {"w": None}), ("b", "a", "HAS_PARENT", None)],
+        EDGES_DDL,
+    )
+    buf = io.StringIO()
+    assert dump_graphml(nodes, edges, buf) == 4
+    root = ET.fromstring(buf.getvalue())
+    assert _graphml_keys(root) == FIXED_KEYS | {
+        ("id", "node"), ("gone", "node"), ("w", "edge")
+    }
+    assert root.findall("graph//data[@key='gone']", namespaces=NS) == []
+    assert root.findall("graph//data[@key='w']", namespaces=NS) == []
+    b = root.find("graph/node[@id='b']", namespaces=NS)
+    assert [d.get("key") for d in b] == ["labels"]
+
+
+def test_graphml_body_spilled_to_disk(spark, monkeypatch):
+    """A body past the spool size goes through a temporary file and
+    comes out the same."""
+    from datashare_extension_neo4j_spark.plans import dump
+
+    nodes = spark.createDataFrame(
+        [(f"n{i}", ["Document"], {"title": f"Zoë {i}"}) for i in range(20)],
+        NODES_DDL,
+    )
+    edges = spark.createDataFrame(
+        [("n0", "n1", "HAS_PARENT", None)],
+        EDGES_DDL,
+    )
+    in_memory = io.StringIO()
+    dump_graphml(nodes, edges, in_memory)
+    monkeypatch.setattr(dump, "_SPOOL_MAX", 64)
+    spilled = io.StringIO()
+    assert dump_graphml(nodes, edges, spilled) == 21
+    assert spilled.getvalue() == in_memory.getvalue()
+
+
+@pytest.fixture(scope="module")
+def built_store(spark, tmp_path_factory):
+    tmp = tmp_path_factory.mktemp("dump_store")
+    reference_pages(spark, n_docs=6).write.parquet(str(tmp / "pages"))
+    run_dir = str(tmp / "run")
+    assert main(["build", "--pages", str(tmp / "pages"), "--run-dir", run_dir,
+                 "--buckets", "2"]) == 0
+    return run_dir
+
+
+def test_cli_dump_runs_query_once(built_store, tmp_path, capsys, last_sql_execution):
+    """The dump's DSL query runs once (the doc-id job), then each side
+    once: at most three SQL executions for the whole command."""
+    out = str(tmp_path / "all.graphml")
+    before = last_sql_execution()
+    assert main(["dump", "--run-dir", built_store, "--output", out]) == 0
+    assert last_sql_execution() - before <= 3
+    got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    root = ET.parse(out).getroot()
+    docs = [
+        n for n in root.findall("graph/node", namespaces=NS)
+        if n.get("labels") == ":Document"
+    ]
+    assert len(docs) == 6
+    assert got["elements"] == len(root.findall("graph/*", namespaces=NS))
+
+
+def test_cli_dump_limit_one(spark, built_store, tmp_path):
+    """--limit 1 dumps the first document by path and exactly the
+    entities attached to it."""
+    from datashare_extension_neo4j_spark.plans.dsl import DUMP_EDGE_TYPES
+    from datashare_extension_neo4j_spark.sinks.tables import load_store
+
+    out = str(tmp_path / "one.graphml")
+    assert main(["dump", "--run-dir", built_store, "--output", out,
+                 "--limit", "1"]) == 0
+    root = ET.parse(out).getroot()
+    nodes = root.findall("graph/node", namespaces=NS)
+    docs = [n.get("id") for n in nodes if n.get("labels") == ":Document"]
+    g = to_property_graph(load_store(spark, built_store))
+    first = (
+        g.nodes.where("array_contains(labels, 'Document')")
+        .orderBy(g.nodes.props["path"]).first()["node_id"]
+    )
+    assert docs == [first]
+    e = g.edges
+    attached = {
+        r["src"] if r["dst"] == first else r["dst"]
+        for r in e.where(e.type.isin(*DUMP_EDGE_TYPES))
+        .where((e.src == first) | (e.dst == first)).collect()
+    }
+    assert attached
+    assert {n.get("id") for n in nodes} == {first} | attached
 
 
 def test_cypher_dump(small_graph):
