@@ -430,15 +430,13 @@ def cmd_weblinks(args) -> int:
     from pyspark.sql import functions as F
 
     from .manifest import Manifest
-    from .operators.graph_algos import (
-        pagerank_directed,
-        release_long_lived_checkpoints,
-    )
+    from .operators.graph_algos import release_long_lived_checkpoints
     from .operators.weblinks import (
-        canonical_url,
+        anchor_aliases,
+        canonical_url_counts,
         extract_links,
         host_graph,
-        url_host,
+        host_pagerank,
     )
     from .queries import _link_pages
 
@@ -467,37 +465,9 @@ def cmd_weblinks(args) -> int:
     hg, hg_path = stage(
         "host_graph", [links_path], lambda: host_graph(links)
     )
-    pr, _pr_path = stage(
-        "host_pagerank",
-        [hg_path],
-        lambda: pagerank_directed(
-            hg, src="srcHost", dst="dstHost", weight="nLinks", digits=6
-        ).select(F.col("node").alias("host"), F.col("rank").alias("pagerank")),
-    )
-    canon = links.select(
-        canonical_url(F.col("dstUrl")).alias("url"),
-        url_host(F.col("srcUrl")).alias("srcHost"),
-        "anchorText",
-    )
-    stage(
-        "url_canonical",
-        [links_path],
-        lambda: canon.groupBy("url").agg(
-            F.count("*").cast("long").alias("nLinks"),
-            F.countDistinct("srcHost").cast("long").alias("nSources"),
-        ),
-    )
-    stage(
-        "anchor_aliases",
-        [links_path],
-        lambda: canon.groupBy("url").agg(
-            F.array_join(
-                F.array_sort(F.collect_set("anchorText")), "|"
-            ).alias("aliases"),
-            F.countDistinct("anchorText").cast("long").alias("nForms"),
-            F.count("*").cast("long").alias("nLinks"),
-        ),
-    )
+    pr, _pr_path = stage("host_pagerank", [hg_path], lambda: host_pagerank(hg))
+    stage("url_canonical", [links_path], lambda: canonical_url_counts(links))
+    stage("anchor_aliases", [links_path], lambda: anchor_aliases(links))
     if getattr(args, "graphml", None):
         # host graph through the reference-shaped GraphML dump sink
         # (plans/dump.py — the same writer the KG dump uses): hosts as

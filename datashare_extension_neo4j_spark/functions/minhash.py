@@ -25,7 +25,7 @@ per-doc signature work never crosses documents.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 N_MINHASH = 8
@@ -74,3 +74,22 @@ def band_keys(mins: list[Column], band_size: int = BAND_SIZE) -> list[Column]:
         F.md5(F.concat_ws(",", *mins[i * band_size : (i + 1) * band_size]))
         for i in range(n_bands)
     ]
+
+
+def with_bands(
+    df: DataFrame, sh: str, keep: list[str], sig: bool = False
+) -> DataFrame:
+    """``keep`` + ``band0..band{N_BANDS-1}`` (+ the comma-joined
+    ``sig`` when asked) from the bound shingle-array column ``sh``.
+    The per-seed minimums are bound to columns first, so each of the
+    k array passes runs once however many band / sig expressions read
+    it."""
+    staged = df.select(
+        *keep, *[m.alias(f"_m{s}") for s, m in enumerate(minhash_mins(sh))]
+    )
+    mins = [F.col(f"_m{s}") for s in range(N_MINHASH)]
+    return staged.select(
+        *keep,
+        *([F.concat_ws(",", *mins).alias("sig")] if sig else []),
+        *[b.alias(f"band{i}") for i, b in enumerate(band_keys(mins))],
+    )

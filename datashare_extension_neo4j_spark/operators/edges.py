@@ -1,5 +1,5 @@
 """Triple emission — APPEARS_IN / SENT / RECEIVED edge aggregation
-(A1/A2/A3/A7) with an optional two-level salted variant for hot keys.
+(A1/A2/A3/A7).
 
 Reference semantics (neo4j-app/neo4j_app/core/imports.py:751-798 +
 core/elasticsearch/to_neo4j.py:266-294):
@@ -15,9 +15,7 @@ core/elasticsearch/to_neo4j.py:266-294):
 The reference achieves bounded memory by pre-sorting mentions per doc
 id ES-side and flushing buffers on key change (imports.py:664-737) —
 in Spark that whole mechanism IS hash aggregation with spill; the
-semantic content is just the groupBy below. For degree-heavy entities
-(hot mentionNorms at 10^12 docs) the salted variant pre-aggregates on
-(key, salt) before the final merge, collapsing skewed partitions.
+semantic content is just the groupBy below.
 """
 
 from __future__ import annotations
@@ -38,35 +36,15 @@ from ..functions.hashing import entity_id
 _KEY = ["mentionNorm", "category", "documentId"]
 
 
-def appears_in_edges(mentions: DataFrame, salted: bool = False, salt_buckets: int = 16) -> DataFrame:
+def appears_in_edges(mentions: DataFrame) -> DataFrame:
     """(entity)-[:APPEARS_IN {mentionIds, mentionExtractors,
     extractorLanguage, offsets, mentionCount}]->(doc)."""
-    if salted:
-        partial = (
-            mentions.withColumn(
-                "_salt", F.pmod(F.xxhash64(F.col("id")), F.lit(salt_buckets))
-            )
-            .groupBy(*_KEY, "_salt")
-            .agg(
-                F.collect_list("id").alias("_ids"),
-                F.collect_set("extractor").alias("_extractors"),
-                F.flatten(F.collect_list("offsets")).alias("_offsets"),
-                F.min("extractorLanguage").alias("_lang"),
-            )
-        )
-        grouped = partial.groupBy(*_KEY).agg(
-            F.flatten(F.collect_list("_ids")).alias("_ids"),
-            F.flatten(F.collect_set("_extractors")).alias("_extractors"),
-            F.flatten(F.collect_list("_offsets")).alias("_offsets"),
-            F.min("_lang").alias("_lang"),
-        )
-    else:
-        grouped = mentions.groupBy(*_KEY).agg(
-            F.collect_list("id").alias("_ids"),
-            F.collect_set("extractor").alias("_extractors"),
-            F.flatten(F.collect_list("offsets")).alias("_offsets"),
-            F.min("extractorLanguage").alias("_lang"),
-        )
+    grouped = mentions.groupBy(*_KEY).agg(
+        F.collect_list("id").alias("_ids"),
+        F.collect_set("extractor").alias("_extractors"),
+        F.flatten(F.collect_list("offsets")).alias("_offsets"),
+        F.min("extractorLanguage").alias("_lang"),
+    )
     return grouped.select(
         "mentionNorm",
         "category",

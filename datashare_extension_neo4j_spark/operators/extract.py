@@ -12,17 +12,25 @@ Extractor spec (deterministic, stdlib-only):
   * every text node inside <body> is stripped; non-empty nodes are
     joined with a single "\\n"
 
-Page parsing also recovers document fields and inline mention
-annotations from ``<meta name="ds:...">`` / ``<span class="ne" ...>``
-markup (the fixture generator's carrier for reference-corpus parity —
-mirrors how the reference receives documents + named entities as two
-pre-extracted ES hit streams, reference
+Page parsing also recovers document fields from ``<meta name="ds:...">``
+markup and mentions from ``<span class="ne" ...>`` annotations (the
+fixture generator's carrier for reference-corpus parity — mirrors how
+the reference receives documents + named entities as two pre-extracted
+ES hit streams, reference
 neo4j-app/neo4j_app/core/elasticsearch/to_neo4j.py:53-67,185-193).
 
+A mention has ONE record inside the kernel, ``_MENTION_STRUCT``: the
+reference NE hit (constants.py:95-107) minus its document id, with
+``offsets`` as ``array<long>`` and the email header flat. Annotated
+spans (``_parse_one``) and rule NER (``ner._extract_doc``) both emit
+it; ``parse_pages`` concatenates the two lists and aggregates them
+once per page into the APPEARS_IN / SENT / RECEIVED edge carrier
+(``aggregate_doc_edges``).
+
 Everything runs in ``mapInPandas`` — one parse per page, one pass, no
-per-row Python UDF round trips; the output carries mentions as an
-array column so a single scan feeds both the document and the mention
-streams (explode later, after the cheap filter).
+per-row Python UDF round trips; the output carries mentions and edges
+as array columns so a single scan feeds the document, mention and
+edge streams (explode later, after the cheap filter).
 """
 
 from __future__ import annotations
@@ -33,8 +41,15 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..constants import (
+    EMAIL_HEADER,
+    EMAIL_RECEIVED_TYPE,
+    EMAIL_SENT_TYPE,
+    RECEIVED_EMAIL_HEADERS,
+    SENT_EMAIL_HEADERS,
+)
 
 _SKIP_TAGS = {"script", "style", "head"}
 
@@ -77,18 +92,9 @@ class _Extractor(HTMLParser):
             self.blocks.append(data)
 
 
-def extract_text(html_bytes: bytes | None) -> str | None:
-    """Driver-side twin of the extraction UDF (goldens/tests)."""
-    if html_bytes is None:
-        return None
-    p = _Extractor()
-    p.feed(html_bytes.decode("utf-8", errors="replace"))
-    return "\n".join(p.blocks)
-
-
-# lean carrier struct: primitives only (offsets '|'-joined, email
-# header flattened out of the metadata map) — nested maps inside
-# arrays are disproportionately expensive to cache/encode JVM-side
+# the one mention record: the email header is flattened out of the
+# reference's metadata map — nested maps inside arrays are
+# disproportionately expensive to cache/encode JVM-side
 _MENTION_STRUCT = T.StructType(
     [
         T.StructField("id", T.StringType()),
@@ -97,7 +103,7 @@ _MENTION_STRUCT = T.StructType(
         T.StructField("mentionNorm", T.StringType()),
         T.StructField("extractor", T.StringType()),
         T.StructField("extractorLanguage", T.StringType()),
-        T.StructField("offsets", T.StringType()),
+        T.StructField("offsets", T.ArrayType(T.LongType())),
         T.StructField("emailHeaderField", T.StringType()),
     ]
 )
@@ -132,27 +138,26 @@ def aggregate_doc_edges(mentions: list[dict]) -> list[dict]:
     appears: dict[tuple, dict] = {}
     emails: dict[tuple, dict] = {}
     for m in mentions:
-        offs = [int(o) for o in (m.get("offsets") or "").split("|") if o != ""]
         key = (m["mentionNorm"], m["category"])
         a = appears.setdefault(
             key,
             {"ids": [], "extractors": set(), "offsets": set(), "lang": None},
         )
         a["ids"].append(m["id"])
-        if m.get("extractor") is not None:
+        if m["extractor"] is not None:
             a["extractors"].add(m["extractor"])
-        a["offsets"].update(offs)
+        a["offsets"].update(m["offsets"])
         # min over languages: deterministic under ANY mention order,
         # matching the groupBy paths (F.min) — 'first seen' depends on
         # partition/markup order and broke the byte-identical invariant
-        ml = m.get("extractorLanguage")
+        ml = m["extractorLanguage"]
         if ml is not None and (a["lang"] is None or ml < a["lang"]):
             a["lang"] = ml
-        hdr = m.get("emailHeaderField")
-        if hdr in _SENT_HEADERS:
-            etype = "SENT"
-        elif hdr in _RECEIVED_HEADERS:
-            etype = "RECEIVED"
+        hdr = m["emailHeaderField"]
+        if hdr in SENT_EMAIL_HEADERS:
+            etype = EMAIL_SENT_TYPE
+        elif hdr in RECEIVED_EMAIL_HEADERS:
+            etype = EMAIL_RECEIVED_TYPE
         else:
             etype = None
         if etype is not None:
@@ -189,13 +194,6 @@ def aggregate_doc_edges(mentions: list[dict]) -> list[dict]:
         )
     return out
 
-
-_SENT_HEADERS = {"tika_metadata_message_from", "tika_metadata_dc_creator"}
-_RECEIVED_HEADERS = {
-    "tika_metadata_message_bcc",
-    "tika_metadata_message_cc",
-    "tika_metadata_message_to",
-}
 
 PARSED_SCHEMA = T.StructType(
     [
@@ -234,7 +232,25 @@ def _int_tokens(raw: str) -> list[int]:
     return out
 
 
+def _email_header(raw: str | None) -> str | None:
+    """The emailHeaderField of a span's data-metadata JSON. Hostile
+    markup — not JSON, not an object, a non-string header — carries
+    no header, so the mention and its APPEARS_IN edge stay and no
+    later conversion can fail the job."""
+    if raw is None:
+        return None
+    try:
+        md = json.loads(raw)
+    except (ValueError, RecursionError):
+        return None
+    hdr = md.get(EMAIL_HEADER) if isinstance(md, dict) else None
+    return hdr if isinstance(hdr, str) else None
+
+
 def _parse_one(url, warc_ts, html, text, lang) -> dict:
+    """One page → one parsed row whose ``ann_mentions`` holds the
+    annotated spans; ``ann_edges`` is left to ``parse_pages``, which
+    aggregates once per page after rule NER has appended its own."""
     p = _Extractor()
     raw = html.decode("utf-8", errors="replace") if html is not None else ""
     p.feed(raw)
@@ -252,10 +268,6 @@ def _parse_one(url, warc_ts, html, text, lang) -> dict:
             # (None norms are unsortable in aggregate_doc_edges and
             # violate MENTION_SCHEMA's non-null fields)
             continue
-        offs = "|".join(
-            str(o) for o in _int_tokens(sp.get("data-offsets", ""))
-        )
-        md = json.loads(sp["data-metadata"]) if "data-metadata" in sp else None
         mentions.append(
             {
                 "id": sp.get("data-id"),
@@ -264,8 +276,8 @@ def _parse_one(url, warc_ts, html, text, lang) -> dict:
                 "mentionNorm": sp.get("data-norm"),
                 "extractor": sp.get("data-extractor"),
                 "extractorLanguage": sp.get("data-lang", "en"),
-                "offsets": offs,
-                "emailHeaderField": (md or {}).get("emailHeaderField"),
+                "offsets": _int_tokens(sp.get("data-offsets", "")),
+                "emailHeaderField": _email_header(sp.get("data-metadata")),
             }
         )
     return {
@@ -289,7 +301,6 @@ def _parse_one(url, warc_ts, html, text, lang) -> dict:
         "title": m.get("title") or None,
         "metadata": doc_meta or None,
         "ann_mentions": mentions,
-        "ann_edges": aggregate_doc_edges(mentions),
     }
 
 
@@ -307,8 +318,10 @@ def parse_pages(
     subsets of PARSED_SCHEMA.
 
     ``ner_gazetteer`` fuses rule-based NER (regex emails + gazetteer)
-    into the same pass, appending to ann_mentions — one scan over the
-    html instead of a second text-consuming stage. With
+    into the same pass, appending its records to ann_mentions — one
+    scan over the html instead of a second text-consuming stage. Each
+    page's mentions, both sources together, are aggregated into
+    ann_edges once. With
     ``include_text=False`` the (large) text column is dropped from the
     output, cutting Arrow transfer + downstream width by ~70%; the
     byte-identical text invariant is still exercised because mention
@@ -333,26 +346,10 @@ def parse_pages(
             ):
                 row = _parse_one(u, ts, h, tx, lg)
                 if ner_gazetteer is not None:
-                    found = _extract_doc(
+                    row["ann_mentions"] += _extract_doc(
                         row["id"], row["text"], row["lang"], ner_gazetteer
                     )
-                    lean = [
-                        {
-                            "id": m["id"],
-                            "category": m["category"],
-                            "mention": m["mention"],
-                            "mentionNorm": m["mentionNorm"],
-                            "extractor": m["extractor"],
-                            "extractorLanguage": m["extractorLanguage"],
-                            "offsets": "|".join(str(o) for o in m["offsets"]),
-                            "emailHeaderField": (m["metadata"] or {}).get(
-                                "emailHeaderField"
-                            ),
-                        }
-                        for m in found
-                    ]
-                    row["ann_mentions"] = row["ann_mentions"] + lean
-                    row["ann_edges"] = aggregate_doc_edges(row["ann_mentions"])
+                row["ann_edges"] = aggregate_doc_edges(row["ann_mentions"])
                 for d in drop:
                     row.pop(d)
                 rows.append(row)

@@ -1,18 +1,23 @@
-"""Mention detection (NER) — two sources, one output shape.
+"""Mention detection (NER) — two sources, one record.
 
-1. ``annotated_mentions`` — unpacks inline annotations recovered by the
-   parse stage. This mirrors the reference, which receives *pre-
-   extracted* NamedEntity hits from Elasticsearch (reference
+Both sources emit ``extract._MENTION_STRUCT``, the one mention record
+of the parse kernel (offsets ``array<long>``, email header flat), and
+``annotated_mentions`` is the one place it becomes the reference's NE
+hit shape (``schemas.MENTION_SCHEMA``, reference constants.py:95-107).
+
+1. Inline annotations recovered by the parse stage. This mirrors the
+   reference, which receives *pre-extracted* NamedEntity hits from
+   Elasticsearch (reference
    neo4j-app/neo4j_app/core/elasticsearch/to_neo4j.py:185-193) — the
    FK to the hosting document is ``hit.join.parent``; ours is the page
-   the annotation sits in. Pure explode + projection, no Python.
+   the annotation sits in.
 
-2. ``rule_based_mentions`` — a real extraction path for raw web text:
+2. ``_extract_doc`` — a real extraction path for raw web text:
    deterministic EMAIL regex + gazetteer PERSON/ORG/LOCATION matching
-   with true character offsets, Arrow-batched (mapInPandas), so
-   goldens are stable and P/R vs the synthetic truth is exact.
-
-Output columns = the reference's NE hit shape (constants.py:95-107).
+   with true character offsets. ``extract.parse_pages`` fuses it into
+   the parse pass; ``rule_based_mentions`` runs it standalone over
+   extracted documents, so goldens are stable and P/R vs the synthetic
+   truth is exact.
 """
 
 from __future__ import annotations
@@ -26,39 +31,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..constants import EMAIL_CATEGORY, EMAIL_HEADER
-
-_MENTION_COLS = [
-    "id",
-    "documentId",
-    "category",
-    "mention",
-    "mentionNorm",
-    "mentionNormTextLength",
-    "extractor",
-    "extractorLanguage",
-    "offsets",
-    "metadata",
-]
+from .extract import PARSED_SCHEMA
 
 
 def annotated_mentions(parsed: DataFrame) -> DataFrame:
-    """Explode ann_mentions arrays into reference-shaped mention rows.
-
-    The carrier struct is primitives-only (offsets '|'-joined, email
-    header flat — see extract._MENTION_STRUCT); this reconstructs the
-    reference NE-hit shape (offsets array<long>, metadata map) with
-    codegen'd expressions.
-    """
+    """Explode ann_mentions arrays into reference-shaped mention rows:
+    the document id joins each record, and the flat email header
+    becomes the reference's metadata map. Pure explode + projection,
+    no Python."""
     m = parsed.select(
         F.col("id").alias("documentId"),
         F.explode("ann_mentions").alias("m"),
     )
-    offsets = F.when(
-        F.col("m.offsets").isNotNull() & (F.col("m.offsets") != ""),
-        F.transform(
-            F.split(F.col("m.offsets"), "\\|"), lambda x: x.cast("long")
-        ),
-    ).otherwise(F.array().cast("array<long>"))
     metadata = F.when(
         F.col("m.emailHeaderField").isNotNull(),
         F.create_map(
@@ -74,7 +58,7 @@ def annotated_mentions(parsed: DataFrame) -> DataFrame:
         F.length("m.mentionNorm").cast("int").alias("mentionNormTextLength"),
         F.col("m.extractor").alias("extractor"),
         F.col("m.extractorLanguage").alias("extractorLanguage"),
-        offsets.alias("offsets"),
+        F.col("m.offsets").alias("offsets"),
         metadata.alias("metadata"),
     )
 
@@ -102,23 +86,15 @@ DEFAULT_GAZETTEER = {
     "batch": "ORGANIZATION",
 }
 
-_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType()),
-        T.StructField("documentId", T.StringType()),
-        T.StructField("category", T.StringType()),
-        T.StructField("mention", T.StringType()),
-        T.StructField("mentionNorm", T.StringType()),
-        T.StructField("mentionNormTextLength", T.IntegerType()),
-        T.StructField("extractor", T.StringType()),
-        T.StructField("extractorLanguage", T.StringType()),
-        T.StructField("offsets", T.ArrayType(T.LongType())),
-        T.StructField("metadata", T.MapType(T.StringType(), T.StringType())),
-    ]
+# (id, ann_mentions): the parse carrier narrowed to what NER fills
+_CARRIER_SCHEMA = T.StructType(
+    [PARSED_SCHEMA["id"], PARSED_SCHEMA["ann_mentions"]]
 )
 
 
 def _extract_doc(doc_id: str, text: str, lang: str, gazetteer: dict) -> list[dict]:
+    """Rule mentions of one document's text, as ``_MENTION_STRUCT``
+    records; ``doc_id`` only namespaces the mention ids."""
     if not text:
         return []
     found: dict[tuple, dict] = {}
@@ -132,11 +108,6 @@ def _extract_doc(doc_id: str, text: str, lang: str, gazetteer: dict) -> list[dic
                 hdr = name
             else:
                 break
-        md = (
-            {EMAIL_HEADER: _HEADER_TO_TIKA[hdr]}
-            if hdr is not None and hdr in _HEADER_TO_TIKA
-            else None
-        )
         key = (norm, EMAIL_CATEGORY, hdr)
         e = found.setdefault(
             key,
@@ -144,7 +115,7 @@ def _extract_doc(doc_id: str, text: str, lang: str, gazetteer: dict) -> list[dic
                 "category": EMAIL_CATEGORY,
                 "mention": m.group(0),
                 "mentionNorm": norm,
-                "metadata": md,
+                "emailHeaderField": _HEADER_TO_TIKA.get(hdr),
                 "offsets": [],
             },
         )
@@ -165,7 +136,7 @@ def _extract_doc(doc_id: str, text: str, lang: str, gazetteer: dict) -> list[dic
                     "category": cat,
                     "mention": m.group(0),
                     "mentionNorm": norm,
-                    "metadata": None,
+                    "emailHeaderField": None,
                     "offsets": [],
                 },
             )
@@ -175,28 +146,22 @@ def _extract_doc(doc_id: str, text: str, lang: str, gazetteer: dict) -> list[dic
         rows.append(
             {
                 "id": f"{doc_id}-{cat}-{norm}" + (f"-{hdr}" if hdr else ""),
-                "documentId": doc_id,
                 "category": cat,
                 "mention": e["mention"],
                 "mentionNorm": norm,
-                "mentionNormTextLength": len(norm),
                 "extractor": "rule",
                 "extractorLanguage": lang or "en",
                 "offsets": e["offsets"],
-                "metadata": e["metadata"],
+                "emailHeaderField": e["emailHeaderField"],
             }
         )
     return rows
 
 
-def rule_based_mentions(
-    docs: DataFrame,
-    gazetteer: dict | None = None,
-    id_col: str = "id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
-    """Deterministic regex/gazetteer NER over extracted text."""
+def rule_based_mentions(docs: DataFrame, gazetteer: dict | None = None) -> DataFrame:
+    """Deterministic regex/gazetteer NER over extracted documents
+    (id, text, lang): one carrier row per document, unpacked by
+    ``annotated_mentions`` like the fused path's."""
     # matching is case-insensitive and lookups use the lower-cased hit,
     # so caller-supplied keys must be normalized too (a mixed-case key
     # like {'Apple': 'ORG'} would otherwise KeyError on the executor)
@@ -207,11 +172,17 @@ def rule_based_mentions(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: list[dict] = []
-            for doc_id, text, lang in zip(
-                pdf[id_col], pdf[text_col], pdf[lang_col]
-            ):
-                out.extend(_extract_doc(doc_id, text, lang, gaz))
-            yield pd.DataFrame(out, columns=_MENTION_COLS)
+            yield pd.DataFrame(
+                {
+                    "id": pdf["id"],
+                    "ann_mentions": [
+                        _extract_doc(doc_id, text, lang, gaz)
+                        for doc_id, text, lang in zip(
+                            pdf["id"], pdf["text"], pdf["lang"]
+                        )
+                    ],
+                }
+            )
 
-    return docs.select(id_col, text_col, lang_col).mapInPandas(run, _OUT_SCHEMA)
+    carriers = docs.select("id", "text", "lang").mapInPandas(run, _CARRIER_SCHEMA)
+    return annotated_mentions(carriers)

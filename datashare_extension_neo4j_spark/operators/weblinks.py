@@ -15,6 +15,11 @@ graph is ONE groupBy on (srcHost, dstHost) — hosts are vocabulary-
 scale, pages corpus-scale, so the agg output is tiny relative to the
 input; canonicalization is in-row. Directed PageRank lives in
 graph_algos.pagerank_directed (per-round localCheckpoint release).
+
+The three rollups over the link stream — ``host_pagerank``,
+``canonical_url_counts`` and ``anchor_aliases`` — are defined here
+once; the registry queries and the ``weblinks`` CLI bundle both call
+them.
 """
 
 from __future__ import annotations
@@ -206,5 +211,53 @@ def host_graph(links: DataFrame) -> DataFrame:
         .agg(
             F.count("*").cast("long").alias("nLinks"),
             F.countDistinct("srcUrl").cast("long").alias("nPages"),
+        )
+    )
+
+
+def host_pagerank(hg: DataFrame) -> DataFrame:
+    """(host, pagerank): link-weighted directed PageRank over the host
+    graph (dangling mass redistributed — terminal wiki hosts have no
+    out-links), at pagerank_directed's fixed 5 rounds, damping 0.85
+    and 6-digit rounding — the loop the web_host_pagerank oracle
+    unrolls."""
+    from .graph_algos import pagerank_directed
+
+    return pagerank_directed(
+        hg, src="srcHost", dst="dstHost", weight="nLinks"
+    ).select(F.col("node").alias("host"), F.col("rank").alias("pagerank"))
+
+
+def canonical_url_counts(links: DataFrame) -> DataFrame:
+    """(url, nLinks, nSources): links and distinct source hosts per
+    canonical target URL — the crawl-dedup prep rollup; one groupBy on
+    the (vocabulary-scale) canonical URL."""
+    return (
+        links.select(
+            canonical_url(F.col("dstUrl")).alias("url"),
+            url_host(F.col("srcUrl")).alias("srcHost"),
+        )
+        .groupBy("url")
+        .agg(
+            F.count("*").cast("long").alias("nLinks"),
+            F.countDistinct("srcHost").cast("long").alias("nSources"),
+        )
+    )
+
+
+def anchor_aliases(links: DataFrame) -> DataFrame:
+    """(url, aliases, nForms, nLinks): the sorted '|'-joined distinct
+    anchor texts per canonical target URL — the alias table entity
+    linking consumes ("batch" / "BATCH" / "batch online" → one
+    target)."""
+    return (
+        links.select(canonical_url(F.col("dstUrl")).alias("url"), "anchorText")
+        .groupBy("url")
+        .agg(
+            F.array_join(
+                F.array_sort(F.collect_set("anchorText")), "|"
+            ).alias("aliases"),
+            F.countDistinct("anchorText").cast("long").alias("nForms"),
+            F.count("*").cast("long").alias("nLinks"),
         )
     )

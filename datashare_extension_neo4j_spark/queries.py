@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from .constants import NE_NODE, NEO4J_ARRAY_SPLIT_CHAR
 from .functions.hashing import entity_id
+from .functions.minhash import BAND_SIZE, N_BANDS, N_MINHASH, with_bands
 from .sources.pages import widen as _widen
 
 ROOT_STRIDE = 5
@@ -662,10 +663,6 @@ FROM keys GROUP BY wordsetKey HAVING count(*) > 1
 """
 
 
-_N_MINHASH = 8
-_BAND_SIZE = 4
-assert _N_MINHASH % _BAND_SIZE == 0, "bands must tile the signature"
-_N_BANDS = _N_MINHASH // _BAND_SIZE  # 2 bands of 4 at the defaults
 _MINHASH_MAX_BUCKET = 10_000  # hot-band cap, mirrored in the oracle
 
 
@@ -748,32 +745,17 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sig_bands_arrays(arrays: DataFrame) -> DataFrame:
-    """(doc_id, sh) → (doc_id, sig, band0..band{_N_BANDS-1}) computed
+    """(doc_id, sh) → (doc_id, sig, band0..band{N_BANDS-1}) computed
     ENTIRELY in-row via the shared builders — zero Exchange (the r4
     groupBy version shuffled k columns per doc; this version shuffles
-    nothing). The per-seed minimums are bound to columns before sig
-    and band derivation so each of the k array passes runs once.
+    nothing).
 
     Input contract: every ``arrays`` row has non-empty ``sh``
     (``_shingle_arrays`` guarantees it via its cheap text predicate) —
     a ``size(sh) > 0`` filter here would be pushdown-inlined below the
     widen exchange as the full shingle expression, resurrecting the
     O(tokens²) split-in-lambda this round removes."""
-    from .functions.minhash import band_keys, minhash_mins
-
-    staged = arrays.select(
-        "doc_id",
-        *[
-            m.alias(f"_m{s}")
-            for s, m in enumerate(minhash_mins("sh"))
-        ],
-    )
-    mins = [F.col(f"_m{s}") for s in range(_N_MINHASH)]
-    return staged.select(
-        "doc_id",
-        F.concat_ws(",", *mins).alias("sig"),
-        *[b.alias(f"band{i}") for i, b in enumerate(band_keys(mins))],
-    )
+    return with_bands(arrays, "sh", ["doc_id"], sig=True)
 
 
 def dedup_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -797,7 +779,7 @@ WITH w AS ({_SHINGLES_SQL}
 ), sigs AS (
   SELECT doc_id, s.seed, min(md5(s.seed || ':' || w.word)) AS mh
   FROM w,
-       (SELECT unnest(generate_series(0, {_N_MINHASH - 1})) AS seed) s
+       (SELECT unnest(generate_series(0, {N_MINHASH - 1})) AS seed) s
   GROUP BY doc_id, s.seed
 ), per_doc AS (
   SELECT doc_id,
@@ -808,8 +790,8 @@ WITH w AS ({_SHINGLES_SQL}
 SELECT doc_id, sig,
        {", ".join(
            f"md5(array_to_string(string_split(sig, ',')"
-           f"[{i * _BAND_SIZE + 1}:{(i + 1) * _BAND_SIZE}], ',')) AS band{i}"
-           for i in range(_N_BANDS)
+           f"[{i * BAND_SIZE + 1}:{(i + 1) * BAND_SIZE}], ',')) AS band{i}"
+           for i in range(N_BANDS)
        )}
 FROM per_doc
 """
@@ -819,7 +801,6 @@ def dedup_minhash_pairs(
     spark: SparkSession,
     sf_dir: str,
     max_bucket: int = _MINHASH_MAX_BUCKET,
-    persist_shingles: bool = False,
 ) -> DataFrame:
     """LSH candidate pairs (same band bucket) verified with exact
     shingle-set Jaccard ≥ 0.5. Bucket self-join replaces the all-pairs
@@ -833,11 +814,7 @@ def dedup_minhash_pairs(
     co-partitioned agg, not a new shuffle profile. The ORACLE mirrors
     the default cap (same interpolated constant), so parity holds even
     when it binds; the cap path is exercised by tests/test_extras.py
-    with a forced hot bucket.
-
-    ``persist_shingles=True`` caches a frame the CALLER must release
-    (``spark.catalog.clearCache()`` or keep a handle) — the flag is
-    for one-shot jobs over remote storage, not long-lived drivers."""
+    with a forced hot bucket."""
     # r6 shape: shingle sets stay per-doc ARRAYS end to end. Signatures
     # and bands are in-row (zero shuffle); candidate generation shuffles
     # only (doc_id, band) rows; verification attaches the two docs'
@@ -848,11 +825,7 @@ def dedup_minhash_pairs(
     # (doc, word)-string join + count groupBy (4 corpus-sized string
     # shuffles → at most 2 hashed-array attach joins, which AQE
     # broadcasts when the candidate set is small).
-    from .functions.minhash import band_keys, minhash_mins
-
     arrays = _shingle_arrays(spark, sf_dir)
-    if persist_shingles:
-        arrays = arrays.persist()
     # ONE corpus pass computes everything per doc (size, hashed shingle
     # set, band keys), materialized with a LAZY localCheckpoint so the
     # three consumers (band explode, A-side attach, B-side attach) read
@@ -865,32 +838,22 @@ def dedup_minhash_pairs(
     # variant re-scans the corpus once per consumer). The checkpoint
     # stores ~0.5 KB/doc of hashes — storage-bounded like the other
     # checkpointed vocab tables, released with the DataFrame.
-    staged = arrays.select(
-        "doc_id",
-        F.size("sh").alias("sz"),
-        F.transform(F.col("sh"), lambda x: F.xxhash64(x)).alias("shh"),
-        *[
-            m.alias(f"_m{s}")
-            for s, m in enumerate(minhash_mins("sh"))
-        ],
-    )
-    per = staged.select(
-        "doc_id",
-        "sz",
-        "shh",
-        *[
-            b.alias(f"band{i}")
-            for i, b in enumerate(
-                band_keys([F.col(f"_m{s}") for s in range(_N_MINHASH)])
-            )
-        ],
+    per = with_bands(
+        arrays.select(
+            "doc_id",
+            "sh",
+            F.size("sh").alias("sz"),
+            F.transform(F.col("sh"), lambda x: F.xxhash64(x)).alias("shh"),
+        ),
+        "sh",
+        ["doc_id", "sz", "shh"],
     ).localCheckpoint(eager=False)
     # in-row array_distinct: a doc whose band0 == band1 emits one row,
     # so (doc_id, band) is globally distinct with no dedup shuffle
     bands = per.select(
         "doc_id",
         F.explode(
-            F.array_distinct(F.array(*[f"band{i}" for i in range(_N_BANDS)]))
+            F.array_distinct(F.array(*[f"band{i}" for i in range(N_BANDS)]))
         ).alias("band"),
     )
     cand = minhash_band_pairs(bands, max_bucket, distinct_input=True)
@@ -938,7 +901,7 @@ ORACLE_DEDUP_MINHASH_PAIRS = f"""
 WITH wd AS ({_SHINGLES_SQL}
 ), sigs AS (
   SELECT doc_id, s.seed, min(md5(s.seed || ':' || wd.word)) AS mh
-  FROM wd, (SELECT unnest(generate_series(0, {_N_MINHASH - 1})) AS seed) s
+  FROM wd, (SELECT unnest(generate_series(0, {N_MINHASH - 1})) AS seed) s
   GROUP BY doc_id, s.seed
 ), per_doc AS (
   SELECT doc_id,
@@ -949,8 +912,8 @@ WITH wd AS ({_SHINGLES_SQL}
   SELECT doc_id, unnest([
       {", ".join(
           f"md5(array_to_string(string_split(sig, ',')"
-          f"[{i * _BAND_SIZE + 1}:{(i + 1) * _BAND_SIZE}], ','))"
-          for i in range(_N_BANDS)
+          f"[{i * BAND_SIZE + 1}:{(i + 1) * BAND_SIZE}], ','))"
+          for i in range(N_BANDS)
       )}
   ]) AS band
   FROM per_doc
@@ -1091,7 +1054,7 @@ ORACLE_DEDUP_INCREMENTAL_NEARDUP = f"""
 WITH sig AS ({ORACLE_DEDUP_MINHASH_SIG}
 ), bands AS (
   {" UNION ".join(
-      f"SELECT doc_id, band{i} AS band FROM sig" for i in range(_N_BANDS)
+      f"SELECT doc_id, band{i} AS band FROM sig" for i in range(N_BANDS)
   )}
 ), dups AS (
   SELECT n.doc_id, min(s.doc_id) AS keeper_doc_id
@@ -5150,20 +5113,9 @@ def web_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle derives the canonical form INDEPENDENTLY from the
     generation rule (not by replaying the regex chain), so the chain's
     semantics — not just its implementation — are what's checked."""
-    from .operators.weblinks import canonical_url, extract_links, url_host
+    from .operators.weblinks import canonical_url_counts, extract_links
 
-    links = extract_links(_link_pages(spark, sf_dir))
-    return (
-        links.select(
-            canonical_url(F.col("dstUrl")).alias("url"),
-            url_host(F.col("srcUrl")).alias("srcHost"),
-        )
-        .groupBy("url")
-        .agg(
-            F.count("*").cast("long").alias("nLinks"),
-            F.countDistinct("srcHost").cast("long").alias("nSources"),
-        )
-    )
+    return canonical_url_counts(extract_links(_link_pages(spark, sf_dir)))
 
 
 ORACLE_WEB_URL_CANONICAL = (
@@ -5183,23 +5135,11 @@ def web_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dangling-node case) — the crawl-prioritization ranking.
     Link-weighted contributions; fixed iterations with per-round
     rounding so the unrolled-CTE oracle replays the loop exactly
-    (graph_algos.pagerank_directed)."""
-    from .operators.graph_algos import pagerank_directed
-    from .operators.weblinks import extract_links, host_graph
+    (graph_algos.pagerank_directed at _PR_ITER / _PR_DAMP / _PR_DIGITS,
+    its defaults)."""
+    from .operators.weblinks import extract_links, host_graph, host_pagerank
 
-    hg = host_graph(extract_links(_link_pages(spark, sf_dir)))
-    pr = pagerank_directed(
-        hg,
-        src="srcHost",
-        dst="dstHost",
-        weight="nLinks",
-        iterations=_PR_ITER,
-        damping=_PR_DAMP,
-        digits=_PR_DIGITS,
-    )
-    return pr.select(
-        F.col("node").alias("host"), F.col("rank").alias("pagerank")
-    )
+    return host_pagerank(host_graph(extract_links(_link_pages(spark, sf_dir))))
 
 
 def _web_pagerank_oracle_sql() -> str:
@@ -5252,22 +5192,9 @@ def web_anchor_aliases(spark: SparkSession, sf_dir: str) -> DataFrame:
     table entity linking consumes ("batch" / "BATCH" / "batch online"
     → one target). Sorted '|'-joined alias sets per repo array
     convention; one groupBy on the (vocabulary-scale) canonical URL."""
-    from .operators.weblinks import canonical_url, extract_links
+    from .operators.weblinks import anchor_aliases, extract_links
 
-    links = extract_links(_link_pages(spark, sf_dir))
-    return (
-        links.select(
-            canonical_url(F.col("dstUrl")).alias("url"), "anchorText"
-        )
-        .groupBy("url")
-        .agg(
-            F.array_join(
-                F.array_sort(F.collect_set("anchorText")), "|"
-            ).alias("aliases"),
-            F.countDistinct("anchorText").cast("long").alias("nForms"),
-            F.count("*").cast("long").alias("nLinks"),
-        )
-    )
+    return anchor_aliases(extract_links(_link_pages(spark, sf_dir)))
 
 
 ORACLE_WEB_ANCHOR_ALIASES = (

@@ -153,9 +153,7 @@ _ND_STATE = T.StructType(
 )
 
 
-def streaming_band_keys(
-    docs: DataFrame, n_minhash: int = 8, band_size: int = 4
-) -> DataFrame:
+def streaming_band_keys(docs: DataFrame) -> DataFrame:
     """(doc_id, text, ts) → exploded (band, doc_id, ts) LSH band keys,
     computed ENTIRELY in-row (array transforms + array_min — zero
     shuffle, so legal in an append-mode stream where the batch path's
@@ -176,7 +174,7 @@ def streaming_band_keys(
     text per bigram position)."""
     from pyspark.sql import functions as F
 
-    from ..functions.minhash import band_keys, bigram_shingles, minhash_mins
+    from ..functions.minhash import N_BANDS, bigram_shingles, with_bands
 
     # cheap text predicate ≡ "has ≥ 1 valid bigram" (nonspace·space·
     # nonspace): filtering on size(_sh) > 0 instead would be pushdown-
@@ -188,21 +186,13 @@ def streaming_band_keys(
     with_sh = toks.select(
         "doc_id", "ts", bigram_shingles("_tk").alias("_sh")
     )
-    staged = with_sh.select(
+    bands = with_bands(with_sh, "_sh", ["doc_id", "ts"])
+    return bands.select(
         "doc_id",
         "ts",
-        *[
-            m.alias(f"_m{s}")
-            for s, m in enumerate(minhash_mins("_sh", n_minhash))
-        ],
-    )
-    bands = band_keys(
-        [F.col(f"_m{s}") for s in range(n_minhash)], band_size
-    )
-    return staged.select(
-        "doc_id",
-        "ts",
-        F.explode(F.array_distinct(F.array(*bands))).alias("band"),
+        F.explode(
+            F.array_distinct(F.array(*[f"band{i}" for i in range(N_BANDS)]))
+        ).alias("band"),
     )
 
 
@@ -245,9 +235,7 @@ def _band_bucket_fn(
         )
 
 
-def near_dup_candidates_stream(
-    stream: DataFrame, n_minhash: int = 8, band_size: int = 4
-) -> DataFrame:
+def near_dup_candidates_stream(stream: DataFrame) -> DataFrame:
     """Streaming MinHash-LSH near-dup detection — the online form of
     the batch shingle→minhash→band→bucket path: each arriving doc is
     flagged against the first doc that ever occupied any of its band
@@ -265,7 +253,7 @@ def near_dup_candidates_stream(
     state-store partitioning, same as every keyed Structured Streaming
     operator; hot buckets cost state lookups, not cross products —
     nothing quadratic anywhere."""
-    bands = streaming_band_keys(stream, n_minhash, band_size)
+    bands = streaming_band_keys(stream)
     return bands.groupBy("band").applyInPandasWithState(
         _band_bucket_fn,
         outputStructType=NEAR_DUP_OUTPUT,

@@ -234,6 +234,34 @@ def test_cli_weblinks_bundle(spark, tmp_path, capsys):
     assert any(row.nForms > 1 for row in al)
 
 
+def test_cli_weblinks_bundle_equals_registry_queries(spark, tmp_path, capsys):
+    """The bundle's rollup tables, derived from its stored link edges,
+    equal the registry queries that derive them from the corpus."""
+    from datashare_extension_neo4j_spark.queries import QUERIES
+
+    sf = "/root/testdata/sf0.001"
+    out = str(tmp_path / "web")
+    assert main(["weblinks", "--sf-dir", sf, "--out", out]) == 0
+    capsys.readouterr()
+    for table, query in [
+        ("url_canonical", "web_url_canonical"),
+        ("anchor_aliases", "web_anchor_aliases"),
+    ]:
+        stored = spark.read.parquet(f"{out}/{table}")
+        expected = QUERIES[query][0](spark, sf)
+        assert stored.columns == expected.columns, table
+        assert sorted(map(tuple, stored.collect())) == sorted(
+            map(tuple, expected.collect())
+        ), table
+    ranks = lambda df: dict(map(tuple, df.collect()))  # noqa: E731
+    stored = ranks(spark.read.parquet(f"{out}/host_pagerank"))
+    expected = ranks(QUERIES["web_host_pagerank"][0](spark, sf))
+    assert stored.keys() == expected.keys()
+    # each round rounds to 6 digits; a float-summation-order difference
+    # could at most tip one rounding step
+    assert stored == pytest.approx(expected, abs=1e-6)
+
+
 def test_cli_weblinks_incremental_cycle(spark, tmp_path, capsys):
     store = str(tmp_path / "ledger")
     assert main(["weblinks-init", "--sf-dir", "/root/testdata/sf0.001",

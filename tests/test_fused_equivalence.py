@@ -47,7 +47,7 @@ def _reference(pages) -> GraphBuild:
     parsed = parse_pages(pages)
     docs = doc_nodes(parsed)
     mentions = annotated_mentions(parsed).unionByName(
-        rule_based_mentions(docs, id_col="id", text_col="text", lang_col="lang")
+        rule_based_mentions(docs)
     )
     return GraphBuild(
         docs=docs,
@@ -132,3 +132,43 @@ def test_cli_build_stores_build_graph_tables(spark, tmp_path):
         assert sorted(a.columns) == sorted(b.columns), name
         assert a.count() > 0, name
         assert _rows(a) == _rows(b), name
+
+
+HEADER_EDGE = {
+    "tika_metadata_message_from": "SENT",
+    "tika_metadata_dc_creator": "SENT",
+    "tika_metadata_message_bcc": "RECEIVED",
+    "tika_metadata_message_cc": "RECEIVED",
+    "tika_metadata_message_to": "RECEIVED",
+    "x_unknown_header": None,
+}
+
+
+def test_header_classification_matches_operator(spark):
+    """Each tika email header (and an unknown one) gets the same SENT /
+    RECEIVED / no edge from the fused per-page aggregation as from the
+    groupBy operator over the exploded mention stream."""
+    pages = spark.createDataFrame(
+        [
+            (
+                f"https://header.test/{h}",
+                None,
+                b'<html><body><p>no address here</p><span class="ne"'
+                b' data-id="h" data-norm="a@b.org" data-category="EMAIL"'
+                b" data-offsets=\"0\" data-metadata='{\"emailHeaderField\": \""
+                + h.encode()
+                + b"\"}'></span></body></html>",
+                None,
+                "en",
+            )
+            for h in HEADER_EDGE
+        ],
+        PAGES_SCHEMA,
+    )
+    edge = lambda df: {  # noqa: E731
+        r["endId"].rsplit("/", 1)[1]: r["type"] for r in df.collect()
+    }
+    fused = edge(build_graph(pages, use_rule_ner=True).emails)
+    operator = edge(email_edges(annotated_mentions(parse_pages(pages))))
+    expected = {h: t for h, t in HEADER_EDGE.items() if t is not None}
+    assert fused == operator == expected

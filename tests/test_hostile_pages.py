@@ -32,6 +32,15 @@ HOSTILE_ROWS = [
      b"<body><p>kept</p><style>.x{}</style></body></html>", None, "en"),
     ("https://truncated-utf8.test/h", None,
      b"<html><body><p>broken \xe2\x82 utf8</p></body></html>", None, "en"),
+] + [
+    # span metadata that is not a JSON object with a string header
+    (f"https://bad-metadata.test/{i}", None,
+     b'<html><body><p>x</p><span class="ne" data-id="bm" data-norm="a@b.org"'
+     b' data-category="EMAIL" data-offsets="0" data-metadata=\'' + md
+     + b"'></span></body></html>", None, "en")
+    for i, md in enumerate(
+        [b"not json", b"[1]", b'{"emailHeaderField": 5}']
+    )
 ]
 
 
@@ -151,6 +160,25 @@ def test_non_integer_offsets_do_not_crash(spark):
     g = build_graph(spark.createDataFrame(rows, PAGES_SCHEMA))
     assert [r["offsets"] for r in g.mentions.collect()] == [[12]]
     assert [r["offsets"] for r in g.appears_in.collect()] == [[12]]
+
+
+def test_hostile_span_metadata_is_no_header(hostile_graph):
+    """A span whose data-metadata is not JSON, not an object, or holds
+    a non-string emailHeaderField counts as having no header: its
+    mention and APPEARS_IN edge stay, and it yields no SENT/RECEIVED
+    edge instead of failing the job."""
+    bad = F.col("documentId").startswith("https://bad-metadata.test/")
+    mentions = hostile_graph.mentions.where(bad).collect()
+    assert len(mentions) == 3
+    assert all(r["metadata"] is None for r in mentions)
+    edges = hostile_graph.appears_in.where(
+        F.col("endId").startswith("https://bad-metadata.test/")
+    ).collect()
+    assert sorted(r["endId"][-1] for r in edges) == ["0", "1", "2"]
+    assert all(r["offsets"] == [0] for r in edges)
+    assert hostile_graph.emails.where(
+        F.col("endId").startswith("https://bad-metadata.test/")
+    ).count() == 0
 
 
 def test_cypher_dump_escapes_hostile_ids(spark, tmp_path):

@@ -27,7 +27,12 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def _work(htmls: list[bytes]) -> int:
-    from datashare_extension_neo4j_spark.operators.extract import _parse_one
+    """What ``parse_pages`` runs per page with rule NER on: parse,
+    append the rule mentions, aggregate the page's edges once."""
+    from datashare_extension_neo4j_spark.operators.extract import (
+        _parse_one,
+        aggregate_doc_edges,
+    )
     from datashare_extension_neo4j_spark.operators.ner import (
         DEFAULT_GAZETTEER,
         _extract_doc,
@@ -36,7 +41,10 @@ def _work(htmls: list[bytes]) -> int:
     n = 0
     for h in htmls:
         row = _parse_one("u", None, h, None, "en")
-        _extract_doc(row["id"], row["text"], "en", DEFAULT_GAZETTEER)
+        row["ann_mentions"] += _extract_doc(
+            row["id"], row["text"], "en", DEFAULT_GAZETTEER
+        )
+        aggregate_doc_edges(row["ann_mentions"])
         n += 1
     return n
 
