@@ -33,6 +33,19 @@ HEADLINE = [
 ]
 
 
+def warm_up(spark, cpus: int) -> None:
+    """Untimed warm-up on ``cpus`` task slots: a JVM/codegen job, so the
+    first timed job isn't paying startup, then a no-op mapInPandas that
+    starts the Python workers (long-lived on a real cluster)."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+
+    def _noop(it):
+        for pdf in it:
+            yield pdf
+
+    spark.range(cpus * 8).repartition(cpus * 4).mapInPandas(_noop, "id long").count()
+
+
 def main() -> None:
     from datashare_extension_neo4j_spark.fixtures import pages_from_documents
     from datashare_extension_neo4j_spark.pipeline import build_graph
@@ -45,17 +58,7 @@ def main() -> None:
         shuffle_partitions=max(CPUS, 8),
     )
     timings: dict[str, float] = {}
-
-    # JVM/codegen warm-up so the first timed job isn't paying startup
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    import pandas as pd  # noqa: F401
-
-    def _noop(it):
-        for pdf in it:
-            yield pdf
-
-    # python workers are long-lived on a real cluster — start untimed
-    spark.range(CPUS * 8).repartition(CPUS * 4).mapInPandas(_noop, "id long").count()
+    warm_up(spark, CPUS)
 
     # full KG pipeline (pages → graph), the north-star workload:
     # fused parse+NER, stage checkpoint, graph-table sinks

@@ -6,11 +6,11 @@ Each pipeline stage materializes to a parquet path and records a
 manifest entry: input fingerprint (a snapshot pin — Iceberg
 snapshot-id when available, else path + mtime), per-partition output
 lineage (file, rows, bytes — from the parquet footers), row counters,
-and wall time. The manifest is written atomically (tmp + rename). On
-restart, a stage whose entry matches its input fingerprint and whose
-output files still exist is skipped — mirroring the reference's
-idempotent md5-keyed task identity (core/objects.py:118-144) done
-properly for a DAG.
+and the stage's Spark metrics (``observe.py``). The manifest is written
+atomically (tmp + rename). On restart, a stage whose entry matches its
+input fingerprint and whose output files still exist is skipped —
+mirroring the reference's idempotent md5-keyed task identity
+(core/objects.py:118-144) done properly for a DAG.
 """
 
 from __future__ import annotations
@@ -21,6 +21,8 @@ import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .observe import observe
 
 
 def _input_fingerprint(path: str) -> dict:
@@ -101,11 +103,12 @@ class Manifest:
         config: dict | None = None,
     ) -> str:
         """Run fn(output_path) unless the stage is already complete for
-        identical inputs AND write config. Returns the output path."""
+        identical inputs AND write config. Returns the output path. A
+        stage whose fn raises records nothing."""
         if not force and self.is_complete(stage, inputs, config):
             return output
-        t0 = time.perf_counter()
-        fn(output)
+        with observe() as metrics:
+            fn(output)
         lineage = _output_lineage(output)
         self.state["stages"][stage] = {
             "status": "complete",
@@ -114,11 +117,18 @@ class Manifest:
             "config": config or {},
             "partitions": lineage,
             "rows_out": sum(e.get("rows", 0) for e in lineage),
-            "wall_s": round(time.perf_counter() - t0, 3),
+            "metrics": metrics,
             "completed_at": time.time(),
         }
         self._flush()
         return output
+
+    def record_increment(self, **records: dict) -> None:
+        """Append one increment's metrics records to ``increments``."""
+        self.state.setdefault("increments", []).append(
+            {**records, "completed_at": time.time()}
+        )
+        self._flush()
 
 
 def run_pipeline(

@@ -26,6 +26,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..manifest import Manifest
+from ..observe import observe
 from ..pipeline import GraphBuild
 
 BUCKET_COL = "_bucket"
@@ -177,13 +179,24 @@ def materialize_graph(
 
     Every table is hash-partitioned on its merge key (module
     docstring) into ``buckets`` buckets; N should be sized so one
-    bucket ≈ one comfortable task (e.g. 1024-8192 at 100 TB)."""
+    bucket ≈ one comfortable task (e.g. 1024-8192 at 100 TB).
+
+    The writer threads inherit the caller's job tags, so an enclosing
+    ``observe`` counts their jobs."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     paths = {name: f"{out_dir}/{name}" for name in TABLE_KEYS}
+    spark = g.docs.sparkSession
     with ThreadPoolExecutor(max_workers=len(paths)) as ex:
         futures = [
-            ex.submit(write_bucketed_table, getattr(g, name), path, name, buckets)
+            # a copy of the caller's local properties per write: writes
+            # sharing one copy would share their SQL execution id
+            ex.submit(
+                inheritable_thread_target(spark)(write_bucketed_table),
+                getattr(g, name), path, name, buckets,
+            )
             for name, path in paths.items()
         ]
         for f in futures:
@@ -299,13 +312,22 @@ def merge_table(
 
 
 def _merge_into(
-    spark: SparkSession, run_dir: str, tables: dict[str, DataFrame]
+    spark: SparkSession,
+    run_dir: str,
+    tables: dict[str, DataFrame],
+    parse: dict | None = None,
 ) -> dict[str, int]:
-    """MERGE each named increment into its table; created keys per table."""
-    return {
-        name: merge_table(spark, f"{run_dir}/{name}", df, name)
-        for name, df in tables.items()
-    }
+    """MERGE each named increment into its table; created keys per table.
+    Appends the increment's ``observe`` records, one per table plus the
+    ``parse`` checkpoint's when given, to the run dir manifest's
+    ``increments`` (not to the counters the caller returns)."""
+    created, records = {}, {}
+    for name, df in tables.items():
+        with observe() as records[name]:
+            created[name] = merge_table(spark, f"{run_dir}/{name}", df, name)
+    extra = {} if parse is None else {"parse": parse}
+    Manifest(run_dir).record_increment(tables=records, **extra)
+    return created
 
 
 def incremental_import(
@@ -338,14 +360,16 @@ def incremental_import(
     # leave a stale `_increment_ckpt_*` dir behind, which is inert
     # (never read by table scans) and safe to delete by prefix.
     ckpt = f"{run_dir}/_increment_ckpt_{uuid.uuid4().hex}"
-    g = build_graph(
-        pages, project=project, use_rule_ner=True, include_text=False,
-        checkpoint_dir=ckpt,
-    )
     try:
-        imported = g.docs.count()
+        with observe() as parse:
+            g = build_graph(
+                pages, project=project, use_rule_ner=True, include_text=False,
+                checkpoint_dir=ckpt,
+            )
+            imported = g.docs.count()
         created = _merge_into(
-            spark, run_dir, {name: getattr(g, name) for name in TABLE_KEYS}
+            spark, run_dir, {name: getattr(g, name) for name in TABLE_KEYS},
+            parse,
         )
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)

@@ -25,8 +25,10 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 
 RUN_SNIPPET = r"""
-import json, sys, time, shutil
+import json, sys, shutil
 sys.path.insert(0, "{repo}")
+from bench import warm_up
+from datashare_extension_neo4j_spark.observe import observe
 from datashare_extension_neo4j_spark.session import get_spark
 from datashare_extension_neo4j_spark.pipeline import build_graph
 from datashare_extension_neo4j_spark.sinks.tables import materialize_graph
@@ -44,23 +46,20 @@ spark = get_spark(
         "spark.sql.files.openCostInBytes": "0",
     }},
 )
-spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm-up
-import pandas as pd
-def _noop(it):
-    for pdf in it:
-        yield pdf
-# python workers are long-lived on a real cluster — start them untimed
-spark.range(total * 16).repartition(total * 8).mapInPandas(_noop, "id long").count()
+warm_up(spark, total)
 
 pages = spark.read.parquet("{pages}")
 shutil.rmtree("/tmp/_scaling_ck", ignore_errors=True)
 shutil.rmtree("/tmp/_scaling_out", ignore_errors=True)
-t0 = time.perf_counter()
-g = build_graph(pages, use_rule_ner=True, include_text=False,
-                emit_mentions=False,
-                checkpoint_dir="/tmp/_scaling_ck")
-materialize_graph(g, "/tmp/_scaling_out")
-elapsed = time.perf_counter() - t0
+# two phases, each one observe record: parse + checkpoint write, then
+# the five table writes
+with observe() as parse:
+    g = build_graph(pages, use_rule_ner=True, include_text=False,
+                    emit_mentions=False,
+                    checkpoint_dir="/tmp/_scaling_ck")
+with observe() as materialize:
+    materialize_graph(g, "/tmp/_scaling_out")
+elapsed = parse["wall_s"] + materialize["wall_s"]
 n_docs = spark.read.parquet("/tmp/_scaling_out/docs").count()
 n_edges = sum(
     spark.read.parquet(f"/tmp/_scaling_out/{{t}}").count()
@@ -68,7 +67,8 @@ n_edges = sum(
 )
 print(json.dumps({{"executors": n_exec, "cores": total, "elapsed": elapsed,
                    "n_docs": n_docs, "docs_per_sec": n_docs / elapsed,
-                   "n_edges": n_edges}}))
+                   "n_edges": n_edges, "parse": parse,
+                   "materialize": materialize}}))
 spark.stop()
 """
 
@@ -132,9 +132,12 @@ Input: {r_n["n_docs"]:,} pages (~12 KB html each — Common-Crawl-ish),
 **Scaling efficiency (N→4N) = {eff:.3f}** (target ≥ 0.8, BASELINE.json).
 
 Measurement notes:
-- python worker pools pre-started untimed (long-lived on a real cluster)
+- JVM and python worker pools warmed untimed (`bench.warm_up`; the
+  workers are long-lived on a real cluster)
+- per-phase `observe` records (parse + checkpoint write, then the five
+  table writes) are in the JSON line this script prints
 - conf: AQE on, skew-join on, sort-based collect aggs
-  (2.5× over object-hash at high group cardinality), 4 MB input splits
+  (2.5× over object-hash at high group cardinality), 2 MB input splits
 - single-JVM ``local[N]`` was rejected as the substitute: task slots,
   python workers, and GC threads co-locate in one heap, so "4N" runs
   ~2.5× more hot threads than cores and GC dominates (measured 99 s GC

@@ -3,11 +3,18 @@ SQL on DuckDB over the same parquet dir; compare row count, column
 names, and an order-insensitive value hash (columns sorted by name,
 rows sorted, values canonicalized to strings).
 
+Each query's line also carries its physical-plan audit, read from the
+executed plan before it runs: ``exchanges=`` non-broadcast (hash or
+range) Exchanges, the shuffles that cost at 100 TB; ``broadcast=``
+broadcast exchanges; ``python=`` Python operators in the plan.
+COVERAGE.md's "Physical-plan audit" table is these three columns.
+
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -48,6 +55,21 @@ def canon(df_pandas) -> tuple[int, list[str], str]:
     return len(rows), cols, h
 
 
+def plan_audit(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # shuffle exchanges = Exchange hashpartitioning / rangepartitioning
+    shuffle = len(re.findall(r"Exchange (hash|range)partitioning", plan))
+    py = sum(
+        plan.count(op)
+        for op in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+                   "FlatMapGroupsInPandas")
+    )
+    return (
+        f"exchanges={shuffle} broadcast={plan.count('BroadcastExchange')} "
+        f"python={py}"
+    )
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -67,12 +89,13 @@ def main() -> int:
     for name, (fn, oracle) in QUERIES.items():
         if only and name not in only:
             continue
-        if oracle is None:
-            n = fn(spark, sf_dir).count()
-            print(f"OK   {name}: rows-only check, rows={n}")
-            continue
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            df = fn(spark, sf_dir)
+            plan = plan_audit(df)
+            if oracle is None:
+                print(f"OK   {name}: rows-only check, rows={df.count()} {plan}")
+                continue
+            sdf = df.toPandas()
             n_s, c_s, h_s = canon(sdf)
         except Exception as e:
             print(f"FAIL {name}: spark error: {str(e)[:300]}")
@@ -109,7 +132,7 @@ def main() -> int:
                         break
             failures.append(name)
         else:
-            print(f"OK   {name}: rows={n_s}")
+            print(f"OK   {name}: rows={n_s} {plan}")
     spark.stop()
     print(f"\n{len(QUERIES) - len(failures)}/{len(QUERIES)} matched")
     return 1 if failures else 0
