@@ -12,8 +12,11 @@ locally. Subcommands:
   import-mentions MERGE an NE-only mention batch (parents must already
                   be imported; orphans dropped — reference semantics)
   export-csv      graph tables → neo4j-admin bulk CSV package
-                  (--distributed: executor-written multi-part package)
+                  (--tar: one archive; --distributed: executor-written
+                  multi-part package; the two exclude each other)
   dump            DSL JSON (or default query) → graphml/cypher dump
+  migrate         bring a run-dir to the current schema version
+  verify-constraints  audit the stored tables against their unique keys
   stats           recompute the project-statistics singleton
   dedup-assign    documents → near-dup keeper map parquet (the
                   corpus-filter consumable)
@@ -28,6 +31,12 @@ locally. Subcommands:
                   incremental near-dup baseline)
   neardup-increment  dedupe a NEW documents batch against the store
                   (suppressed docs reported, survivors' bands appended)
+  curate          documents → curation provenance parquet + drop funnel
+  scrub           documents → PII-redacted parquet + per-rule counts
+  relations       documents → the four typed-relation tables
+  weblinks        documents → the five webgraph tables (resumable)
+  weblinks-init   create the incremental host-graph ledger
+  weblinks-increment  MERGE one crawl batch into the ledger
 """
 
 from __future__ import annotations
@@ -580,8 +589,9 @@ def main(argv: list[str] | None = None) -> int:
     e.add_argument("--run-dir", required=True)
     e.add_argument("--export-dir", required=True)
     e.add_argument("--db", default="neo4j")
-    e.add_argument("--tar", action="store_true")
-    e.add_argument("--distributed", action="store_true")
+    e_out = e.add_mutually_exclusive_group()
+    e_out.add_argument("--tar", action="store_true")
+    e_out.add_argument("--distributed", action="store_true")
     e.set_defaults(fn=cmd_export_csv)
 
     d = sub.add_parser("dump")

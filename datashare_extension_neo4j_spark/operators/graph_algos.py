@@ -53,12 +53,11 @@ def _eager_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
     ``localCheckpoint`` call, so the diff window held the lock for the
     bulk of the job.) Falls back to empty ids (rotation becomes a
     no-op) where the JVM plan is unreachable, e.g. Spark Connect."""
-    out = df.localCheckpoint(eager=False)
+    out = df.localCheckpoint()  # eager: one execution, no extra count
     try:
         ids = {int(out._jdf.queryExecution().analyzed().rdd().id())}
     except Exception:  # pragma: no cover - connect/remote sessions
         ids = set()
-    out.count()  # materialize (first action on the marked RDD)
     return out, ids
 
 

@@ -20,9 +20,13 @@ builder, decides what is materialized:
   * ``build_graph`` returns lazy frames, with the parse optionally
     checkpointed to parquet (increments, bench, kg_full_pipeline);
   * ``manifest.run_pipeline`` makes every stage a manifest-guarded
-    parquet write (``cli build``);
-  * ``streaming.ingest`` runs the parse, docs and appears_in stage
-    functions per micro-batch.
+    parquet write (``cli build``).
+
+Everything else that stores the graph goes through the one store
+writer, ``sinks.tables.write_tables``, which creates or MERGEs the
+tables concurrently: ``materialize_graph`` and ``incremental_import``
+feed it ``build_graph``'s tables, and the streaming ingest is one
+``incremental_import`` per micro-batch.
 
 The reference's 5-phase async dance (sliced ES scans → bounded queues
 → single-writer MERGE, core/imports.py:147-316,582-737) collapses into

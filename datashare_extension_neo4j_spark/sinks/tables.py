@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..manifest import Manifest
 from ..observe import observe
+from ..operators.graph_algos import _eager_checkpoint, _unpersist_rdd_ids
 from ..pipeline import GraphBuild
 
 BUCKET_COL = "_bucket"
@@ -141,15 +142,15 @@ def merge_bucketed(
     # localCheckpoint → checkpoint to regain task-level recovery at
     # the cost of the second write. The overwrite mode rides on the
     # writer, not the session conf, so concurrent writers (streaming
-    # micro-batches, materialize_graph's thread pool) never observe
+    # micro-batches, write_tables' threads) never observe
     # dynamic-overwrite semantics unintentionally.
-    staged = merged.localCheckpoint()
+    staged, ids = _eager_checkpoint(merged)
     try:
         staged.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(BUCKET_COL).parquet(path)
     finally:
-        staged.unpersist()
+        _unpersist_rdd_ids(spark, ids)
     return touched
 
 
@@ -161,47 +162,83 @@ def rewrite_table(spark: SparkSession, path: str, name: str, transform) -> None:
     ``v_1_1_0_bucket_plain_tables`` converts it on the way."""
     n = stored_buckets(path) if is_bucketed(path) else None
     # materialize before overwriting the files the plan lazily reads
-    staged = transform(read_table(spark, path)).localCheckpoint()
+    staged, ids = _eager_checkpoint(transform(read_table(spark, path)))
     try:
         write_bucketed_table(staged, path, name, n)
     finally:
-        staged.unpersist()
+        _unpersist_rdd_ids(spark, ids)
+
+
+def stored_rows(path: str) -> int:
+    """Rows of a stored table, summed from its parquet footers: no data
+    is read and no job runs."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(f).num_rows for f in Path(path).rglob("*.parquet")
+    )
+
+
+def write_tables(
+    spark: SparkSession,
+    run_dir: str,
+    tables: dict[str, DataFrame],
+    buckets: int | None = None,
+    **records: dict,
+) -> dict[str, int]:
+    """The one writer of graph tables into a run dir. Each named table
+    is MERGEd into the stored one (``merge_table``), or created
+    bucketed into ``buckets`` buckets (``write_bucketed_table``) when
+    the run dir has none yet. Returns the rows each write created, read
+    from the parquet footers.
+
+    The writes are independent jobs, submitted concurrently so the
+    scheduler interleaves their stages. Each runs inside its own
+    ``observe`` on its own ``inheritable_thread_target`` wrapper: the
+    wrapper copies the caller's local properties (so an enclosing
+    ``observe`` counts the write), and writes sharing one copy would
+    share their SQL execution id. Once all have succeeded, one
+    ``increments`` entry is appended to the run dir's manifest: each
+    table's record, plus the caller's ``records``. A failing write
+    raises after the other writes finish, and nothing is recorded."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    def write(name: str, df: DataFrame) -> tuple[int, dict]:
+        path = f"{run_dir}/{name}"
+        with observe() as record:
+            if Path(path).exists():
+                created = merge_table(spark, path, df, name)
+            else:
+                write_bucketed_table(df, path, name, buckets)
+                created = stored_rows(path)
+        return created, record
+
+    with ThreadPoolExecutor(max_workers=len(tables)) as ex:
+        futures = {
+            name: ex.submit(inheritable_thread_target(spark)(write), name, df)
+            for name, df in tables.items()
+        }
+    done = {name: f.result() for name, f in futures.items()}
+    Manifest(run_dir).record_increment(
+        tables={name: record for name, (_, record) in done.items()}, **records
+    )
+    return {name: created for name, (created, _) in done.items()}
 
 
 def materialize_graph(
     g: GraphBuild, out_dir: str, buckets: int | None = None
 ) -> dict[str, str]:
-    """Write the five graph tables; returns name → path.
-
-    The five writes are independent jobs over the same checkpointed
-    input — submitting them concurrently lets the scheduler interleave
-    their stages (wall ≈ max instead of sum of fixed job costs).
-
-    Every table is hash-partitioned on its merge key (module
-    docstring) into ``buckets`` buckets; N should be sized so one
-    bucket ≈ one comfortable task (e.g. 1024-8192 at 100 TB).
-
-    The writer threads inherit the caller's job tags, so an enclosing
-    ``observe`` counts their jobs."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    paths = {name: f"{out_dir}/{name}" for name in TABLE_KEYS}
-    spark = g.docs.sparkSession
-    with ThreadPoolExecutor(max_workers=len(paths)) as ex:
-        futures = [
-            # a copy of the caller's local properties per write: writes
-            # sharing one copy would share their SQL execution id
-            ex.submit(
-                inheritable_thread_target(spark)(write_bucketed_table),
-                getattr(g, name), path, name, buckets,
-            )
-            for name, path in paths.items()
-        ]
-        for f in futures:
-            f.result()
-    return paths
+    """Write the five graph tables through ``write_tables``; returns
+    name → path. Every table is hash-partitioned on its merge key
+    (module docstring) into ``buckets`` buckets; N should be sized so
+    one bucket ≈ one comfortable task (e.g. 1024-8192 at 100 TB)."""
+    write_tables(
+        g.docs.sparkSession, out_dir,
+        {name: getattr(g, name) for name in TABLE_KEYS}, buckets,
+    )
+    return {name: f"{out_dir}/{name}" for name in TABLE_KEYS}
 
 
 def load_store(spark: SparkSession, run_dir: str) -> GraphBuild:
@@ -284,10 +321,10 @@ def merge_table(
 ) -> int:
     """MERGE ``updates`` into the stored table ``name``: a
     partition-scoped rewrite of the buckets the increment touches.
-    Returns the number of update keys the merge CREATES (ON MATCH
-    updates in place, so only keys absent from the store add rows),
-    counted against the stored slice the merge reads, before it is
-    overwritten — O(increment), never a full-table scan.
+    Returns the number of rows the merge CREATES: the table's footer
+    row count after the write minus before it. Every combine leaves
+    the table unique on its merge key, so ON MATCH updates in place
+    and the growth is exactly the keys absent from the store.
 
     Enforces the table's uniqueness constraint (migrations.CONSTRAINTS,
     the reference's constraint_document_unique_id analog) on the
@@ -297,37 +334,10 @@ def merge_table(
         from ..migrations import CONSTRAINTS, assert_unique
 
         assert_unique(updates, CONSTRAINTS[name]["unique"], name)
-    keys = TABLE_KEYS[name]
-    created = 0
-
-    def combine(old: DataFrame, new: DataFrame) -> DataFrame:
-        nonlocal created
-        created = (
-            new.select(*keys).join(old.select(*keys), keys, "left_anti").count()
-        )
-        return COMBINE[name](old, new)
-
-    merge_bucketed(spark, path, updates, keys, combine, stored_buckets(path))
-    return created
-
-
-def _merge_into(
-    spark: SparkSession,
-    run_dir: str,
-    tables: dict[str, DataFrame],
-    parse: dict | None = None,
-) -> dict[str, int]:
-    """MERGE each named increment into its table; created keys per table.
-    Appends the increment's ``observe`` records, one per table plus the
-    ``parse`` checkpoint's when given, to the run dir manifest's
-    ``increments`` (not to the counters the caller returns)."""
-    created, records = {}, {}
-    for name, df in tables.items():
-        with observe() as records[name]:
-            created[name] = merge_table(spark, f"{run_dir}/{name}", df, name)
-    extra = {} if parse is None else {"parse": parse}
-    Manifest(run_dir).record_increment(tables=records, **extra)
-    return created
+    n = stored_buckets(path)
+    before = stored_rows(path)
+    merge_bucketed(spark, path, updates, TABLE_KEYS[name], COMBINE[name], n)
+    return stored_rows(path) - before
 
 
 def incremental_import(
@@ -336,17 +346,16 @@ def incremental_import(
     run_dir: str,
     project: str = "test_project",
 ) -> dict:
-    """Incremental run against an existing run_dir (the reference's
-    POST /full-imports re-run semantics, SURVEY.md §3.1): documents
+    """Incremental run against a run_dir (the reference's POST
+    /full-imports re-run semantics, SURVEY.md §3.1): documents
     upserted by id, HAS_PARENT edges set-merged, APPEARS_IN edges
-    array-union-merged, entities deduped. Returns counters.
+    array-union-merged, entities deduped (created in a run dir
+    without tables). Returns counters.
 
-    The Python parse runs ONCE per increment: the parse output is
-    stage-checkpointed to parquet (``checkpoint_dir``), so the
-    downstream actions (per-table counters + merges) all do pruned
-    columnar scans of the checkpoint instead of re-executing the
-    mapInPandas parse — the reference gets its counters free from the
-    Cypher ``ResultSummary``; this is the Spark equivalent."""
+    The Python parse runs ONCE: its output is checkpointed to parquet,
+    and the five writes scan the checkpoint. The counters come from
+    parquet footers, as the reference reads them off the Cypher
+    ``ResultSummary``: no job counts anything."""
     import shutil
     import uuid
 
@@ -366,10 +375,11 @@ def incremental_import(
                 pages, project=project, use_rule_ner=True, include_text=False,
                 checkpoint_dir=ckpt,
             )
-            imported = g.docs.count()
-        created = _merge_into(
+        # one parsed row per page, and one document per parsed row
+        imported = stored_rows(f"{ckpt}/parsed")
+        created = write_tables(
             spark, run_dir, {name: getattr(g, name) for name in TABLE_KEYS},
-            parse,
+            parse=parse,
         )
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -405,7 +415,7 @@ def incremental_import_mentions(
     )
     m = mentions.join(doc_ids, "documentId", "left_semi")
     imported = m.count()
-    created = _merge_into(
+    created = write_tables(
         spark,
         run_dir,
         {

@@ -3,13 +3,15 @@
 The reference is incremental-batch, not streaming (SURVEY.md §2.10) —
 its incrementality is re-running imports with MERGE upserts. The
 streaming ingest here is the Spark-native generalization: new page
-files land in the input directory, each micro-batch runs the batch
-pipeline's own parse, docs and appears_in stages (pipeline.STAGES), and
-``foreachBatch`` MERGEs them into the graph tables with
-``sinks.tables.merge_table`` (docs newest-wins by id; APPEARS_IN
-array-union, reference named_entities.py:84-97) — so batch re-import
-and continuous ingest share one code path, and a micro-batch Spark
-replays after a crash (written, offset not yet committed) lands once.
+files land in the input directory, and ``foreachBatch`` hands each
+non-empty micro-batch to ``sinks.tables.incremental_import``, the batch
+re-import itself. Its one store writer creates the five graph tables on
+the first batch and MERGEs into them after (docs newest-wins by id;
+APPEARS_IN array-union, reference named_entities.py:84-97), and appends
+one ``increments`` entry per micro-batch to the run dir's manifest — so
+batch re-import and continuous ingest share one code path, and a
+micro-batch Spark replays after a crash (written, offset not yet
+committed) lands once.
 
 ``trigger(availableNow=True)`` drains what exists and stops — used by
 tests and backfills; drop it for continuous operation.
@@ -17,15 +19,10 @@ tests and backfills; drop it for continuous operation.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.edges import appears_in_from_parsed
-from ..operators.extract import PARSED_SCHEMA
-from ..pipeline import BuildOptions, docs_stage, parse_stage
 from ..schemas import PAGES_SCHEMA
-from ..sinks.tables import merge_table, write_bucketed_table
+from ..sinks.tables import incremental_import
 
 
 def stream_pages(spark: SparkSession, input_path: str) -> DataFrame:
@@ -43,29 +40,14 @@ def start_graph_ingest(
     checkpoint_dir: str,
     available_now: bool = True,
 ):
-    """Streaming pages → docs + APPEARS_IN tables, MERGEd per
-    micro-batch (the first batch creates them)."""
+    """Streaming pages → the five graph tables in ``out_dir``: one
+    ``incremental_import`` per non-empty micro-batch (the first batch
+    creates the tables)."""
     pages = stream_pages(spark, input_path)
-    o = BuildOptions(use_rule_ner=True, include_text=False)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # small per-batch frames: one persist avoids a double parse
-        parsed = parse_stage(o, batch_df).persist()
-        try:
-            for name, df in (
-                ("docs", docs_stage(o, parsed).drop("metadata")),
-                ("appears_in", appears_in_from_parsed(parsed)),
-            ):
-                path = f"{out_dir}/{name}"
-                if Path(path).exists():
-                    # rewrites only the buckets this micro-batch touches
-                    merge_table(spark, path, df, name)
-                else:
-                    write_bucketed_table(df, path, name)
-        finally:
-            parsed.unpersist()
+        if not batch_df.isEmpty():
+            incremental_import(spark, batch_df, out_dir)
 
     writer = (
         pages.writeStream.foreachBatch(process_batch)
@@ -118,11 +100,3 @@ def start_pii_scrub_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-__all__ = [
-    "stream_pages",
-    "start_graph_ingest",
-    "start_pii_scrub_stream",
-    "PARSED_SCHEMA",
-]

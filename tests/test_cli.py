@@ -357,3 +357,14 @@ def test_cli_weblinks_bundle_detects_changed_corpus(spark, tmp_path, capsys):
     m2 = json.loads((tmp_path / "web" / "manifest.json").read_text())
     assert m2["stages"]["link_edges"]["completed_at"] > t1  # re-ran
     assert 0 < r2["link_edges"] < 2958  # counts reflect the new corpus
+
+
+def test_cli_export_csv_tar_excludes_distributed(tmp_path, capsys):
+    """--tar has no distributed writer: the two flags are refused
+    together instead of --tar being dropped silently."""
+    with pytest.raises(SystemExit) as e:
+        main(["export-csv", "--run-dir", str(tmp_path / "run"),
+              "--export-dir", str(tmp_path / "export"),
+              "--tar", "--distributed"])
+    assert e.value.code == 2
+    assert "not allowed with argument" in capsys.readouterr().err

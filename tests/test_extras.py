@@ -151,6 +151,54 @@ def test_streaming_ingest_replayed_batch_lands_once(spark, tmp_path):
     verify_constraints(spark, out)
 
 
+def test_streamed_store_equals_one_shot_import(spark, tmp_path, capsys):
+    """Two streamed waves build the same five tables as one
+    incremental_import of all the pages into an empty run dir; the
+    CLI reads the streamed store, and its manifest has one increment
+    per non-empty micro-batch."""
+    import json
+    from pathlib import Path
+
+    from datashare_extension_neo4j_spark.cli import main
+    from datashare_extension_neo4j_spark.fixtures import reference_pages_pandas
+    from datashare_extension_neo4j_spark.schemas import PAGES_SCHEMA
+    from datashare_extension_neo4j_spark.sinks.tables import (
+        TABLE_KEYS,
+        incremental_import,
+        read_table,
+    )
+    from datashare_extension_neo4j_spark.streaming.ingest import start_graph_ingest
+
+    pdf = reference_pages_pandas(n_docs=12)
+    inp, out, ck = (str(tmp_path / d) for d in ("in", "out", "ck"))
+    batches = 0
+    for wave in (pdf.iloc[:6], pdf.iloc[6:]):
+        spark.createDataFrame(wave, PAGES_SCHEMA).write.mode("append").parquet(inp)
+        q = start_graph_ingest(spark, inp, out, ck)
+        q.awaitTermination(120)
+        batches += sum(p["numInputRows"] > 0 for p in q.recentProgress)
+
+    one_shot = str(tmp_path / "one_shot")
+    incremental_import(spark, spark.createDataFrame(pdf, PAGES_SCHEMA), one_shot)
+    for name in TABLE_KEYS:
+        got, want = (read_table(spark, f"{d}/{name}") for d in (out, one_shot))
+        cols = sorted(want.columns)
+        assert sorted(got.columns) == cols, name
+        assert sorted(map(str, got.select(*cols).collect())) == sorted(
+            map(str, want.select(*cols).collect())
+        ), name
+
+    manifest = json.loads((Path(out) / "manifest.json").read_text())
+    assert batches >= 2
+    assert len(manifest["increments"]) == batches
+    assert main(["export-csv", "--run-dir", out,
+                 "--export-dir", str(tmp_path / "export")]) == 0
+    assert main(["dump", "--run-dir", out,
+                 "--output", str(tmp_path / "dump.graphml")]) == 0
+    dumped = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert dumped["elements"] > 0
+
+
 def test_ann_plan_size_bounded_at_production_dims(spark):
     """Planes/centroids are broadcast DATA, not plan literals: at
     dim=512 with 16 bits × 8 tables (LSH) and n_lists=256 (IVF) the
