@@ -33,7 +33,7 @@ locally. Subcommands:
                   (suppressed docs reported, survivors' bands appended)
   curate          documents → curation provenance parquet + drop funnel
   scrub           documents → PII-redacted parquet + per-rule counts
-  relations       documents → the four typed-relation tables
+  relations       documents → the four typed-relation tables (resumable)
   weblinks        documents → the five webgraph tables (resumable)
   weblinks-init   create the incremental host-graph ledger
   weblinks-increment  MERGE one crawl batch into the ledger
@@ -203,31 +203,35 @@ def cmd_decontaminate(args) -> int:
 
 
 def cmd_link(args) -> int:
-    """Scored entity-linking consumable: the store's mention table
-    linked to its best-scored candidate entity (character-bigram
-    blocked, jaccard × ln-df popularity prior — operators/linking.py),
-    written as parquet. ``--kb`` points at an external entity KB
-    parquet (entNorm, category, df) to resolve noisy surface forms
-    against canonical entities; ``--kb-store`` derives the KB from the
-    store's own APPEARS_IN table (one row per entity-doc pair, so the
-    row count per entity IS its document frequency — the canonical
-    popularity prior for linking later mention batches); default
-    derives the entity set from the mention stream itself (exact
-    surface forms self-link, the reference's exact-key behavior)."""
+    """Scored entity-linking consumable: the store's mentions linked to
+    their best-scored candidate entity (character-bigram blocked,
+    jaccard × ln-df popularity prior — operators/linking.py), written
+    as parquet. The mentions are the store's APPEARS_IN mention ids,
+    so those merged in after the build are linked too. ``--kb`` points
+    at an external entity KB parquet (entNorm, category, df) to
+    resolve noisy surface forms against canonical entities;
+    ``--kb-store`` derives the KB from the store's own APPEARS_IN
+    table (one row per entity-doc pair, so the row count per entity IS
+    its document frequency — the canonical popularity prior for
+    linking later mention batches); default derives the entity set
+    from the mention stream itself (exact surface forms self-link, the
+    reference's exact-key behavior)."""
     from pyspark.sql import functions as F
 
     from .operators.linking import link_mentions
+    from .sinks.tables import read_table
 
     spark = _spark(args.master)
-    m = (
-        spark.read.parquet(f"{args.run_dir}/mentions")
-        .withColumnRenamed("id", "mention_id")
-        .select("mention_id", "documentId", "mentionNorm", "category")
+    appears_in = read_table(spark, f"{args.run_dir}/appears_in")
+    m = appears_in.select(
+        F.explode("mentionIds").alias("mention_id"),
+        F.col("endId").alias("documentId"),
+        "mentionNorm",
+        "category",
     )
     if args.kb_store:
         kb = (
-            spark.read.parquet(f"{args.run_dir}/appears_in")
-            .groupBy(F.col("mentionNorm").alias("entNorm"), "category")
+            appears_in.groupBy(F.col("mentionNorm").alias("entNorm"), "category")
             .agg(F.count("*").cast("long").alias("df"))
         )
     elif args.kb:
@@ -384,6 +388,25 @@ def cmd_scrub(args) -> int:
     return 0
 
 
+def _run_bundle(spark, args, stages) -> tuple[dict, dict]:
+    """Write a corpus bundle's stages under ``--out`` (``run_stages``:
+    each dependency wave concurrently; a re-run over an unchanged
+    corpus skips completed tables), then release the long-lived
+    checkpoint blocks its queries left. Returns the stages' manifest
+    entries and the summary: each table's footer row count, the
+    released blocks and the output dir."""
+    from .manifest import run_stages
+    from .operators.graph_algos import release_long_lived_checkpoints
+
+    done = run_stages(
+        spark, args.out, stages,
+        {"documents": f"{args.sf_dir}/documents.parquet"},
+    )
+    counts = {name: e["rows_out"] for name, e in done.items()}
+    released = release_long_lived_checkpoints(spark)
+    return done, {**counts, "released_ckpt_blocks": released, "out": args.out}
+
+
 def cmd_relations(args) -> int:
     """Graph-analytics consumable: materialize the typed-relation
     family over a corpus — predicate-typed triples, lexicalized
@@ -391,8 +414,8 @@ def cmd_relations(args) -> int:
     link-prediction candidates — as four parquet tables under one
     output dir, with a JSON row-count summary. The KG-enrichment
     bundle a downstream browser/trainer loads next to the node/edge
-    tables."""
-    from .operators.graph_algos import release_long_lived_checkpoints
+    tables. The four tables are one wave (``_run_bundle``)."""
+    from .pipeline import Stage
     from .queries import (
         kg_link_prediction,
         kg_relation_surface,
@@ -401,24 +424,20 @@ def cmd_relations(args) -> int:
     )
 
     spark = _spark(args.master)
-    tables = {
+    queries = {
         "typed_relations": kg_typed_relations,
         "relation_surface": kg_relation_surface,
         "triangle_stats": kg_triangle_count,
         "link_candidates": kg_link_prediction,
     }
-    counts = {}
-    for name, fn in tables.items():
-        out = f"{args.out}/{name}"
-        fn(spark, args.sf_dir).write.mode("overwrite").parquet(out)
-        counts[name] = spark.read.parquet(out).count()
-    released = release_long_lived_checkpoints(spark)
-    print(
-        json.dumps(
-            {**counts, "released_ckpt_blocks": released, "out": args.out},
-            sort_keys=True,
-        )
-    )
+    # each query reads the corpus from sf_dir itself; the source input
+    # pins the corpus file in the manifest's fingerprint
+    stages = [
+        Stage(name, ("documents",), lambda _docs, q=q: q(spark, args.sf_dir))
+        for name, q in queries.items()
+    ]
+    _, summary = _run_bundle(spark, args, stages)
+    print(json.dumps(summary, sort_keys=True))
     return 0
 
 
@@ -433,50 +452,30 @@ def cmd_weblinks(args) -> int:
     Anchor extraction runs ONCE: downstream tables are derived from
     the link_edges parquet written first (at corpus scale the regexp
     extraction pass dominates — never repeat it per output table).
-    Every stage is manifest-guarded (manifest.py lineage + counters):
-    re-running the bundle over unchanged inputs skips completed
-    stages, so a failed run resumes from the first stale table."""
+    The waves (``_run_bundle``): link_edges | host_graph,
+    url_canonical, anchor_aliases | host_pagerank."""
     from pyspark.sql import functions as F
 
-    from .manifest import Manifest
-    from .operators.graph_algos import release_long_lived_checkpoints
     from .operators.weblinks import (
         anchor_aliases,
         canonical_url_counts,
         extract_links,
         host_graph,
         host_pagerank,
+        synth_link_pages,
     )
-    from .queries import _link_pages
+    from .pipeline import Stage
 
     spark = _spark(args.master)
-    man = Manifest(args.out)
-    docs_path = f"{args.sf_dir}/documents.parquet"
-    counts = {}
-
-    def stage(name, inputs, build):
-        out = man.run_stage(
-            name,
-            inputs,
-            f"{args.out}/{name}",
-            lambda p: build().write.mode("overwrite").parquet(p),
-        )
-        # counts come from the manifest's footer-derived lineage —
-        # exact, and a resumed run never re-scans skipped tables
-        counts[name] = man.state["stages"][name]["rows_out"]
-        return spark.read.parquet(out), out
-
-    links, links_path = stage(
-        "link_edges",
-        [docs_path],
-        lambda: extract_links(_link_pages(spark, args.sf_dir)),
-    )
-    hg, hg_path = stage(
-        "host_graph", [links_path], lambda: host_graph(links)
-    )
-    pr, _pr_path = stage("host_pagerank", [hg_path], lambda: host_pagerank(hg))
-    stage("url_canonical", [links_path], lambda: canonical_url_counts(links))
-    stage("anchor_aliases", [links_path], lambda: anchor_aliases(links))
+    stages = [
+        Stage("link_edges", ("documents",),
+              lambda docs: extract_links(synth_link_pages(docs))),
+        Stage("host_graph", ("link_edges",), host_graph),
+        Stage("host_pagerank", ("host_graph",), host_pagerank),
+        Stage("url_canonical", ("link_edges",), canonical_url_counts),
+        Stage("anchor_aliases", ("link_edges",), anchor_aliases),
+    ]
+    done, summary = _run_bundle(spark, args, stages)
     if getattr(args, "graphml", None):
         # host graph through the reference-shaped GraphML dump sink
         # (plans/dump.py — the same writer the KG dump uses): hosts as
@@ -484,6 +483,10 @@ def cmd_weblinks(args) -> int:
         # edges carrying the aggregated counts
         from .plans.dump import dump_graphml
 
+        pr, hg = (
+            spark.read.parquet(done[name]["output"])
+            for name in ("host_pagerank", "host_graph")
+        )
         nodes = pr.select(
             F.col("host").alias("node_id"),
             F.array(F.lit("Host")).alias("labels"),
@@ -501,14 +504,8 @@ def cmd_weblinks(args) -> int:
             ).alias("props"),
         )
         with open(args.graphml, "w") as fh:
-            counts["graphml_elements"] = dump_graphml(nodes, edges, fh)
-    released = release_long_lived_checkpoints(spark)
-    print(
-        json.dumps(
-            {**counts, "released_ckpt_blocks": released, "out": args.out},
-            sort_keys=True,
-        )
-    )
+            summary["graphml_elements"] = dump_graphml(nodes, edges, fh)
+    print(json.dumps(summary, sort_keys=True))
     return 0
 
 

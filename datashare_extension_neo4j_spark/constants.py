@@ -9,7 +9,6 @@ This file declares the *contract*; all execution is Spark DataFrames.
 # --- node labels ------------------------------------------------------
 DOC_NODE = "Document"
 NE_NODE = "NamedEntity"
-STATS_NODE = "_ProjectStatistics"
 
 # --- document columns (reference constants.py:20-31) ------------------
 DOC_ID = "id"
@@ -18,11 +17,9 @@ DOC_CONTENT_TYPE = "contentType"
 DOC_CONTENT_LENGTH = "contentLength"
 DOC_EXTRACTION_DATE = "extractionDate"
 DOC_EXTRACTION_LEVEL = "extractionLevel"
-DOC_METADATA = "metadata"
 DOC_PATH = "path"
 DOC_TITLE = "title"
 DOC_URL_SUFFIX = "urlSuffix"
-DOC_ROOT_ID = "rootDocument"
 DOC_CREATED_AT = "createdAt"
 DOC_MODIFIED_AT = "modifiedAt"
 DOC_ROOT_TYPE = "HAS_PARENT"
@@ -42,36 +39,12 @@ DOC_MODIFIED_AT_META = [
     "tika_metadata_date_iso8601",
 ]
 
-# CSV column order + :TYPE suffixes for the docs node file
-# (reference constants.py:20-31 + imports.py:545-557,379-388)
-DOC_CSV_COLS = [
-    (DOC_ID, f"ID({DOC_NODE})"),
-    (DOC_DIRNAME, None),
-    (DOC_CONTENT_TYPE, None),
-    (DOC_CONTENT_LENGTH, "LONG"),
-    (DOC_EXTRACTION_DATE, "DATETIME"),
-    (DOC_EXTRACTION_LEVEL, "LONG"),
-    (DOC_PATH, None),
-    (DOC_TITLE, None),
-    (DOC_URL_SUFFIX, None),
-    (DOC_CREATED_AT, "DATETIME"),
-    (DOC_MODIFIED_AT, "DATETIME"),
-]
-
 # --- named-entity (mention) columns (reference constants.py:95-107) ---
-NE_ID = "id"
-NE_CATEGORY = "category"
-NE_DOC_ID = "documentId"
-NE_EXTRACTOR = "extractor"
 NE_EXTRACTOR_LANG = "extractorLanguage"
-NE_MENTION = "mention"
 NE_MENTION_NORM = "mentionNorm"
-NE_MENTION_NORM_TEXT_LENGTH = "mentionNormTextLength"
-NE_METADATA = "metadata"
 NE_OFFSETS = "offsets"
 NE_IDS = "mentionIds"
 NE_EXTRACTORS = "mentionExtractors"
-NE_MENTION_COUNT = "mentionCount"
 NE_APPEARS_IN_DOC = "APPEARS_IN"
 
 # --- email relationships (reference constants.py:53-76) ---------------
@@ -80,8 +53,6 @@ EMAIL_HEADER = "emailHeaderField"
 EMAIL_SENT_TYPE = "SENT"
 EMAIL_RECEIVED_TYPE = "RECEIVED"
 EMAIL_REL_HEADER_FIELDS = "fields"
-EMAIL_USER = "emailUser"
-EMAIL_DOMAIN = "emailDomain"
 SENT_EMAIL_HEADERS = ["tika_metadata_message_from", "tika_metadata_dc_creator"]
 RECEIVED_EMAIL_HEADERS = [
     "tika_metadata_message_bcc",

@@ -2,25 +2,32 @@
 rule: "resumable from checkpoint with per-partition lineage +
 metrics").
 
-Each pipeline stage materializes to a parquet path and records a
-manifest entry: input fingerprint (a snapshot pin — Iceberg
-snapshot-id when available, else path + mtime), per-partition output
-lineage (file, rows, bytes — from the parquet footers), row counters,
-and the stage's Spark metrics (``observe.py``). The manifest is written
+Each stage materializes to a parquet path and records a manifest
+entry: input fingerprint (a snapshot pin — Iceberg snapshot-id when
+available, else path + mtime), per-partition output lineage (file,
+rows, bytes — from the parquet footers), row counters, and the
+stage's Spark metrics (``observe.py``). The manifest is written
 atomically (tmp + rename). On restart, a stage whose entry matches its
 input fingerprint and whose output files still exist is skipped —
 mirroring the reference's idempotent md5-keyed task identity
 (core/objects.py:118-144) done properly for a DAG.
+
+``run_stages`` runs each such DAG (``cli build``, ``weblinks``,
+``relations``) wave by wave, a wave's stages concurrently, as the
+reference runs concurrent import tasks (core/imports.py:147-316).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 import time
+from collections.abc import Callable
+from functools import partial
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from .observe import observe
 
@@ -43,10 +50,8 @@ def _input_fingerprint(path: str) -> dict:
 
 def _output_lineage(path: str) -> list[dict]:
     """Per-partition (per-file) lineage from the written parquet."""
-    try:
-        import pyarrow.parquet as pq
-    except Exception:
-        return []
+    import pyarrow.parquet as pq
+
     out = []
     for f in sorted(Path(path).rglob("*.parquet")):
         try:
@@ -72,6 +77,9 @@ class Manifest:
         self.state: dict = {"stages": {}}
         if self.path.exists():
             self.state = json.loads(self.path.read_text())
+        # stages of one wave finish concurrently: every state change
+        # and its flush happen under this lock
+        self._lock = threading.Lock()
 
     def _flush(self) -> None:
         tmp = self.path.with_suffix(".tmp")
@@ -110,25 +118,97 @@ class Manifest:
         with observe() as metrics:
             fn(output)
         lineage = _output_lineage(output)
-        self.state["stages"][stage] = {
-            "status": "complete",
-            "output": output,
-            "input_fingerprints": [_input_fingerprint(p) for p in inputs],
-            "config": config or {},
-            "partitions": lineage,
-            "rows_out": sum(e.get("rows", 0) for e in lineage),
-            "metrics": metrics,
-            "completed_at": time.time(),
-        }
-        self._flush()
+        with self._lock:
+            self.state["stages"][stage] = {
+                "status": "complete",
+                "output": output,
+                "input_fingerprints": [_input_fingerprint(p) for p in inputs],
+                "config": config or {},
+                "partitions": lineage,
+                "rows_out": sum(e.get("rows", 0) for e in lineage),
+                "metrics": metrics,
+                "completed_at": time.time(),
+            }
+            self._flush()
         return output
 
     def record_increment(self, **records: dict) -> None:
         """Append one increment's metrics records to ``increments``."""
-        self.state.setdefault("increments", []).append(
-            {**records, "completed_at": time.time()}
+        with self._lock:
+            self.state.setdefault("increments", []).append(
+                {**records, "completed_at": time.time()}
+            )
+            self._flush()
+
+
+def run_concurrently(spark: SparkSession, units: dict[str, Callable]) -> dict:
+    """Run every unit at once; returns name → result. Each unit gets
+    its own ``inheritable_thread_target`` wrapper, a copy of the
+    caller's local properties (units sharing one copy would share their
+    SQL execution id). The first failure, in ``units`` order, is
+    re-raised once every unit has finished."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(units)) as ex:
+        futures = {
+            name: ex.submit(inheritable_thread_target(spark)(fn))
+            for name, fn in units.items()
+        }
+    return {name: f.result() for name, f in futures.items()}
+
+
+def run_stages(
+    spark: SparkSession,
+    run_dir: str,
+    stages,
+    sources: dict[str, str],
+    force: bool = False,
+    configs: dict[str, dict] | None = None,
+) -> dict[str, dict]:
+    """Write a DAG of named parquet outputs under ``run_dir``; returns
+    stage name → manifest entry. ``stages`` are ``pipeline.Stage(name,
+    inputs, fn)`` in topological order; an input names an upstream
+    stage or a ``sources`` path, and ``fn(*input frames)`` returns the
+    stage's frame. A stage's wave is one past its deepest input's. A
+    wave's stages run concurrently, each through ``Manifest.run_stage``
+    under its ``configs`` entry. A failing stage raises once the rest
+    of its wave is recorded, before the next wave, so a re-run resumes
+    it and its dependents. ``TABLE_KEYS`` outputs are created bucketed
+    into their config's ``buckets``, the others as plain parquet."""
+    from .sinks.tables import TABLE_KEYS, create_table, read_table
+
+    configs = configs or {}
+    paths = dict(sources)
+    wave_of = dict.fromkeys(sources, 0)
+    waves: dict[int, list] = {}
+    for st in stages:
+        # existing run dirs hold the parse output under ``parsed``
+        out = "parsed" if st.name == "parse" else st.name
+        paths[st.name] = str(Path(run_dir) / out)
+        wave_of[st.name] = 1 + max((wave_of[i] for i in st.inputs), default=0)
+        waves.setdefault(wave_of[st.name], []).append(st)
+    m = Manifest(run_dir)
+
+    def run(st) -> str:
+        config = configs.get(st.name) or {}
+
+        def write(path: str) -> None:
+            df = st.fn(*(read_table(spark, paths[i]) for i in st.inputs))
+            if st.name in TABLE_KEYS:
+                create_table(df, path, st.name, config.get("buckets"))
+            else:
+                df.write.mode("overwrite").parquet(path)
+
+        return m.run_stage(
+            st.name, [paths[i] for i in st.inputs], paths[st.name], write,
+            force=force, config=config,
         )
-        self._flush()
+
+    for k in sorted(waves):
+        run_concurrently(spark, {st.name: partial(run, st) for st in waves[k]})
+    return {st.name: m.state["stages"][st.name] for st in stages}
 
 
 def run_pipeline(
@@ -140,13 +220,9 @@ def run_pipeline(
     force: bool = False,
     buckets: int | None = None,
 ) -> dict:
-    """Resumable end-to-end run: pages parquet → parsed → graph tables.
-
-    The materializing runner over ``pipeline.STAGES``: every stage is
-    a manifest-guarded parquet write whose inputs are its upstream
-    stages' outputs, so a restart after a crash re-runs only
-    incomplete/stale stages (and builds no frame for a skipped one).
-    Returns {table: path}.
+    """Resumable end-to-end run: pages parquet → parsed → graph tables,
+    ``pipeline.STAGES`` through ``run_stages``. Returns {output dir
+    name: path}.
 
     The five graph tables are written hash-partitioned on their merge
     key into ``buckets`` buckets (the session's shuffle partition count
@@ -154,49 +230,26 @@ def run_pipeline(
     partitions (sinks/tables.py module docstring); the other stage
     outputs are plain parquet. The manifest records the requested
     ``buckets``; the tables' sidecars hold the N merges use."""
-    from .pipeline import PARSE_LAYOUT, STAGES, BuildOptions
-    from .sinks.tables import TABLE_KEYS, read_table, write_bucketed_table
+    from .migrations import apply_migrations
+    from .pipeline import PARSE_LAYOUT, STAGES, BuildOptions, Stage
+    from .sinks.tables import TABLE_KEYS
 
-    # captured BEFORE Manifest creates the dir: a pre-existing manifest
-    # means prior-run tables may be present (migration ladder must run
-    # for real against them — see apply_migrations call below)
+    # captured BEFORE the runner creates the dir: a pre-existing
+    # manifest means prior-run tables may be present (migration ladder
+    # must run for real against them — see apply_migrations below)
     fresh_run_dir = not (Path(run_dir) / "manifest.json").exists()
-    m = Manifest(run_dir)
     o = BuildOptions(project=project, use_rule_ner=use_rule_ner, include_text=False)
-    paths = {"pages": pages_path}
-
-    def load(name: str) -> DataFrame:
-        if name == "pages":
-            return spark.read.parquet(pages_path)
-        return read_table(spark, paths[name])
-
-    for st in STAGES:
-        table = st.name in TABLE_KEYS
-        config = {"buckets": buckets} if table else None
-        if st.name == "parse":
-            config = {"layout": PARSE_LAYOUT}
-
-        def materialize(path: str, st=st, table=table) -> None:
-            df = st.fn(o, *(load(i) for i in st.inputs))
-            if table:
-                write_bucketed_table(df, path, st.name, buckets)
-            else:
-                df.write.mode("overwrite").parquet(path)
-
-        paths[st.name] = m.run_stage(
-            st.name,
-            [paths[i] for i in st.inputs],
-            str(Path(run_dir) / ("parsed" if st.name == "parse" else st.name)),
-            materialize,
-            force=force,
-            config=config,
-        )
+    configs = {name: {"buckets": buckets} for name in TABLE_KEYS}
+    configs["parse"] = {"layout": PARSE_LAYOUT}
+    done = run_stages(
+        spark, run_dir,
+        [Stage(st.name, st.inputs, partial(st.fn, o)) for st in STAGES],
+        {"pages": pages_path}, force=force, configs=configs,
+    )
     # constraint/index manifest + migration ladder (reference runs its
     # migrations at startup). assume_current is ONLY valid for a run
     # dir this call created from scratch — an EXISTING dir may hold
     # tables built by older code whose pending data migrations must
     # actually execute, not be silently recorded as done.
-    from .migrations import apply_migrations
-
     apply_migrations(spark, run_dir, assume_current=fresh_run_dir)
-    return {Path(p).name: p for name, p in paths.items() if name != "pages"}
+    return {Path(e["output"]).name: e["output"] for e in done.values()}

@@ -167,9 +167,10 @@ def extract_links(pages: DataFrame) -> DataFrame:
 def canonical_url(url: Column) -> Column:
     """Canonical form of a URL: lowercase, fragment stripped, tracking
     params (utm_*/ref/fbclid/gclid) removed with delimiter repair,
-    trailing ``?``/``&``/``/`` trimmed. Pure regexp chain — identical
-    rule replayed by the oracles in DuckDB (``\\1`` + 'g' flag there,
-    ``$1`` here; same RE semantics on this pattern subset).
+    trailing ``?``/``&``/``/`` trimmed. Pure regexp chain. The oracles
+    do not replay it: ``ORACLE_WEB_URL_CANONICAL`` derives the
+    canonical form independently from the generation rule, so the
+    chain's semantics are what the parity tests check.
     """
     u = F.lower(url)
     u = F.regexp_replace(u, "#.*", "")
@@ -178,19 +179,6 @@ def canonical_url(url: Column) -> Column:
     u = F.regexp_replace(u, "&&+", "&")
     u = F.regexp_replace(u, "[?&]+$", "")
     return F.regexp_replace(u, "/$", "")
-
-
-CANONICAL_URL_SQL_TEMPLATE = (
-    # the same chain for DuckDB oracles; {col} is the input expression
-    "regexp_replace(regexp_replace(regexp_replace(regexp_replace("
-    "regexp_replace(regexp_replace(lower({col}),"
-    " '#.*', '', 'g'),"
-    " '([?&])" + TRACKING_PARAM_RE + "=[^&]*', '\\1', 'g'),"
-    " '\\?&+', '?', 'g'),"
-    " '&&+', '&', 'g'),"
-    " '[?&]+$', '', 'g'),"
-    " '/$', '', 'g')"
-)
 
 
 def url_host(url: Column) -> Column:

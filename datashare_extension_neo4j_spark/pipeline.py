@@ -19,8 +19,10 @@ builder, decides what is materialized:
 
   * ``build_graph`` returns lazy frames, with the parse optionally
     checkpointed to parquet (increments, bench, kg_full_pipeline);
-  * ``manifest.run_pipeline`` makes every stage a manifest-guarded
-    parquet write (``cli build``).
+  * ``manifest.run_pipeline`` (``cli build``) hands them to
+    ``manifest.run_stages``, which writes them as manifest-guarded
+    parquet, each dependency wave's stages concurrently: parse | docs,
+    mentions, appears_in, emails, entities | doc_roots.
 
 Everything else that stores the graph goes through the one store
 writer, ``sinks.tables.write_tables``, which creates or MERGEs the

@@ -18,26 +18,6 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
-# document rows (reference DOC_COLUMNS + rootDocument)
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("rootDocument", T.StringType(), True),
-        T.StructField("dirname", T.StringType(), True),
-        T.StructField("contentType", T.StringType(), True),
-        T.StructField("contentLength", T.LongType(), True),
-        T.StructField("extractionDate", T.StringType(), True),
-        T.StructField("extractionLevel", T.LongType(), True),
-        T.StructField("path", T.StringType(), True),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("url", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("warc_ts", T.TimestampType(), True),
-    ]
-)
-
 # mention rows (reference NE_COLUMNS)
 MENTION_SCHEMA = T.StructType(
     [

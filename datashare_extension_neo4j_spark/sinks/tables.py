@@ -21,12 +21,13 @@ into such a table raises.
 
 from __future__ import annotations
 
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..manifest import Manifest
+from ..manifest import Manifest, run_concurrently
 from ..observe import observe
 from ..operators.graph_algos import _eager_checkpoint, _unpersist_rdd_ids
 from ..pipeline import GraphBuild
@@ -102,6 +103,16 @@ def write_bucketed_table(
 ) -> None:
     """Write graph table ``name`` bucketed on its merge key."""
     write_buckets(df, path, TABLE_KEYS[name], buckets, "overwrite")
+
+
+def create_table(
+    df: DataFrame, path: str, name: str, buckets: int | None = None
+) -> None:
+    """Create graph table ``name`` from new input: the uniqueness gate
+    of ``merge_table``, then a bucketed write. (``rewrite_table`` is
+    ungated: a migration may run over a store it is repairing.)"""
+    _assert_unique_input(df, name)
+    write_bucketed_table(df, path, name, buckets)
 
 
 def merge_bucketed(
@@ -188,22 +199,16 @@ def write_tables(
 ) -> dict[str, int]:
     """The one writer of graph tables into a run dir. Each named table
     is MERGEd into the stored one (``merge_table``), or created
-    bucketed into ``buckets`` buckets (``write_bucketed_table``) when
-    the run dir has none yet. Returns the rows each write created, read
+    bucketed into ``buckets`` buckets (``create_table``) when the run
+    dir has none yet. Returns the rows each write created, read
     from the parquet footers.
 
-    The writes are independent jobs, submitted concurrently so the
-    scheduler interleaves their stages. Each runs inside its own
-    ``observe`` on its own ``inheritable_thread_target`` wrapper: the
-    wrapper copies the caller's local properties (so an enclosing
-    ``observe`` counts the write), and writes sharing one copy would
-    share their SQL execution id. Once all have succeeded, one
-    ``increments`` entry is appended to the run dir's manifest: each
-    table's record, plus the caller's ``records``. A failing write
+    The writes are independent jobs, run concurrently
+    (``manifest.run_concurrently``) so the scheduler interleaves their
+    stages, each inside its own ``observe``. Once all have succeeded,
+    one ``increments`` entry is appended to the run dir's manifest:
+    each table's record, plus the caller's ``records``. A failing write
     raises after the other writes finish, and nothing is recorded."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
 
     def write(name: str, df: DataFrame) -> tuple[int, dict]:
         path = f"{run_dir}/{name}"
@@ -211,16 +216,13 @@ def write_tables(
             if Path(path).exists():
                 created = merge_table(spark, path, df, name)
             else:
-                write_bucketed_table(df, path, name, buckets)
+                create_table(df, path, name, buckets)
                 created = stored_rows(path)
         return created, record
 
-    with ThreadPoolExecutor(max_workers=len(tables)) as ex:
-        futures = {
-            name: ex.submit(inheritable_thread_target(spark)(write), name, df)
-            for name, df in tables.items()
-        }
-    done = {name: f.result() for name, f in futures.items()}
+    done = run_concurrently(
+        spark, {name: partial(write, name, df) for name, df in tables.items()}
+    )
     Manifest(run_dir).record_increment(
         tables={name: record for name, (_, record) in done.items()}, **records
     )
@@ -307,13 +309,22 @@ COMBINE = {
 }
 
 
-# tables whose combine does NOT structurally canonicalize the key:
-# combine_docs is newest-wins against OLD rows only, so an increment
-# carrying one id twice (two different docs claiming the same id)
-# would land both and corrupt the table. The aggregating combines
-# (appears_in/emails groupBy, dropDuplicates) are structurally unique
-# post-merge, so only the updates-side of docs needs the gate.
+# The uniqueness gate (migrations.CONSTRAINTS, the reference's
+# constraint_document_unique_id analog) on new input before it is
+# written: a batch that would corrupt the key raises
+# ConstraintViolation instead of landing. Only docs needs it:
+# combine_docs is newest-wins against OLD rows only and a create has no
+# combine, so a batch carrying one id twice (two docs claiming the same
+# id) would land both. The aggregating combines (appears_in/emails
+# groupBy, dropDuplicates) are unique by construction.
 _ENFORCE_UNIQUE_UPDATES = {"docs"}
+
+
+def _assert_unique_input(df: DataFrame, name: str) -> None:
+    if name in _ENFORCE_UNIQUE_UPDATES:
+        from ..migrations import CONSTRAINTS, assert_unique
+
+        assert_unique(df, CONSTRAINTS[name]["unique"], name)
 
 
 def merge_table(
@@ -324,16 +335,9 @@ def merge_table(
     Returns the number of rows the merge CREATES: the table's footer
     row count after the write minus before it. Every combine leaves
     the table unique on its merge key, so ON MATCH updates in place
-    and the growth is exactly the keys absent from the store.
-
-    Enforces the table's uniqueness constraint (migrations.CONSTRAINTS,
-    the reference's constraint_document_unique_id analog) on the
-    increment BEFORE merging — a batch that would corrupt the key
-    raises ConstraintViolation instead of silently landing."""
-    if name in _ENFORCE_UNIQUE_UPDATES:
-        from ..migrations import CONSTRAINTS, assert_unique
-
-        assert_unique(updates, CONSTRAINTS[name]["unique"], name)
+    and the growth is exactly the keys absent from the store. The
+    increment passes the uniqueness gate first."""
+    _assert_unique_input(updates, name)
     n = stored_buckets(path)
     before = stored_rows(path)
     merge_bucketed(spark, path, updates, TABLE_KEYS[name], COMBINE[name], n)
@@ -371,9 +375,10 @@ def incremental_import(
     ckpt = f"{run_dir}/_increment_ckpt_{uuid.uuid4().hex}"
     try:
         with observe() as parse:
+            # no table below reads the raw mention stream
             g = build_graph(
                 pages, project=project, use_rule_ner=True, include_text=False,
-                checkpoint_dir=ckpt,
+                emit_mentions=False, checkpoint_dir=ckpt,
             )
         # one parsed row per page, and one document per parsed row
         imported = stored_rows(f"{ckpt}/parsed")

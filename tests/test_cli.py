@@ -71,6 +71,50 @@ def test_cli_full_cycle(spark, tmp_path, capsys):
     assert lj2["rows"] == lj["rows"] and lj2["fuzzy"] == 0
 
 
+
+def test_cli_build_enforces_unique_doc_ids(spark, tmp_path, capsys):
+    """A build whose pages repeat a doc id raises at the docs stage,
+    which records nothing; doc_roots, which reads docs, never runs."""
+    from datashare_extension_neo4j_spark.migrations import ConstraintViolation
+
+    pages = reference_pages(spark, n_docs=4)
+    pages_path = str(tmp_path / "pages")
+    pages.unionByName(pages.limit(1)).write.parquet(pages_path)
+    run_dir = tmp_path / "run"
+    with pytest.raises(ConstraintViolation, match="docs"):
+        main(["build", "--pages", pages_path, "--run-dir", str(run_dir)])
+    stages = json.loads((run_dir / "manifest.json").read_text())["stages"]
+    assert "parse" in stages
+    assert "docs" not in stages and "doc_roots" not in stages
+
+
+def test_cli_link_reads_mentions_merged_after_the_build(spark, tmp_path, capsys):
+    """link reads the store's current mentions: one imported by
+    import-mentions after the build is linked too."""
+    from datashare_extension_neo4j_spark.schemas import MENTION_SCHEMA
+
+    pages_path = str(tmp_path / "pages")
+    reference_pages(spark, n_docs=6).write.parquet(pages_path)
+    run_dir = str(tmp_path / "run")
+    assert main(["build", "--pages", pages_path, "--run-dir", run_dir,
+                 "--buckets", "2"]) == 0
+    m_path = str(tmp_path / "mentions")
+    spark.createDataFrame(
+        [("m-late", "doc-1", "PERSON", "Zoe", "zoe", 3, "CORENLP", "en",
+          [1], None)],
+        MENTION_SCHEMA,
+    ).write.parquet(m_path)
+    assert main(["import-mentions", "--mentions", m_path,
+                 "--run-dir", run_dir]) == 0
+    lk = str(tmp_path / "links")
+    assert main(["link", "--run-dir", run_dir, "--out", lk]) == 0
+    capsys.readouterr()
+    (row,) = spark.read.parquet(lk).where("mention_id = 'm-late'").collect()
+    assert (row["documentId"], row["mentionNorm"], row["category"]) == (
+        "doc-1", "zoe", "PERSON"
+    )
+    assert row["linkedNorm"] == "zoe"
+
 def test_cli_dump_rejects_negative_limit(tmp_path, capsys):
     """--limit bounds the doc ids the dump collects on the driver; a
     negative value is a usage error, not a Spark analysis error."""

@@ -313,3 +313,87 @@ def test_manifest_stale_input_reruns(spark, tmp_path):
     assert spark.read.parquet(f"{run_dir}/docs").count() == 9
     m = Manifest(run_dir)
     assert m.is_complete("parse", [pages_path], {"layout": PARSE_LAYOUT})
+
+
+def _pages_parquet(spark, tmp_path, n_docs=8):
+    from datashare_extension_neo4j_spark.fixtures import reference_pages_pandas
+    from datashare_extension_neo4j_spark.schemas import PAGES_SCHEMA
+
+    path = str(tmp_path / "pages")
+    spark.createDataFrame(
+        reference_pages_pandas(n_docs=n_docs), schema=PAGES_SCHEMA
+    ).write.parquet(path)
+    return path
+
+
+def _stages(run_dir):
+    return json.loads((run_dir / "manifest.json").read_text())["stages"]
+
+
+def test_run_pipeline_runs_a_wave_concurrently(spark, tmp_path, monkeypatch):
+    """Two stages of the wave after parse wait on one barrier: the
+    build only gets past it when both run at the same time, and each
+    stage's metrics record holds only its own jobs."""
+    import threading
+
+    from datashare_extension_neo4j_spark import pipeline
+
+    both = threading.Barrier(2, timeout=30)
+    for name in ("appears_in_from_parsed", "email_edges_from_parsed"):
+
+        def waiting(parsed, fn=getattr(pipeline, name)):
+            both.wait()
+            return fn(parsed)
+
+        monkeypatch.setattr(pipeline, name, waiting)
+    run_dir = tmp_path / "run"
+    run_pipeline(spark, _pages_parquet(spark, tmp_path), str(run_dir))
+    stages = _stages(run_dir)
+    assert set(stages) == {s.name for s in pipeline.STAGES}
+    jobs = {name: set(e["metrics"]["jobs"]) for name, e in stages.items()}
+    assert jobs["appears_in"] and jobs["emails"]
+    names = sorted(jobs)
+    for i, a in enumerate(names):
+        for b in names[i + 1:]:
+            assert jobs[a].isdisjoint(jobs[b]), (a, b)
+
+
+def test_run_pipeline_failed_stage_resumes_alone(spark, tmp_path, monkeypatch):
+    """A stage that raises fails the build after the rest of its wave
+    is recorded, and no later wave runs. The re-run runs only the
+    failed stage and the one after it, leaves the other entries as they
+    were, and ends with the tables of a clean build."""
+    from datashare_extension_neo4j_spark import pipeline
+    from datashare_extension_neo4j_spark.sinks.tables import TABLE_KEYS, read_table
+
+    pages_path = _pages_parquet(spark, tmp_path)
+    run_dir = tmp_path / "run"
+
+    def boom(parsed):
+        raise RuntimeError("injected stage fault")
+
+    monkeypatch.setattr(pipeline, "email_edges_from_parsed", boom)
+    with pytest.raises(RuntimeError, match="injected stage fault"):
+        run_pipeline(spark, pages_path, str(run_dir))
+    first = _stages(run_dir)
+    assert set(first) == {"parse", "docs", "mentions", "appears_in", "entities"}
+    assert all(e["status"] == "complete" for e in first.values())
+
+    monkeypatch.undo()
+    run_pipeline(spark, pages_path, str(run_dir))
+    second = _stages(run_dir)
+    assert set(second) == set(first) | {"emails", "doc_roots"}
+    for name, entry in first.items():
+        assert json.dumps(second[name], sort_keys=True) == json.dumps(
+            entry, sort_keys=True
+        ), name
+
+    clean = tmp_path / "clean"
+    run_pipeline(spark, pages_path, str(clean))
+
+    def rows(root, name):
+        df = read_table(spark, str(root / name))
+        return sorted(map(str, df.select(*sorted(df.columns)).collect()))
+
+    for name in TABLE_KEYS:
+        assert rows(run_dir, name) == rows(clean, name), name

@@ -502,3 +502,22 @@ def test_incremental_import_execution_count(spark, tmp_path, last_sql_execution)
     c = incremental_import(spark, pages_all, run_dir)
     assert last_sql_execution() - before == 17
     assert c["imported"] == 12 and c["nodes_created"] == 4
+
+
+def test_increment_creating_docs_enforces_unique_ids(spark, tmp_path):
+    """An increment into a run dir without tables creates them through
+    the same uniqueness gate a merge applies: a batch repeating one
+    page's doc id raises, no docs table lands, and no increment is
+    recorded."""
+    import json
+
+    from datashare_extension_neo4j_spark.migrations import ConstraintViolation
+
+    pages = reference_pages(spark, n_docs=4)
+    run_dir = tmp_path / "run"
+    with pytest.raises(ConstraintViolation, match="docs"):
+        incremental_import(spark, pages.unionByName(pages.limit(1)), str(run_dir))
+    assert not (run_dir / "docs").exists()
+    manifest = run_dir / "manifest.json"
+    if manifest.exists():
+        assert not json.loads(manifest.read_text()).get("increments")
