@@ -70,8 +70,6 @@ def main() -> None:
     g = build_graph(
         pages_from_documents(spark, SF_DIR),
         use_rule_ner=True,
-        include_text=False,
-        emit_mentions=False,
         checkpoint_dir=f"{work}/ck",
     )
     from datashare_extension_neo4j_spark.sinks.tables import materialize_graph

@@ -353,7 +353,9 @@ def cmd_scrub(args) -> int:
     documents parquet (doc_id, text) with typed placeholders; writes
     the scrubbed table and reports staged per-rule counts (each rule
     counted on the text the redaction chain hands it, so counts equal
-    placeholders written)."""
+    placeholders written). The row count and the totals are observed
+    on the one write."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from .functions.pii import redact_pii, staged_pii_counts
@@ -361,30 +363,20 @@ def cmd_scrub(args) -> int:
     spark = _spark(args.master)
     docs = spark.read.parquet(args.docs)
     n_emails, n_ips, n_phones = staged_pii_counts(F.col("text"))
-    scrubbed = docs.select(
+    rules = {"emails": n_emails, "ips": n_ips, "phones": n_phones}
+    obs = Observation()
+    docs.select(
         *[c for c in docs.columns if c != "text"],
         redact_pii(F.col("text")).alias("text"),
-        n_emails.alias("_ne"),
-        n_ips.alias("_ni"),
-        n_phones.alias("_np"),
-    )
-    scrubbed.drop("_ne", "_ni", "_np").write.mode("overwrite").parquet(
-        args.out
-    )
-    totals = scrubbed.agg(
-        F.sum("_ne"), F.sum("_ni"), F.sum("_np")
-    ).first()
-    print(
-        json.dumps(
-            {
-                "rows": docs.count(),
-                "emails": int(totals[0] or 0),
-                "ips": int(totals[1] or 0),
-                "phones": int(totals[2] or 0),
-                "out": args.out,
-            }
-        )
-    )
+        *[n.alias(f"_{k}") for k, n in rules.items()],
+    ).observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        *[F.sum(f"_{k}").alias(k) for k in rules],
+    ).drop(*[f"_{k}" for k in rules]).write.mode("overwrite").parquet(args.out)
+    got = obs.get
+    counts = {k: int(got[k] or 0) for k in rules}
+    print(json.dumps({"rows": got["rows"], **counts, "out": args.out}))
     return 0
 
 

@@ -8,13 +8,16 @@ available, else path + mtime), per-partition output lineage (file,
 rows, bytes — from the parquet footers), row counters, and the
 stage's Spark metrics (``observe.py``). The manifest is written
 atomically (tmp + rename). On restart, a stage whose entry matches its
-input fingerprint and whose output files still exist is skipped —
+input fingerprint and its config (write layout and the build options
+it depends on) and whose output files still exist is skipped —
 mirroring the reference's idempotent md5-keyed task identity
 (core/objects.py:118-144) done properly for a DAG.
 
 ``run_stages`` runs each such DAG (``cli build``, ``weblinks``,
 ``relations``) wave by wave, a wave's stages concurrently, as the
 reference runs concurrent import tasks (core/imports.py:147-316).
+``run_pipeline`` (``cli build``) migrates the run dir before its
+first wave.
 """
 
 from __future__ import annotations
@@ -224,6 +227,14 @@ def run_pipeline(
     ``pipeline.STAGES`` through ``run_stages``. Returns {output dir
     name: path}.
 
+    The migration ladder runs first (the reference runs its migrations
+    at startup): in a new run dir every data migration finds no table
+    and the ladder is only recorded; an older store is brought to the
+    current schema before any stage reads it. Each build option sits
+    in the config of the stage it changes (``use_rule_ner`` with the
+    parse layout, ``project`` with docs' ``buckets``), so changing one
+    re-runs that stage and its dependents.
+
     The five graph tables are written hash-partitioned on their merge
     key into ``buckets`` buckets (the session's shuffle partition count
     when None) so later incremental imports rewrite only touched
@@ -234,22 +245,15 @@ def run_pipeline(
     from .pipeline import PARSE_LAYOUT, STAGES, BuildOptions, Stage
     from .sinks.tables import TABLE_KEYS
 
-    # captured BEFORE the runner creates the dir: a pre-existing
-    # manifest means prior-run tables may be present (migration ladder
-    # must run for real against them — see apply_migrations below)
-    fresh_run_dir = not (Path(run_dir) / "manifest.json").exists()
-    o = BuildOptions(project=project, use_rule_ner=use_rule_ner, include_text=False)
+    Path(run_dir).mkdir(parents=True, exist_ok=True)
+    apply_migrations(spark, run_dir)
+    o = BuildOptions(project=project, use_rule_ner=use_rule_ner)
     configs = {name: {"buckets": buckets} for name in TABLE_KEYS}
-    configs["parse"] = {"layout": PARSE_LAYOUT}
+    configs["parse"] = {"layout": PARSE_LAYOUT, "use_rule_ner": use_rule_ner}
+    configs["docs"]["project"] = project
     done = run_stages(
         spark, run_dir,
         [Stage(st.name, st.inputs, partial(st.fn, o)) for st in STAGES],
         {"pages": pages_path}, force=force, configs=configs,
     )
-    # constraint/index manifest + migration ladder (reference runs its
-    # migrations at startup). assume_current is ONLY valid for a run
-    # dir this call created from scratch — an EXISTING dir may hold
-    # tables built by older code whose pending data migrations must
-    # actually execute, not be silently recorded as done.
-    apply_migrations(spark, run_dir, assume_current=fresh_run_dir)
     return {Path(e["output"]).name: e["output"] for e in done.values()}

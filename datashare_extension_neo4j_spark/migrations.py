@@ -164,19 +164,14 @@ MIGRATIONS: list[tuple[str, Callable | None]] = [
 ]
 
 
-def apply_migrations(
-    spark: SparkSession, run_dir: str, assume_current: bool = False
-) -> list[str]:
+def apply_migrations(spark: SparkSession, run_dir: str) -> list[str]:
     """Idempotently bring a run dir to the current schema version:
     writes ``constraints.json`` (uniqueness keys + index manifest) and
     runs any data migrations not yet recorded. Returns the migrations
     applied this call (the reference's IF NOT EXISTS semantics —
-    already-applied versions are skipped).
-
-    ``assume_current=True`` records the whole ladder without executing
-    the data migrations — for run dirs freshly produced by current
-    code, whose tables are already at head (a new install, in the
-    reference's terms)."""
+    already-applied versions are skipped). A data migration whose
+    table is absent returns without a Spark job, so over a new run dir
+    the ladder is recorded for free."""
     state_path = Path(run_dir) / "constraints.json"
     state = (
         json.loads(state_path.read_text())
@@ -188,7 +183,7 @@ def apply_migrations(
     for name, fn in MIGRATIONS:
         if name in state["applied"]:
             continue
-        if fn is not None and not assume_current:
+        if fn is not None:
             fn(spark, run_dir)
         state["applied"].append(name)
         applied_now.append(name)

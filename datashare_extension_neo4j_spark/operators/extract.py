@@ -325,7 +325,10 @@ def parse_pages(
     ``include_text=False`` the (large) text column is dropped from the
     output, cutting Arrow transfer + downstream width by ~70%; the
     byte-identical text invariant is still exercised because mention
-    offsets are computed against the extracted text in-pass.
+    offsets are computed against the extracted text in-pass. The graph
+    build passes both False; the full output is the operator reference
+    (``annotated_mentions(parse_pages(pages))``) the tests compare
+    against.
     """
     drop = set()
     if not include_text:

@@ -2,7 +2,6 @@
 Spark-first): the graph's derivation, defined once.
 
   pages ─▶ parse ──┬─▶ docs ─▶ doc_roots (HAS_PARENT)
-                   ├─▶ mentions
                    ├─▶ appears_in
                    ├─▶ emails
                    └─▶ entities (dedup)
@@ -12,7 +11,9 @@ extraction, inline annotations, fused rule NER, and the per-document
 APPEARS_IN / SENT / RECEIVED aggregation (the key (mentionNorm,
 category, documentId) never crosses documents, so it completes inside
 the pass). Every later stage is a projection of its inputs; the only
-shuffle left is the entities dedup.
+shuffle left is the entities dedup. The parse keeps only what a later
+stage reads (no text, no raw mention array). The two options are
+``use_rule_ner`` (parse) and ``project`` (docs' ``urlSuffix``).
 
 ``STAGES`` lists (name, inputs, function); the runner, not the
 builder, decides what is materialized:
@@ -22,7 +23,7 @@ builder, decides what is materialized:
   * ``manifest.run_pipeline`` (``cli build``) hands them to
     ``manifest.run_stages``, which writes them as manifest-guarded
     parquet, each dependency wave's stages concurrently: parse | docs,
-    mentions, appears_in, emails, entities | doc_roots.
+    appears_in, emails, entities | doc_roots.
 
 Everything else that stores the graph goes through the one store
 writer, ``sinks.tables.write_tables``, which creates or MERGEs the
@@ -55,7 +56,7 @@ from .operators.documents import doc_nodes, has_parent_edges
 from .operators.edges import appears_in_from_parsed, email_edges_from_parsed
 from .operators.entities import entity_nodes
 from .operators.extract import PARSED_SCHEMA, parse_pages
-from .operators.ner import DEFAULT_GAZETTEER, annotated_mentions
+from .operators.ner import DEFAULT_GAZETTEER
 from .sources.pages import widen
 
 
@@ -66,18 +67,16 @@ class GraphBuild:
     entities: DataFrame
     appears_in: DataFrame
     emails: DataFrame
-    mentions: DataFrame | None = None
 
 
 class BuildOptions(NamedTuple):
     project: str = "test_project"
     use_rule_ner: bool = False
-    include_text: bool = True
-    emit_mentions: bool = True
 
 
-# per-document carrier columns of the parse: inputs of the mention and
-# edge stages, never part of the docs table
+# per-document carrier columns a parse has carried (today only
+# ann_edges, the input of the edge stages), never part of the docs
+# table
 CARRIERS = ("ann_mentions", "ann_edges")
 
 # digest of the parse output's schema: a stored parse written under
@@ -89,23 +88,14 @@ PARSE_LAYOUT = hashlib.sha1(PARSED_SCHEMA.json().encode()).hexdigest()[:12]
 def parse_stage(o: BuildOptions, pages: DataFrame) -> DataFrame:
     return parse_pages(
         widen(pages),
-        include_text=o.include_text,
+        include_text=False,
         ner_gazetteer=DEFAULT_GAZETTEER if o.use_rule_ner else None,
-        emit_mentions=o.emit_mentions,
+        emit_mentions=False,
     )
 
 
 def docs_stage(o: BuildOptions, parsed: DataFrame) -> DataFrame:
     return doc_nodes(parsed, project=o.project).drop(*CARRIERS)
-
-
-def mentions_stage(o: BuildOptions, parsed: DataFrame) -> DataFrame:
-    if "ann_mentions" in parsed.columns:
-        return annotated_mentions(parsed)
-    # emit_mentions=False: the raw mention stream is not carried
-    from .schemas import MENTION_SCHEMA
-
-    return parsed.sparkSession.createDataFrame([], MENTION_SCHEMA)
 
 
 def entities_stage(o: BuildOptions, parsed: DataFrame) -> DataFrame:
@@ -126,7 +116,6 @@ STAGES: tuple[Stage, ...] = (
     Stage("parse", ("pages",), parse_stage),
     Stage("docs", ("parse",), docs_stage),
     Stage("doc_roots", ("docs",), lambda o, docs: has_parent_edges(docs)),
-    Stage("mentions", ("parse",), mentions_stage),
     Stage("appears_in", ("parse",), lambda o, p: appears_in_from_parsed(p)),
     Stage("emails", ("parse",), lambda o, p: email_edges_from_parsed(p)),
     Stage("entities", ("parse",), entities_stage),
@@ -137,8 +126,6 @@ def build_graph(
     pages: DataFrame,
     project: str = "test_project",
     use_rule_ner: bool = False,
-    include_text: bool = True,
-    emit_mentions: bool = True,
     checkpoint_dir: str | None = None,
 ) -> GraphBuild:
     """Lazy runner over ``STAGES``.
@@ -148,7 +135,7 @@ def build_graph(
     Python parse: scale-correct (no JVM object cache) and GC-friendly
     — in-memory caching of nested rows is allocation-bound and
     anti-scales past ~8 threads (measured)."""
-    o = BuildOptions(project, use_rule_ner, include_text, emit_mentions)
+    o = BuildOptions(project, use_rule_ner)
     frames = {"pages": pages}
     for st in STAGES:
         df = st.fn(o, *(frames[i] for i in st.inputs))

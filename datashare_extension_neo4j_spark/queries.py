@@ -496,12 +496,7 @@ def kg_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mapInPandas node and zero edge shuffle (output proven equal to
     # the groupBy operators in tests/test_fused_equivalence.py;
     # hash-verified by the oracle)
-    g = build_graph(
-        pages_from_documents(spark, sf_dir),
-        use_rule_ner=True,
-        include_text=False,
-        emit_mentions=False,
-    )
+    g = build_graph(pages_from_documents(spark, sf_dir), use_rule_ner=True)
     return joined_arrays(g.appears_in)
 
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import tarfile
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame
@@ -225,29 +226,38 @@ def export_graph_csvs_distributed(
     a metadata.json whose nodePaths/relationshipPaths list every part —
     the reference's Neo4jCSVs shape allows multiple paths per type
     (core/objects.py:93-115) and neo4j-admin consumes them comma-joined
-    (scripts/bulk-import.sh contract). Counts come from the RECORD
-    stream, not a line re-scan: a quoted field with an embedded newline
-    spans two physical lines, so read.text would overcount."""
+    (scripts/bulk-import.sh contract). The five files are written
+    concurrently, each counted by an ``Observation`` on its one write:
+    it counts RECORDS, not lines (a quoted field with an embedded
+    newline spans two physical lines, so a read.text re-scan would
+    overcount)."""
+    from pyspark.sql import Observation
+
+    from ..manifest import run_concurrently
+
     d = Path(export_dir)
     d.mkdir(parents=True, exist_ok=True)
-    parts: dict[str, list[str]] = {}
-    counts: dict[str, int] = {}
-    for name, header, lines in _csv_specs(
-        docs, doc_roots, entities, appears_in, emails
-    ):
+
+    def export(name: str, header: str, lines: DataFrame) -> int:
         (d / f"{name}-header.csv").write_text(neo4j_header_line(header))
-        part_dir = d / name
-        lines = lines.persist()
-        try:
-            write_csv_distributed(lines, str(part_dir))
-            counts[name] = lines.count()
-        finally:
-            lines.unpersist()
-        parts[name] = sorted(
-            str(p.relative_to(d))
-            for p in part_dir.iterdir()
+        obs = Observation()
+        write_csv_distributed(
+            lines.observe(obs, F.count(F.lit(1)).alias("n")), str(d / name)
+        )
+        return obs.get["n"]
+
+    specs = _csv_specs(docs, doc_roots, entities, appears_in, emails)
+    counts = run_concurrently(
+        docs.sparkSession, {spec[0]: partial(export, *spec) for spec in specs}
+    )
+    parts = {
+        name: sorted(
+            f"{name}/{p.name}"
+            for p in (d / name).iterdir()
             if p.name.startswith("part-")
         )
+        for name in counts
+    }
     metadata = _metadata(db, parts, counts)
     (d / "metadata.json").write_text(json.dumps(metadata, indent=2))
     _write_bulk_import_script(d)

@@ -375,10 +375,8 @@ def incremental_import(
     ckpt = f"{run_dir}/_increment_ckpt_{uuid.uuid4().hex}"
     try:
         with observe() as parse:
-            # no table below reads the raw mention stream
             g = build_graph(
-                pages, project=project, use_rule_ner=True, include_text=False,
-                emit_mentions=False, checkpoint_dir=ckpt,
+                pages, project=project, use_rule_ner=True, checkpoint_dir=ckpt
             )
         # one parsed row per page, and one document per parsed row
         imported = stored_rows(f"{ckpt}/parsed")

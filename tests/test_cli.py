@@ -211,6 +211,22 @@ def test_cli_curate_and_scrub(spark, tmp_path, capsys):
     assert got[1] == "mail <EMAIL> or <IP>" and got[2] == "clean"
 
 
+def test_cli_scrub_runs_one_execution(spark, tmp_path, capsys, last_sql_execution):
+    """scrub observes its row count and per-rule totals on the one
+    write of the redacted table: one SQL execution for the command
+    (the write, a totals aggregate and a row count took 3)."""
+    docs = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, "mail a@b.co, c@d.org or 10.0.0.1"), (2, None), (3, "x")],
+        "doc_id long, text string",
+    ).write.parquet(docs)
+    before = last_sql_execution()
+    assert main(["scrub", "--docs", docs, "--out", str(tmp_path / "s")]) == 0
+    assert last_sql_execution() - before == 1
+    s = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (s["rows"], s["emails"], s["ips"], s["phones"]) == (3, 2, 1, 0)
+
+
 def test_cli_neardup_store_cycle(spark, tmp_path, capsys):
     """neardup-init then neardup-increment: dup suppressed against the
     store, survivor appended, outputs written."""

@@ -312,7 +312,8 @@ def test_manifest_stale_input_reruns(spark, tmp_path):
     run_pipeline(spark, pages_path, run_dir)
     assert spark.read.parquet(f"{run_dir}/docs").count() == 9
     m = Manifest(run_dir)
-    assert m.is_complete("parse", [pages_path], {"layout": PARSE_LAYOUT})
+    config = {"layout": PARSE_LAYOUT, "use_rule_ner": True}
+    assert m.is_complete("parse", [pages_path], config)
 
 
 def _pages_parquet(spark, tmp_path, n_docs=8):
@@ -364,7 +365,6 @@ def test_run_pipeline_failed_stage_resumes_alone(spark, tmp_path, monkeypatch):
     failed stage and the one after it, leaves the other entries as they
     were, and ends with the tables of a clean build."""
     from datashare_extension_neo4j_spark import pipeline
-    from datashare_extension_neo4j_spark.sinks.tables import TABLE_KEYS, read_table
 
     pages_path = _pages_parquet(spark, tmp_path)
     run_dir = tmp_path / "run"
@@ -376,7 +376,7 @@ def test_run_pipeline_failed_stage_resumes_alone(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="injected stage fault"):
         run_pipeline(spark, pages_path, str(run_dir))
     first = _stages(run_dir)
-    assert set(first) == {"parse", "docs", "mentions", "appears_in", "entities"}
+    assert set(first) == {"parse", "docs", "appears_in", "entities"}
     assert all(e["status"] == "complete" for e in first.values())
 
     monkeypatch.undo()
@@ -390,10 +390,60 @@ def test_run_pipeline_failed_stage_resumes_alone(spark, tmp_path, monkeypatch):
 
     clean = tmp_path / "clean"
     run_pipeline(spark, pages_path, str(clean))
+    assert _store_rows(spark, run_dir) == _store_rows(spark, clean)
 
-    def rows(root, name):
-        df = read_table(spark, str(root / name))
-        return sorted(map(str, df.select(*sorted(df.columns)).collect()))
 
+def _build(pages_path, run_dir, *options):
+    return main(["build", "--pages", pages_path, "--run-dir", str(run_dir),
+                 "--buckets", "2", *options])
+
+
+def _completed(run_dir):
+    return {name: e["completed_at"] for name, e in _stages(run_dir).items()}
+
+
+def _store_rows(spark, run_dir):
+    from datashare_extension_neo4j_spark.sinks.tables import TABLE_KEYS, read_table
+
+    out = {}
     for name in TABLE_KEYS:
-        assert rows(run_dir, name) == rows(clean, name), name
+        df = read_table(spark, str(run_dir / name))
+        out[name] = sorted(map(str, df.select(*sorted(df.columns)).collect()))
+    return out
+
+
+def test_cli_build_no_ner_is_part_of_the_parse_config(spark, tmp_path, capsys):
+    """A build with rule NER over a --no-ner run dir re-runs parse and
+    every stage after it, and stores the tables of a fresh NER build."""
+    pages_path = _pages_parquet(spark, tmp_path)
+    run_dir = tmp_path / "run"
+    assert _build(pages_path, run_dir, "--no-ner") == 0
+    before = _completed(run_dir)
+    no_ner = _store_rows(spark, run_dir)
+    assert _build(pages_path, run_dir) == 0
+    after = _completed(run_dir)
+    assert all(after[name] > before[name] for name in before)
+    assert _build(pages_path, tmp_path / "fresh") == 0
+    capsys.readouterr()
+    rows = _store_rows(spark, run_dir)
+    assert rows == _store_rows(spark, tmp_path / "fresh")
+    assert len(rows["appears_in"]) > len(no_ner["appears_in"])  # NER hits
+
+
+def test_cli_build_project_is_part_of_the_docs_config(spark, tmp_path, capsys):
+    """--project B over a --project A run dir re-runs docs and
+    doc_roots only, and the stored urlSuffix carries B."""
+    from datashare_extension_neo4j_spark.sinks.tables import read_table
+
+    pages_path = _pages_parquet(spark, tmp_path)
+    run_dir = tmp_path / "run"
+    assert _build(pages_path, run_dir, "--project", "A") == 0
+    before = _completed(run_dir)
+    assert _build(pages_path, run_dir, "--project", "B") == 0
+    capsys.readouterr()
+    after = _completed(run_dir)
+    assert {name for name in before if after[name] != before[name]} == {
+        "docs", "doc_roots",
+    }
+    suffixes = [r["urlSuffix"] for r in read_table(spark, str(run_dir / "docs")).collect()]
+    assert suffixes and all(s.startswith("ds/B/") for s in suffixes)

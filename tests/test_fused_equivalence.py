@@ -76,7 +76,7 @@ def test_fused_equals_unfused(spark):
         spark.createDataFrame([SEPARATOR_PAGE], PAGES_SCHEMA)
     )
     plain = _reference(pages)
-    fused = build_graph(pages, use_rule_ner=True, include_text=False)
+    fused = build_graph(pages, use_rule_ner=True)
     appears = _canon_appears(fused.appears_in)
     assert _canon_appears(plain.appears_in) == appears
     hostile = [v for (_, doc), v in appears.items() if doc == SEPARATOR_URL]
@@ -96,7 +96,7 @@ def test_fused_equals_unfused(spark):
 
 def test_fused_plan_has_no_edge_shuffle(spark):
     pages = reference_pages(spark, n_docs=5)
-    fused = build_graph(pages, use_rule_ner=True, include_text=False)
+    fused = build_graph(pages, use_rule_ner=True)
     plan = fused.appears_in._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 
@@ -121,10 +121,7 @@ def test_cli_build_stores_build_graph_tables(spark, tmp_path):
     run_pipeline(spark, pages_path, run_dir, use_rule_ner=True, buckets=4)
     out = str(tmp_path / "out")
     materialize_graph(
-        build_graph(
-            spark.read.parquet(pages_path), use_rule_ner=True, include_text=False
-        ),
-        out,
+        build_graph(spark.read.parquet(pages_path), use_rule_ner=True), out
     )
     built, stored = load_store(spark, out), load_store(spark, run_dir)
     for name in TABLE_KEYS:

@@ -7,6 +7,11 @@ and quotes in ids/urls)."""
 import pytest
 from pyspark.sql import functions as F
 
+from datashare_extension_neo4j_spark.operators.extract import parse_pages
+from datashare_extension_neo4j_spark.operators.ner import (
+    DEFAULT_GAZETTEER,
+    annotated_mentions,
+)
 from datashare_extension_neo4j_spark.pipeline import build_graph
 from datashare_extension_neo4j_spark.schemas import PAGES_SCHEMA
 from datashare_extension_neo4j_spark.sinks.neo4j_csv import export_graph_csvs
@@ -51,31 +56,39 @@ def hostile_graph(spark):
     yield g
 
 
+@pytest.fixture(scope="module")
+def hostile_parsed(spark):
+    """The parse operator's full output (text and raw mentions), which
+    the graph build does not keep."""
+    pages = spark.createDataFrame(HOSTILE_ROWS, PAGES_SCHEMA)
+    return parse_pages(pages, ner_gazetteer=DEFAULT_GAZETTEER)
+
+
 def test_no_crash_and_one_doc_per_page(hostile_graph):
     docs = hostile_graph.docs.collect()
     assert len(docs) == len(HOSTILE_ROWS)
 
 
-def test_pre_extracted_text_short_circuits(hostile_graph):
-    row = hostile_graph.docs.where(
+def test_pre_extracted_text_short_circuits(hostile_parsed):
+    row = hostile_parsed.where(
         F.col("id").contains("preextracted")
     ).collect()[0]
     assert row["text"] == "already extracted text"
     assert "IGNORED" not in (row["text"] or "")
 
 
-def test_script_and_style_dropped(hostile_graph):
-    row = hostile_graph.docs.where(F.col("id").contains("script")).collect()[0]
+def test_script_and_style_dropped(hostile_parsed):
+    row = hostile_parsed.where(F.col("id").contains("script")).collect()[0]
     assert row["text"] == "kept"
 
 
-def test_unicode_preserved(hostile_graph):
-    row = hostile_graph.docs.where(F.col("id").contains("unicode")).collect()[0]
+def test_unicode_preserved(hostile_parsed):
+    row = hostile_parsed.where(F.col("id").contains("unicode")).collect()[0]
     assert row["text"] == "café 北京 \U0001f600 naïve"
 
 
-def test_null_and_empty_html(hostile_graph):
-    by_id = {r["id"]: r["text"] for r in hostile_graph.docs.collect()}
+def test_null_and_empty_html(hostile_parsed):
+    by_id = {r["id"]: r["text"] for r in hostile_parsed.collect()}
     null_doc = next(v for k, v in by_id.items() if "null-html" in k)
     empty_doc = next(v for k, v in by_id.items() if "empty.test" in k)
     # null html normalizes to empty text (not a crash, not a dropped
@@ -85,18 +98,18 @@ def test_null_and_empty_html(hostile_graph):
 
 
 def test_extraction_is_deterministic(spark):
-    """Byte-identical text per url across two independent builds at
+    """Byte-identical text per url across two independent parses at
     different parallelism (the BASELINE.json hard invariant), on the
     hostile corpus specifically."""
     pages1 = spark.createDataFrame(HOSTILE_ROWS, PAGES_SCHEMA).repartition(1)
     pages8 = spark.createDataFrame(HOSTILE_ROWS, PAGES_SCHEMA).repartition(8)
     t1 = {
         r["id"]: r["text"]
-        for r in build_graph(pages1).docs.collect()
+        for r in parse_pages(pages1).collect()
     }
     t8 = {
         r["id"]: r["text"]
-        for r in build_graph(pages8).docs.collect()
+        for r in parse_pages(pages8).collect()
     }
     assert t1 == t8
 
@@ -141,8 +154,8 @@ def test_span_without_norm_is_dropped(spark):
         b"</body></html>"
     )
     rows = [("https://partial-span.test/x", None, html, None, "en")]
-    g = build_graph(spark.createDataFrame(rows, PAGES_SCHEMA))
-    norms = [r["mentionNorm"] for r in g.mentions.collect()]
+    parsed = parse_pages(spark.createDataFrame(rows, PAGES_SCHEMA))
+    norms = [r["mentionNorm"] for r in annotated_mentions(parsed).collect()]
     assert norms == ["alice"]
 
 
@@ -157,18 +170,20 @@ def test_non_integer_offsets_do_not_crash(spark):
         b"</body></html>"
     )
     rows = [("https://bad-offsets.test/x", None, html, None, "en")]
-    g = build_graph(spark.createDataFrame(rows, PAGES_SCHEMA))
-    assert [r["offsets"] for r in g.mentions.collect()] == [[12]]
+    pages = spark.createDataFrame(rows, PAGES_SCHEMA)
+    mentions = annotated_mentions(parse_pages(pages))
+    assert [r["offsets"] for r in mentions.collect()] == [[12]]
+    g = build_graph(pages)
     assert [r["offsets"] for r in g.appears_in.collect()] == [[12]]
 
 
-def test_hostile_span_metadata_is_no_header(hostile_graph):
+def test_hostile_span_metadata_is_no_header(hostile_graph, hostile_parsed):
     """A span whose data-metadata is not JSON, not an object, or holds
     a non-string emailHeaderField counts as having no header: its
     mention and APPEARS_IN edge stay, and it yields no SENT/RECEIVED
     edge instead of failing the job."""
     bad = F.col("documentId").startswith("https://bad-metadata.test/")
-    mentions = hostile_graph.mentions.where(bad).collect()
+    mentions = annotated_mentions(hostile_parsed).where(bad).collect()
     assert len(mentions) == 3
     assert all(r["metadata"] is None for r in mentions)
     edges = hostile_graph.appears_in.where(

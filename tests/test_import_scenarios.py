@@ -12,16 +12,27 @@ from datashare_extension_neo4j_spark.operators.edges import (
     email_edges,
 )
 from datashare_extension_neo4j_spark.operators.entities import entity_nodes
+from datashare_extension_neo4j_spark.operators.extract import parse_pages
 from datashare_extension_neo4j_spark.operators.ner import annotated_mentions
 from datashare_extension_neo4j_spark.pipeline import build_graph
 
 
 @pytest.fixture(scope="module")
-def corpus(spark):
+def pages(spark):
     # 20 docs + 5 noise pages, 20 mentions, 2 emails — the reference corpus
-    pages = reference_pages(spark, n_docs=20, n_noise=5)
-    g = build_graph(pages)
-    return g
+    return reference_pages(spark, n_docs=20, n_noise=5)
+
+
+@pytest.fixture(scope="module")
+def corpus(pages):
+    return build_graph(pages)
+
+
+@pytest.fixture(scope="module")
+def mentions(pages):
+    """The raw mention stream, from the operator reference (the graph
+    build aggregates mentions in-pass and keeps no mention table)."""
+    return annotated_mentions(parse_pages(pages))
 
 
 def _docs_only(g):
@@ -48,7 +59,7 @@ def test_docs_single_id(corpus):
     assert rels.count() == 0
 
 
-def test_nes_with_parent_semi_join(corpus, spark):
+def test_nes_with_parent_semi_join(mentions, spark):
     """NE import restricted to docs already in the sink (J1): with
     docs {doc-0, doc-3, doc-6, doc-9} imported, exactly 12 mentions
     survive, creating 8 entities and 8 APPEARS_IN rels
@@ -56,34 +67,34 @@ def test_nes_with_parent_semi_join(corpus, spark):
     inserted = spark.createDataFrame(
         [("doc-0",), ("doc-3",), ("doc-6",), ("doc-9",)], "documentId string"
     )
-    mentions = corpus.mentions.where(
+    kept = mentions.where(
         ~F.col("id").startswith("email-")
     ).join(F.broadcast(inserted), "documentId", "left_semi")
-    assert mentions.count() == 12
-    assert entity_nodes(mentions).count() == 8
-    assert appears_in_edges(mentions).count() == 8
+    assert kept.count() == 12
+    assert entity_nodes(kept).count() == 8
+    assert appears_in_edges(kept).count() == 8
 
 
-def test_nes_single_id(corpus):
-    m = corpus.mentions.where(F.col("id") == "named-entity-0")
+def test_nes_single_id(mentions):
+    m = mentions.where(F.col("id") == "named-entity-0")
     assert m.count() == 1
     assert entity_nodes(m).count() == 1
     assert appears_in_edges(m).count() == 1
 
 
-def test_nes_match_nothing(corpus):
-    m = corpus.mentions.where(F.col("id") == "i-dont-exist")
+def test_nes_match_nothing(mentions):
+    m = mentions.where(F.col("id") == "i-dont-exist")
     assert m.count() == 0
     assert appears_in_edges(m).count() == 0
     assert email_edges(m).count() == 0
 
 
-def test_noise_never_imported(corpus):
+def test_noise_never_imported(corpus, mentions):
     # the 5 noise pages exist as parsed rows but contribute zero
     # mentions/edges (reference: type-filter excludes noise)
     noise_docs = corpus.docs.where(~F.col("id").startswith("doc-"))
     assert noise_docs.count() == 5
-    noise_mentions = corpus.mentions.join(
+    noise_mentions = mentions.join(
         noise_docs.select(F.col("id").alias("documentId")),
         "documentId",
         "left_semi",

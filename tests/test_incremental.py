@@ -445,7 +445,7 @@ def test_merges_release_their_checkpoint_blocks(spark, tmp_path):
     )
 
     run_dir, pages_all = _store_of_first_8(spark, tmp_path)
-    g = build_graph(pages_all, use_rule_ner=True, include_text=False)
+    g = build_graph(pages_all, use_rule_ner=True)
     update = spark.createDataFrame(g.appears_in.collect(), g.appears_in.schema)
     path = f"{run_dir}/appears_in"
 

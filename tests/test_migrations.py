@@ -172,9 +172,8 @@ def test_data_migrations_preserve_bucketed_layout(spark, tmp_path):
 
 
 def test_rerun_on_existing_dir_executes_pending_migrations(spark, tmp_path):
-    """assume_current is only valid for a freshly-created run dir: a
-    re-run over an EXISTING dir whose ladder record was wiped (as an
-    old-code store would be) must execute the data migrations for
+    """A re-run over an EXISTING dir whose ladder record was wiped (as
+    an old-code store would be) must execute the data migrations for
     real, not just record them."""
     run_dir = _fresh_run(spark, tmp_path, n_docs=6)
     # corrupt: inject a self-parent edge and wipe the applied record
@@ -193,6 +192,56 @@ def test_rerun_on_existing_dir_executes_pending_migrations(spark, tmp_path):
     pages_path = str(tmp_path / "pages")
     run_pipeline(spark, pages_path, run_dir)
     assert spark.read.parquet(roots_path).where("src = dst").count() == 0
+
+
+def test_failed_fresh_build_resumes_without_migrations(
+    spark, tmp_path, monkeypatch
+):
+    """A fresh build that fails mid-wave has written manifest.json, yet
+    its resume executes no data migration: the ladder was recorded
+    before the first wave, so the tables this code wrote are left as
+    their stages wrote them."""
+    from datashare_extension_neo4j_spark import migrations, pipeline
+
+    pages_path = str(tmp_path / "pages")
+    reference_pages(spark, n_docs=6).write.parquet(pages_path)
+    run_dir = tmp_path / "run"
+
+    def boom(parsed):
+        raise RuntimeError("injected stage fault")
+
+    monkeypatch.setattr(pipeline, "email_edges_from_parsed", boom)
+    with pytest.raises(RuntimeError, match="injected stage fault"):
+        run_pipeline(spark, pages_path, str(run_dir))
+    monkeypatch.undo()
+
+    def files(name):
+        return {
+            str(p.relative_to(run_dir)): p.stat().st_mtime_ns
+            for p in (run_dir / name).rglob("*.parquet")
+        }
+
+    ran = []
+
+    def spy(name, fn):
+        def run(*args):
+            ran.append(name)
+            return fn(*args)
+
+        return run
+
+    monkeypatch.setattr(migrations, "MIGRATIONS", [
+        (name, fn and spy(name, fn)) for name, fn in migrations.MIGRATIONS
+    ])
+    appears_in = files("appears_in")
+    run_pipeline(spark, pages_path, str(run_dir))
+    assert ran == []
+    assert files("appears_in") == appears_in
+    # doc_roots (after the failed wave) holds the files its stage wrote
+    stages = json.loads((run_dir / "manifest.json").read_text())["stages"]
+    assert sorted(Path(f).name for f in files("doc_roots")) == sorted(
+        e["file"] for e in stages["doc_roots"]["partitions"]
+    )
 
 
 def test_verify_constraints_rejects_missing_key_column(spark, tmp_path):

@@ -93,7 +93,10 @@ def test_cli_build_records_metrics_per_stage(spark, tmp_path, capsys):
             "--buckets", "2"]
     assert main(args) == 0
     first = json.loads((run_dir / "manifest.json").read_text())["stages"]
-    assert set(first) == {"parse", "mentions", *TABLE_KEYS}
+    assert set(first) == {"parse", *TABLE_KEYS}
+    # the stored parse keeps only what a later stage reads
+    parsed = spark.read.parquet(str(run_dir / "parsed")).columns
+    assert not {"text", "ann_mentions"} & set(parsed)
     for name, e in first.items():
         m = e["metrics"]
         assert m["jobs"] and m["executions"], name

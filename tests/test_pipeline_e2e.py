@@ -11,6 +11,8 @@ import pytest
 
 from datashare_extension_neo4j_spark.fixtures import reference_pages
 from datashare_extension_neo4j_spark.functions.hashing import make_entity_id
+from datashare_extension_neo4j_spark.operators.extract import parse_pages
+from datashare_extension_neo4j_spark.operators.ner import annotated_mentions
 from datashare_extension_neo4j_spark.pipeline import build_graph
 from datashare_extension_neo4j_spark.sinks.neo4j_csv import export_graph_csvs
 
@@ -47,13 +49,15 @@ def test_has_parent_edges(graph):
     assert edges == expected  # 19 edges, no self-loop for doc-0
 
 
-def test_extracted_text_byte_identical(graph, spark):
-    # the per-row invariant: re-running extraction yields identical bytes
-    t1 = {r["id"]: r["text"] for r in graph.docs.select("id", "text").collect()}
-    pages = reference_pages(spark, n_docs=N_DOCS, n_noise=5)
-    g2 = build_graph(pages)
-    t2 = {r["id"]: r["text"] for r in g2.docs.select("id", "text").collect()}
-    assert t1 == t2
+def test_extracted_text_byte_identical(spark):
+    # the per-row invariant: re-running extraction yields identical
+    # bytes (the parse operator owns the text; the graph stores none)
+    def text():
+        pages = reference_pages(spark, n_docs=N_DOCS, n_noise=5)
+        return {r["id"]: r["text"] for r in parse_pages(pages).collect()}
+
+    t1 = text()
+    assert t1 == text()
     assert all(isinstance(v, str) and v for v in t1.values())
 
 
@@ -161,13 +165,15 @@ def test_csv_export_bytes(graph, tmp_path):
             assert len(row) == 12
 
 
-def test_noise_pages_do_not_leak(graph):
+def test_noise_pages_do_not_leak(graph, spark):
     ids = [r["id"] for r in graph.docs.select("id").collect()]
     # noise pages parse (id = url) but carry no mentions/edges
     noise_ids = [i for i in ids if not i.startswith("doc-")]
     assert len(noise_ids) == 5
-    m = graph.mentions.where(~graph.mentions.documentId.startswith("doc-")).count()
-    assert m == 0
+    pages = reference_pages(spark, n_docs=N_DOCS, n_noise=5)
+    mentions = annotated_mentions(parse_pages(pages))
+    assert mentions.where(~mentions.documentId.startswith("doc-")).count() == 0
+    assert graph.appears_in.where(~graph.appears_in.endId.startswith("doc-")).count() == 0
 
 
 def test_distributed_export_matches_single(graph, tmp_path):
@@ -225,3 +231,31 @@ def test_distributed_export_matches_single(graph, tmp_path):
     assert "neo4j-admin database import full" in out
     for p in meta["nodes"][0]["nodePaths"]:
         assert p in out
+
+
+def test_distributed_export_writes_each_file_once(
+    spark, graph, tmp_path, last_sql_execution
+):
+    """Each file's count is observed on its one write: five SQL
+    executions for the package (a write then a count per file took 10),
+    and no RDD is left persisted."""
+    from datashare_extension_neo4j_spark.operators.graph_algos import (
+        _persistent_rdd_ids,
+    )
+    from datashare_extension_neo4j_spark.sinks.neo4j_csv import (
+        export_graph_csvs_distributed,
+    )
+
+    persisted = _persistent_rdd_ids(spark)
+    before = last_sql_execution()
+    meta = export_graph_csvs_distributed(
+        docs=graph.docs, doc_roots=graph.doc_roots, entities=graph.entities,
+        appears_in=graph.appears_in, emails=graph.emails,
+        export_dir=tmp_path / "multi",
+    )
+    assert last_sql_execution() - before == 5
+    assert _persistent_rdd_ids(spark) == persisted
+    assert [n["nNodes"] for n in meta["nodes"]] == [N_DOCS + 5, graph.entities.count()]
+    assert [r["nRelationships"] for r in meta["relationships"]] == [
+        graph.doc_roots.count(), graph.appears_in.count(), graph.emails.count(),
+    ]

@@ -61,12 +61,3 @@ def test_triple_precision_recall(spark):
     assert precision >= 0.95, (precision, sorted(got - gold)[:5])
     assert recall >= 0.95, (recall, sorted(gold - got)[:5])
 
-
-def test_triple_pr_fused_path(spark):
-    gold = golden_triples()
-    pages = reference_pages(spark, n_docs=N, n_noise=5)
-    g = build_graph(pages, include_text=False)
-    got = emitted_triples(g)
-    tp = len(gold & got)
-    assert tp / len(got) >= 0.95
-    assert tp / len(gold) >= 0.95

@@ -54,9 +54,7 @@ shutil.rmtree("/tmp/_scaling_out", ignore_errors=True)
 # two phases, each one observe record: parse + checkpoint write, then
 # the five table writes
 with observe() as parse:
-    g = build_graph(pages, use_rule_ner=True, include_text=False,
-                    emit_mentions=False,
-                    checkpoint_dir="/tmp/_scaling_ck")
+    g = build_graph(pages, use_rule_ner=True, checkpoint_dir="/tmp/_scaling_ck")
 with observe() as materialize:
     materialize_graph(g, "/tmp/_scaling_out")
 elapsed = parse["wall_s"] + materialize["wall_s"]
