@@ -120,11 +120,12 @@ def cmd_dump(args) -> int:
     tables: GraphTables = to_property_graph(load_store(spark, args.run_dir))
     query = json.loads(args.query) if args.query else None
     nodes, edges = compile_dump_query(tables, query, default_limit=args.limit)
-    with open(args.output, "w") as f:
-        if args.format == "graphml":
-            n = dump_graphml(nodes, edges, f)
-        else:
-            n = dump_cypher(nodes, edges, f)
+    write = dump_graphml if args.format == "graphml" else dump_cypher
+    # each side is bounded by --limit: read it whole, in one job, before
+    # opening the output, so a failed read leaves the old file intact
+    rows = nodes.collect(), edges.collect()
+    with open(args.output, "w", encoding="utf-8") as f:
+        n = write(*rows, f)
     print(json.dumps({"elements": n, "path": args.output}))
     return 0
 
@@ -495,8 +496,11 @@ def cmd_weblinks(args) -> int:
                 F.lit("nPages"), F.col("nPages").cast("string"),
             ).alias("props"),
         )
-        with open(args.graphml, "w") as fh:
-            summary["graphml_elements"] = dump_graphml(nodes, edges, fh)
+        # the host graph is not bounded: stream it partition by partition
+        with open(args.graphml, "w", encoding="utf-8") as fh:
+            summary["graphml_elements"] = dump_graphml(
+                nodes.toLocalIterator(), edges.toLocalIterator(), fh
+            )
     print(json.dumps(summary, sort_keys=True))
     return 0
 

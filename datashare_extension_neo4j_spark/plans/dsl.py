@@ -24,8 +24,8 @@ into the nodes scan, join order is cost-based, the final limit is a
 CollectLimit.
 
 compile_dump_query runs one job, bounded by ``limit``: it collects the
-query's distinct doc ids to the driver and semi-joins the subgraph
-against them as a local frame.
+query's distinct doc ids to the driver; the subgraph around them is one
+edge filter and one broadcast node semi-join, with no shuffle.
 """
 
 from __future__ import annotations
@@ -313,6 +313,13 @@ def compile_query(
 DUMP_EDGE_TYPES = ["APPEARS_IN", "SENT", "RECEIVED"]
 
 
+def _sql_string(v: str) -> str:
+    """A Spark SQL string literal. The dump's ids go into one parsed
+    expression: ``Column.isin`` makes one gateway call per value
+    (seconds at the 10k default limit)."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def compile_dump_query(
     g: GraphTables,
     dump: dict | None,
@@ -322,9 +329,9 @@ def compile_dump_query(
     exactly one user query (or the default doc query ordered by path),
     auto-extended with the optional match
     (doc)-[rel:APPEARS_IN|SENT|RECEIVED]-(ne:NamedEntity); returns the
-    de-duplicated (nodes, edges) DataFrames of the subgraph. Runs one
-    job, for the ≤ ``limit`` doc ids; the frames it returns are lazy
-    semi-joins against them and never re-run the query."""
+    (nodes, edges) DataFrames of the subgraph, each row once. Runs one
+    job, for the ≤ ``limit`` doc ids; the frames it returns hold them as
+    literals and never re-run the query (no job at all if none matched)."""
     queries = (dump or {}).get("queries") or []
     if len(queries) > 1:
         # reference message, Objects.java DumpQuery.asValidated
@@ -352,31 +359,21 @@ def compile_dump_query(
         # first node has nothing to attach entities to
         raise DSLError("dump query's first node must be named")
     docs = compile_query(g, q, default_limit=default_limit)
-    doc_ids = docs.select(
-        F.col(f"{doc_var}.node_id").alias("node_id")
-    ).distinct()
-    # materialized once (≤ limit rows), so both sides below semi-join a
-    # local relation instead of each re-running the compiled join
-    doc_ids = docs.sparkSession.createDataFrame(
-        doc_ids.collect(), doc_ids.schema
+    ids = docs.select(F.col(f"{doc_var}.node_id")).distinct().collect()
+    # a leading OPTIONAL MATCH that matched nothing gives a null id
+    lits = ", ".join(_sql_string(r[0]) for r in ids if r[0] is not None)
+    if not lits:
+        return g.nodes.limit(0), g.edges.limit(0)
+    # one filter, no join: an edge between two dumped docs passes once,
+    # and the stored edges are unique on (src, dst, type)
+    # (sinks.tables.TABLE_KEYS), so nothing needs a dedup or a shuffle
+    edges = g.edges.where(
+        F.col("type").isin(*DUMP_EDGE_TYPES)
+        & F.expr(f"src IN ({lits}) OR dst IN ({lits})")
     )
-    rels = g.edges.where(F.col("type").isin(*DUMP_EDGE_TYPES))
-    # undirected attachment: either endpoint is a dumped doc. Two
-    # hash-joinable equi semi-joins unioned — an OR join condition
-    # can't hash-partition and degenerates to a nested-loop join over
-    # the whole edge table (O(E·D) at scale); the final
-    # dropDuplicates removes edges whose BOTH endpoints are docs.
-    sub_edges = rels.join(
-        doc_ids, rels.src == doc_ids.node_id, "left_semi"
-    ).unionByName(
-        rels.join(doc_ids, rels.dst == doc_ids.node_id, "left_semi")
-    )
-    ne_ids = (
-        sub_edges.select(F.col("src").alias("node_id"))
-        .unionByName(sub_edges.select(F.col("dst").alias("node_id")))
-        .distinct()
-    )
-    all_ids = doc_ids.unionByName(ne_ids).distinct()
-    sub_nodes = g.nodes.join(all_ids, "node_id", "left_semi")
-    # map-typed props can't go through set ops — dedup on the edge key
-    return sub_nodes, sub_edges.dropDuplicates(["src", "dst", "type"])
+    # the docs and their edges' endpoints, broadcast to one semi join,
+    # which keeps each node once
+    keep = g.nodes.sparkSession.range(1).select(
+        F.expr(f"explode(array({lits}))").alias("node_id")
+    ).unionByName(edges.select(F.explode(F.array("src", "dst")).alias("node_id")))
+    return g.nodes.join(F.broadcast(keep), "node_id", "left_semi"), edges

@@ -7,7 +7,8 @@ observed property (+ node ``labels``, edge ``label``/``TYPE``), nodes
 carrying ``labels`` data, edges carrying source/target/label; cypher
 dump as :begin/CREATE/:commit batches.
 
-Each side is evaluated once, streamed through ``toLocalIterator``.
+The writers read each side's rows once; the caller passes ``collect()``
+(a bounded dump, one job) or ``toLocalIterator()`` (an unbounded one).
 The GraphML header declares every property key, known only after the
 last element, so the element lines are spooled to a temporary file (in
 memory up to ``_SPOOL_MAX`` characters, on disk past it) while the key
@@ -22,7 +23,7 @@ import tempfile
 from typing import Iterable, TextIO
 from xml.sax.saxutils import escape, quoteattr
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Row
 
 _GRAPHML_OPEN = (
     '<?xml version="1.0" encoding="UTF-8"?>\n'
@@ -45,12 +46,12 @@ def _graphml_data(props: dict | None, keys: set[str]) -> str:
     )
 
 
-def dump_graphml(nodes: DataFrame, edges: DataFrame, out: TextIO) -> int:
+def dump_graphml(nodes: Iterable[Row], edges: Iterable[Row], out: TextIO) -> int:
     """Write GraphML; returns element count."""
     keys: dict[str, set[str]] = {"node": set(), "edge": set()}
     n = 0
     with tempfile.SpooledTemporaryFile(_SPOOL_MAX, "w+", encoding="utf-8") as body:
-        for row in nodes.toLocalIterator():
+        for row in nodes:
             labels = ":" + ":".join(row["labels"])
             body.write(
                 f'<node id={quoteattr(str(row["node_id"]))} labels={quoteattr(labels)}>'
@@ -58,7 +59,7 @@ def dump_graphml(nodes: DataFrame, edges: DataFrame, out: TextIO) -> int:
                 f'{_graphml_data(row["props"], keys["node"])}</node>\n'
             )
             n += 1
-        for i, row in enumerate(edges.toLocalIterator()):
+        for i, row in enumerate(edges):
             body.write(
                 f'<edge id="e{i}" source={quoteattr(str(row["src"]))}'
                 f' target={quoteattr(str(row["dst"]))} label={quoteattr(row["type"])}>'
@@ -103,7 +104,7 @@ def _cypher_props(props: dict | None, extra: dict | None = None) -> str:
 
 
 def dump_cypher(
-    nodes: DataFrame, edges: DataFrame, out: TextIO, batch_size: int = 1000
+    nodes: Iterable[Row], edges: Iterable[Row], out: TextIO, batch_size: int = 1000
 ) -> int:
     """cypher-shell format: :begin / CREATE …; / :commit batches
     (export batch default 1000, reference config.py:67)."""
@@ -123,7 +124,7 @@ def dump_cypher(
         return count
 
     def node_stmts():
-        for row in nodes.toLocalIterator():
+        for row in nodes:
             labels = ":".join(_cy_ident(l) for l in row["labels"])
             props = _cypher_props(row["props"], {"_id": row["node_id"]})
             yield f"CREATE (:{labels}{props});"
@@ -131,7 +132,7 @@ def dump_cypher(
     def edge_stmts():
         # node ids default to page urls — apostrophes/backslashes are
         # legal there, so interpolation must escape like any value
-        for row in edges.toLocalIterator():
+        for row in edges:
             props = _cypher_props(row["props"])
             yield (
                 "MATCH (a {_id:%s}), (b {_id:%s}) CREATE (a)-[:%s%s]->(b);"

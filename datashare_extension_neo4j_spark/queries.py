@@ -831,8 +831,10 @@ def dedup_minhash_pairs(
     # vs sz/shh), the canonical plans diverge, and ReuseExchange never
     # fires (the kg_entity_linking finding; measured: the repartition
     # variant re-scans the corpus once per consumer). The checkpoint
-    # stores ~0.5 KB/doc of hashes — storage-bounded like the other
-    # checkpointed vocab tables, released with the DataFrame.
+    # stores ~0.5 KB/doc of hashes. Its blocks stay on the executors
+    # until the JVM garbage-collects the checkpointed RDD, and losing an
+    # executor fails the job (a local checkpoint cannot be recomputed);
+    # ROADMAP item 3 replaces it with one checkpoint scope.
     per = with_bands(
         arrays.select(
             "doc_id",

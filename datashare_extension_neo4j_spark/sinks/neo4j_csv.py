@@ -163,7 +163,7 @@ def write_csv_distributed(lines: DataFrame, path: str) -> None:
 def _write_single(lines: DataFrame, path: Path, sort: bool = True) -> int:
     n = 0
     it = lines.sort("line").toLocalIterator() if sort else lines.toLocalIterator()
-    with path.open("w", newline="") as f:
+    with path.open("w", newline="", encoding="utf-8") as f:
         for row in it:
             f.write(row["line"])
             f.write("\n")

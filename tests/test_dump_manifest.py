@@ -44,7 +44,7 @@ def small_graph(spark):
 
 def test_graphml_structure(small_graph):
     buf = io.StringIO()
-    dump_graphml(small_graph.nodes, small_graph.edges, buf)
+    dump_graphml(small_graph.nodes.collect(), small_graph.edges.collect(), buf)
     root = ET.fromstring(buf.getvalue())
     keys = root.findall("key", namespaces=NS)
     key_ids = {(k.get("id"), k.get("for")) for k in keys}
@@ -62,13 +62,18 @@ def test_graphml_structure(small_graph):
 
 
 def test_graphml_evaluates_each_side_once(small_graph, last_sql_execution):
-    """One SQL execution per side: the key declarations come from the
-    same pass that writes the elements, not a second evaluation."""
+    """One SQL execution per side, and none in the writer: the key
+    declarations come from the same pass over each side's rows that
+    writes the elements (one-shot iterators would come out empty on a
+    second pass)."""
     nodes, edges = compile_dump_query(small_graph, None)
     buf = io.StringIO()
     before = last_sql_execution()
-    assert dump_graphml(nodes, edges, buf) == 3
+    node_rows, edge_rows = nodes.collect(), edges.collect()
     assert last_sql_execution() - before == 2
+    assert dump_graphml(iter(node_rows), iter(edge_rows), buf) == 3
+    assert last_sql_execution() - before == 2
+    assert ("mentionNorm", "node") in _graphml_keys(ET.fromstring(buf.getvalue()))
 
 
 def _graphml_keys(root) -> set[tuple[str, str]]:
@@ -86,7 +91,7 @@ def test_graphml_dump_of_no_document(small_graph):
     ]}}]}
     nodes, edges = compile_dump_query(small_graph, {"queries": [q]})
     buf = io.StringIO()
-    assert dump_graphml(nodes, edges, buf) == 0
+    assert dump_graphml(nodes.collect(), edges.collect(), buf) == 0
     root = ET.fromstring(buf.getvalue())
     assert _graphml_keys(root) == FIXED_KEYS
     assert root.findall("graph/*", namespaces=NS) == []
@@ -104,7 +109,7 @@ def test_graphml_keys_of_null_props(spark):
         EDGES_DDL,
     )
     buf = io.StringIO()
-    assert dump_graphml(nodes, edges, buf) == 4
+    assert dump_graphml(nodes.collect(), edges.collect(), buf) == 4
     root = ET.fromstring(buf.getvalue())
     assert _graphml_keys(root) == FIXED_KEYS | {
         ("id", "node"), ("gone", "node"), ("w", "edge")
@@ -128,11 +133,12 @@ def test_graphml_body_spilled_to_disk(spark, monkeypatch):
         [("n0", "n1", "HAS_PARENT", None)],
         EDGES_DDL,
     )
+    rows = nodes.collect(), edges.collect()
     in_memory = io.StringIO()
-    dump_graphml(nodes, edges, in_memory)
+    dump_graphml(*rows, in_memory)
     monkeypatch.setattr(dump, "_SPOOL_MAX", 64)
     spilled = io.StringIO()
-    assert dump_graphml(nodes, edges, spilled) == 21
+    assert dump_graphml(*rows, spilled) == 21
     assert spilled.getvalue() == in_memory.getvalue()
 
 
@@ -193,7 +199,7 @@ def test_cli_dump_limit_one(spark, built_store, tmp_path):
 
 def test_cypher_dump(small_graph):
     buf = io.StringIO()
-    n = dump_cypher(small_graph.nodes, small_graph.edges, buf)
+    n = dump_cypher(small_graph.nodes.collect(), small_graph.edges.collect(), buf)
     text = buf.getvalue()
     assert n == 3
     assert "CREATE (:`Document` {`_id`: 'doc-id', `id`: 'doc-id'});" in text

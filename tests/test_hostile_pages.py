@@ -212,7 +212,7 @@ def test_cypher_dump_escapes_hostile_ids(spark, tmp_path):
         "src string, dst string, type string, props map<string,string>",
     )
     buf = io.StringIO()
-    dump_cypher(nodes, edges, buf)
+    dump_cypher(nodes.collect(), edges.collect(), buf)
     text = buf.getvalue()
     assert "CREATE (:`Document` {`_id`: 'http://x/o\\'brien'" in text
     assert "MATCH (a {_id:'http://x/o\\'brien'})" in text
@@ -236,7 +236,7 @@ def test_graphml_dump_escapes_hostile_keys(spark):
         "src string, dst string, type string, props map<string,string>",
     )
     buf = io.StringIO()
-    dump_graphml(nodes, edges, buf)
+    dump_graphml(nodes.collect(), edges.collect(), buf)
     # well-formed XML despite hostile key/value/id characters
     root = ElementTree.fromstring(buf.getvalue())
     assert root is not None
