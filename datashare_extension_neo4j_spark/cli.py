@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -389,7 +390,7 @@ def _run_bundle(spark, args, stages) -> tuple[dict, dict]:
     entries and the summary: each table's footer row count, the
     released blocks and the output dir."""
     from .manifest import run_stages
-    from .operators.graph_algos import release_long_lived_checkpoints
+    from .checkpoints import release_long_lived_checkpoints
 
     done = run_stages(
         spark, args.out, stages,
@@ -496,11 +497,18 @@ def cmd_weblinks(args) -> int:
                 F.lit("nPages"), F.col("nPages").cast("string"),
             ).alias("props"),
         )
-        # the host graph is not bounded: stream it partition by partition
-        with open(args.graphml, "w", encoding="utf-8") as fh:
-            summary["graphml_elements"] = dump_graphml(
-                nodes.toLocalIterator(), edges.toLocalIterator(), fh
-            )
+        # the host graph is not bounded: stream it into a sibling file,
+        # then rename, so a failed read leaves the previous file whole
+        tmp = f"{args.graphml}.tmp"
+        try:
+            with open(tmp, "w", encoding="utf-8") as fh:
+                summary["graphml_elements"] = dump_graphml(
+                    nodes.toLocalIterator(), edges.toLocalIterator(), fh
+                )
+            os.replace(tmp, args.graphml)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
     print(json.dumps(summary, sort_keys=True))
     return 0
 

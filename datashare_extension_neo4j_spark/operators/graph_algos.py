@@ -16,103 +16,17 @@ iterations.
 
 from __future__ import annotations
 
-import threading
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _persistent_rdd_ids(spark: SparkSession) -> set[int] | None:
-    """ids of currently persisted RDDs (None if the JVM bridge is
-    unavailable, e.g. Spark Connect — rotation degrades to a no-op)."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(i) for i in jmap.keySet().toArray()}
-    except Exception:  # pragma: no cover - connect/remote sessions
-        return None
+from ..checkpoints import Checkpoints, checkpoints
 
 
-_CKPT_LOCK = threading.Lock()
-
-
-def _eager_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """``localCheckpoint`` (eager) plus the ids of the RDD blocks it
-    persisted, so the caller can release them once the NEXT round's
-    checkpoint has materialized. DataFrame.unpersist() can't do this:
-    localCheckpoint persists at the RDD level, below the SQL cache
-    manager.
-
-    The persisted id is read DIRECTLY off the checkpointed Dataset's
-    plan (``LogicalRDD.rdd.id`` — the exact RDD ``localCheckpoint``
-    persisted), so attribution needs no lock and no persistent-map
-    snapshot-diff at all: concurrent iterative loops can checkpoint
-    simultaneously without claiming each other's blocks, and nothing
-    serializes on a slow materialization. (The earlier lazy-mark +
-    diff approach was defeated by AQE anyway: ``physicalPlan.execute``
-    materializes every shuffle stage synchronously inside the
-    ``localCheckpoint`` call, so the diff window held the lock for the
-    bulk of the job.) Falls back to empty ids (rotation becomes a
-    no-op) where the JVM plan is unreachable, e.g. Spark Connect."""
-    out = df.localCheckpoint()  # eager: one execution, no extra count
-    try:
-        ids = {int(out._jdf.queryExecution().analyzed().rdd().id())}
-    except Exception:  # pragma: no cover - connect/remote sessions
-        ids = set()
-    return out, ids
-
-
-_LONG_LIVED_CKPT_IDS: dict[str, set[int]] = {}
-
-
-def _register_long_lived(spark: SparkSession, ids: set[int]) -> None:
-    """Record checkpoint-block ids that intentionally outlive their
-    creating function (e.g. a checkpointed kernel output backing a
-    returned DataFrame) so a long-lived driver can reclaim executor
-    storage later via :func:`release_long_lived_checkpoints` instead
-    of accumulating blocks until session end."""
-    if not ids:
-        return
-    key = spark.sparkContext.applicationId
-    with _CKPT_LOCK:
-        _LONG_LIVED_CKPT_IDS.setdefault(key, set()).update(ids)
-
-
-def release_long_lived_checkpoints(spark: SparkSession) -> int:
-    """Unpersist every registered long-lived checkpoint block for this
-    session and return how many RDD ids were released. Local
-    checkpoints truncate lineage, so DataFrames backed by the released
-    blocks must NOT be used afterwards — call this once the results of
-    checkpoint-backed queries (e.g. ``media_embed_neardup``) have been
-    fully consumed."""
-    key = spark.sparkContext.applicationId
-    with _CKPT_LOCK:
-        ids = _LONG_LIVED_CKPT_IDS.pop(key, set())
-    _unpersist_rdd_ids(spark, ids)
-    return len(ids)
-
-
-def _unpersist_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
-    """Release checkpoint blocks by RDD id (non-blocking). Without
-    this, iterative loops accumulate one checkpointed copy of the
-    state per round — linear executor-storage growth in iterations."""
-    if not ids:
-        return
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in ids:
-            if jmap.containsKey(rid):
-                jmap.get(rid).unpersist(False)
-    except Exception:  # pragma: no cover - connect/remote sessions
-        pass
-
-
-def _symmetrize(edges: DataFrame, src: str, dst: str) -> tuple[DataFrame, set[int]]:
+def _symmetrize(ck: Checkpoints, edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected (a, b) edge list — each input edge in both
-    directions, deduped, MATERIALIZED (localCheckpoint) so iterative
-    consumers never re-execute the upstream pipeline per round.
-    Returns the frame plus its checkpoint-block ids for release at
-    loop exit."""
-    return _eager_checkpoint(
+    directions, deduped, MATERIALIZED (pinned in ``ck``) so iterative
+    consumers never re-execute the upstream pipeline per round."""
+    return ck.pin(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(
             edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
@@ -135,67 +49,59 @@ def connected_components(
     # every loop round below joins against ``sym`` twice plus a
     # convergence count — without this checkpoint each of the
     # O(log diameter) rounds would re-execute the full upstream plan.
-    spark = edges.sparkSession
-    sym, sym_ids = _symmetrize(edges, src, dst)
-    comp, comp_ids = _eager_checkpoint(
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(comp, sym.b == comp.node)
-            .groupBy("a")
-            .agg(F.min("comp").alias("nbr_comp"))
+    with checkpoints(edges.sparkSession) as ck:
+        sym = _symmetrize(ck, edges, src, dst)
+        comp = ck.pin(
+            sym.select(F.col("a").alias("node"))
+            .distinct()
+            .withColumn("comp", F.col("node"))
         )
-        stepped = comp.join(nbr_min, comp.node == nbr_min.a, "left").select(
-            "node",
-            F.least(
-                F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
-            ).alias("comp"),
-        )
-        # pointer jump (path halving): label ← label's label. Collapses
-        # label chains geometrically → O(log diameter) total rounds.
-        lbl = stepped.select(
-            F.col("node").alias("_lnode"), F.col("comp").alias("_lcomp")
-        )
-        # truncate lineage each round; the PRIOR round's checkpoint
-        # blocks are released right after the convergence check (the
-        # last consumer of the old frame) — storage stays O(1) in
-        # rounds instead of accumulating one state copy per round
-        new_comp, new_ids = _eager_checkpoint(
-            stepped.join(lbl, stepped.comp == lbl._lnode, "left").select(
+        for _ in range(max_iter):
+            nbr_min = (
+                sym.join(comp, sym.b == comp.node)
+                .groupBy("a")
+                .agg(F.min("comp").alias("nbr_comp"))
+            )
+            stepped = comp.join(nbr_min, comp.node == nbr_min.a, "left").select(
                 "node",
                 F.least(
-                    F.col("comp"), F.coalesce("_lcomp", F.col("comp"))
+                    F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
                 ).alias("comp"),
             )
+            # pointer jump (path halving): label ← label's label. Collapses
+            # label chains geometrically → O(log diameter) total rounds.
+            lbl = stepped.select(
+                F.col("node").alias("_lnode"), F.col("comp").alias("_lcomp")
+            )
+            # truncate lineage each round; the PRIOR round's checkpoint
+            # is released right after the convergence check (the last
+            # consumer of the old frame) — storage stays O(1) in rounds
+            old, comp = comp, ck.pin(
+                stepped.join(lbl, stepped.comp == lbl._lnode, "left").select(
+                    "node",
+                    F.least(
+                        F.col("comp"), F.coalesce("_lcomp", F.col("comp"))
+                    ).alias("comp"),
+                )
+            )
+            changed = (
+                comp.alias("n")
+                .join(old.alias("o"), "node")
+                .where(F.col("n.comp") != F.col("o.comp"))
+                .count()
+            )
+            ck.release(old)
+            if changed == 0:
+                return ck.keep(comp)
+        # exhausting the bound without convergence means labels are WRONG
+        # (hash-min moves the min one hop per round; diameter > max_iter
+        # leaves tail nodes mislabeled) — fail loudly, never return them
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds "
+            "(graph diameter exceeds the bound); raise max_iter or use a "
+            "round-doubling variant (large-star/small-star) for "
+            "long-chain graphs"
         )
-        changed = (
-            new_comp.alias("n")
-            .join(comp.alias("o"), "node")
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        _unpersist_rdd_ids(spark, comp_ids)
-        comp, comp_ids = new_comp, new_ids
-        if changed == 0:
-            _unpersist_rdd_ids(spark, sym_ids)
-            return comp
-    # exhausting the bound without convergence means labels are WRONG
-    # (hash-min moves the min one hop per round; diameter > max_iter
-    # leaves tail nodes mislabeled) — fail loudly, never return them.
-    # Release the loop's checkpoint blocks first: a caller that
-    # catches and retries with a bigger bound must not accumulate
-    # orphaned executor storage per attempt.
-    _unpersist_rdd_ids(spark, comp_ids)
-    _unpersist_rdd_ids(spark, sym_ids)
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        "(graph diameter exceeds the bound); raise max_iter or use a "
-        "round-doubling variant (large-star/small-star) for "
-        "long-chain graphs"
-    )
 
 
 def pagerank(
@@ -221,42 +127,34 @@ def pagerank(
     CC rounds; edges are checkpointed ONCE, ranks localCheckpointed
     per round so plans don't grow.
     """
-    spark = edges.sparkSession
-    sym, sym_ids = _symmetrize(edges, src, dst)
-    deg = sym.groupBy("a").agg(F.count("*").cast("long").alias("deg"))
-    nodes = deg.select(F.col("a").alias("node"), "deg")
-    ranks, rank_ids = _eager_checkpoint(
-        nodes.select("node", "deg", F.lit(1.0).alias("rank"))
-    )
-    for _ in range(iterations):
-        contrib = (
-            ranks.select(F.col("node").alias("a"), (F.col("rank") / F.col("deg")).alias("c"))
-            .join(sym, "a")
-            .groupBy(F.col("b").alias("node"))
-            .agg(F.sum("c").alias("inflow"))
-        )
-        # the new checkpoint materializes eagerly (it consumed the old
-        # ranks), so the old round's blocks can be released at once —
-        # executor storage stays at one ranks copy, not `iterations`
-        ranks, new_ids = _eager_checkpoint(
-            nodes.join(contrib, "node", "left").select(
-                "node",
-                "deg",
-                F.round(
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
-                    digits,
-                ).alias("rank"),
+    with checkpoints(edges.sparkSession) as ck:
+        sym = _symmetrize(ck, edges, src, dst)
+        deg = sym.groupBy("a").agg(F.count("*").cast("long").alias("deg"))
+        nodes = deg.select(F.col("a").alias("node"), "deg")
+        ranks = ck.pin(nodes.select("node", "deg", F.lit(1.0).alias("rank")))
+        for _ in range(iterations):
+            contrib = (
+                ranks.select(F.col("node").alias("a"), (F.col("rank") / F.col("deg")).alias("c"))
+                .join(sym, "a")
+                .groupBy(F.col("b").alias("node"))
+                .agg(F.sum("c").alias("inflow"))
             )
-        )
-        _unpersist_rdd_ids(spark, rank_ids)
-        rank_ids = new_ids
-    _unpersist_rdd_ids(spark, sym_ids)
-    # the final ranks checkpoint backs the returned DataFrame — make
-    # it reclaimable by long-lived drivers via
-    # release_long_lived_checkpoints once consumed
-    _register_long_lived(spark, rank_ids)
-    return ranks.select("node", "rank")
+            # the new checkpoint materializes eagerly (it consumed the old
+            # ranks), so the old round's blocks can be released at once —
+            # executor storage stays at one ranks copy, not `iterations`
+            old, ranks = ranks, ck.pin(
+                nodes.join(contrib, "node", "left").select(
+                    "node",
+                    "deg",
+                    F.round(
+                        F.lit(1.0 - damping)
+                        + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
+                        digits,
+                    ).alias("rank"),
+                )
+            )
+            ck.release(old)
+        return ck.keep(ranks).select("node", "rank")
 
 
 def pagerank_directed(
@@ -288,61 +186,58 @@ def pagerank_directed(
     and out-weights are checkpointed once; ranks rotate per round with
     block release, so executor storage holds ONE ranks copy.
     """
-    spark = edges.sparkSession
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
-    ew, ew_ids = _eager_checkpoint(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"), w.alias("w"))
-        .groupBy("s", "d")
-        .agg(F.sum("w").alias("w"))
-    )
-    outw = ew.groupBy("s").agg(F.sum("w").alias("outw"))
-    nodes = (
-        ew.select(F.col("s").alias("node"))
-        .unionByName(ew.select(F.col("d").alias("node")))
-        .distinct()
-        .join(outw.withColumnRenamed("s", "node"), "node", "left")
-    )
-    n1 = nodes.agg(F.count("*").cast("double").alias("n"))
-    nodes, node_ids = _eager_checkpoint(nodes.crossJoin(n1))
-    ranks, rank_ids = _eager_checkpoint(
-        nodes.select(
-            "node", "outw", "n", F.round(1.0 / F.col("n"), digits).alias("rank")
+    with checkpoints(edges.sparkSession) as ck:
+        ew = ck.pin(
+            edges.select(F.col(src).alias("s"), F.col(dst).alias("d"), w.alias("w"))
+            .groupBy("s", "d")
+            .agg(F.sum("w").alias("w"))
         )
-    )
-    for _ in range(iterations):
-        dang = ranks.where(F.col("outw").isNull()).agg(
-            F.round(F.coalesce(F.sum("rank"), F.lit(0.0)), digits).alias("dang")
+        outw = ew.groupBy("s").agg(F.sum("w").alias("outw"))
+        nodes = (
+            ew.select(F.col("s").alias("node"))
+            .unionByName(ew.select(F.col("d").alias("node")))
+            .distinct()
+            .join(outw.withColumnRenamed("s", "node"), "node", "left")
         )
-        contrib = (
-            ranks.where(F.col("outw").isNotNull())
-            .select(F.col("node").alias("s"), (F.col("rank") / F.col("outw")).alias("c"))
-            .join(ew, "s")
-            .groupBy(F.col("d").alias("node"))
-            .agg(F.sum(F.col("c") * F.col("w")).alias("inflow"))
-        )
-        ranks, new_ids = _eager_checkpoint(
-            nodes.join(contrib, "node", "left")
-            .crossJoin(dang)
-            .select(
-                "node",
-                "outw",
-                "n",
-                F.round(
-                    F.lit(1.0 - damping) / F.col("n")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.col("dang") / F.col("n")
-                    ),
-                    digits,
-                ).alias("rank"),
+        n1 = nodes.agg(F.count("*").cast("double").alias("n"))
+        nodes = ck.pin(nodes.crossJoin(n1))
+        ranks = ck.pin(
+            nodes.select(
+                "node", "outw", "n", F.round(1.0 / F.col("n"), digits).alias("rank")
             )
         )
-        _unpersist_rdd_ids(spark, rank_ids)
-        rank_ids = new_ids
-    _unpersist_rdd_ids(spark, ew_ids | node_ids)
-    _register_long_lived(spark, rank_ids)
-    return ranks.select("node", "rank")
+        for _ in range(iterations):
+            dang = ranks.where(F.col("outw").isNull()).agg(
+                F.round(F.coalesce(F.sum("rank"), F.lit(0.0)), digits).alias("dang")
+            )
+            contrib = (
+                ranks.where(F.col("outw").isNotNull())
+                .select(F.col("node").alias("s"), (F.col("rank") / F.col("outw")).alias("c"))
+                .join(ew, "s")
+                .groupBy(F.col("d").alias("node"))
+                .agg(F.sum(F.col("c") * F.col("w")).alias("inflow"))
+            )
+            old, ranks = ranks, ck.pin(
+                nodes.join(contrib, "node", "left")
+                .crossJoin(dang)
+                .select(
+                    "node",
+                    "outw",
+                    "n",
+                    F.round(
+                        F.lit(1.0 - damping) / F.col("n")
+                        + F.lit(damping)
+                        * (
+                            F.coalesce("inflow", F.lit(0.0))
+                            + F.col("dang") / F.col("n")
+                        ),
+                        digits,
+                    ).alias("rank"),
+                )
+            )
+            ck.release(old)
+        return ck.keep(ranks).select("node", "rank")
 
 
 def hits(
@@ -367,57 +262,54 @@ def hits(
     over the (host-scale) edge list, normalization scalars folded back
     via 1-row crossJoin (no collect), per-round checkpoint rotation.
     """
-    spark = edges.sparkSession
-    e, e_ids = _eager_checkpoint(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct()
-    )
-    nodes, node_ids = _eager_checkpoint(
-        e.select(F.col("s").alias("node"))
-        .unionByName(e.select(F.col("d").alias("node")))
-        .distinct()
-    )
-    state, state_ids = _eager_checkpoint(
-        nodes.select(
-            "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority")
+    with checkpoints(edges.sparkSession) as ck:
+        e = ck.pin(
+            edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct()
         )
-    )
-    for _ in range(iterations):
-        araw = (
-            state.select(F.col("node").alias("s"), "hub")
-            .join(e, "s")
-            .groupBy(F.col("d").alias("node"))
-            .agg(F.sum("hub").alias("araw"))
+        nodes = ck.pin(
+            e.select(F.col("s").alias("node"))
+            .unionByName(e.select(F.col("d").alias("node")))
+            .distinct()
         )
-        a_n = nodes.join(araw, "node", "left").select(
-            "node", F.coalesce("araw", F.lit(0.0)).alias("araw")
-        )
-        asum = a_n.agg(
-            F.round(F.sum("araw"), digits).alias("asum")
-        )
-        a_norm = a_n.crossJoin(asum).select(
-            "node", F.round(F.col("araw") / F.col("asum"), digits).alias("authority")
-        )
-        hraw = (
-            a_norm.select(F.col("node").alias("d"), "authority")
-            .join(e, "d")
-            .groupBy(F.col("s").alias("node"))
-            .agg(F.sum("authority").alias("hraw"))
-        )
-        h_n = nodes.join(hraw, "node", "left").select(
-            "node", F.coalesce("hraw", F.lit(0.0)).alias("hraw")
-        )
-        hsum = h_n.agg(F.round(F.sum("hraw"), digits).alias("hsum"))
-        state, new_ids = _eager_checkpoint(
-            h_n.crossJoin(hsum)
-            .select(
-                "node",
-                F.round(F.col("hraw") / F.col("hsum"), digits).alias("hub"),
+        state = ck.pin(
+            nodes.select(
+                "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority")
             )
-            .join(a_norm, "node")
-            .select("node", "hub", "authority")
         )
-        _unpersist_rdd_ids(spark, state_ids)
-        state_ids = new_ids
-    _unpersist_rdd_ids(spark, e_ids | node_ids)
-    _register_long_lived(spark, state_ids)
-    return state
+        for _ in range(iterations):
+            araw = (
+                state.select(F.col("node").alias("s"), "hub")
+                .join(e, "s")
+                .groupBy(F.col("d").alias("node"))
+                .agg(F.sum("hub").alias("araw"))
+            )
+            a_n = nodes.join(araw, "node", "left").select(
+                "node", F.coalesce("araw", F.lit(0.0)).alias("araw")
+            )
+            asum = a_n.agg(
+                F.round(F.sum("araw"), digits).alias("asum")
+            )
+            a_norm = a_n.crossJoin(asum).select(
+                "node", F.round(F.col("araw") / F.col("asum"), digits).alias("authority")
+            )
+            hraw = (
+                a_norm.select(F.col("node").alias("d"), "authority")
+                .join(e, "d")
+                .groupBy(F.col("s").alias("node"))
+                .agg(F.sum("authority").alias("hraw"))
+            )
+            h_n = nodes.join(hraw, "node", "left").select(
+                "node", F.coalesce("hraw", F.lit(0.0)).alias("hraw")
+            )
+            hsum = h_n.agg(F.round(F.sum("hraw"), digits).alias("hsum"))
+            old, state = state, ck.pin(
+                h_n.crossJoin(hsum)
+                .select(
+                    "node",
+                    F.round(F.col("hraw") / F.col("hsum"), digits).alias("hub"),
+                )
+                .join(a_norm, "node")
+                .select("node", "hub", "authority")
+            )
+            ck.release(old)
+        return ck.keep(state)

@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from ..checkpoints import keep
+
 LINK_MAX_BIGRAM_BUCKET = 1000  # entities sharing one (category, bigram)
 
 
@@ -93,16 +95,16 @@ def link_mentions(
         # can't fire, and the unmaterialized plan re-aggregates the
         # full mention stream per branch. Lazy checkpoint = no extra
         # job; all branches share the one materialized RDD.
-        ents = mentions.groupBy(
+        ents = keep(mentions.groupBy(
             F.col("mentionNorm").alias("entNorm"), "category"
         ).agg(
             F.countDistinct("documentId").cast("long").alias("df")
-        ).localCheckpoint(eager=False)
+        ), eager=False)
     else:
         # same multi-branch consumption below — an external KB may
         # itself be an expensive plan (e.g. a store-wide APPEARS_IN
         # aggregate), so materialize it once too
-        ents = entities.localCheckpoint(eager=False)
+        ents = keep(entities, eager=False)
     # df rides along the exploded bigrams (functionally dependent on
     # the entity key), so no second join against ``ents`` is needed
     # downstream

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .checkpoints import keep
 from .constants import NE_NODE, NEO4J_ARRAY_SPLIT_CHAR
 from .functions.hashing import entity_id
 from .functions.minhash import BAND_SIZE, N_BANDS, N_MINHASH, with_bands
@@ -831,11 +832,9 @@ def dedup_minhash_pairs(
     # vs sz/shh), the canonical plans diverge, and ReuseExchange never
     # fires (the kg_entity_linking finding; measured: the repartition
     # variant re-scans the corpus once per consumer). The checkpoint
-    # stores ~0.5 KB/doc of hashes. Its blocks stay on the executors
-    # until the JVM garbage-collects the checkpointed RDD, and losing an
-    # executor fails the job (a local checkpoint cannot be recomputed);
-    # ROADMAP item 3 replaces it with one checkpoint scope.
-    per = with_bands(
+    # stores ~0.5 KB/doc of hashes; keep registers its blocks for
+    # release_long_lived_checkpoints.
+    per = keep(with_bands(
         arrays.select(
             "doc_id",
             "sh",
@@ -844,7 +843,7 @@ def dedup_minhash_pairs(
         ),
         "sh",
         ["doc_id", "sz", "shh"],
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     # in-row array_distinct: a doc whose band0 == band1 emits one row,
     # so (doc_id, band) is globally distinct with no dedup shuffle
     bands = per.select(
@@ -1646,15 +1645,12 @@ def kg_triangle_count(
     rows, not a 3-way union. Checkpoint blocks are registered for
     release via ``release_long_lived_checkpoints`` (the same
     long-lived-driver hygiene as ``media_embed_neardup``)."""
-    from .operators.graph_algos import _eager_checkpoint, _register_long_lived
-
     e_raw = (
         kg_entity_cooccurrence(spark, sf_dir)
         .where(F.col("nSharedDocs") >= min_shared)
         .select(F.col("entityA").alias("u"), F.col("entityB").alias("v"))
     )
-    e, e_ids = _eager_checkpoint(e_raw)
-    _register_long_lived(spark, e_ids)
+    e = keep(e_raw)
     deg = (
         e.select(F.explode(F.array("u", "v")).alias("n"))
         .groupBy("n")
@@ -1684,8 +1680,7 @@ def kg_triangle_count(
         # and double the dominant intermediate
         F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("dd"),
     )
-    oriented, o_ids = _eager_checkpoint(oriented_raw)
-    _register_long_lived(spark, o_ids)
+    oriented = keep(oriented_raw)
     w1, w2 = oriented.alias("w1"), oriented.alias("w2")
     wedge_ord = (F.col("w1.dd") < F.col("w2.dd")) | (
         (F.col("w1.dd") == F.col("w2.dd"))
@@ -1836,11 +1831,8 @@ def kg_link_prediction(
     reference — a ~20×-instantiation plan blowup measured in the plan
     audit. Blocks are registered for release via
     ``release_long_lived_checkpoints``."""
-    from .operators.graph_algos import _eager_checkpoint, _register_long_lived
-
     cooc_raw = kg_entity_cooccurrence(spark, sf_dir)
-    cooc, c_ids = _eager_checkpoint(cooc_raw)
-    _register_long_lived(spark, c_ids)
+    cooc = keep(cooc_raw)
     wk = (
         cooc.orderBy(F.desc("nSharedDocs"))
         .limit(strong_edges)
@@ -1851,8 +1843,7 @@ def kg_link_prediction(
         .where(F.col("nSharedDocs") >= F.col("wmin"))
         .select(F.col("entityA").alias("a"), F.col("entityB").alias("b"))
     )
-    e, e_ids = _eager_checkpoint(e_raw)
-    _register_long_lived(spark, e_ids)
+    e = keep(e_raw)
     sym = e.select(
         F.explode(
             F.array(
@@ -1864,8 +1855,7 @@ def kg_link_prediction(
     deg_raw = sym.groupBy(F.col("src").alias("n")).agg(
         F.count("*").cast("long").alias("d")
     )
-    deg, d_ids = _eager_checkpoint(deg_raw)
-    _register_long_lived(spark, d_ids)
+    deg = keep(deg_raw)
     mid_ok = deg.where(F.col("d") <= max_wedge_degree).select(
         F.col("n").alias("src"), F.col("d").alias("dm")
     )
@@ -4221,10 +4211,6 @@ def media_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse stage in ``pipeline.build_graph(checkpoint_dir=...)``.
     Candidates come from the band-bucket join, never an all-pairs
     cross join."""
-    from .operators.graph_algos import (
-        _eager_checkpoint,
-        _register_long_lived,
-    )
     from .operators.multimodal import media_embeddings
     from .operators.similarity import (
         _with_lsh_signatures,
@@ -4237,16 +4223,9 @@ def media_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("asset-"), F.col("doc_id")).alias("asset_id"),
         F.encode(F.substring(F.col("text"), 1, 64), "utf-8").alias("content"),
     )
-    # checkpoint via the shared helper so the snapshot-diff lock keeps
-    # concurrent iterative loops from claiming (and later destroying)
-    # these blocks; the ids are deliberately kept alive — the frame
-    # backs the returned query for its whole lifetime — but they are
-    # REGISTERED so a long-lived driver can reclaim the executor
-    # storage once the result is consumed (graph_algos.
-    # release_long_lived_checkpoints), instead of accumulating one
-    # checkpointed embedding copy per invocation forever
-    emb, _emb_ids = _eager_checkpoint(media_embeddings(media))
-    _register_long_lived(spark, _emb_ids)
+    # backs the returned query; a long-lived driver reclaims it with
+    # release_long_lived_checkpoints once the result is consumed
+    emb = keep(media_embeddings(media))
     sigs = _with_lsh_signatures(
         emb, "embedding", dim=_MEDIA_DIM, bits=_MEDIA_LSH_BITS,
         tables=_MEDIA_LSH_TABLES, prefix="sig",

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..checkpoints import keep
+
 
 def band_signatures(docs: DataFrame) -> DataFrame:
     """``(doc_id, band)`` — one row per distinct LSH band key of each
@@ -79,18 +81,12 @@ def incremental_neardup(
     keeper (deterministic). The returned frames are backed by a
     signature checkpoint registered with the long-lived registry —
     a long-lived driver reclaims the storage with
-    ``graph_algos.release_long_lived_checkpoints(spark)`` once they
+    ``checkpoints.release_long_lived_checkpoints(spark)`` once they
     are consumed."""
-    from ..operators.graph_algos import (
-        _eager_checkpoint,
-        _register_long_lived,
-    )
-
     # materialize the new batch's signatures ONCE: they feed the
     # store join AND the append — O(new batch) rows, and without this
     # the append would re-run the shingle→minhash pass
-    sigs, sig_ids = _eager_checkpoint(band_signatures(new_docs))
-    _register_long_lived(spark, sig_ids)
+    sigs = keep(band_signatures(new_docs))
     store = spark.read.parquet(store_path)
     # self-matches excluded: a doc is never a duplicate of itself.
     # This is what makes a RE-RUN (or job retry after the append

@@ -27,9 +27,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..checkpoints import checkpoints
 from ..manifest import Manifest, run_concurrently
 from ..observe import observe
-from ..operators.graph_algos import _eager_checkpoint, _unpersist_rdd_ids
 from ..pipeline import GraphBuild
 
 BUCKET_COL = "_bucket"
@@ -139,29 +139,18 @@ def merge_bucketed(
         .drop(BUCKET_COL)
     )
     merged = bucketize(combine(old, up.drop(BUCKET_COL)), key_cols, n_buckets)
-    # stage via localCheckpoint: the merged plan lazily READS the very
+    # stage via a checkpoint: the merged plan lazily READS the very
     # files a direct overwrite would delete, so it must be materialized
     # first — an executor-storage checkpoint does that with ONE
     # physical parquet write of the touched partitions (a tmp-dir
-    # parquet stage writes them twice). Trade-off, deliberate: the
-    # checkpoint blocks live on executors with truncated lineage, so
-    # losing an executor mid-merge fails the JOB (not just a task).
-    # That is safe because every COMBINE is idempotent (set-union /
-    # key-dedup / newest-wins), so an external job retry over a
-    # partially-overwritten table converges to the same result; at
-    # heavy-preemption scale, set a reliable checkpoint dir and swap
-    # localCheckpoint → checkpoint to regain task-level recovery at
-    # the cost of the second write. The overwrite mode rides on the
+    # parquet stage writes them twice). The overwrite mode rides on the
     # writer, not the session conf, so concurrent writers (streaming
     # micro-batches, write_tables' threads) never observe
     # dynamic-overwrite semantics unintentionally.
-    staged, ids = _eager_checkpoint(merged)
-    try:
-        staged.write.mode("overwrite").option(
+    with checkpoints(spark) as ck:
+        ck.pin(merged).write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(BUCKET_COL).parquet(path)
-    finally:
-        _unpersist_rdd_ids(spark, ids)
     return touched
 
 
@@ -173,11 +162,10 @@ def rewrite_table(spark: SparkSession, path: str, name: str, transform) -> None:
     ``v_1_1_0_bucket_plain_tables`` converts it on the way."""
     n = stored_buckets(path) if is_bucketed(path) else None
     # materialize before overwriting the files the plan lazily reads
-    staged, ids = _eager_checkpoint(transform(read_table(spark, path)))
-    try:
-        write_bucketed_table(staged, path, name, n)
-    finally:
-        _unpersist_rdd_ids(spark, ids)
+    with checkpoints(spark) as ck:
+        write_bucketed_table(
+            ck.pin(transform(read_table(spark, path))), path, name, n
+        )
 
 
 def stored_rows(path: str) -> int:

@@ -388,6 +388,28 @@ def test_cli_weblinks_graphml_dump(spark, tmp_path, capsys):
     assert all(e.get("label") == "LINKS_TO" for e in edges)
 
 
+def test_cli_weblinks_failed_graphml_keeps_the_previous_file(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """--graphml streams into a sibling file and renames it over the
+    target: a read that fails leaves the previous file byte-identical
+    and no temporary file behind."""
+    gml = tmp_path / "hosts.graphml"
+    argv = ["weblinks", "--sf-dir", "/root/testdata/sf0.001",
+            "--out", str(tmp_path / "web"), "--graphml", str(gml)]
+    assert main(argv) == 0
+    previous = gml.read_bytes()
+
+    def boom(self, *args, **kwargs):
+        raise RuntimeError("injected read fault")
+
+    monkeypatch.setattr(type(spark.range(0)), "toLocalIterator", boom)
+    with pytest.raises(RuntimeError, match="injected read fault"):
+        main(argv)
+    assert gml.read_bytes() == previous
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["hosts.graphml", "web"]
+
+
 def test_cli_weblinks_bundle_detects_changed_corpus(spark, tmp_path, capsys):
     """A regenerated (single-file) documents.parquet at the same path
     must invalidate the manifest fingerprint: the bundle re-runs

@@ -435,9 +435,7 @@ def test_merges_release_their_checkpoint_blocks(spark, tmp_path):
     """merge_table and rewrite_table stage through localCheckpoint,
     whose blocks sit below the SQL cache: each must release its own,
     or every merge leaves one persisted RDD behind."""
-    from datashare_extension_neo4j_spark.operators.graph_algos import (
-        _persistent_rdd_ids,
-    )
+    from datashare_extension_neo4j_spark.checkpoints import _persistent_rdd_ids
     from datashare_extension_neo4j_spark.pipeline import build_graph
     from datashare_extension_neo4j_spark.sinks.tables import (
         merge_table,

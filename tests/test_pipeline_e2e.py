@@ -239,9 +239,7 @@ def test_distributed_export_writes_each_file_once(
     """Each file's count is observed on its one write: five SQL
     executions for the package (a write then a count per file took 10),
     and no RDD is left persisted."""
-    from datashare_extension_neo4j_spark.operators.graph_algos import (
-        _persistent_rdd_ids,
-    )
+    from datashare_extension_neo4j_spark.checkpoints import _persistent_rdd_ids
     from datashare_extension_neo4j_spark.sinks.neo4j_csv import (
         export_graph_csvs_distributed,
     )

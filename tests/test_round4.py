@@ -163,44 +163,6 @@ def test_tfidf_n_docs_in_plan(spark):
     assert df.where(F.col("rank") == 1).limit(1).count() == 1
 
 
-# --------------------------------------- iterative checkpoint bounds
-
-
-def _n_persistent(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
-def test_pagerank_storage_bounded_in_iterations(spark):
-    """Executor storage must not grow linearly with iterations: each
-    round releases the previous round's checkpoint blocks."""
-    from datashare_extension_neo4j_spark.operators.graph_algos import pagerank
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)] + [(0, 15), (7, 22)],
-        "src long, dst long",
-    )
-    base = _n_persistent(spark)
-    ranks = pagerank(edges, iterations=12)
-    assert ranks.count() == 31
-    # sym released at exit; only the final ranks checkpoint (1 RDD)
-    # may remain — NOT 12 rank copies plus sym
-    assert _n_persistent(spark) <= base + 1
-
-
-def test_connected_components_storage_bounded(spark):
-    from datashare_extension_neo4j_spark.operators.graph_algos import (
-        connected_components,
-    )
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "src long, dst long"
-    )
-    base = _n_persistent(spark)
-    cc = connected_components(edges, "src", "dst")
-    assert cc.select("comp").distinct().count() == 1
-    assert _n_persistent(spark) <= base + 1
-
-
 # -------------------------------------------- decontamination @ n=13
 
 

@@ -70,30 +70,30 @@ def test_band_bucket_existing_state_wins_and_empty_batch_noop():
 
 
 def test_eager_checkpoint_attributes_exact_rdd_id(spark):
-    """_eager_checkpoint reads the persisted id DIRECTLY off the
-    checkpointed Dataset's LogicalRDD (no lock, no persistent-map
-    diff) — the returned id must be exactly the id localCheckpoint
-    registered, two concurrent-ish checkpoints must attribute
-    DISTINCT ids, and releasing must actually evict the blocks."""
-    from datashare_extension_neo4j_spark.operators.graph_algos import (
-        _eager_checkpoint,
+    """A pin reads the persisted id DIRECTLY off the checkpointed
+    Dataset's LogicalRDD (no lock, no persistent-map diff) — the id
+    must be exactly the id localCheckpoint registered, two
+    concurrent-ish checkpoints must attribute DISTINCT ids, and leaving
+    the scope must actually evict the blocks."""
+    from datashare_extension_neo4j_spark.checkpoints import (
+        _block_ids,
         _persistent_rdd_ids,
-        _unpersist_rdd_ids,
+        checkpoints,
     )
 
     before = _persistent_rdd_ids(spark)
-    # shuffle-bearing plans (the helper's real workload — AQE
+    # shuffle-bearing plans (the scope's real workload — AQE
     # materializes their stages inside the localCheckpoint call)
     df_a = spark.range(100).selectExpr("id % 7 AS k").groupBy("k").count()
     df_b = spark.range(50).selectExpr("id % 3 AS k").groupBy("k").count()
-    out_a, ids_a = _eager_checkpoint(df_a)
-    out_b, ids_b = _eager_checkpoint(df_b)
-    assert len(ids_a) == 1 and len(ids_b) == 1
-    assert ids_a != ids_b
-    persisted = _persistent_rdd_ids(spark) - before
-    assert ids_a <= persisted and ids_b <= persisted
-    assert out_a.count() == 7 and out_b.count() == 3
-    _unpersist_rdd_ids(spark, ids_a | ids_b)
+    with checkpoints(spark) as ck:
+        out_a, out_b = ck.pin(df_a), ck.pin(df_b)
+        ids_a, ids_b = _block_ids(out_a), _block_ids(out_b)
+        assert len(ids_a) == 1 and len(ids_b) == 1
+        assert ids_a != ids_b
+        persisted = _persistent_rdd_ids(spark) - before
+        assert ids_a <= persisted and ids_b <= persisted
+        assert out_a.count() == 7 and out_b.count() == 3
     assert not ((ids_a | ids_b) & _persistent_rdd_ids(spark))
 
 
@@ -101,7 +101,7 @@ def test_media_embed_neardup_checkpoints_are_releasable(spark):
     """media_embed_neardup keeps its embedding checkpoint alive to
     back the returned frame, but a long-lived driver must be able to
     reclaim the executor storage once the result is consumed."""
-    from datashare_extension_neo4j_spark.operators.graph_algos import (
+    from datashare_extension_neo4j_spark.checkpoints import (
         _persistent_rdd_ids,
         release_long_lived_checkpoints,
     )

@@ -180,30 +180,6 @@ def test_pagerank_directed_deterministic_across_partitioning(spark):
     assert a == b
 
 
-def test_pagerank_storage_bounded(spark):
-    """Per-round checkpoint rotation: after the loop returns, at most
-    the final ranks checkpoint remains persisted (same discipline as
-    the undirected loop)."""
-    from datashare_extension_neo4j_spark.operators.graph_algos import (
-        pagerank_directed,
-    )
-
-    before = {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs()
-        .keySet()
-        .toArray()
-    }
-    pagerank_directed(_toy_edges(spark), weight="w", iterations=6)
-    after = {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs()
-        .keySet()
-        .toArray()
-    }
-    assert len(after - before) <= 1
-
-
 def test_extract_links_resolves_relative(spark):
     html = (
         '<a href="/abs/path">a</a>'
