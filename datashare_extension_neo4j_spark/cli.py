@@ -555,6 +555,13 @@ def _non_negative_int(text: str) -> int:
     return n
 
 
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="datashare_extension_neo4j_spark")
     p.add_argument("--master", default=None)
@@ -629,7 +636,7 @@ def main(argv: list[str] | None = None) -> int:
     dc.add_argument("--sf-dir", required=True,
                     help="dir containing documents.parquet")
     dc.add_argument("--out", required=True)
-    dc.add_argument("--n", type=int, default=13,
+    dc.add_argument("--n", type=_positive_int, default=13,
                     help="shingle width (13 = standard benchmark check)")
     dc.set_defaults(fn=cmd_decontaminate)
 

@@ -1,4 +1,8 @@
-"""Shared MinHash-LSH column builders — ONE shingle/band derivation
+"""Shared shingle and MinHash-LSH column builders.
+
+``ngram_shingles`` is the one word n-gram builder in the package: the
+MinHash path (bigrams) and ``queries.decontaminate_ngram`` (any n,
+hashed) both call it. The MinHash band derivation built on it is
 consumed by the batch queries (``queries.dedup_minhash_*``), the
 incremental store (``sinks/neardup.py`` via the streaming operator)
 and the streaming operator (``streaming/stateful.py``), so batch ↔
@@ -34,22 +38,27 @@ assert N_MINHASH % BAND_SIZE == 0, "bands must tile the signature"
 N_BANDS = N_MINHASH // BAND_SIZE
 
 
-def bigram_shingles(tk: str) -> Column:
-    """Distinct positional word-bigram shingles from a bound
+def ngram_shingles(tk: str, n: int) -> Column:
+    """Distinct positional word n-gram shingles from a bound
     token-array column (the raw single-space split with empties KEPT,
-    so bigram positions match the oracle's LATERAL generate_series
-    over the unfiltered split); pairs with an empty part are dropped
-    AFTER pairing — ``'a  b'`` yields no shingle, exactly like the
-    exploded implementation and the DuckDB oracle. ``array_distinct``
-    replaces the old explode→``.distinct()`` global shuffle: per-doc
-    distinctness makes (doc_id, shingle) globally distinct for free."""
+    so gram positions match the oracles' LATERAL generate_series over
+    the unfiltered split); grams with an empty token are dropped AFTER
+    gramming — for n=2, ``'a  b'`` yields no shingle, exactly like the
+    DuckDB oracles. ``array_distinct`` makes (doc_id, shingle) globally
+    distinct with no shuffle. Null or too-short token arrays give an
+    empty array. The n tokens are spelled as n ``element_at`` terms, so
+    the expression stays one ``F.expr`` (and, at n=2, the bigram
+    expression the MinHash plans were built on)."""
+    if n < 1:
+        raise ValueError(f"shingle width n must be >= 1, got {n}")
+    toks = [f"element_at({tk}, i + {k})" for k in range(1, n + 1)]
+    no_empty = " AND ".join(f"{t} != ''" for t in toks)
+    gram = ", ' ', ".join(toks)
     return F.expr(
-        f"CASE WHEN size({tk}) >= 2 THEN "
-        f"array_distinct(filter(transform(sequence(0, size({tk}) - 2), "
-        f"i -> CASE WHEN element_at({tk}, i + 1) != '' "
-        f"AND element_at({tk}, i + 2) != '' "
-        f"THEN concat(element_at({tk}, i + 1), ' ', element_at({tk}, i + 2)) "
-        f"END), s -> s IS NOT NULL)) "
+        f"CASE WHEN size({tk}) >= {n} THEN "
+        f"array_distinct(filter(transform(sequence(0, size({tk}) - {n}), "
+        f"i -> CASE WHEN {no_empty} THEN concat({gram}) END), "
+        f"s -> s IS NOT NULL)) "
         f"ELSE cast(array() as array<string>) END"
     )
 

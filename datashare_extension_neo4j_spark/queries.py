@@ -22,7 +22,13 @@ from pyspark.sql import functions as F
 from .checkpoints import keep
 from .constants import NE_NODE, NEO4J_ARRAY_SPLIT_CHAR
 from .functions.hashing import entity_id
-from .functions.minhash import BAND_SIZE, N_BANDS, N_MINHASH, with_bands
+from .functions.minhash import (
+    BAND_SIZE,
+    N_BANDS,
+    N_MINHASH,
+    ngram_shingles,
+    with_bands,
+)
 from .sources.pages import widen as _widen
 
 ROOT_STRIDE = 5
@@ -662,57 +668,48 @@ FROM keys GROUP BY wordsetKey HAVING count(*) > 1
 _MINHASH_MAX_BUCKET = 10_000  # hot-band cap, mirrored in the oracle
 
 
-def minhash_band_pairs(
-    bands: DataFrame, max_bucket: int, distinct_input: bool = False
+def capped_block_pairs(
+    rows: DataFrame, id_col: str, key_cols: list[str], max_block: int
 ) -> DataFrame:
-    """Distinct candidate doc pairs sharing a band bucket, with hot
-    buckets (> max_bucket members) excluded before the self-join.
+    """``(a, b)``: the ``id_col`` values of two rows in the same block
+    (equal ``key_cols``), with a < b — the blocked self-join under the
+    near-duplicate and co-occurrence queries. Blocks of more than
+    ``max_block`` rows are dropped before the join: one hot block (a
+    boilerplate band value, a hub page) is quadratic.
 
-    ``distinct_input=True`` asserts the caller already guarantees
-    (doc_id, band) distinctness (e.g. an in-row ``array_distinct`` over
-    the per-doc band array) and skips the dedup shuffle."""
+    Callers guarantee that ``(id, key)`` rows are distinct: a repeated
+    row would count twice toward the cap and repeat its pairs. A pair
+    comes out once per block it shares; callers that want it once
+    apply ``.distinct()``.
+
+    The block size is a window count over the key, so it runs on the
+    same key exchange as the self-join, whose two sides share that
+    exchange (identical canonical subtree → runtime exchange reuse). A
+    groupBy of sizes joined back re-shuffles the rows and adds a join
+    stage."""
     from pyspark.sql import Window as W
 
-    # dedup (doc, band) first: a doc whose band0 == band1 would both
-    # double-count toward max_bucket (spurious exclusion near the cap)
-    # and quadruple its duplicate pairs into the final distinct; the
-    # dedup shuffles on the same band key the sizing agg and self-join
-    # use, so it adds no new shuffle profile
-    if not distinct_input:
-        bands = bands.select("doc_id", "band").distinct()
-    # bucket sizing as a window over the band partitioning (r6): the
-    # old groupBy-sizes + join pair re-shuffled the band stream AND
-    # added a join stage; the window computes the count on the same
-    # single band exchange, and the self-join's two sides share that
-    # exchange (identical canonical subtree → runtime exchange reuse)
     capped = (
-        bands.withColumn("_bsz", F.count("*").over(W.partitionBy("band")))
-        .where(F.col("_bsz") <= max_bucket)
-        .select("doc_id", "band")
+        rows.withColumn("_bsz", F.count("*").over(W.partitionBy(*key_cols)))
+        .where(F.col("_bsz") <= max_block)
+        .select(id_col, *key_cols)
     )
     a, b = capped.alias("a"), capped.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("docA"), F.col("b.doc_id").alias("docB"))
-        .distinct()
-    )
+    return a.join(
+        b,
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols]
+        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
+    ).select(F.col(f"a.{id_col}").alias("a"), F.col(f"b.{id_col}").alias("b"))
 
 
 def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sh): the distinct word-bigram shingle ARRAY per doc
-    (the shingling step that makes MinHash discriminative — single
-    words are too coarse on a small vocabulary), built wholly in-row
-    by the shared builder (functions/minhash.py): the token array is
-    bound to a column first so the HOF lambdas index it instead of
-    re-splitting the text per position (the r5 O(tokens²) fix), and
-    per-doc ``array_distinct`` replaces the old explode→``.distinct()``
-    corpus-wide shuffle."""
-    from .functions.minhash import bigram_shingles
-
+    """(doc_id, sh, sz, shh) per doc with at least one word bigram:
+    the distinct bigram shingle array ``sh`` (single words are too
+    coarse on a small vocabulary), its size, and its elements hashed
+    with xxhash64 (8-byte keys for the exact-Jaccard verifier instead
+    of ~20-byte strings). Built wholly in-row by the shared builder
+    (functions/minhash.py) over a bound token array; consumers that do
+    not read ``sz``/``shh`` have them pruned from the plan."""
     # docs without a single valid bigram are excluded HERE with a cheap
     # text predicate that is exactly equivalent to size(sh) > 0: a doc
     # has a bigram iff two adjacent tokens of the single-space split
@@ -720,7 +717,7 @@ def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Filtering on size(sh) > 0 downstream instead lets predicate
     # pushdown inline the WHOLE shingle expression below the widen
     # exchange — where the lambda-substituted split(text) re-evaluates
-    # per array element: the exact O(tokens²) this round removes.
+    # per array element: the O(tokens²) the bound token array removes.
     d = (
         _widen(
             _docs(spark, sf_dir).where(F.col("text").rlike("[^ ] [^ ]")),
@@ -728,39 +725,64 @@ def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", F.split(F.col("text"), " ").alias("_tk"))
     )
-    return d.select("doc_id", bigram_shingles("_tk").alias("sh"))
-
-
-def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exploded (doc_id, shingle) stream — globally distinct with NO
-    shuffle, because shingles are distinct within each doc's array and
-    doc_id differs across rows."""
-    return _shingle_arrays(spark, sf_dir).select(
-        "doc_id", F.explode("sh").alias("shingle")
+    return d.select("doc_id", ngram_shingles("_tk", 2).alias("sh")).select(
+        "doc_id",
+        "sh",
+        F.size("sh").alias("sz"),
+        F.transform(F.col("sh"), lambda x: F.xxhash64(x)).alias("shh"),
     )
 
 
-def _sig_bands_arrays(arrays: DataFrame) -> DataFrame:
-    """(doc_id, sh) → (doc_id, sig, band0..band{N_BANDS-1}) computed
-    ENTIRELY in-row via the shared builders — zero Exchange (the r4
-    groupBy version shuffled k columns per doc; this version shuffles
-    nothing).
+def _verified_jaccard(
+    pairs: DataFrame, per_doc: DataFrame, threshold: float
+) -> DataFrame:
+    """(docA, docB, jaccard): the candidate pairs ``(a, b)`` whose
+    exact shingle-set Jaccard, rounded to 6 places, is at least
+    ``threshold``. ``per_doc`` carries ``(doc_id, sz, shh)`` (see
+    ``_shingle_arrays``); each side of a pair attaches its doc's hashed
+    array and |A∩B| is an in-row ``array_intersect`` — no exploded
+    (doc, shingle) join and no count groupBy. A doc missing from
+    ``per_doc`` has no shingle and drops out. The oracles count
+    shingle strings; hashed counts match them absent a 64-bit
+    collision."""
 
-    Input contract: every ``arrays`` row has non-empty ``sh``
-    (``_shingle_arrays`` guarantees it via its cheap text predicate) —
-    a ``size(sh) > 0`` filter here would be pushdown-inlined below the
-    widen exchange as the full shingle expression, resurrecting the
-    O(tokens²) split-in-lambda this round removes."""
-    return with_bands(arrays, "sh", ["doc_id"], sig=True)
+    def side(s: str) -> DataFrame:
+        return per_doc.select(
+            F.col("doc_id").alias(s),
+            F.col("sz").alias(f"sz_{s}"),
+            F.col("shh").alias(f"shh_{s}"),
+        )
+
+    # bind |A∩B| to a column so the jaccard expression's two
+    # references don't each re-run the intersection
+    j = (
+        pairs.join(side("a"), "a")
+        .join(side("b"), "b")
+        .select(
+            "a", "b", "sz_a", "sz_b",
+            F.size(F.array_intersect("shh_a", "shh_b")).alias("_i"),
+        )
+    )
+    return j.select(
+        F.col("a").alias("docA"),
+        F.col("b").alias("docB"),
+        F.round(
+            F.col("_i") / (F.col("sz_a") + F.col("sz_b") - F.col("_i")), 6
+        ).alias("jaccard"),
+    ).where(F.col("jaccard") >= threshold)
 
 
 def dedup_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (k=8, md5-based — engine-portable and fully
     deterministic) + LSH band keys (b=2, r=4). The banding step of
     shingle→minhash→band→bucket-join dedup; bucket-join pairs in
-    dedup_minhash_pairs. A pure scan+project plan since r6 (was
-    explode→distinct→groupBy: 2 Exchanges)."""
-    return _sig_bands_arrays(_shingle_arrays(spark, sf_dir))
+    dedup_minhash_pairs. A pure scan+project plan: signatures and
+    bands are computed in-row by the shared builders, with no
+    Exchange. (``_shingle_arrays`` drops docs without a shingle with a
+    text predicate; a ``size(sh) > 0`` filter here would be
+    pushdown-inlined below the widen exchange as the full shingle
+    expression.)"""
+    return with_bands(_shingle_arrays(spark, sf_dir), "sh", ["doc_id"], sig=True)
 
 
 _SHINGLES_SQL = """
@@ -805,23 +827,15 @@ def dedup_minhash_pairs(
     ``max_bucket`` guards the degenerate case (boilerplate-heavy web
     corpora where one band value collects millions of docs → quadratic
     within-bucket): buckets above the cap are excluded BEFORE the
-    self-join, bounding candidates at max_bucket² per bucket. The size
-    pre-pass groups on the same key as the self-join, so it adds one
-    co-partitioned agg, not a new shuffle profile. The ORACLE mirrors
-    the default cap (same interpolated constant), so parity holds even
-    when it binds; the cap path is exercised by tests/test_extras.py
-    with a forced hot bucket."""
-    # r6 shape: shingle sets stay per-doc ARRAYS end to end. Signatures
-    # and bands are in-row (zero shuffle); candidate generation shuffles
-    # only (doc_id, band) rows; verification attaches the two docs'
-    # xxhash64'd shingle arrays to each candidate pair (8-byte elements
-    # instead of ~20-byte shingle strings — the decontaminate_ngram key
-    # discipline, r5 verdict ask #3) and computes |A∩B| with an in-row
-    # array_intersect — replacing the old exploded two-sided
-    # (doc, word)-string join + count groupBy (4 corpus-sized string
-    # shuffles → at most 2 hashed-array attach joins, which AQE
-    # broadcasts when the candidate set is small).
-    arrays = _shingle_arrays(spark, sf_dir)
+    self-join (``capped_block_pairs``), bounding candidates at
+    max_bucket² per bucket. The ORACLE mirrors the default cap (same
+    interpolated constant), so parity holds even when it binds; the
+    cap path is exercised by tests/test_extras.py with a forced hot
+    bucket."""
+    # Shingle sets stay per-doc ARRAYS end to end: signatures and bands
+    # are in-row (zero shuffle), candidate generation shuffles only
+    # (doc_id, band) rows, and the verifier attaches the two docs'
+    # hashed shingle arrays to each candidate pair.
     # ONE corpus pass computes everything per doc (size, hashed shingle
     # set, band keys), materialized with a LAZY localCheckpoint so the
     # three consumers (band explode, A-side attach, B-side attach) read
@@ -835,14 +849,7 @@ def dedup_minhash_pairs(
     # stores ~0.5 KB/doc of hashes; keep registers its blocks for
     # release_long_lived_checkpoints.
     per = keep(with_bands(
-        arrays.select(
-            "doc_id",
-            "sh",
-            F.size("sh").alias("sz"),
-            F.transform(F.col("sh"), lambda x: F.xxhash64(x)).alias("shh"),
-        ),
-        "sh",
-        ["doc_id", "sz", "shh"],
+        _shingle_arrays(spark, sf_dir), "sh", ["doc_id", "sz", "shh"]
     ), eager=False)
     # in-row array_distinct: a doc whose band0 == band1 emits one row,
     # so (doc_id, band) is globally distinct with no dedup shuffle
@@ -852,45 +859,8 @@ def dedup_minhash_pairs(
             F.array_distinct(F.array(*[f"band{i}" for i in range(N_BANDS)]))
         ).alias("band"),
     )
-    cand = minhash_band_pairs(bands, max_bucket, distinct_input=True)
-    pv = per.select("doc_id", "sz", "shh")
-    j = (
-        cand.join(
-            pv.select(
-                F.col("doc_id").alias("docA"),
-                F.col("sz").alias("szA"),
-                F.col("shh").alias("shhA"),
-            ),
-            "docA",
-        )
-        .join(
-            pv.select(
-                F.col("doc_id").alias("docB"),
-                F.col("sz").alias("szB"),
-                F.col("shh").alias("shhB"),
-            ),
-            "docB",
-        )
-        # bind |A∩B| to a column so the jaccard expression's two
-        # references don't each re-run the intersection
-        .select(
-            "docA",
-            "docB",
-            "szA",
-            "szB",
-            F.size(F.array_intersect("shhA", "shhB")).alias("_i"),
-        )
-    )
-    return (
-        j.select(
-            "docA",
-            "docB",
-            F.round(
-                F.col("_i") / (F.col("szA") + F.col("szB") - F.col("_i")), 6
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= 0.5)
-    )
+    cand = capped_block_pairs(bands, "doc_id", ["band"], max_bucket).distinct()
+    return _verified_jaccard(cand, per, 0.5)
 
 
 ORACLE_DEDUP_MINHASH_PAIRS = f"""
@@ -1078,41 +1048,6 @@ _DECONTAM_N = 2  # registry entry: bigrams (the test corpus's tiny
 # width — exercised at n=13 in tests/test_extras.py on synthetic docs
 
 
-def _ngram_shingles(
-    docs: DataFrame, n: int, path: str | None = None
-) -> DataFrame:
-    """Distinct word n-gram shingles per doc as 64-bit hashes
-    (xxhash64): at real n (13) the shingle STRINGS are ~100 bytes each
-    and the broadcast eval set would balloon; the hashes keep it at
-    8 bytes/shingle regardless of n. One array transform per doc —
-    no self-join shuffle. (For n=2 the underlying shingle strings are
-    identical to ``_shingles``.)
-
-    r6: the token array is bound to a column first (the inline
-    ``slice(split(text), …)`` re-split the text per gram position —
-    the r5 O(tokens²) finding), and per-doc ``array_distinct`` over
-    the hashed grams replaces the global ``.distinct()`` shuffle
-    ((doc_id, hash) is globally distinct once distinct per doc)."""
-    t = _widen(docs, path=path).select(
-        "doc_id", F.split(F.col("text"), " ").alias("_tk")
-    )
-    tk = F.col("_tk")
-    grams = F.when(
-        F.size(tk) >= n,
-        F.filter(
-            F.transform(
-                F.sequence(F.lit(0), F.size(tk) - n),
-                lambda i: F.slice(tk, i + 1, n),
-            ),
-            lambda arr: ~F.exists(arr, lambda w: w == ""),
-        ),
-    ).otherwise(F.array().cast("array<array<string>>"))
-    hashed = F.array_distinct(
-        F.transform(grams, lambda arr: F.xxhash64(F.array_join(arr, " ")))
-    )
-    return t.select("doc_id", F.explode(hashed).alias("shingle"))
-
-
 def decontaminate_ngram(
     spark: SparkSession, sf_dir: str, n: int = _DECONTAM_N
 ) -> DataFrame:
@@ -1133,14 +1068,21 @@ def decontaminate_ngram(
     make an any-overlap flag vacuous. (The oracle counts distinct
     shingle strings; hashed counts match it absent a 64-bit collision
     — odds ~1e-10 at 10^5 distinct shingles.)"""
-    sh = _ngram_shingles(
-        _docs(spark, sf_dir), n, path=f"{sf_dir}/documents.parquet"
+    grams = ngram_shingles("_tk", n)
+    tk = _widen(_docs(spark, sf_dir), path=f"{sf_dir}/documents.parquet").select(
+        "doc_id", F.split(F.col("text"), " ").alias("_tk")
+    )
+    # xxhash64 keys: at n=13 a shingle string is ~100 bytes and the
+    # broadcast eval set would balloon; a hash is 8 bytes at any n
+    sh = tk.select(
+        "doc_id",
+        F.explode(F.transform(grams, lambda x: F.xxhash64(x))).alias("shingle"),
     )
     bench = (
         sh.where(F.col("doc_id") % _EVAL_MOD == 0).select("shingle").distinct()
     )
     corpus = sh.where(F.col("doc_id") % _EVAL_MOD != 0)
-    # (doc_id, shingle) is distinct by construction (_ngram_shingles
+    # (doc_id, shingle) is distinct by construction (ngram_shingles
     # dedups per doc in-row), so count(*) == count(DISTINCT shingle) —
     # dropping countDistinct removes the Expand + extra exchange of a
     # distinct aggregate (r6)
@@ -1176,8 +1118,8 @@ def decontaminate_ngram(
 
 
 def _ngram_shingles_sql(n: int) -> str:
-    """DuckDB n-gram shingle CTE body — same strings `_ngram_shingles`
-    hashes (the oracle counts the strings themselves)."""
+    """DuckDB n-gram shingle CTE body — the strings ``ngram_shingles``
+    builds (the oracle counts the strings, the query their hashes)."""
     return f"""
   SELECT DISTINCT doc_id, array_to_string(parts[i:i+{n - 1}], ' ') AS word
   FROM (SELECT doc_id, string_split(text, ' ') AS parts FROM documents),
@@ -1369,8 +1311,9 @@ def kg_entity_cooccurrence(
 ) -> DataFrame:
     """Entity co-occurrence edges — the classic KG enrichment: two
     entities are related when they APPEAR_IN the same document;
-    weight = number of shared documents. Built as a self-join of the
-    distinct (entity, doc) incidence list on the document key.
+    weight = number of shared documents. Built as the capped block
+    self-join (``capped_block_pairs``) of the distinct (entity, doc)
+    incidence list, the document being the block.
 
     Scale shape: the join shuffles on doc id (the semantic minimum);
     ``max_doc_entities`` caps the per-document entity count BEFORE the
@@ -1388,27 +1331,14 @@ def kg_entity_cooccurrence(
         )
         .distinct()
     )
-    sizes = inc.groupBy("documentId").agg(F.count("*").alias("_dsz"))
-    capped = inc.join(
-        sizes.where(F.col("_dsz") <= max_doc_entities), "documentId"
-    ).select("entity", "documentId")
-    a, b = capped.alias("a"), capped.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.documentId") == F.col("b.documentId"))
-            & (F.col("a.entity") < F.col("b.entity")),
-        )
-        .groupBy(
-            F.col("a.entity").alias("entityA"),
-            F.col("b.entity").alias("entityB"),
-        )
-        # plain count: inc is distinct on (entity, doc), so each
-        # (pair, doc) row is already unique post-join — countDistinct
-        # would add an Expand + second distinct agg over the pair
-        # stream (the largest intermediate here) for identical results
-        .agg(F.count("*").cast("long").alias("nSharedDocs"))
-    )
+    pairs = capped_block_pairs(inc, "entity", ["documentId"], max_doc_entities)
+    # plain count: inc is distinct on (entity, doc), so each (pair, doc)
+    # row is already unique — countDistinct would add an Expand + second
+    # distinct agg over the pair stream (the largest intermediate here)
+    # for identical results
+    return pairs.groupBy(
+        F.col("a").alias("entityA"), F.col("b").alias("entityB")
+    ).agg(F.count("*").cast("long").alias("nSharedDocs"))
 
 
 # the hub-doc cap is mirrored (docs with > _COOC_CAP entities excluded
@@ -2735,7 +2665,8 @@ def dedup_ngram_jaccard(
     """Exact bigram-shingle Jaccard over blocked pairs: candidates are
     documents sharing (lang, length bucket) — a deterministic blocking
     key that bounds the pair space (vs LSH banding in
-    dedup_minhash_pairs). Emits pairs with jaccard ≥ 0.3.
+    dedup_minhash_pairs). Emits pairs with jaccard ≥ 0.3, computed by
+    the same hashed-array verifier as dedup_minhash_pairs.
 
     ``max_block`` excludes degenerate blocks before the self-join
     (same guard as the minhash hot-bucket cap: one hot (lang, length)
@@ -2745,42 +2676,9 @@ def dedup_ngram_jaccard(
     d = _docs(spark, sf_dir).select(
         "doc_id", "lang", (F.col("n_chars") - F.col("n_chars") % 50).alias("bucket")
     )
-    sizes_blk = d.groupBy("lang", "bucket").agg(F.count("*").alias("_bsz"))
-    d = d.join(
-        sizes_blk.where(F.col("_bsz") <= max_block), ["lang", "bucket"]
-    ).select("doc_id", "lang", "bucket")
-    sh = _shingles(spark, sf_dir).withColumnRenamed("shingle", "word")
-    blocked = d.alias("a").join(
-        d.alias("b"),
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("docA"), F.col("b.doc_id").alias("docB")
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    inter = (
-        blocked.join(sh.alias("wa"), F.col("docA") == F.col("wa.doc_id"))
-        .join(
-            sh.alias("wb"),
-            (F.col("docB") == F.col("wb.doc_id"))
-            & (F.col("wa.word") == F.col("wb.word")),
-        )
-        .groupBy("docA", "docB")
-        .agg(F.count("*").alias("i"))
-    )
-    return (
-        inter.join(sizes.alias("sa"), F.col("docA") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("docB") == F.col("sb.doc_id"))
-        .select(
-            "docA",
-            "docB",
-            F.round(
-                F.col("i") / (F.col("sa.sz") + F.col("sb.sz") - F.col("i")), 6
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= 0.3)
-    )
+    # each doc sits in one block, so a pair comes out once
+    pairs = capped_block_pairs(d, "doc_id", ["lang", "bucket"], max_block)
+    return _verified_jaccard(pairs, _shingle_arrays(spark, sf_dir), 0.3)
 
 
 ORACLE_DEDUP_NGRAM_JACCARD = f"""

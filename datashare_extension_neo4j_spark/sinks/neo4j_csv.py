@@ -160,9 +160,9 @@ def write_csv_distributed(lines: DataFrame, path: str) -> None:
     lines.write.mode("overwrite").text(path)
 
 
-def _write_single(lines: DataFrame, path: Path, sort: bool = True) -> int:
+def _write_single(lines: DataFrame, path: Path) -> int:
     n = 0
-    it = lines.sort("line").toLocalIterator() if sort else lines.toLocalIterator()
+    it = lines.sort("line").toLocalIterator()
     with path.open("w", newline="", encoding="utf-8") as f:
         for row in it:
             f.write(row["line"])
@@ -181,7 +181,6 @@ def export_graph_csvs(
     export_dir: str | Path,
     db: str = "neo4j",
     as_tar: bool = False,
-    sort: bool = True,
 ) -> dict:
     """Write the full reference-compatible export package."""
     d = Path(export_dir)
@@ -191,7 +190,7 @@ def export_graph_csvs(
         docs, doc_roots, entities, appears_in, emails
     ):
         (d / f"{name}-header.csv").write_text(neo4j_header_line(header))
-        counts[name] = _write_single(lines, d / f"{name}.csv", sort=sort)
+        counts[name] = _write_single(lines, d / f"{name}.csv")
     metadata = _metadata(db, {name: [f"{name}.csv"] for name in counts}, counts)
     (d / "metadata.json").write_text(json.dumps(metadata, indent=2))
     _write_bulk_import_script(d)

@@ -174,7 +174,7 @@ def streaming_band_keys(docs: DataFrame) -> DataFrame:
     text per bigram position)."""
     from pyspark.sql import functions as F
 
-    from ..functions.minhash import N_BANDS, bigram_shingles, with_bands
+    from ..functions.minhash import N_BANDS, ngram_shingles, with_bands
 
     # cheap text predicate ≡ "has ≥ 1 valid bigram" (nonspace·space·
     # nonspace): filtering on size(_sh) > 0 instead would be pushdown-
@@ -184,7 +184,7 @@ def streaming_band_keys(docs: DataFrame) -> DataFrame:
         "doc_id", "ts", F.split(F.col("text"), " ").alias("_tk")
     )
     with_sh = toks.select(
-        "doc_id", "ts", bigram_shingles("_tk").alias("_sh")
+        "doc_id", "ts", ngram_shingles("_tk", 2).alias("_sh")
     )
     bands = with_bands(with_sh, "_sh", ["doc_id", "ts"])
     return bands.select(

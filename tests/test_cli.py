@@ -125,6 +125,16 @@ def test_cli_dump_rejects_negative_limit(tmp_path, capsys):
     assert "--limit" in capsys.readouterr().err
 
 
+def test_cli_decontaminate_rejects_width_below_one(tmp_path, capsys):
+    """--n 0 would flag every document (all share the empty gram); a
+    width below 1 is a usage error."""
+    with pytest.raises(SystemExit) as e:
+        main(["decontaminate", "--sf-dir", str(tmp_path),
+              "--out", str(tmp_path / "out"), "--n", "0"])
+    assert e.value.code == 2
+    assert "--n" in capsys.readouterr().err
+
+
 def test_cli_migrate_and_verify(spark, tmp_path, capsys):
     pages = reference_pages(spark, n_docs=4)
     pages_path = str(tmp_path / "pages")

@@ -257,16 +257,16 @@ def test_minhash_bucket_cap(spark):
     """A degenerate band bucket (boilerplate-heavy corpus: one band
     value shared by many docs) is excluded once its size exceeds
     max_bucket, bounding the candidate count; small buckets are kept."""
-    from datashare_extension_neo4j_spark.queries import minhash_band_pairs
+    from datashare_extension_neo4j_spark.queries import capped_block_pairs
 
     rows = [(i, "HOT") for i in range(100)] + [
         (200, "cold"), (201, "cold"),
     ]
     bands = spark.createDataFrame(rows, "doc_id long, band string")
-    uncapped = minhash_band_pairs(bands, max_bucket=10_000)
+    uncapped = capped_block_pairs(bands, "doc_id", ["band"], max_block=10_000)
     assert uncapped.count() == 100 * 99 // 2 + 1
-    capped = minhash_band_pairs(bands, max_bucket=50)
-    got = {(r["docA"], r["docB"]) for r in capped.collect()}
+    capped = capped_block_pairs(bands, "doc_id", ["band"], max_block=50)
+    got = {(r["a"], r["b"]) for r in capped.collect()}
     assert got == {(200, 201)}  # hot bucket dropped, cold kept
 
 

@@ -1,10 +1,12 @@
 """Round-6 optimization guards: the rewritten minhash internals and
 the plan shapes the round's changes claim.
 
-These lock in (a) value equivalence of the in-row shingle builder vs
-the r5 exploded expression, (b) the cheap text predicate being exactly
-"has >= 1 valid bigram", and (c) the plan shapes: scan-shaped
-signatures, join-free mentions, Expand-free APPEARS_IN aggregation.
+These lock in (a) value equivalence of the in-row n-gram builder vs
+the r5 exploded bigram expression and the former Column-API n-gram
+builder, (b) the cheap text predicate being exactly "has >= 1 valid
+bigram", and (c) the plan shapes: scan-shaped signatures, join-free
+mentions, Expand-free APPEARS_IN aggregation, a block-key-only
+exact-Jaccard plan.
 """
 
 from __future__ import annotations
@@ -57,22 +59,76 @@ def _old_shingles(docs):
     return docs.select("doc_id", F.explode(sh).alias("shingle")).distinct()
 
 
-def test_bigram_shingles_matches_r5_semantics(spark):
+# TRICKY_TEXTS plus the n-gram edge cases: runs of spaces at the
+# ends and inside, a single token, quotes and '|' next to non-ASCII
+NGRAM_TEXTS = TRICKY_TEXTS + [
+    (11, "  lead  and   trail  words here  "),
+    (12, "lonely"),
+    (13, 'é ü "q" | x é ü "q" | x é'),
+    (14, "a b c d e f g h i j k l m n o p a b c d e f g h i j k l m n o p"),
+    (15, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12  w13 w14 w15 w16"),
+]
+
+
+def _ngram_reference(docs, n):
+    """The Column-API n-gram builder decontaminate_ngram used before
+    ngram_shingles, kept verbatim (with its xxhash64) as the semantic
+    reference: (doc_id, hash) rows."""
+    t = docs.select("doc_id", F.split(F.col("text"), " ").alias("_tk"))
+    tk = F.col("_tk")
+    grams = F.when(
+        F.size(tk) >= n,
+        F.filter(
+            F.transform(
+                F.sequence(F.lit(0), F.size(tk) - n),
+                lambda i: F.slice(tk, i + 1, n),
+            ),
+            lambda arr: ~F.exists(arr, lambda w: w == ""),
+        ),
+    ).otherwise(F.array().cast("array<array<string>>"))
+    hashed = F.array_distinct(
+        F.transform(grams, lambda arr: F.xxhash64(F.array_join(arr, " ")))
+    )
+    return t.select("doc_id", F.explode(hashed).alias("shingle"))
+
+
+@pytest.mark.parametrize("n", [2, 3, 13])
+def test_bigram_shingles_matches_r5_semantics(spark, n):
     from datashare_extension_neo4j_spark.functions.minhash import (
-        bigram_shingles,
+        ngram_shingles,
     )
 
-    docs = _df(spark, TRICKY_TEXTS)
-    old = {(r["doc_id"], r["shingle"]) for r in _old_shingles(docs).collect()}
-    new_rows = (
-        docs.select("doc_id", F.split("text", " ").alias("_tk"))
-        .select("doc_id", F.explode(bigram_shingles("_tk")).alias("shingle"))
-        .collect()
-    )
+    docs = _df(spark, NGRAM_TEXTS)
+    tk = docs.select("doc_id", F.split("text", " ").alias("_tk"))
+    new_rows = tk.select(
+        "doc_id", F.explode(ngram_shingles("_tk", n)).alias("shingle")
+    ).collect()
     new = {(r["doc_id"], r["shingle"]) for r in new_rows}
-    assert new == old
     # in-row distinctness: no duplicate (doc, shingle) pairs
     assert len(new_rows) == len(new)
+    if n == 2:
+        old = {(r["doc_id"], r["shingle"]) for r in _old_shingles(docs).collect()}
+        assert new == old
+    hashed = tk.select(
+        "doc_id",
+        F.explode(
+            F.transform(ngram_shingles("_tk", n), lambda x: F.xxhash64(x))
+        ).alias("shingle"),
+    )
+    ref = {(r["doc_id"], r["shingle"]) for r in _ngram_reference(docs, n).collect()}
+    assert {(r["doc_id"], r["shingle"]) for r in hashed.collect()} == ref
+    assert ref  # every width yields some shingle on these texts
+
+
+@pytest.mark.parametrize("n", [0, -1])
+def test_decontaminate_rejects_width_below_one(spark, n):
+    """n=0 made every doc share the empty gram (all flagged as
+    contaminated); n=-1 failed inside a task. Both are rejected when
+    the query is built."""
+    from datashare_extension_neo4j_spark.queries import decontaminate_ngram
+
+    with pytest.raises(ValueError, match="n must be >= 1"):
+        decontaminate_ngram(spark, SF_DIR, n=n)
 
 
 def test_cheap_text_predicate_equals_has_bigram(spark):
@@ -80,7 +136,7 @@ def test_cheap_text_predicate_equals_has_bigram(spark):
     valid bigram — the predicate _shingle_arrays filters on instead of
     size(sh) > 0 (which pushdown would inline quadratically)."""
     from datashare_extension_neo4j_spark.functions.minhash import (
-        bigram_shingles,
+        ngram_shingles,
     )
 
     docs = _df(spark, TRICKY_TEXTS)
@@ -91,7 +147,7 @@ def test_cheap_text_predicate_equals_has_bigram(spark):
             F.coalesce(F.col("text").rlike("[^ ] [^ ]"), F.lit(False)).alias(
                 "pred"
             ),
-            (F.size(bigram_shingles("_tk")) > 0).alias("has_bigram"),
+            (F.size(ngram_shingles("_tk", 2)) > 0).alias("has_bigram"),
         )
         .collect()
     )
@@ -115,6 +171,24 @@ def test_minhash_sig_is_scan_shaped(spark):
     )
     assert not re.search(r"Exchange (hash|range)partitioning", plan), plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_ngram_jaccard_shuffles_only_the_block_key(spark):
+    """dedup_ngram_jaccard's verifier attaches hashed shingle arrays
+    to the blocked pairs: the only hash exchanges left are the block
+    key's (window count and self-join); the exploded (doc, shingle)
+    string joins and their count groupBy had 5 at sf0.001."""
+    import re
+
+    from datashare_extension_neo4j_spark.queries import dedup_ngram_jaccard
+
+    plan = (
+        dedup_ngram_jaccard(spark, SF_DIR)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert len(re.findall(r"Exchange (hash|range)partitioning", plan)) <= 2, plan
 
 
 def test_kg_mentions_is_join_free(spark):
@@ -156,13 +230,13 @@ def test_pairs_hashed_intersection_matches_string_join(spark):
         (4, "unicode éé ü tokens something else"),
     ]
     from datashare_extension_neo4j_spark.functions.minhash import (
-        bigram_shingles,
+        ngram_shingles,
     )
 
     docs = _df(spark, rows)
     arr = docs.select(
         "doc_id", F.split("text", " ").alias("_tk")
-    ).select("doc_id", bigram_shingles("_tk").alias("sh"))
+    ).select("doc_id", ngram_shingles("_tk", 2).alias("sh"))
     pdf = {r["doc_id"]: set(r["sh"]) for r in arr.collect()}
     hashed = arr.select(
         "doc_id",
