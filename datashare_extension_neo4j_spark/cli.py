@@ -11,9 +11,11 @@ locally. Subcommands:
   incremental     MERGE a new pages batch into an existing run-dir
   import-mentions MERGE an NE-only mention batch (parents must already
                   be imported; orphans dropped — reference semantics)
-  export-csv      graph tables → neo4j-admin bulk CSV package
-                  (--tar: one archive; --distributed: executor-written
-                  multi-part package; the two exclude each other)
+  export-csv      graph tables → neo4j-admin bulk CSV package, each
+                  body written once by the executors (default: one
+                  file per body; --tar: one archive; --distributed:
+                  the part files listed as they are; the two exclude
+                  each other)
   dump            DSL JSON (or default query) → graphml/cypher dump
   migrate         bring a run-dir to the current schema version
   verify-constraints  audit the stored tables against their unique keys
@@ -169,20 +171,37 @@ def cmd_verify_constraints(args) -> int:
     return 0
 
 
+def _write_parquet(df, out: str, **aggregates) -> dict:
+    """Overwrite ``out`` with ``df`` and return the ``rows`` written
+    plus the named ``aggregates`` of ``df``, all observed on that one
+    write."""
+    from pyspark.sql import functions as F
+
+    from .observe import observed_write
+
+    return observed_write(
+        df,
+        lambda o: o.write.mode("overwrite").parquet(out),
+        rows=F.count(F.lit(1)),
+        **aggregates,
+    )
+
+
 def cmd_dedup_assign(args) -> int:
     """Batch corpus-filter consumable: every doc_id mapped to its
     near-dup keeper (MinHash-LSH pairs → connected components →
     min-id keeper) plus an ``isKept`` flag, written as parquet — the
     table a training pipeline joins against to drop duplicates."""
+    from pyspark.sql import functions as F
+
     from .queries import dedup_minhash_assign
 
     spark = _spark(args.master)
-    out = dedup_minhash_assign(spark, args.sf_dir)
-    out.write.mode("overwrite").parquet(args.out)
-    kept = spark.read.parquet(args.out)
-    n = kept.count()
-    n_kept = kept.where("isKept").count()
-    print(json.dumps({"rows": n, "kept": n_kept, "dropped": n - n_kept,
+    got = _write_parquet(
+        dedup_minhash_assign(spark, args.sf_dir), args.out,
+        kept=F.count_if(F.col("isKept")),
+    )
+    print(json.dumps({**got, "dropped": got["rows"] - got["kept"],
                       "out": args.out}))
     return 0
 
@@ -191,16 +210,16 @@ def cmd_decontaminate(args) -> int:
     """Batch benchmark-decontamination consumable: per-doc contaminated
     shingle counts/fraction + flag, written as parquet. ``--n`` sets
     the shingle width (13 = the standard web-scale check)."""
+    from pyspark.sql import functions as F
+
     from .queries import decontaminate_ngram
 
     spark = _spark(args.master)
-    out = decontaminate_ngram(spark, args.sf_dir, n=args.n)
-    out.write.mode("overwrite").parquet(args.out)
-    flagged = spark.read.parquet(args.out)
-    n = flagged.count()
-    n_bad = flagged.where("isContaminated").count()
-    print(json.dumps({"rows": n, "contaminated": n_bad, "n": args.n,
-                      "out": args.out}))
+    got = _write_parquet(
+        decontaminate_ngram(spark, args.sf_dir, n=args.n), args.out,
+        contaminated=F.count_if(F.col("isContaminated")),
+    )
+    print(json.dumps({**got, "n": args.n, "out": args.out}))
     return 0
 
 
@@ -240,15 +259,14 @@ def cmd_link(args) -> int:
         kb = spark.read.parquet(args.kb)
     else:
         kb = None
-    out = link_mentions(m, entities=kb)
-    out.write.mode("overwrite").parquet(args.out)
-    linked = spark.read.parquet(args.out)
-    n = linked.count()
-    n_nil = linked.where("linkedNorm is null").count()
-    n_exact = linked.where("mentionNorm = linkedNorm").count()
-    print(json.dumps({"rows": n, "exact": n_exact,
-                      "fuzzy": n - n_exact - n_nil, "unlinked": n_nil,
-                      "out": args.out}))
+    got = _write_parquet(
+        link_mentions(m, entities=kb), args.out,
+        exact=F.count_if(F.col("mentionNorm") == F.col("linkedNorm")),
+        unlinked=F.count_if(F.col("linkedNorm").isNull()),
+    )
+    print(json.dumps({"rows": got["rows"], "exact": got["exact"],
+                      "fuzzy": got["rows"] - got["exact"] - got["unlinked"],
+                      "unlinked": got["unlinked"], "out": args.out}))
     return 0
 
 
@@ -262,21 +280,14 @@ def cmd_cut_substrings(args) -> int:
     from pyspark.sql import functions as F
 
     spark = _spark(args.master)
-    out = dedup_substring_apply(spark, args.sf_dir, k=args.k)
-    out.write.mode("overwrite").parquet(args.out)
-    # one aggregate job over the written output, not three scans
-    n, n_touched, removed = (
-        spark.read.parquet(args.out)
-        .agg(
-            F.count("*"),
-            F.sum((F.col("n_removed") > 0).cast("int")),
-            F.sum("n_removed"),
-        )
-        .first()
+    got = _write_parquet(
+        dedup_substring_apply(spark, args.sf_dir, k=args.k), args.out,
+        touched=F.count_if(F.col("n_removed") > 0),
+        tokens_removed=F.sum("n_removed"),
     )
-    print(json.dumps({"rows": n, "touched": int(n_touched or 0),
-                      "tokens_removed": int(removed or 0), "k": args.k,
-                      "out": args.out}))
+    print(json.dumps({"rows": got["rows"], "touched": got["touched"],
+                      "tokens_removed": int(got["tokens_removed"] or 0),
+                      "k": args.k, "out": args.out}))
     return 0
 
 
@@ -322,31 +333,21 @@ def cmd_curate(args) -> int:
     funnel and the surviving token budget."""
     from pyspark.sql import functions as F
 
-    from .queries import curate_corpus
+    from .queries import CURATE_DROP_REASONS, curate_corpus
 
     spark = _spark(args.master)
-    curate_corpus(spark, args.sf_dir).write.mode("overwrite").parquet(
-        args.out
+    reason = F.col("dropReason")
+    got = _write_parquet(
+        curate_corpus(spark, args.sf_dir), args.out,
+        curated_tokens=F.sum("curatedTokens"),
+        curated=F.count_if(reason.isNull()),
+        **{r: F.count_if(reason == r) for r in CURATE_DROP_REASONS},
     )
-    v = spark.read.parquet(args.out)
-    funnel = {
-        r["dropReason"] or "curated": r["n"]
-        for r in v.groupBy("dropReason").agg(
-            F.count("*").alias("n")
-        ).collect()
-    }
-    tokens = v.agg(F.sum("curatedTokens")).first()[0]
-    print(
-        json.dumps(
-            {
-                "rows": v.count(),
-                "funnel": funnel,
-                "curated_tokens": int(tokens or 0),
-                "out": args.out,
-            },
-            sort_keys=True,
-        )
-    )
+    # the funnel lists the outcomes that occur
+    funnel = {k: got[k] for k in ("curated", *CURATE_DROP_REASONS) if got[k]}
+    print(json.dumps({"rows": got["rows"], "funnel": funnel,
+                      "curated_tokens": int(got["curated_tokens"] or 0),
+                      "out": args.out}, sort_keys=True))
     return 0
 
 
@@ -357,26 +358,27 @@ def cmd_scrub(args) -> int:
     counted on the text the redaction chain hands it, so counts equal
     placeholders written). The row count and the totals are observed
     on the one write."""
-    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from .functions.pii import redact_pii, staged_pii_counts
+    from .observe import observed_write
 
     spark = _spark(args.master)
     docs = spark.read.parquet(args.docs)
     n_emails, n_ips, n_phones = staged_pii_counts(F.col("text"))
     rules = {"emails": n_emails, "ips": n_ips, "phones": n_phones}
-    obs = Observation()
-    docs.select(
-        *[c for c in docs.columns if c != "text"],
-        redact_pii(F.col("text")).alias("text"),
-        *[n.alias(f"_{k}") for k, n in rules.items()],
-    ).observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        *[F.sum(f"_{k}").alias(k) for k in rules],
-    ).drop(*[f"_{k}" for k in rules]).write.mode("overwrite").parquet(args.out)
-    got = obs.get
+    got = observed_write(
+        docs.select(
+            *[c for c in docs.columns if c != "text"],
+            redact_pii(F.col("text")).alias("text"),
+            *[n.alias(f"_{k}") for k, n in rules.items()],
+        ),
+        lambda o: o.drop(*[f"_{k}" for k in rules]).write.mode(
+            "overwrite"
+        ).parquet(args.out),
+        rows=F.count(F.lit(1)),
+        **{k: F.sum(f"_{k}") for k in rules},
+    )
     counts = {k: int(got[k] or 0) for k in rules}
     print(json.dumps({"rows": got["rows"], **counts, "out": args.out}))
     return 0

@@ -36,35 +36,38 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sinks.tables import TABLE_KEYS
+
 
 class ConstraintViolation(Exception):
     pass
 
 
-# table → {unique: key columns, indexes: reference-named secondary keys}
-CONSTRAINTS: dict[str, dict] = {
+# reference-named secondary keys of the graph tables
+_INDEXES: dict[str, dict] = {
     "docs": {
-        "unique": ["id"],  # constraint_document_unique_id
-        "indexes": {
-            "index_document_path": ["path"],
-            "index_document_content_type": ["contentType"],
-            "index_document_created_at": ["createdAt"],
-            "index_document_modified_at": ["modifiedAt"],
-        },
+        "index_document_path": ["path"],
+        "index_document_content_type": ["contentType"],
+        "index_document_created_at": ["createdAt"],
+        "index_document_modified_at": ["modifiedAt"],
     },
-    "doc_roots": {"unique": ["src", "dst"], "indexes": {}},
     "entities": {
-        # entity identity IS (mentionNorm, category): entityId is its
-        # sha256, so this subsumes constraint_named_entity_unique_id
-        "unique": ["mentionNorm", "category"],
-        "indexes": {
-            "index_ne_mention_norm": ["mentionNorm"],
-            "index_named_entity_email_user": ["emailUser"],
-            "index_named_entity_email_domain": ["emailDomain"],
-        },
+        "index_ne_mention_norm": ["mentionNorm"],
+        "index_named_entity_email_user": ["emailUser"],
+        "index_named_entity_email_domain": ["emailDomain"],
     },
-    "appears_in": {"unique": ["startId", "endId", "type"], "indexes": {}},
-    "emails": {"unique": ["startId", "endId", "type"], "indexes": {}},
+}
+
+# table → {unique: key columns, indexes: reference-named secondary keys}.
+# The graph tables' unique keys are their merge keys (TABLE_KEYS): docs
+# carries constraint_document_unique_id, and entities' (mentionNorm,
+# category) subsumes constraint_named_entity_unique_id, entityId being
+# its sha256.
+CONSTRAINTS: dict[str, dict] = {
+    **{
+        table: {"unique": list(keys), "indexes": _INDEXES.get(table, {})}
+        for table, keys in TABLE_KEYS.items()
+    },
     "stats": {"unique": ["id"], "indexes": {}},  # constraint_stats_unique_id
 }
 

@@ -25,6 +25,11 @@ The record (sizes in MiB, times in seconds):
 * ``skew``: max / median task run time of the Spark stage with the most
   task time (null when no task ran);
 * ``observe_s``: the time spent reading the stores.
+
+``observed_write(df, write, **aggregates)`` is the other half: the
+aggregates a caller reports about an output, taken on the one write
+that produces it (an ``Observation``), not by a scan of what was
+written.
 """
 
 from __future__ import annotations
@@ -34,7 +39,7 @@ import time
 import uuid
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 _WRITE = "Execute InsertIntoHadoopFsRelationCommand"
 _UNITS = {
@@ -102,6 +107,15 @@ class _Stores:
 
     def mark(self, kind: str) -> int:
         return next((i for i, _ in self.newer(kind, -1)), -1)
+
+
+def observed_write(df: DataFrame, write, **aggregates: Column) -> dict:
+    """Run ``write`` on ``df`` observed with the named ``aggregates``
+    and return their values as observed on that write: the write's own
+    job computes them, so no further job runs."""
+    obs = Observation()
+    write(df.observe(obs, *[c.alias(k) for k, c in aggregates.items()]))
+    return obs.get
 
 
 @contextlib.contextmanager

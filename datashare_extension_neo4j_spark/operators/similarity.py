@@ -348,49 +348,26 @@ def semantic_dedup(
 def ivf_ann_topk(
     vectors: DataFrame,
     queries: DataFrame,
+    centroids: list[list[float]],
     k: int = 5,
-    n_lists: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """IVF-style ANN: k-means coarse quantizer (pyspark.ml, seeded) →
-    every vector assigned to its nearest centroid list; queries probe
-    the ``n_probe`` nearest lists and re-rank candidates exactly.
-    The list assignment shards by centroid id like any other key, so
-    candidate generation is a bucket join — the IVF scale path.
-
-    ``centroids`` (list of dim-length vectors) skips the k-means fit —
-    the production shape, where the quantizer is trained once on a
-    sample and reused; also what keeps plan compilation O(1) testable
-    at n_lists≥256 without a fit."""
-    if centroids is None:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        train = vectors.select(
-            array_to_vector(F.col(vec_col)).alias("features")
-        )
-        km = KMeans(k=n_lists, seed=seed, maxIter=10).fit(train)
-        centroids = [[float(x) for x in c] for c in km.clusterCenters()]
-
-    cents_df = _centroids_df(vectors.sparkSession, centroids)
-    v = (
-        vectors.withColumn("_vq", quantize(F.col(vec_col), IVF_SCALE))
-        .crossJoin(F.broadcast(cents_df))
-        .select(
-            F.col(id_col).alias("nid"),
-            F.col(vec_col).alias("nv"),
-            F.element_at(_nearest_lists(1), 1)
-            .getField("list_id")
-            .alias("list_id"),
-        )
+    """IVF-style ANN over a coarse quantizer ``centroids`` (list of
+    dim-length vectors, e.g. trained by ``kmeans_fixed_point``): every
+    vector assigned to its nearest centroid list; queries probe the
+    ``n_probe`` nearest lists and re-rank candidates exactly. The list
+    assignment shards by centroid id like any other key, so candidate
+    generation is a bucket join — the IVF scale path. The codebook is
+    data, trained once on a sample and reused, which also keeps plan
+    compilation O(1) at n_lists≥256."""
+    v = kmeans_assign(vectors, centroids, id_col, vec_col).select(
+        F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"), "list_id"
     )
     q = (
         queries.withColumn("_vq", quantize(F.col("qv"), IVF_SCALE))
-        .crossJoin(F.broadcast(cents_df))
+        .crossJoin(F.broadcast(_centroids_df(queries.sparkSession, centroids)))
         .select(
             "qid",
             "qv",
@@ -443,42 +420,27 @@ def kmeans_fixed_point(
     returned centroids."""
     v = vectors.select(
         F.col(id_col).alias("vid"),
-        quantize(F.col(vec_col), scale).alias("vq"),
+        quantize(F.col(vec_col), scale).alias("_vq"),
     )
     cents = v.where(F.col("vid") < n_lists).select(
         F.col("vid").cast("int").alias("list_id"),
-        F.col("vq").alias("cq"),
+        F.col("_vq").alias("cq"),
         F.lit(0).cast("long").alias("n_assigned"),
     )
     for _ in range(iters):
         crow = cents.groupBy().agg(
             F.collect_list(F.struct("list_id", "cq")).alias("_cents")
         )
-        dists = F.transform(
-            F.col("_cents"),
-            lambda s: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("vq"),
-                        s.getField("cq"),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                s.getField("list_id").alias("list_id"),
-            ),
-        )
         assign = v.crossJoin(F.broadcast(crow)).select(
             "vid",
-            "vq",
-            F.element_at(F.array_sort(dists), 1)
+            "_vq",
+            F.element_at(_nearest_lists(1), 1)
             .getField("list_id")
             .alias("list_id"),
         )
         sums = (
             assign.select(
-                "list_id", F.posexplode("vq").alias("pos", "val")
+                "list_id", F.posexplode("_vq").alias("pos", "val")
             )
             .groupBy("list_id", "pos")
             .agg(F.sum("val").alias("s"), F.count("*").alias("n"))

@@ -1074,46 +1074,42 @@ def decontaminate_ngram(
     )
     # xxhash64 keys: at n=13 a shingle string is ~100 bytes and the
     # broadcast eval set would balloon; a hash is 8 bytes at any n
-    sh = tk.select(
-        "doc_id",
-        F.explode(F.transform(grams, lambda x: F.xxhash64(x))).alias("shingle"),
-    )
+    hashed = F.transform(grams, lambda x: F.xxhash64(x))
     bench = (
-        sh.where(F.col("doc_id") % _EVAL_MOD == 0).select("shingle").distinct()
+        tk.where(F.col("doc_id") % _EVAL_MOD == 0)
+        .select(F.explode(hashed).alias("_bench"))
+        .distinct()
     )
-    corpus = sh.where(F.col("doc_id") % _EVAL_MOD != 0)
-    # (doc_id, shingle) is distinct by construction (ngram_shingles
-    # dedups per doc in-row), so count(*) == count(DISTINCT shingle) —
-    # dropping countDistinct removes the Expand + extra exchange of a
-    # distinct aggregate (r6)
-    per_doc = corpus.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("nShingles")
+    # one n-gram pass per corpus doc: the in-row array is distinct per
+    # doc (ngram_shingles dedups in-row), so its size is the doc's
+    # shingle count; explode_outer keeps shingle-less docs, and the
+    # left join counts the shingles the eval set holds
+    corpus = tk.where(F.col("doc_id") % _EVAL_MOD != 0).select(
+        "doc_id", hashed.alias("_sh")
     )
-    hits = (
-        corpus.join(F.broadcast(bench), "shingle")
-        .groupBy("doc_id")
-        .agg(F.count("*").cast("long").alias("nContamShingles"))
+    counts = (
+        corpus.select(
+            "doc_id",
+            F.size("_sh").cast("long").alias("nShingles"),
+            F.explode_outer("_sh").alias("shingle"),
+        )
+        .join(F.broadcast(bench), F.col("shingle") == F.col("_bench"), "left")
+        .groupBy("doc_id", "nShingles")
+        .agg(F.count("_bench").alias("nContamShingles"))
     )
-    d = _docs(spark, sf_dir).select("doc_id").where(F.col("doc_id") % _EVAL_MOD != 0)
-    n_contam = F.coalesce(F.col("nContamShingles"), F.lit(0).cast("long"))
     frac = F.round(
-        F.when(F.col("nShingles") > 0, n_contam / F.col("nShingles")).otherwise(
-            F.lit(0.0)
-        ),
+        F.when(
+            F.col("nShingles") > 0,
+            F.col("nContamShingles") / F.col("nShingles"),
+        ).otherwise(F.lit(0.0)),
         6,
     )
-    return (
-        d.join(per_doc, "doc_id", "left")
-        .join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            n_contam.alias("nContamShingles"),
-            F.coalesce(F.col("nShingles"), F.lit(0).cast("long")).alias(
-                "nShingles"
-            ),
-            frac.alias("contamFraction"),
-            (frac >= 0.9).alias("isContaminated"),
-        )
+    return counts.select(
+        "doc_id",
+        "nContamShingles",
+        "nShingles",
+        frac.alias("contamFraction"),
+        (frac >= 0.9).alias("isContaminated"),
     )
 
 
@@ -1156,6 +1152,17 @@ LEFT JOIN per_doc p USING (doc_id)
 LEFT JOIN hits h USING (doc_id)
 WHERE d.doc_id % {_EVAL_MOD} != 0
 """
+
+
+# curate_corpus's stages in their canonical order: the dropReason each
+# records, and the predicate a doc that the stage drops satisfies
+CURATE_DROP_REASONS = {
+    "evalSlice": "inEvalSet",
+    "quality": "NOT qualityPass",
+    "exactDup": "NOT exactKept",
+    "nearDup": "NOT nearDupKept",
+    "contaminated": "contaminated",
+}
 
 
 def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1221,13 +1228,10 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("exactKept", exact_kept)
         .withColumn("nearDupKept", near_kept)
     )
-    drop_reason = (
-        F.when(F.col("inEvalSet"), "evalSlice")
-        .when(~F.col("qualityPass"), "quality")
-        .when(~F.col("exactKept"), "exactDup")
-        .when(~F.col("nearDupKept"), "nearDup")
-        .when(F.col("contaminated"), "contaminated")
-    )
+    (first, fails), *rest = CURATE_DROP_REASONS.items()
+    drop_reason = F.when(F.expr(fails), first)
+    for reason, fails in rest:
+        drop_reason = drop_reason.when(F.expr(fails), reason)
     return j.select(
         "doc_id",
         "inEvalSet",
@@ -3274,16 +3278,6 @@ SELECT '3_purchase_after_click', CAST(count(*) AS BIGINT) FROM t3
 """
 
 
-def _cosine(a: F.Column, b: F.Column) -> F.Column:
-    """Null for zero-norm vectors (NaN would sort above every real
-    cosine under desc) — the oracle mirrors this with CASE WHEN.
-    Single implementation: operators/similarity.cosine (the zero-norm
-    guard is subtle enough to live in exactly one place)."""
-    from .operators.similarity import cosine
-
-    return cosine(a, b)
-
-
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for query vectors vec_id < 10 — the
     shared cosine_topk operator (broadcast query side, exact scores,
@@ -3324,6 +3318,8 @@ SELECT qid, nid, rank, round(cos, 6) AS cosine FROM ranked WHERE rank <= 5
 def embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (cos ≥ 0.4 — threshold tuned for the random synthetic embeddings; real near-dup corpora use ~0.95) for probe set
     vec_id < 100 vs all — the brute-force baseline of the LSH path."""
+    from .operators.similarity import cosine
+
     e = _emb(spark, sf_dir)
     probe = e.where(F.col("vec_id") < 100).select(
         F.col("vec_id").alias("aid"), F.col("embedding").alias("av")
@@ -3333,7 +3329,7 @@ def embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(
             "aid",
             F.col("vec_id").alias("bid"),
-            F.round(_cosine(F.col("av"), F.col("embedding")), 6).alias("cosine"),
+            F.round(cosine(F.col("av"), F.col("embedding")), 6).alias("cosine"),
         )
         .where(F.col("cosine") >= 0.4)
     )
@@ -3872,8 +3868,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
     out = ivf_ann_topk(
-        e, q, k=_ANN_K, n_lists=_IVF_LISTS, n_probe=_IVF_PROBE,
-        centroids=_ivf_trained_centroids(spark, sf_dir),
+        e, q, _ivf_trained_centroids(spark, sf_dir), k=_ANN_K,
+        n_probe=_IVF_PROBE,
     )
     return out.select("qid", "nid", "rank", F.round("cos", 6).alias("cosine"))
 
@@ -3968,8 +3964,8 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
     approx = ivf_ann_topk(
-        e, q, k=5, n_lists=_IVF_LISTS, n_probe=_IVF_RECALL_PROBE,
-        centroids=_ivf_trained_centroids(spark, sf_dir),
+        e, q, _ivf_trained_centroids(spark, sf_dir), k=5,
+        n_probe=_IVF_RECALL_PROBE,
     )
     return _ann_recall_row(spark, sf_dir, approx)
 

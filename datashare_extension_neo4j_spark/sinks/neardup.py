@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checkpoints import keep
+from .tables import stored_rows
 
 
 def band_signatures(docs: DataFrame) -> DataFrame:
@@ -54,10 +55,11 @@ def init_neardup_store(
     spark: SparkSession, docs: DataFrame, store_path: str
 ) -> int:
     """Create the signature store from an initial accepted corpus.
-    Returns the number of band rows written."""
+    Returns the number of band rows written, read from the parquet
+    footers."""
     sigs = band_signatures(docs)
     sigs.write.mode("errorifexists").parquet(store_path)
-    return spark.read.parquet(store_path).count()
+    return stored_rows(store_path)
 
 
 def incremental_neardup(
@@ -108,11 +110,10 @@ def incremental_neardup(
     sigs.join(dups.select("doc_id"), "doc_id", "left_anti").write.mode(
         "append"
     ).parquet(store_path)
-    n_stored = spark.read.parquet(store_path).count()
     return {
         "kept": kept,
         "dups": dups,
         "n_new": n_new,
         "n_suppressed": n_suppressed,
-        "n_stored_rows": n_stored,
+        "n_stored_rows": stored_rows(store_path),
     }

@@ -7,19 +7,22 @@ neo4j-app/neo4j_app/core/objects.py:93-115), bulk-import.sh, and an
 optional tar.gz (reference core/imports.py:319-372,878-909). Byte
 format pinned by the reference goldens (tests/core/test_imports.py:500-656).
 
-Two write paths:
-  * ``write_csv_distributed`` — the scale path: body lines rendered
-    JVM-side (functions/csvfmt.py) and written as a text directory;
+One writer, two packagings. Every body file is rendered JVM-side
+(functions/csvfmt.py) and written by the executors as a text
+directory of parts (``write_csv_distributed``), the five files
+concurrently, each counted on its one write. The packaging differs:
+  * ``export_graph_csvs_distributed`` keeps the part directories;
     neo4j-admin accepts multiple CSV parts per node/rel type, so
-    metadata.json just lists every part.
-  * ``export_graph_csvs`` — single-file packaging used by tests and
-    small exports; streams partitions through ``toLocalIterator`` (no
-    full collect on the driver).
+    metadata.json lists every part;
+  * ``export_graph_csvs`` (optionally as a tar) byte-concatenates each
+    directory's parts, in part-name order, into ``<name>.csv``.
+Bodies are not sorted: the reference does not sort them either.
 """
 
 from __future__ import annotations
 
 import json
+import shutil
 import tarfile
 from functools import partial
 from pathlib import Path
@@ -40,6 +43,7 @@ from ..constants import (
     NEO4J_ARRAY_SPLIT_CHAR,
 )
 from ..functions.csvfmt import neo4j_csv_line, neo4j_header_line
+from ..observe import observed_write
 
 
 def _arr(col: str) -> F.Column:
@@ -120,19 +124,19 @@ def _csv_specs(docs, doc_roots, entities, appears_in, emails) -> list:
     ]
 
 
-def _metadata(
-    db: str, paths: dict[str, list[str]], counts: dict[str, int]
+def _write_metadata(
+    d: Path, db: str, paths: dict[str, list[str]], counts: dict[str, int]
 ) -> dict:
     """metadata.json (the reference's Neo4jCSVs shape): node and
-    relationship entries listing each file's header, body parts and
-    record count."""
+    relationship entries listing each file's header, body paths and
+    record count; written next to the bulk-import.sh that reads it."""
     nodes = [("docs", [DOC_NODE]), ("entities", [NE_NODE])]
     rels = [
         ("doc-roots", [DOC_ROOT_TYPE]),
         ("entity-docs", [NE_APPEARS_IN_DOC]),
         ("email-docs", []),
     ]
-    return {
+    metadata = {
         "db": db,
         "nodes": [
             {
@@ -153,22 +157,45 @@ def _metadata(
             for name, types in rels
         ],
     }
+    (d / "metadata.json").write_text(json.dumps(metadata, indent=2))
+    _write_bulk_import_script(d)
+    return metadata
 
 
-def write_csv_distributed(lines: DataFrame, path: str) -> None:
-    """Scale path: one text part per partition, no driver bottleneck."""
-    lines.write.mode("overwrite").text(path)
+def write_csv_distributed(lines: DataFrame, path: str) -> int:
+    """Write body lines as a text directory, one part per partition,
+    no driver bottleneck. Returns the RECORDS written, observed on the
+    write: a quoted field with an embedded newline spans two physical
+    lines, so a re-scan of the text would overcount."""
+    return observed_write(
+        lines,
+        lambda df: df.write.mode("overwrite").text(path),
+        n=F.count(F.lit(1)),
+    )["n"]
 
 
-def _write_single(lines: DataFrame, path: Path) -> int:
-    n = 0
-    it = lines.sort("line").toLocalIterator()
-    with path.open("w", newline="", encoding="utf-8") as f:
-        for row in it:
-            f.write(row["line"])
-            f.write("\n")
-            n += 1
-    return n
+def _write_bodies(d: Path, *tables: DataFrame) -> dict[str, int]:
+    """The five files' headers and body directories ``d/<name>``, the
+    bodies written concurrently. Returns name → record count."""
+    from ..manifest import run_concurrently
+
+    d.mkdir(parents=True, exist_ok=True)
+
+    def export(name: str, header: str, lines: DataFrame) -> int:
+        (d / f"{name}-header.csv").write_text(neo4j_header_line(header))
+        return write_csv_distributed(lines, str(d / name))
+
+    return run_concurrently(
+        tables[0].sparkSession,
+        {spec[0]: partial(export, *spec) for spec in _csv_specs(*tables)},
+    )
+
+
+def _parts(d: Path, name: str) -> list[str]:
+    """The body parts of ``d/<name>``, relative to ``d``, in name order."""
+    return sorted(
+        f"{name}/{p.name}" for p in (d / name).iterdir() if p.name.startswith("part-")
+    )
 
 
 def export_graph_csvs(
@@ -182,18 +209,20 @@ def export_graph_csvs(
     db: str = "neo4j",
     as_tar: bool = False,
 ) -> dict:
-    """Write the full reference-compatible export package."""
+    """Write the full reference-compatible export package, one
+    ``<name>.csv`` per body: the executors write its parts, which are
+    then concatenated in part-name order."""
     d = Path(export_dir)
-    d.mkdir(parents=True, exist_ok=True)
-    counts = {}
-    for name, header, lines in _csv_specs(
-        docs, doc_roots, entities, appears_in, emails
-    ):
-        (d / f"{name}-header.csv").write_text(neo4j_header_line(header))
-        counts[name] = _write_single(lines, d / f"{name}.csv")
-    metadata = _metadata(db, {name: [f"{name}.csv"] for name in counts}, counts)
-    (d / "metadata.json").write_text(json.dumps(metadata, indent=2))
-    _write_bulk_import_script(d)
+    counts = _write_bodies(d, docs, doc_roots, entities, appears_in, emails)
+    for name in counts:
+        with (d / f"{name}.csv").open("wb") as out:
+            for part in _parts(d, name):
+                with (d / part).open("rb") as f:
+                    shutil.copyfileobj(f, out)
+        shutil.rmtree(d / name)
+    metadata = _write_metadata(
+        d, db, {name: [f"{name}.csv"] for name in counts}, counts
+    )
     if as_tar:
         tar_path = d / "neo4j-export.tar.gz"
         with tarfile.open(tar_path, "w:gz") as tf:
@@ -203,9 +232,8 @@ def export_graph_csvs(
         # reference destroys only node/relationship BODY csvs as they
         # are compressed; header files stay on disk (and are also added
         # to the tar) — imports.py:893-909
-        for p in d.iterdir():
-            if p.suffix == ".csv" and not p.name.endswith("-header.csv"):
-                p.unlink()
+        for name in counts:
+            (d / f"{name}.csv").unlink()
         metadata["tarPath"] = str(tar_path)
     return metadata
 
@@ -220,47 +248,17 @@ def export_graph_csvs_distributed(
     export_dir: str | Path,
     db: str = "neo4j",
 ) -> dict:
-    """Scale-path export: every table written as a text DIRECTORY of
-    part files by the executors (no driver bottleneck), packaged into
-    a metadata.json whose nodePaths/relationshipPaths list every part —
-    the reference's Neo4jCSVs shape allows multiple paths per type
+    """Scale-path export: every body kept as its text DIRECTORY of
+    part files, packaged into a metadata.json whose
+    nodePaths/relationshipPaths list every part — the reference's
+    Neo4jCSVs shape allows multiple paths per type
     (core/objects.py:93-115) and neo4j-admin consumes them comma-joined
-    (scripts/bulk-import.sh contract). The five files are written
-    concurrently, each counted by an ``Observation`` on its one write:
-    it counts RECORDS, not lines (a quoted field with an embedded
-    newline spans two physical lines, so a read.text re-scan would
-    overcount)."""
-    from pyspark.sql import Observation
-
-    from ..manifest import run_concurrently
-
+    (scripts/bulk-import.sh contract)."""
     d = Path(export_dir)
-    d.mkdir(parents=True, exist_ok=True)
-
-    def export(name: str, header: str, lines: DataFrame) -> int:
-        (d / f"{name}-header.csv").write_text(neo4j_header_line(header))
-        obs = Observation()
-        write_csv_distributed(
-            lines.observe(obs, F.count(F.lit(1)).alias("n")), str(d / name)
-        )
-        return obs.get["n"]
-
-    specs = _csv_specs(docs, doc_roots, entities, appears_in, emails)
-    counts = run_concurrently(
-        docs.sparkSession, {spec[0]: partial(export, *spec) for spec in specs}
+    counts = _write_bodies(d, docs, doc_roots, entities, appears_in, emails)
+    return _write_metadata(
+        d, db, {name: _parts(d, name) for name in counts}, counts
     )
-    parts = {
-        name: sorted(
-            f"{name}/{p.name}"
-            for p in (d / name).iterdir()
-            if p.name.startswith("part-")
-        )
-        for name in counts
-    }
-    metadata = _metadata(db, parts, counts)
-    (d / "metadata.json").write_text(json.dumps(metadata, indent=2))
-    _write_bulk_import_script(d)
-    return metadata
 
 
 def _write_bulk_import_script(d: Path) -> None:

@@ -170,9 +170,13 @@ def rewrite_table(spark: SparkSession, path: str, name: str, transform) -> None:
 
 def stored_rows(path: str) -> int:
     """Rows of a stored table, summed from its parquet footers: no data
-    is read and no job runs."""
+    is read and no job runs. The table must be a local directory (as
+    every store's sidecar and manifest are): a path this process cannot
+    list raises instead of reading as empty."""
     import pyarrow.parquet as pq
 
+    if not Path(path).is_dir():
+        raise FileNotFoundError(f"no local table directory at {path}")
     return sum(
         pq.read_metadata(f).num_rows for f in Path(path).rglob("*.parquet")
     )

@@ -31,7 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.weblinks import host_graph
-from .tables import merge_bucketed, read_table, stored_buckets, write_buckets
+from .tables import (
+    merge_bucketed,
+    read_table,
+    stored_buckets,
+    stored_rows,
+    write_buckets,
+)
 
 LEDGER_KEYS = ["srcHost", "dstHost", "batchId"]
 DEFAULT_BUCKETS = 8
@@ -61,7 +67,8 @@ def init_webgraph_store(
 ) -> int:
     """Create the ledger from an initial link batch (bucketed on the
     ledger key so later merges rewrite only touched partitions).
-    Returns the number of ledger rows written."""
+    Returns the number of ledger rows written, read from the parquet
+    footers."""
     write_buckets(
         host_graph_batch(links, batch_id),
         store_path,
@@ -69,7 +76,7 @@ def init_webgraph_store(
         n_buckets,
         "errorifexists",
     )
-    return spark.read.parquet(store_path).count()
+    return stored_rows(store_path)
 
 
 def merge_webgraph_batch(

@@ -88,9 +88,13 @@ def test_cli_build_enforces_unique_doc_ids(spark, tmp_path, capsys):
     assert "docs" not in stages and "doc_roots" not in stages
 
 
-def test_cli_link_reads_mentions_merged_after_the_build(spark, tmp_path, capsys):
+def test_cli_link_reads_mentions_merged_after_the_build(
+    spark, tmp_path, capsys, last_sql_execution
+):
     """link reads the store's current mentions: one imported by
-    import-mentions after the build is linked too."""
+    import-mentions after the build is linked too. Its summary is
+    observed on the write: two SQL executions, the entity frame's
+    checkpoint and the write (three count jobs after it made five)."""
     from datashare_extension_neo4j_spark.schemas import MENTION_SCHEMA
 
     pages_path = str(tmp_path / "pages")
@@ -107,8 +111,11 @@ def test_cli_link_reads_mentions_merged_after_the_build(spark, tmp_path, capsys)
     assert main(["import-mentions", "--mentions", m_path,
                  "--run-dir", run_dir]) == 0
     lk = str(tmp_path / "links")
+    before = last_sql_execution()
     assert main(["link", "--run-dir", run_dir, "--out", lk]) == 0
-    capsys.readouterr()
+    assert last_sql_execution() - before == 2
+    c = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert c["rows"] == c["exact"] + c["fuzzy"] + c["unlinked"]
     (row,) = spark.read.parquet(lk).where("mention_id = 'm-late'").collect()
     assert (row["documentId"], row["mentionNorm"], row["category"]) == (
         "doc-1", "zoe", "PERSON"
@@ -163,12 +170,17 @@ def test_cli_migrate_and_verify(spark, tmp_path, capsys):
     assert bad["ok"] is False and "entities" in bad["violation"]
 
 
-def test_cli_corpus_filter_consumables(spark, tmp_path, capsys):
-    """dedup-assign and decontaminate write consumable parquet tables
-    and report counters; keeper semantics spot-checked."""
+def test_cli_corpus_filter_consumables(
+    spark, tmp_path, capsys, last_sql_execution
+):
+    """dedup-assign, decontaminate and cut-substrings write consumable
+    parquet tables and report counters observed on that one write (no
+    job reads the output back); keeper semantics spot-checked."""
     out1 = str(tmp_path / "keepers")
+    before = last_sql_execution()
     assert main(["dedup-assign", "--sf-dir", "/root/testdata/sf0.001",
                  "--out", out1]) == 0
+    assert last_sql_execution() - before == 8  # two counts after took 10
     c = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert c["rows"] == 500 and c["kept"] + c["dropped"] == 500
     rows = spark.read.parquet(out1).collect()
@@ -177,14 +189,18 @@ def test_cli_corpus_filter_consumables(spark, tmp_path, capsys):
     assert {r["keepDocId"] for r in rows} <= kept_ids
 
     out2 = str(tmp_path / "contam")
+    before = last_sql_execution()
     assert main(["decontaminate", "--sf-dir", "/root/testdata/sf0.001",
                  "--out", out2, "--n", "2"]) == 0
+    assert last_sql_execution() - before == 1  # two counts after took 3
     c2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert c2["rows"] == 475 and c2["n"] == 2
 
     out3 = str(tmp_path / "cut")
+    before = last_sql_execution()
     assert main(["cut-substrings", "--sf-dir", "/root/testdata/sf0.001",
                  "--out", out3, "--k", "5"]) == 0
+    assert last_sql_execution() - before == 1  # an aggregate after took 2
     c3 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert c3["rows"] == 500 and c3["k"] == 5
     assert 0 < c3["touched"] <= 500 and c3["tokens_removed"] > 0
@@ -195,15 +211,22 @@ def test_cli_corpus_filter_consumables(spark, tmp_path, capsys):
     ).count() == 0
 
 
-def test_cli_curate_and_scrub(spark, tmp_path, capsys):
-    """curate writes the provenance table + drop funnel; scrub writes
-    the redacted corpus with staged counters."""
+def test_cli_curate_and_scrub(spark, tmp_path, capsys, last_sql_execution):
+    """curate writes the provenance table + drop funnel, observed on
+    the one write; scrub writes the redacted corpus with staged
+    counters."""
     out1 = str(tmp_path / "curated")
+    before = last_sql_execution()
     assert main(["curate", "--sf-dir", "/root/testdata/sf0.001",
                  "--out", out1]) == 0
+    # a funnel groupBy, a token sum and a row count after took 11
+    assert last_sql_execution() - before == 8
     c = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert c["rows"] == 500
-    assert c["funnel"].get("evalSlice") == 25
+    assert c["funnel"] == {
+        "contaminated": 13, "curated": 398, "evalSlice": 25, "nearDup": 18,
+        "quality": 46,
+    }
     assert c["curated_tokens"] > 0
     v = spark.read.parquet(out1)
     assert v.where("curated and dropReason is not null").count() == 0
@@ -237,9 +260,10 @@ def test_cli_scrub_runs_one_execution(spark, tmp_path, capsys, last_sql_executio
     assert (s["rows"], s["emails"], s["ips"], s["phones"]) == (3, 2, 1, 0)
 
 
-def test_cli_neardup_store_cycle(spark, tmp_path, capsys):
+def test_cli_neardup_store_cycle(spark, tmp_path, capsys, last_sql_execution):
     """neardup-init then neardup-increment: dup suppressed against the
-    store, survivor appended, outputs written."""
+    store, survivor appended, outputs written. The store's row counts
+    are read from its parquet footers: neardup-init is its one write."""
     t1 = "alpha beta gamma delta epsilon zeta eta theta"
     t3 = "iota kappa lambda mu nu xi omicron pi rho"
     base = str(tmp_path / "base")
@@ -247,9 +271,11 @@ def test_cli_neardup_store_cycle(spark, tmp_path, capsys):
         [(1, t1)], "doc_id long, text string"
     ).write.parquet(base)
     store = str(tmp_path / "store")
+    before = last_sql_execution()
     assert main(["neardup-init", "--docs", base, "--store", store]) == 0
+    assert last_sql_execution() - before == 1
     init = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert init["band_rows"] > 0
+    assert init["band_rows"] == spark.read.parquet(store).count() > 0
 
     newb = str(tmp_path / "new")
     spark.createDataFrame(
@@ -332,12 +358,19 @@ def test_cli_weblinks_bundle_equals_registry_queries(spark, tmp_path, capsys):
     assert stored == pytest.approx(expected, abs=1e-6)
 
 
-def test_cli_weblinks_incremental_cycle(spark, tmp_path, capsys):
+def test_cli_weblinks_incremental_cycle(
+    spark, tmp_path, capsys, last_sql_execution
+):
+    """weblinks-init writes the ledger in one SQL execution (its row
+    count is read from the parquet footers), then an increment MERGEs
+    the other half to the full-corpus host graph."""
     store = str(tmp_path / "ledger")
+    before = last_sql_execution()
     assert main(["weblinks-init", "--sf-dir", "/root/testdata/sf0.001",
                  "--store", store, "--filter", "doc_id % 2 = 0"]) == 0
+    assert last_sql_execution() - before == 1
     r0 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert r0["ledger_rows"] > 0
+    assert r0["ledger_rows"] == spark.read.parquet(store).count() > 0
     assert main(["weblinks-increment", "--sf-dir", "/root/testdata/sf0.001",
                  "--store", store, "--batch-id", "b1",
                  "--filter", "doc_id % 2 = 1"]) == 0

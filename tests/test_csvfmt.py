@@ -5,6 +5,7 @@ reference neo4j-app/neo4j_app/core/neo4j/__init__.py:96-130)."""
 import csv
 import io
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -154,10 +155,13 @@ def test_tar_keeps_header_files(spark, tmp_path):
     assert "docs.csv" in names and "docs-header.csv" in names
 
 
-def test_distributed_export_counts_embedded_newlines(spark, tmp_path):
-    """metadata.json record counts must count RECORDS, not physical
-    lines: a quoted field with an embedded newline spans two lines."""
+def _export_two_docs(spark, tmp_path, layout):
+    """Export two docs, one titled with an embedded newline, in ``layout``
+    and return the metadata and the docs CSV body."""
+    import tarfile
+
     from datashare_extension_neo4j_spark.sinks.neo4j_csv import (
+        export_graph_csvs,
         export_graph_csvs_distributed,
     )
 
@@ -173,7 +177,7 @@ def test_distributed_export_counts_embedded_newlines(spark, tmp_path):
         " title string, urlSuffix string, createdAt string, modifiedAt string",
     )
     empty = lambda schema: spark.createDataFrame([], schema)  # noqa: E731
-    meta = export_graph_csvs_distributed(
+    kw = dict(
         docs=docs,
         doc_roots=empty("src string, dst string"),
         entities=empty("entityId string, mentionNorm string, label string"),
@@ -187,4 +191,36 @@ def test_distributed_export_counts_embedded_newlines(spark, tmp_path):
         ),
         export_dir=tmp_path,
     )
+    if layout == "distributed":
+        meta = export_graph_csvs_distributed(**kw)
+        body = "".join(
+            (tmp_path / p).read_text() for p in meta["nodes"][0]["nodePaths"]
+        )
+    elif layout == "tar":
+        meta = export_graph_csvs(as_tar=True, **kw)
+        with tarfile.open(meta["tarPath"]) as tf:
+            body = tf.extractfile("docs.csv").read().decode("utf-8")
+    else:
+        meta = export_graph_csvs(**kw)
+        body = (tmp_path / "docs.csv").read_text()
+    return meta, body
+
+
+def _assert_two_records(meta, body):
     assert meta["nodes"][0]["nNodes"] == 2  # not 3
+    rows = list(csv.reader(io.StringIO(body, newline="")))
+    assert sorted(r[7] for r in rows) == ["plain", "title\nwith newline"]
+
+
+def test_distributed_export_counts_embedded_newlines(spark, tmp_path):
+    """metadata.json record counts must count RECORDS, not physical
+    lines: a quoted field with an embedded newline spans two lines. The
+    part files parse back as two records."""
+    _assert_two_records(*_export_two_docs(spark, tmp_path, "distributed"))
+
+
+@pytest.mark.parametrize("layout", ["single", "tar"])
+def test_export_counts_embedded_newlines(spark, tmp_path, layout):
+    """The same record count and round trip for docs.csv and the tar's
+    docs.csv."""
+    _assert_two_records(*_export_two_docs(spark, tmp_path, layout))

@@ -222,7 +222,7 @@ def test_ann_plan_size_bounded_at_production_dims(spark):
     t0 = time.monotonic()
     lsh = lsh_ann_topk(v, q, dim=dim, k=2, bits=16, tables=8)
     cents = [[float(j % 7) for j in range(dim)] for _ in range(256)]
-    ivf = ivf_ann_topk(v, q, k=2, n_lists=256, n_probe=4, centroids=cents)
+    ivf = ivf_ann_topk(v, q, cents, k=2, n_probe=4)
     plans = [
         df._jdf.queryExecution().executedPlan().toString() for df in (lsh, ivf)
     ]
@@ -234,20 +234,28 @@ def test_ann_plan_size_bounded_at_production_dims(spark):
 
 
 def test_ivf_ann_recall(spark):
-    from datashare_extension_neo4j_spark.operators.similarity import ivf_ann_topk
+    """IVF over an 8-list codebook trained by the fixed-point k-means,
+    dequantized by its power-of-two scale."""
+    from datashare_extension_neo4j_spark.operators.similarity import (
+        IVF_SCALE,
+        ivf_ann_topk,
+        kmeans_fixed_point,
+    )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
+    cents = [
+        [x / IVF_SCALE for x in r["cq"]]
+        for r in kmeans_fixed_point(emb, 8).orderBy("list_id").collect()
+    ]
     exact = {
         (r["qid"], r["nid"]) for r in cosine_topk(emb, queries, k=5).collect()
     }
     approx = {
         (r["qid"], r["nid"])
-        for r in ivf_ann_topk(
-            emb, queries, k=5, n_lists=8, n_probe=4
-        ).collect()
+        for r in ivf_ann_topk(emb, queries, cents, k=5, n_probe=4).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, f"IVF recall too low: {recall}"

@@ -137,9 +137,7 @@ def test_ivf_assignment_ties_break_identically(spark):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
     cents = [rows[1][1], rows[2][1]]  # +x and -x: origin ties exactly
-    out = ivf_ann_topk(
-        v, q, k=4, n_lists=2, n_probe=1, centroids=cents
-    ).toPandas()
+    out = ivf_ann_topk(v, q, cents, k=4, n_probe=1).toPandas()
     # probe 1 list only; the tie at the origin must pick list 0
     # (lower list_id) → candidates are exactly the list-0 members
     got_nids = sorted(out["nid"].tolist())

@@ -134,6 +134,31 @@ def test_csv_quoting_of_hostile_ids(hostile_graph, tmp_path):
     assert 'doc,with“quote' in ids  # comma+quote id survived intact
 
 
+def test_tar_round_trips_hostile_ids(hostile_graph, tmp_path):
+    """The --tar layout keeps a quoted id with a comma and a curly
+    quote intact: the archived docs.csv re-parses to every doc id."""
+    import csv as csvmod
+    import io
+    import tarfile
+
+    meta = export_graph_csvs(
+        docs=hostile_graph.docs,
+        doc_roots=hostile_graph.doc_roots,
+        entities=hostile_graph.entities,
+        appears_in=hostile_graph.appears_in,
+        emails=hostile_graph.emails,
+        export_dir=tmp_path,
+        as_tar=True,
+    )
+    with tarfile.open(meta["tarPath"]) as tf:
+        body = tf.extractfile("docs.csv").read().decode("utf-8")
+    rows = list(csvmod.reader(io.StringIO(body, newline="")))
+    assert sorted(r[0] for r in rows) == sorted(
+        r["id"] for r in hostile_graph.docs.collect()
+    )
+    assert 'doc,with“quote' in {r[0] for r in rows}
+
+
 def test_null_warc_ts_extraction_date(spark):
     """Null timestamp must yield null extractionDate, not the literal
     string 'NaT' (pd.NaT is not None and NaT.isoformat() == 'NaT')."""

@@ -5,6 +5,8 @@ by kept docs only, and the O(new-batch) signature-work guarantee.
 
 from __future__ import annotations
 
+import pytest
+
 T1 = "alpha beta gamma delta epsilon zeta eta theta"
 T2 = "one two three four five six seven eight nine"
 T3 = "iota kappa lambda mu nu xi omicron pi rho"
@@ -119,3 +121,14 @@ def test_incremental_neardup_rerun_is_idempotent(spark, tmp_path):
     assert [(r["doc_id"], r["keeperDocId"]) for r in res3["dups"].collect()] == [
         (5, 4)
     ]
+
+
+def test_store_row_count_needs_a_local_table(tmp_path):
+    """Store row counts are read from local parquet footers: a path that
+    is not a local directory (a missing one, or a remote URI) raises
+    instead of counting as an empty store."""
+    from datashare_extension_neo4j_spark.sinks.tables import stored_rows
+
+    for path in (tmp_path / "missing", "hdfs://namenode/store"):
+        with pytest.raises(FileNotFoundError):
+            stored_rows(str(path))

@@ -1,12 +1,16 @@
 """Per-stage Spark metrics (observe.py): job-tag attribution under
-concurrency, the records `cli build` leaves in its manifest, and the
-`increments` records of `cli incremental`."""
+concurrency, the records `cli build` leaves in its manifest, the
+`increments` records of `cli incremental`, and the one place an
+output's reported aggregates are observed on its write."""
 
+import ast
 import json
 import threading
+from pathlib import Path
 
 import pytest
 
+import datashare_extension_neo4j_spark as pkg
 from datashare_extension_neo4j_spark.cli import main
 from datashare_extension_neo4j_spark.fixtures import reference_pages
 from datashare_extension_neo4j_spark.manifest import Manifest
@@ -174,3 +178,31 @@ def test_observe_counts_materialize_graph_writer_threads(spark, tmp_path):
     rows = sum(spark.read.parquet(p).count() for p in paths.values())
     assert rec["rows_written"] == rows > 0
     assert rec["files_written"] >= len(paths)
+
+
+def test_writes_are_observed_in_one_module():
+    """Every output's summary is taken on its write: only observe.py
+    builds an ``Observation``, the CSV export streams nothing through
+    the driver, and no CLI command reads its ``--out`` back to count
+    it."""
+    root = Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if name == "Observation" and rel != "observe.py":
+                offenders.append((rel, node.lineno, name))
+            if name == "toLocalIterator" and rel == "sinks/neo4j_csv.py":
+                offenders.append((rel, node.lineno, name))
+            if (
+                rel == "cli.py"
+                and name == "parquet"
+                and "read" in ast.unparse(f.value)
+                and any(ast.unparse(a) == "args.out" for a in node.args)
+            ):
+                offenders.append((rel, node.lineno, ast.unparse(node)))
+    assert offenders == []

@@ -177,18 +177,21 @@ def test_noise_pages_do_not_leak(graph, spark):
 
 
 def test_distributed_export_matches_single(graph, tmp_path):
-    """The executor-written multi-part package holds exactly the same
-    CSV bytes as the driver-streamed single-file export (modulo row
-    order), its metadata lists every part, and bulk-import.sh compiles
-    a valid multi-part neo4j-admin command."""
+    """The three layouts hold the same package: the multi-part
+    package's parts, the single-file export's bodies and the tar's
+    bodies carry the same line multiset per file, byte-identical
+    headers and the same metadata counts; each metadata lists its
+    bodies, and bulk-import.sh compiles a valid neo4j-admin command
+    referencing every part."""
     import subprocess
+    import tarfile
+    from collections import Counter
 
     from datashare_extension_neo4j_spark.sinks.neo4j_csv import (
         export_graph_csvs_distributed,
     )
 
-    single = tmp_path / "single"
-    multi = tmp_path / "multi"
+    single, tar, multi = tmp_path / "single", tmp_path / "tar", tmp_path / "multi"
     kw = dict(
         docs=graph.docs.where("id like 'doc-%'"),
         doc_roots=graph.doc_roots,
@@ -196,41 +199,82 @@ def test_distributed_export_matches_single(graph, tmp_path):
         appears_in=graph.appears_in,
         emails=graph.emails,
     )
-    export_graph_csvs(export_dir=single, **kw)
-    meta = export_graph_csvs_distributed(export_dir=multi, **kw)
+    metas = {
+        "single": export_graph_csvs(export_dir=single, **kw),
+        "tar": export_graph_csvs(export_dir=tar, as_tar=True, **kw),
+        "multi": export_graph_csvs_distributed(export_dir=multi, **kw),
+    }
+    with tarfile.open(metas["tar"]["tarPath"]) as tf:
+        archived = {
+            m.name: tf.extractfile(m).read().decode("utf-8")
+            for m in tf.getmembers()
+        }
 
     for name in ["docs", "doc-roots", "entities", "entity-docs", "email-docs"]:
-        want = sorted((single / f"{name}.csv").read_text().splitlines())
-        got = sorted(
+        want = Counter((single / f"{name}.csv").read_text().splitlines())
+        assert want, f"{name} is empty"
+        assert Counter(archived[f"{name}.csv"].splitlines()) == want, name
+        parts = Counter(
             line
             for p in (multi / name).glob("part-*")
             for line in p.read_text().splitlines()
         )
-        assert got == want, f"{name} bytes diverge"
-        # headers byte-identical
-        assert (multi / f"{name}-header.csv").read_text() == (
-            single / f"{name}-header.csv"
-        ).read_text()
+        assert parts == want, f"{name} bytes diverge"
+        header = (single / f"{name}-header.csv").read_text()
+        assert (multi / f"{name}-header.csv").read_text() == header
+        assert (tar / f"{name}-header.csv").read_text() == header
+        assert archived[f"{name}-header.csv"] == header
 
-    # metadata counts match the single-file export's
-    single_meta = json.loads((single / "metadata.json").read_text())
-    assert [n["nNodes"] for n in meta["nodes"]] == [
-        n["nNodes"] for n in single_meta["nodes"]
-    ]
-    assert all(len(n["nodePaths"]) >= 1 for n in meta["nodes"])
+    # the same counts in every layout; the single-file layouts list one
+    # body per type, the multi-part one every part
+    for kind, n, paths in [
+        ("nodes", "nNodes", "nodePaths"),
+        ("relationships", "nRelationships", "relationshipPaths"),
+    ]:
+        counts = {k: [e[n] for e in m[kind]] for k, m in metas.items()}
+        assert counts["tar"] == counts["multi"] == counts["single"]
+        for k in ("single", "tar"):
+            assert all(len(e[paths]) == 1 for e in metas[k][kind])
+    assert all(len(n["nodePaths"]) >= 1 for n in metas["multi"]["nodes"])
 
-    # dry-run compiles one import command referencing every part
-    out = subprocess.run(
-        ["bash", "bulk-import.sh", "--dry-run"],
-        cwd=multi,
-        env={"NEO4J_HOME": "/opt/neo4j", "PATH": "/usr/bin:/bin"},
-        capture_output=True,
-        text=True,
-        check=True,
-    ).stdout
-    assert "neo4j-admin database import full" in out
-    for p in meta["nodes"][0]["nodePaths"]:
-        assert p in out
+    # dry-run compiles one import command referencing every body
+    for k, d in [("single", single), ("multi", multi)]:
+        out = subprocess.run(
+            ["bash", "bulk-import.sh", "--dry-run"],
+            cwd=d,
+            env={"NEO4J_HOME": "neo4j-home", "PATH": "/usr/bin:/bin"},
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+        assert "neo4j-admin database import full" in out
+        for p in metas[k]["nodes"][0]["nodePaths"]:
+            assert p in out
+
+
+@pytest.mark.parametrize("as_tar", [False, True])
+def test_single_file_export_runs_the_distributed_jobs(
+    spark, graph, tmp_path, last_sql_execution, as_tar
+):
+    """The single-file layouts are written by the executors, like the
+    multi-part one: five SQL executions and no more jobs than the
+    multi-part export (a driver-streamed sort took twice as many)."""
+    from datashare_extension_neo4j_spark.observe import observe
+    from datashare_extension_neo4j_spark.sinks.neo4j_csv import (
+        export_graph_csvs_distributed,
+    )
+
+    kw = dict(
+        docs=graph.docs, doc_roots=graph.doc_roots, entities=graph.entities,
+        appears_in=graph.appears_in, emails=graph.emails,
+    )
+    with observe() as multi:
+        export_graph_csvs_distributed(export_dir=tmp_path / "multi", **kw)
+    before = last_sql_execution()
+    with observe() as single:
+        export_graph_csvs(export_dir=tmp_path / "single", as_tar=as_tar, **kw)
+    assert last_sql_execution() - before == 5
+    assert len(single["jobs"]) <= len(multi["jobs"])
 
 
 def test_distributed_export_writes_each_file_once(

@@ -191,6 +191,22 @@ def test_ngram_jaccard_shuffles_only_the_block_key(spark):
     assert len(re.findall(r"Exchange (hash|range)partitioning", plan)) <= 2, plan
 
 
+def test_decontaminate_explodes_the_corpus_once(spark):
+    """decontaminate_ngram takes a doc's shingle count as the size of
+    its in-row hashed n-gram array: one Generate over the corpus and
+    one over the eval set. Counting the shingles by a second explode
+    and groupBy made three."""
+    from datashare_extension_neo4j_spark.queries import decontaminate_ngram
+
+    plan = (
+        decontaminate_ngram(spark, SF_DIR, n=2)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("Generate ") == 2, plan
+
+
 def test_kg_mentions_is_join_free(spark):
     """The gazetteer is a literal map lookup since r6 — no join, no
     broadcast, no exchange in the mention stream."""
