@@ -6,8 +6,9 @@ threads by pyspark's ``inheritable_thread_target``). On a normal exit
 it drains the listener bus and reads Spark's core and SQL status stores,
 which are filled with the UI disabled, for only the tagged jobs and the
 SQL executions that ran them, so the records of concurrent stages are
-disjoint. Only ids newer than the marks taken on entry are read, so the
-cost does not grow with what the stores retain. A job group would do
+disjoint (all but ``codegen_classes``, below). Only ids newer than
+the marks taken on entry are read, so the cost does not grow with what
+the stores retain. A job group would do
 the tagging too, but ``statusTracker().getJobIdsForGroup(None)`` hides
 jobs that have a group.
 
@@ -24,6 +25,10 @@ The record (sizes in MiB, times in seconds):
   MapInPandas operators' Python workers and Arrow transfer;
 * ``skew``: max / median task run time of the Spark stage with the most
   task time (null when no task ran);
+* ``codegen_classes``: the classes Janino compiled while the block ran
+  (the change of ``CodegenMetrics``' compilation count; a plan whose
+  classes are cached compiles none). The count is process-wide, not
+  per job tag, so the counts of concurrent blocks overlap;
 * ``observe_s``: the time spent reading the stores.
 
 ``observed_write(df, write, **aggregates)`` is the other half: the
@@ -80,6 +85,10 @@ class _Stores:
         self.gateway, self.bus = sc._gateway, sc._jsc.sc().listenerBus()
         self.core = sc._jsc.sc().statusStore()
         self.sql = spark._jsparkSession.sharedState().statusStore()
+        self.codegen = (
+            sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME()
+        )
         cls = sc._jvm.java.lang.Class.forName
         # both stores keep their entries in the core store's KV store
         self.kinds = {
@@ -126,6 +135,7 @@ def observe():
     spark = SparkSession.active()
     stores = _Stores(spark)
     marks = {kind: stores.mark(kind) for kind in stores.kinds}
+    compiled = stores.codegen.getCount()
     tag = f"observe-{uuid.uuid4().hex}"
     record: dict = {}
     t0 = time.perf_counter()
@@ -135,8 +145,12 @@ def observe():
     finally:
         spark.sparkContext.removeJobTag(tag)
     t1 = time.perf_counter()
+    compiled = stores.codegen.getCount() - compiled
     stores.bus.waitUntilEmpty()
-    record.update(_read(stores, tag, marks), wall_s=round(t1 - t0, 3))
+    record.update(
+        _read(stores, tag, marks), wall_s=round(t1 - t0, 3),
+        codegen_classes=compiled,
+    )
     record["observe_s"] = round(time.perf_counter() - t1, 3)
 
 

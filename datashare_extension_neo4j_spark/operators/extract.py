@@ -338,10 +338,11 @@ def parse_pages(
         # raw mention array is dead weight on the Arrow/parquet path
         drop.add("ann_mentions")
     schema = T.StructType([f for f in PARSED_SCHEMA.fields if f.name not in drop])
+    from .ner import _extract_doc, gazetteer_re  # late: ner imports this module
+
+    terms = gazetteer_re(ner_gazetteer)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .ner import _extract_doc  # late import: executor-side
-
         for pdf in batches:
             rows = []
             for u, ts, h, tx, lg in zip(
@@ -350,7 +351,7 @@ def parse_pages(
                 row = _parse_one(u, ts, h, tx, lg)
                 if ner_gazetteer is not None:
                     row["ann_mentions"] += _extract_doc(
-                        row["id"], row["text"], row["lang"], ner_gazetteer
+                        row["id"], row["text"], row["lang"], ner_gazetteer, terms
                     )
                 row["ann_edges"] = aggregate_doc_edges(row["ann_mentions"])
                 for d in drop:

@@ -92,9 +92,24 @@ _CARRIER_SCHEMA = T.StructType(
 )
 
 
-def _extract_doc(doc_id: str, text: str, lang: str, gazetteer: dict) -> list[dict]:
+def gazetteer_re(gazetteer: dict | None) -> re.Pattern | None:
+    """The gazetteer's terms as one case-insensitive alternation on word
+    boundaries (None for an empty or absent gazetteer). Built once per
+    gazetteer: callers pass it to every ``_extract_doc`` call."""
+    if not gazetteer:
+        return None
+    return re.compile(
+        r"\b(" + "|".join(re.escape(k) for k in sorted(gazetteer)) + r")\b",
+        re.IGNORECASE,
+    )
+
+
+def _extract_doc(
+    doc_id: str, text: str, lang: str, gazetteer: dict, terms: re.Pattern | None
+) -> list[dict]:
     """Rule mentions of one document's text, as ``_MENTION_STRUCT``
-    records; ``doc_id`` only namespaces the mention ids."""
+    records; ``doc_id`` only namespaces the mention ids. ``terms`` is
+    ``gazetteer_re(gazetteer)``."""
     if not text:
         return []
     found: dict[tuple, dict] = {}
@@ -121,12 +136,8 @@ def _extract_doc(doc_id: str, text: str, lang: str, gazetteer: dict) -> list[dic
         )
         e["offsets"].append(m.start())
     # gazetteer terms on word boundaries
-    if gazetteer:
-        pat = re.compile(
-            r"\b(" + "|".join(re.escape(k) for k in sorted(gazetteer)) + r")\b",
-            re.IGNORECASE,
-        )
-        for m in pat.finditer(text):
+    if terms is not None:
+        for m in terms.finditer(text):
             norm = m.group(0).lower()
             cat = gazetteer[norm]
             key = (norm, cat, None)
@@ -169,6 +180,7 @@ def rule_based_mentions(docs: DataFrame, gazetteer: dict | None = None) -> DataF
         k.lower(): v
         for k, v in (DEFAULT_GAZETTEER if gazetteer is None else gazetteer).items()
     }
+    terms = gazetteer_re(gaz)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -176,7 +188,7 @@ def rule_based_mentions(docs: DataFrame, gazetteer: dict | None = None) -> DataF
                 {
                     "id": pdf["id"],
                     "ann_mentions": [
-                        _extract_doc(doc_id, text, lang, gaz)
+                        _extract_doc(doc_id, text, lang, gaz, terms)
                         for doc_id, text, lang in zip(
                             pdf["id"], pdf["text"], pdf["lang"]
                         )

@@ -138,7 +138,13 @@ def merge_bucketed(
         .where(F.col(BUCKET_COL).isin(touched))
         .drop(BUCKET_COL)
     )
-    merged = bucketize(combine(old, up.drop(BUCKET_COL)), key_cols, n_buckets)
+    out = combine(old, up.drop(BUCKET_COL))
+    # keep the stored column order (a using-join or a groupBy puts the
+    # keys first): every file of the table then has one layout, and
+    # the next merge's plan, so its generated code, is the same
+    order = {c: i for i, c in enumerate(old.columns)}
+    out = out.select(*sorted(out.columns, key=lambda c: order.get(c, len(order))))
+    merged = bucketize(out, key_cols, n_buckets)
     # stage via a checkpoint: the merged plan lazily READS the very
     # files a direct overwrite would delete, so it must be materialized
     # first — an executor-storage checkpoint does that with ONE

@@ -593,6 +593,52 @@ def test_gazetteer_mixed_case_keys(spark):
     ]
 
 
+def test_gazetteer_pattern_built_once_matches_per_document_pattern():
+    """``_extract_doc`` with the pattern ``gazetteer_re`` builds once
+    gives what the per-document pattern it replaced gave, on hostile
+    and non-ASCII text: the same records, or the same exception."""
+    import re
+
+    from datashare_extension_neo4j_spark.operators import ner
+
+    def per_document(doc_id, text, lang, gazetteer):
+        """The former body: the alternation compiled for every call."""
+        pat = re.compile(
+            r"\b(" + "|".join(re.escape(k) for k in sorted(gazetteer)) + r")\b",
+            re.IGNORECASE,
+        ) if gazetteer else None
+        return ner._extract_doc(doc_id, text, lang, gazetteer, pat)
+
+    def outcome(fn, *args):
+        try:
+            return fn(*args)
+        except Exception as e:  # compared, not raised
+            return type(e).__name__, str(e)
+
+    texts = [
+        "",
+        "İstanbul spark İ WİNDOW",  # dotted capital I lowers to two chars
+        "SPAR\u212a \u212a spark",  # Kelvin sign, case-equivalent to k
+        "ſpark ﬆream",  # long s; the st ligature
+        "a@b@c.de From: x@y.org To:a@b@c.de",
+        "_spark spark_ _window window_ x_table_y batch_ _",
+        "Spark\u0301 spark\u00a0batch naïve café vector",
+        "From: \u00e9l\u00e8ve@exemple.fr\nTo: SUPPLIER@acme.io customer",
+    ]
+    gazetteers = [
+        ner.DEFAULT_GAZETTEER,
+        {},
+        {"i": "PERSON", "k": "LOCATION", "caf\u00e9": "ORGANIZATION"},
+        {"a.b": "PERSON", "c++": "ORGANIZATION", "x_y": "LOCATION"},
+    ]
+    for gaz in gazetteers:
+        terms = ner.gazetteer_re(gaz)
+        for text in texts:
+            assert outcome(ner._extract_doc, "d", text, "en", gaz, terms) == outcome(
+                per_document, "d", text, "en", gaz
+            ), (gaz, text)
+
+
 def test_ngram_block_cap(spark, tmp_path):
     """A degenerate (lang, length-bucket) block above max_block is
     excluded from pairing; small blocks are kept."""

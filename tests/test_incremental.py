@@ -502,6 +502,50 @@ def test_incremental_import_execution_count(spark, tmp_path, last_sql_execution)
     assert c["imported"] == 12 and c["nodes_created"] == 4
 
 
+def test_repeated_increment_compiles_nothing(spark, tmp_path):
+    """Back-to-back increments into one run dir (a streaming ingest's
+    micro-batches) reuse the generated classes of the ones before, as
+    the session's codegen cache holds them all. Spark's default cache
+    of 100 classes evicts them: about 95 compile again per increment."""
+    from datashare_extension_neo4j_spark.observe import observe
+
+    run_dir, pages_all = _store_of_first_8(spark, tmp_path)
+    # the second increment still compiles one class: a source the first
+    # compiled under one class loader only (the cache key has both)
+    incremental_import(spark, pages_all, run_dir)
+    incremental_import(spark, pages_all, run_dir)
+    with observe() as again:
+        c = incremental_import(spark, pages_all, run_dir)
+    assert c["imported"] == 12 and c["nodes_created"] == 0
+    assert again["codegen_classes"] == 0
+
+
+def test_merge_keeps_the_stored_column_layout(spark, tmp_path):
+    """A merge rewrites its buckets in the table's stored column order:
+    every file of a table keeps the build's layout, so a later merge
+    reads it with the same plan. (``combine_docs``' using-join and the
+    edge combines' groupBy put the keys first.)"""
+    import pyarrow.parquet as pq
+
+    from datashare_extension_neo4j_spark.sinks.tables import TABLE_KEYS
+
+    run_dir, pages_all = _store_of_first_8(spark, tmp_path)
+
+    def layouts():
+        return {
+            name: {
+                tuple(pq.read_schema(f).names)
+                for f in Path(run_dir, name).rglob("*.parquet")
+            }
+            for name in TABLE_KEYS
+        }
+
+    built = layouts()
+    assert all(len(v) == 1 for v in built.values())
+    incremental_import(spark, pages_all, run_dir)
+    assert layouts() == built
+
+
 def test_increment_creating_docs_enforces_unique_ids(spark, tmp_path):
     """An increment into a run dir without tables creates them through
     the same uniqueness gate a merge applies: a batch repeating one

@@ -9,6 +9,7 @@ import threading
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 import datashare_extension_neo4j_spark as pkg
 from datashare_extension_neo4j_spark.cli import main
@@ -178,6 +179,23 @@ def test_observe_counts_materialize_graph_writer_threads(spark, tmp_path):
     rows = sum(spark.read.parquet(p).count() for p in paths.values())
     assert rec["rows_written"] == rows > 0
     assert rec["files_written"] >= len(paths)
+
+
+def test_observe_counts_compiled_classes(spark):
+    """A plan that never ran compiles its classes inside the block; the
+    same plan run again finds them cached and compiles none."""
+
+    def run():
+        spark.range(1000).selectExpr("id * 7907 + 53 as k").groupBy(
+            F.col("k") % 61
+        ).agg(F.max("k") - 211).collect()
+
+    with observe() as first:
+        run()
+    with observe() as again:
+        run()
+    assert first["codegen_classes"] >= 1
+    assert again["codegen_classes"] == 0
 
 
 def test_writes_are_observed_in_one_module():

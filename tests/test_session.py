@@ -2,7 +2,7 @@
 
 import pytest
 
-from datashare_extension_neo4j_spark.session import driver_memory
+from datashare_extension_neo4j_spark.session import CODEGEN_CACHE_ENTRIES, driver_memory
 
 
 @pytest.mark.parametrize(
@@ -27,3 +27,10 @@ def test_driver_memory_is_half_of_ram(tmp_path, monkeypatch, mem_total_kb, heap)
 def test_driver_memory_without_meminfo(tmp_path, monkeypatch):
     monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
     assert driver_memory(str(tmp_path / "missing")) == "48g"
+
+
+def test_codegen_cache_holds_the_plan_set(spark):
+    """The session's generated-class cache is the documented size, not
+    Spark's 100 entries, which the registry's plans overflow."""
+    conf = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    assert conf == str(CODEGEN_CACHE_ENTRIES) and CODEGEN_CACHE_ENTRIES >= 2000

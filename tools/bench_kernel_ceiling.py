@@ -36,13 +36,15 @@ def _work(htmls: list[bytes]) -> int:
     from datashare_extension_neo4j_spark.operators.ner import (
         DEFAULT_GAZETTEER,
         _extract_doc,
+        gazetteer_re,
     )
 
+    terms = gazetteer_re(DEFAULT_GAZETTEER)
     n = 0
     for h in htmls:
         row = _parse_one("u", None, h, None, "en")
         row["ann_mentions"] += _extract_doc(
-            row["id"], row["text"], "en", DEFAULT_GAZETTEER
+            row["id"], row["text"], "en", DEFAULT_GAZETTEER, terms
         )
         aggregate_doc_edges(row["ann_mentions"])
         n += 1

@@ -8,6 +8,11 @@ executed plan before it runs: ``exchanges=`` non-broadcast (hash or
 range) Exchanges, the shuffles that cost at 100 TB; ``broadcast=``
 broadcast exchanges; ``python=`` Python operators in the plan.
 COVERAGE.md's "Physical-plan audit" table is these three columns.
+``compiled=`` is information only: the classes Janino compiled while
+the query was planned and run (its ``observe`` record's
+``codegen_classes``), with the pass's total at the end; classes
+an earlier query of the pass compiled are reused from Spark's codegen
+cache (``session.CODEGEN_CACHE_ENTRIES``).
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 """
@@ -74,6 +79,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
+    from datashare_extension_neo4j_spark.observe import observe
     from datashare_extension_neo4j_spark.queries import QUERIES
     from datashare_extension_neo4j_spark.session import get_spark
 
@@ -85,18 +91,21 @@ def main() -> int:
         if Path(p).exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    failures = []
+    failures, total = [], 0
     for name, (fn, oracle) in QUERIES.items():
         if only and name not in only:
             continue
         try:
-            df = fn(spark, sf_dir)
-            plan = plan_audit(df)
+            with observe() as record:
+                df = fn(spark, sf_dir)
+                plan = plan_audit(df)
+                result = df.count() if oracle is None else df.toPandas()
+            total += record["codegen_classes"]
+            plan += f" compiled={record['codegen_classes']}"
             if oracle is None:
-                print(f"OK   {name}: rows-only check, rows={df.count()} {plan}")
+                print(f"OK   {name}: rows-only check, rows={result} {plan}")
                 continue
-            sdf = df.toPandas()
-            n_s, c_s, h_s = canon(sdf)
+            n_s, c_s, h_s = canon(result)
         except Exception as e:
             print(f"FAIL {name}: spark error: {str(e)[:300]}")
             failures.append(name)
@@ -135,6 +144,7 @@ def main() -> int:
             print(f"OK   {name}: rows={n_s} {plan}")
     spark.stop()
     print(f"\n{len(QUERIES) - len(failures)}/{len(QUERIES)} matched")
+    print(f"compiled={total}")
     return 1 if failures else 0
 
 
